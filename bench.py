@@ -412,10 +412,15 @@ def main() -> None:
         )
         fh.write("\n")
 
-    def _line(ndig: int) -> str:
+    def _line(ndig: int, trim: bool = False) -> str:
         line_q = {
             k: round(timings[k], ndig) for k in BENCH_LINE if k in timings
         }
+        if trim:  # 12.0 -> 12
+            line_q = {
+                k: int(v) if float(v).is_integer() else v
+                for k, v in line_q.items()
+            }
         return json.dumps(
             {"metric": "headline_queries_total", "value": round(total, 2),
              "unit": "sec", "queries": line_q, "sf": sf_val},
@@ -424,11 +429,18 @@ def main() -> None:
 
     # 2 decimals while it fits; 1 decimal once the pinned set outgrows
     # the buffer (every pinned row is >= 1 s-class, so 0.05 s
-    # quantization is below host noise; BENCH_DETAIL keeps 4 decimals).
-    # Membership NEVER changes with timings.
+    # quantization is below host noise; BENCH_DETAIL keeps 4 decimals);
+    # then 1 decimal without trailing zeros. Membership NEVER changes
+    # with timings, so a set that outgrows even that fails here instead
+    # of being cut at the 2000-character limit of the line's reader.
     out_line = _line(2)
     if len(out_line) > 1990:
         out_line = _line(1)
+    if len(out_line) > 1990:
+        out_line = _line(1, trim=True)
+    assert len(out_line) <= 1990, (
+        f"bench stdout line is {len(out_line)} characters (limit 1990)"
+    )
     print(out_line)
 
 

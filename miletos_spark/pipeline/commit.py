@@ -10,7 +10,10 @@ them:
 
 - `write_marker` / `read_marker`: an atomic JSON marker — tmp file +
   `os.replace` (POSIX rename is atomic on one filesystem), so readers
-  never observe a torn or partial marker.
+  never observe a torn or partial marker. The pack-shards marker's
+  payload is `{"files": <the batch's input-file manifest>, "offsets":
+  {lang: running token total after the batch}}`: one marker commits
+  both the replay check and the cross-batch packing carry.
 - `publish_version` / `current_version`: a versioned dataset publish
   with an atomic pointer flip. The writer builds a NEW directory as a
   pure function of the last committed version plus the increment, then

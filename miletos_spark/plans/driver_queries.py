@@ -6898,9 +6898,10 @@ def q_stream_pack_shards_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§2.12 training-shards endgame online: `stream_curation`'s three
     stages composed with INCREMENTAL packing — each micro-batch packs
     its kept docs into 512-token context windows continuing from
-    per-shard running token offsets carried across batches (landed
-    offsets table = the cross-batch leg of the `pack_chunks` two-pass
-    prefix sum; see streaming/ingest.py `stream_pack_shards`). The
+    per-shard running token offsets carried across batches (the
+    offsets in each commit marker = the cross-batch leg of the
+    `pack_chunks` two-pass prefix sum; see streaming/ingest.py
+    `stream_pack_shards`). The
     feed arrives in doc_id order (assigned at landing), so the drained
     layout is BIT-IDENTICAL to the batch curation→pack composition —
     which is exactly what the oracle replays. One row per kept

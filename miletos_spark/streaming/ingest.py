@@ -589,55 +589,57 @@ def stream_pack_shards(
 
     Runs as `foreachBatch` (the resumable-job shape, not a monolithic
     stateful plan), with a CRASH-IDEMPOTENT batch_id-keyed commit
-    protocol (r9; the r8 form appended seen keys before the packed
-    rows landed, so a replay after a mid-batch crash anti-joined the
-    batch against its own keys and silently dropped it):
+    protocol — one write and one marker per micro-batch:
 
-    - every per-batch write goes to a batch-named path, mode
-      overwrite — `out_dir/b=<id>/` (packed rows + the (lang, h) seen
-      keys, one write) and a FULL offsets snapshot `offsets/b=<id>/` —
-      so a replayed attempt simply rewrites its own orphan dirs;
-    - a batch is COMMITTED by a marker file `commits/<id>` written
-      after all three dirs land; readers consult only committed
-      state (seen keys with b ≤ last committed via the partition
-      column; offsets from the last committed snapshot), so orphans
-      from a crashed attempt are invisible;
+    - the batch's packed rows (with their (lang, h) seen keys) land in
+      ONE write to a batch-named path, `out_dir/b=<id>/`, mode
+      overwrite — so a replayed attempt simply rewrites its own orphan
+      dir;
+    - the batch is COMMITTED by the marker `commits/<id>`, published
+      atomically (`pipeline.commit.write_marker`, one `os.replace`)
+      after that write lands. Its payload is
+      `{"files": <input-file manifest>, "offsets": {lang: total}}` —
+      the running token offset per shard AFTER this batch, so the next
+      batch reads its carry from marker `last` on the driver. Readers
+      consult only committed state (seen keys with b ≤ last committed
+      via the partition column; offsets from the last marker), so a
+      crashed attempt's orphans are invisible;
     - a replayed already-committed batch_id is a no-op — VERIFIED, not
-      assumed (ADVICE r9): the commit marker records the batch's
-      INPUT-FILE MANIFEST, and a skip first checks the replayed
-      batch's files against it. The stream-local batch_id only aligns
-      with the durable markers while the checkpoint lives exactly as
-      long as state_dir AND the trigger size is unchanged; a restart
-      with a fresh checkpoint or a different maxFilesPerTrigger
-      renumbers batches (e.g. batch 0 suddenly covers the whole
-      feed), and the unverified form would skip uncommitted input as
-      'already committed' and silently drop it. A manifest mismatch
+      assumed: a skip first checks the replayed batch's input files
+      against the marker's `files`. The stream-local batch_id only
+      aligns with the durable markers while the checkpoint lives
+      exactly as long as state_dir AND the trigger size is unchanged;
+      a restart with a fresh checkpoint or a different
+      maxFilesPerTrigger renumbers batches (e.g. batch 0 suddenly
+      covers the whole feed), and an unverified skip would drop
+      uncommitted input as 'already committed'. A manifest mismatch
       raises instead. foreachBatch retries a failed batch under the
       SAME id before any higher id runs, so the committed set is
       always a prefix and `b ≤ last` is the exact committed filter.
       (On an object store the marker becomes a manifest/Delta commit;
       the protocol is unchanged.)
     - readers of `out_dir` must apply the same committed filter —
-      `read_committed_shards` is that reader (orphan `b=*` dirs from
-      a crashed attempt are invisible through it).
+      `read_committed_shards` is that reader.
 
     State under `state_dir` and `out_dir`:
 
     - (lang, scrub_md5) keys already packed ride ON the committed
-      packed rows themselves (`out_dir/b=*/` carries `h` — one write
-      lands layout + seen keys, r15; the pre-r15 separate `seen/b=*/`
-      store was a second projection job per micro-batch over the same
-      rows). The cross-batch dedup is an anti-join against the
-      committed union (the same stream-vs-landed-index stance as
-      `stream_near_dup`); contract readers project `h` away.
-    - `offsets/b=*/` — (lang, total) running token offset per shard,
-      |langs| rows per snapshot; superseded snapshots are pruned
-      best-effort after commit. This is the cross-batch carry of the
-      packing prefix sum; within a batch the offset comes from
+      packed rows (`out_dir/b=*/` carries `h`). The cross-batch dedup
+      is an anti-join against the committed union (the same
+      stream-vs-landed-index stance as `stream_near_dup`); contract
+      readers project `h` away. A state dir from the older layout (a
+      separate `seen/` store, packed rows without `h`) is refused —
+      its keys would read as NULL and every old doc would re-pack.
+    - `commits/<id>` — the markers above; the last one's `offsets`
+      (|langs| numbers) is the cross-batch carry of the packing prefix
+      sum, added to each row as a literal map lookup. A marker whose
+      payload is a bare manifest list (written before offsets rode the
+      commit) carries no offsets; they are then re-derived once from
+      the committed rows' per-lang `n_tokens` sum, which is what they
+      are by definition. Within a batch the offset comes from
       `packing.running_offsets(bucket_width=...)` — the SAME two-pass
-      id-bucketed decomposition the batch packer uses (r9; the r8
-      form ran one window per lang, which serialized a hot lang in a
-      large batch into a single sort task).
+      id-bucketed decomposition the batch packer uses, so no single
+      task sorts a hot lang's whole micro-batch.
 
     DETERMINISM CONTRACT: the drained layout equals the batch
     `pack_chunks` (ordered by doc_id within lang) IFF docs arrive in
@@ -656,8 +658,8 @@ def stream_pack_shards(
     `pack_chunks` (offsets < 2**53, exact)."""
     import json
     import os
-    import shutil
 
+    from miletos_spark.pipeline.commit import read_marker, write_marker
     from miletos_spark.pipeline.packing import running_offsets
     from miletos_spark.pipeline.text import (
         quality_logit,
@@ -665,7 +667,6 @@ def stream_pack_shards(
         token_count,
     )
 
-    off_dir = os.path.join(state_dir, "offsets")
     commit_dir = os.path.join(state_dir, "commits")
 
     def _last_committed() -> int:
@@ -673,6 +674,27 @@ def stream_pack_shards(
             return -1
         ids = [int(x) for x in os.listdir(commit_dir) if x.isdigit()]
         return max(ids, default=-1)
+
+    def _read_commit(batch_id: int) -> object | None:
+        # an unreadable marker (torn-write survivor from a state dir
+        # older than the atomic seam, or a transient fs error) reads as
+        # missing: replay verification then refuses to skip, and the
+        # offsets fall back to the committed rows
+        try:
+            return read_marker(os.path.join(commit_dir, str(batch_id)))
+        except (OSError, ValueError):
+            return None
+
+    def _committed_rows(sp: SparkSession, last: int) -> DataFrame:
+        # explicit schema: an all-empty committed set must read as 0
+        # rows, not fail inference; b ≤ last hides a crashed attempt's
+        # orphans
+        return (
+            sp.read.option("basePath", out_dir)
+            .schema("lang string, h string, n_tokens long, b int")
+            .parquet(out_dir)
+            .filter(F.col("b") <= F.lit(last))
+        )
 
     def _batch_manifest(batch_id: int) -> list | None:
         # the file source's own per-batch log (written BEFORE the
@@ -703,17 +725,10 @@ def stream_pack_shards(
             # replay of a committed batch id: verify it IS the same
             # batch before no-opping — a fresh checkpoint or a changed
             # trigger size renumbers batches, and skipping unverified
-            # would silently drop the input (ADVICE r9)
-            from miletos_spark.pipeline.commit import read_marker
-
-            try:
-                want = read_marker(os.path.join(commit_dir, str(batch_id)))
-            except (OSError, ValueError):
-                # unreadable marker (torn write survivor from a pre-seam
-                # state dir, or a transient fs error) reads as missing:
-                # the safe path is the manifest mismatch below, which
-                # refuses to skip rather than killing the stream
-                want = None
+            # would silently drop the input
+            want = _read_commit(batch_id)
+            if isinstance(want, dict):
+                want = want.get("files")
             got = _batch_manifest(batch_id)
             if want is None or got is None or want != got:
                 raise RuntimeError(
@@ -732,57 +747,50 @@ def stream_pack_shards(
         # scan partitions by maxPartitionBytes anyway.
         kept = bdf.filter(quality_logit(F.col("text")) > 0)
         sc = scrub_pii(kept, keep_cols=("lang",)).select(
-            "doc_id",
             "lang",
-            "text_scrubbed",
             F.md5("text_scrubbed").alias("h"),
-        )
-        # in-batch winner per (lang, content): min doc_id — identical
-        # text ⇒ identical token count, so any winner packs the same
-        win = sc.groupBy("lang", "h").agg(F.min("doc_id").alias("doc_id"))
-        sc = sc.join(win, ["lang", "h", "doc_id"], "left_semi")
-        # cross-batch dedup vs the COMMITTED seen keys only (explicit
-        # schema: an all-empty committed set must read as 0 rows, not
-        # fail inference; b ≤ last hides a crashed attempt's orphans)
-        if last >= 0:
-            # seen keys live ON the committed packed rows (r15): the
-            # out_dir write carries h, so no separate seen store exists
-            # — read (lang, h) from committed batches only (b <= last
-            # hides a crashed attempt's orphans, exactly as before)
-            seen = (
-                sp.read.option("basePath", out_dir)
-                .schema("lang string, h string, b int")
-                .parquet(out_dir)
-                .filter(F.col("b") <= F.lit(last))
-                .select("lang", "h")
-            )
-            sc = sc.join(seen, ["lang", "h"], "left_anti")
-        new = sc.select(
-            "lang",
-            "h",
             "doc_id",
             token_count(F.col("text_scrubbed")).cast("long").alias(
                 "n_tokens"
             ),
-        ).localCheckpoint(eager=True)  # pin before the state writes
-        # per-shard running offsets (|langs| rows — bounded state).
-        # Kept entirely JVM-side as a parquet-scan DataFrame: a
-        # createDataFrame-from-Python-list relation is backed by a
-        # Python RDD, and any task reading it pays a Python-runner
-        # round-trip PER PARENT PARTITION — a coalesce(1) write of one
-        # costed ~4.3 s flat (32 sequential runner reads), which was
-        # half this drain's wall time.
-        cur = (
-            sp.read.schema("lang string, total long")
-            .parquet(os.path.join(off_dir, f"b={last}"))
-            if last >= 0
-            else None
         )
+        # in-batch winner per (lang, content) in one aggregate: min
+        # doc_id — identical text ⇒ identical token count, so
+        # min(n_tokens) is the winner's
+        new = sc.groupBy("lang", "h").agg(
+            F.min("doc_id").alias("doc_id"),
+            F.min("n_tokens").alias("n_tokens"),
+        )
+        offsets: dict = {}
+        if last >= 0:
+            # cross-batch dedup vs the COMMITTED seen keys only
+            new = new.join(
+                _committed_rows(sp, last).select("lang", "h"),
+                ["lang", "h"],
+                "left_anti",
+            )
+            prev = _read_commit(last)
+            if isinstance(prev, dict):
+                offsets = dict(prev["offsets"])
+            else:
+                # a bare-manifest marker carries no offsets: the carry
+                # is the committed rows' per-lang token sum (one job,
+                # once, on resuming such a state dir)
+                offsets = {
+                    r[0]: r[1]
+                    for r in _committed_rows(sp, last)
+                    .groupBy("lang")
+                    .agg(F.sum("n_tokens"))
+                    .collect()
+                    if r[0] is not None  # never a map key
+                }
+        # pinned: the write and the per-lang delta below both read it
+        new = new.localCheckpoint(eager=True)
+        delta = new.groupBy("lang").agg(F.sum("n_tokens")).collect()
         # within-batch leg of the prefix sum: the two-pass id-bucketed
         # decomposition (bit-identical to a per-lang window; no single
-        # task sorts a hot lang's whole micro-batch). The dedup key h
-        # is carried through so the packed-rows write below doubles as
-        # the seen-keys store (r15, jobs/micro-batch 4 -> 3).
+        # task sorts a hot lang's whole micro-batch); the cross-batch
+        # leg is the carried offsets as a literal map lookup
         local = running_offsets(
             new,
             token_col="n_tokens",
@@ -791,24 +799,19 @@ def stream_pack_shards(
             bucket_width=bucket_width,
             carry_cols=("h",),
         )
-        if cur is not None:
-            local = local.join(
-                F.broadcast(cur.withColumnRenamed("total", "_off")),
-                "lang",
-                "left",
-            ).fillna({"_off": 0})
-        else:
-            local = local.withColumn("_off", F.lit(0).cast("long"))
+        carry = F.lit(0)
+        if offsets:
+            table = F.create_map(
+                *(F.lit(x) for kv in offsets.items() for x in kv)
+            )
+            carry = F.coalesce(table[F.col("lang")], carry)
         cap = F.lit(float(capacity))
-        start_off = F.col("start_off") + F.col("_off")
+        start_off = F.col("start_off") + carry
         start_bin = F.floor(start_off / cap)
         end_bin = F.floor((start_off + F.col("n_tokens") - 1) / cap)
-        # ONE write lands the packed layout AND the (lang, h) seen keys
-        # (r15, VERDICT r14 Next #5): the old separate seen/b=<id>
-        # write was a second full projection job over rows this write
-        # already carries. Readers of the 5-column shard contract
-        # (read_committed_shards, the declared query) project h away;
-        # the cross-batch dedup above reads (lang, h, b) from out_dir.
+        # ONE write lands the packed layout AND the (lang, h) seen
+        # keys; readers of the 5-column shard contract
+        # (read_committed_shards, the declared query) project h away
         local.select(
             "lang",
             "doc_id",
@@ -821,44 +824,33 @@ def stream_pack_shards(
         ).write.mode("overwrite").parquet(
             os.path.join(out_dir, f"b={batch_id}")
         )
-        # offsets snapshot AFTER this batch — JVM plan end to end. No
-        # materialization barrier needed (r14): the plan reads ONLY the
-        # pinned `new` checkpoint and the PREVIOUS snapshot (b=last),
-        # never the b=batch_id path it overwrites — a replay rewrites
-        # its own orphan dir while reading the prior snapshot, which
-        # pruning preserves until after commit. The old belt-and-
-        # suspenders localCheckpoint cost one scheduled job per
-        # micro-batch for rows it then wrote anyway (crash-replay
-        # exactly-once is pinned by test).
-        delta = new.groupBy("lang").agg(F.sum("n_tokens").alias("_d"))
-        if cur is not None:
-            upd = delta.join(cur, "lang", "full").select(
-                "lang",
-                (
-                    F.coalesce(F.col("total"), F.lit(0))
-                    + F.coalesce(F.col("_d"), F.lit(0))
-                ).alias("total"),
-            )
-        else:
-            upd = delta.select("lang", F.col("_d").alias("total"))
-        upd.coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(off_dir, f"b={batch_id}"))
-        # COMMIT: everything for this batch is on disk under its own
-        # paths — the marker (whose CONTENT is the batch's input-file
-        # manifest, so replays are verifiable) makes it visible
-        # atomically via the shared commit seam (pipeline.commit, r11);
-        # then prune superseded offset snapshots best-effort
-        from miletos_spark.pipeline.commit import write_marker
-
+        # COMMIT: the rows are on disk under this batch's own path;
+        # one marker makes them visible atomically and carries the
+        # input manifest (replays are verifiable) and the offsets
+        for lang, d in delta:
+            offsets[lang] = offsets.get(lang, 0) + d
         write_marker(
             os.path.join(commit_dir, str(batch_id)),
-            _batch_manifest(batch_id),
+            {"files": _batch_manifest(batch_id), "offsets": offsets},
         )
-        for d in os.listdir(off_dir):
-            if d.startswith("b=") and int(d[2:]) < batch_id:
-                shutil.rmtree(os.path.join(off_dir, d), ignore_errors=True)
 
+    # the older layout is checked once, before the stream starts (one
+    # schema read when resuming)
+    last = _last_committed()
+    older = os.path.isdir(os.path.join(state_dir, "seen")) or (
+        last >= 0
+        and "h" not in spark.read.parquet(
+            os.path.join(out_dir, f"b={last}")
+        ).columns
+    )
+    if older:
+        raise RuntimeError(
+            f"stream_pack_shards: {state_dir} holds the older state "
+            "layout (seen keys under state_dir/seen/, packed rows "
+            "without an h column); resuming it would re-pack every "
+            "committed doc. Delete state_dir and out_dir and drain the "
+            "feed again to rebuild them."
+        )
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)

@@ -1120,9 +1120,9 @@ def test_stream_semantic_dedup_recovers_and_rejects(spark):
 
 def test_stream_pack_shards_crash_replay_is_exactly_once(spark, sf_dir):
     """Crash-idempotence of the batch_id-keyed commit protocol (r9):
-    kill the job 'between the state writes and the commit marker' of
-    the last batch (simulated by deleting its marker, leaving its
-    seen/out/offsets dirs as orphans), restart from a FRESH stream
+    kill the job 'between the packed-rows write and the commit marker'
+    of the last batch (simulated by deleting its marker, leaving its
+    out_dir/b=<id> dir as an orphan), restart from a FRESH stream
     checkpoint over the same feed — the committed batch must be
     skipped, the orphaned batch re-executed in place, and the final
     layout must still equal the batch composition exactly (the r8
@@ -1133,6 +1133,7 @@ def test_stream_pack_shards_crash_replay_is_exactly_once(spark, sf_dir):
     import tempfile
     import uuid
 
+    from miletos_spark.pipeline.commit import read_marker
     from miletos_spark.pipeline.packing import pack_chunks
     from miletos_spark.pipeline.text import (
         quality_logit,
@@ -1162,22 +1163,21 @@ def test_stream_pack_shards_crash_replay_is_exactly_once(spark, sf_dir):
     )
     assert len(commits) >= 2, "need >=2 batches to exercise replay"
     victim = commits[-1]
-    # simulate the crash window: the victim's state dirs are written
-    # (they stay as orphans) but its marker never landed. At a real
-    # pre-commit crash the PREVIOUS offsets snapshot still exists
-    # (pruning runs only after commit), so restore it — rebuilt from
-    # the committed packed rows, which is exactly what it summarizes.
+    # simulate the crash window: the victim's packed rows are written
+    # (they stay as an orphan dir) but its marker never landed. The
+    # carry the replay resumes from is marker prev's offsets, which
+    # must equal the per-lang token sum of the rows committed so far.
     os.remove(os.path.join(state, "commits", str(victim)))
     prev = victim - 1
-    (
-        spark.read.option("basePath", out_dir).parquet(out_dir)
+    carried = read_marker(os.path.join(state, "commits", str(prev)))
+    assert carried["offsets"] == {
+        r["lang"]: r["total"]
+        for r in spark.read.option("basePath", out_dir).parquet(out_dir)
         .filter(F.col("b") <= prev)
         .groupBy("lang")
         .agg(F.sum("n_tokens").alias("total"))
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(os.path.join(state, "offsets", f"b={prev}"))
-    )
+        .collect()
+    }
     # fresh checkpoint = full reprocess; committed prefix must no-op
     shutil.rmtree(os.path.join(state, "ckpt"))
     try:
@@ -1285,6 +1285,141 @@ def test_stream_pack_shards_manifest_guards_misaligned_replay(
             capacity=512, max_files_per_trigger=None,
         )
     shutil.rmtree(work, ignore_errors=True)
+
+
+def _drain_held_back_feed(spark, sf_dir, work):
+    """Drain the first 3 of the 4 doc-id-ordered pack-feed files into
+    work/{out,state}. Returns resume(), which lands the held-back 4th
+    file (the re-crawl replicas of earlier docs) and drains again from
+    the same checkpoint."""
+    import shutil
+
+    from miletos_spark.plans.driver_queries import (
+        CURATION_STREAM_SCHEMA,
+        _land_docs_pack_feed,
+    )
+    from miletos_spark.streaming.ingest import stream_pack_shards
+
+    land = _land_docs_pack_feed(spark, sf_dir)
+    files = sorted(f for f in os.listdir(land) if f.endswith(".parquet"))
+    feed = os.path.join(work, "feed")
+    os.makedirs(feed)
+    for f in files[:-1]:
+        shutil.copy2(os.path.join(land, f), feed)
+
+    def drain():
+        stream_pack_shards(
+            spark, feed, CURATION_STREAM_SCHEMA,
+            os.path.join(work, "out"), os.path.join(work, "state"),
+            capacity=512, max_files_per_trigger=1,
+        )
+
+    def resume():
+        shutil.copy2(os.path.join(land, files[-1]), feed)
+        drain()
+
+    drain()
+    return resume
+
+
+def test_stream_pack_shards_refuses_older_state_layout(
+    spark, sf_dir, tmp_path
+):
+    """A state dir from the layout before seen keys rode the packed rows
+    (a separate state_dir/seen/ store, out_dir rows without h) must be
+    refused on resume: its rows read as h = NULL, the cross-batch
+    anti-join never matches, and every re-crawl replica of an already
+    packed doc would silently be packed a second time."""
+    import shutil
+
+    work = str(tmp_path)
+    resume = _drain_held_back_feed(spark, sf_dir, work)
+    out_dir = os.path.join(work, "out")
+    seen = os.path.join(work, "state", "seen")
+    for b in sorted(d for d in os.listdir(out_dir) if d.startswith("b=")):
+        rows = spark.read.parquet(os.path.join(out_dir, b)).localCheckpoint()
+        rows.select("lang", "h").write.parquet(os.path.join(seen, b))
+        rows.drop("h").write.mode("overwrite").parquet(
+            os.path.join(out_dir, b)
+        )
+    with pytest.raises(RuntimeError, match="older state layout"):
+        resume()
+    # rows without h are refused even once seen/ is gone
+    shutil.rmtree(seen)
+    with pytest.raises(RuntimeError, match="older state layout"):
+        resume()
+
+
+def test_stream_pack_shards_resumes_bare_manifest_markers(
+    spark, sf_dir, tmp_path
+):
+    """Markers written before the offsets rode the commit hold only the
+    input manifest. Resuming such a state dir re-derives the carry once
+    from the committed rows: the drained layout equals a fresh full
+    drain, and the new marker carries the per-lang totals."""
+    from miletos_spark.pipeline.commit import read_marker, write_marker
+    from miletos_spark.plans.driver_queries import q_stream_pack_shards_docs
+    from miletos_spark.streaming.ingest import read_committed_shards
+
+    work = str(tmp_path)
+    resume = _drain_held_back_feed(spark, sf_dir, work)
+    commit_dir = os.path.join(work, "state", "commits")
+    markers = sorted(int(m) for m in os.listdir(commit_dir) if m.isdigit())
+    for m in markers:
+        path = os.path.join(commit_dir, str(m))
+        write_marker(path, read_marker(path)["files"])
+    resume()
+    out_dir, state = os.path.join(work, "out"), os.path.join(work, "state")
+    got = read_committed_shards(spark, out_dir, state).select(
+        "lang", "doc_id", "n_tokens", "start_bin", "n_straddle"
+    )
+    want = q_stream_pack_shards_docs(spark, sf_dir)
+    assert {tuple(r) for r in got.collect()} == {
+        tuple(r) for r in want.collect()
+    }
+    final = read_marker(os.path.join(commit_dir, str(markers[-1] + 1)))
+    assert final["offsets"] == {
+        r["lang"]: r["total"]
+        for r in got.groupBy("lang")
+        .agg(F.sum("n_tokens").alias("total"))
+        .collect()
+    }
+
+
+def test_stream_pack_shards_job_budget(spark, sf_dir, tmp_path):
+    """Job budget of the drain: at most 8 Spark jobs per committed
+    micro-batch (pin of the deduped batch, per-lang token delta, one
+    packed-rows write; the offsets ride the commit marker). Counted
+    through a job tag, which the stream's execution thread inherits."""
+    import uuid
+
+    from miletos_spark.plans.driver_queries import (
+        CURATION_STREAM_SCHEMA,
+        _land_docs_pack_feed,
+    )
+    from miletos_spark.streaming.ingest import stream_pack_shards
+
+    land = _land_docs_pack_feed(spark, sf_dir)
+    state = str(tmp_path / "state")
+    sc = spark.sparkContext
+    tag = "spack-budget-" + uuid.uuid4().hex[:8]
+    sc.addJobTag(tag)
+    try:
+        stream_pack_shards(
+            spark, land, CURATION_STREAM_SCHEMA, str(tmp_path / "out"),
+            state, capacity=512, max_files_per_trigger=1,
+        )
+    finally:
+        sc.removeJobTag(tag)
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty(60_000)
+    jobs = len(jsc.statusTracker().getJobIdsForTag(tag))
+    batches = len(
+        [m for m in os.listdir(os.path.join(state, "commits")) if m.isdigit()]
+    )
+    assert batches == 4
+    assert jobs <= 8 * batches, f"{jobs} jobs for {batches} batches"
+
 
 def test_stream_pack_bins_zero_state_equals_batch_per_parity(spark, tmp_path):
     """Streaming no-split packing (r12): bins never span micro-batches
