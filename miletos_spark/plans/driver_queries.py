@@ -11642,7 +11642,7 @@ def q_pipeline_population_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     examples/examples.py:162-172; SURVEY §7.1.6): K synthetic targets
     with distinct injected box ephemerides built from the events
     series, ALL driven through guards → per-target clip↔detrend →
-    keyed BLS / LS / flares → gate in ONE job chain via
+    keyed BLS / LS / flares (one analyses action) → gate via
     `run_population` (target is the group key of every stage — no
     per-target driver loop). Oracle: the full per-target CTE replay —
     `_sql_pipeline_summary` generalized with PARTITION BY target."""

@@ -21,8 +21,9 @@ ONE stage implementation serves both entry points (VERDICT r5 ask #5):
 target column, and `run_pipeline` is a K=1 call of the SAME stages
 with a constant synthetic key — the single-target path cannot drift
 from the population path because there is no second copy of the stage
-logic. `run_pipeline` keeps its richer `RunResult` by collecting the
-(bounded) per-target outputs of the shared stages.
+logic. The analyses (BLS, LS, flares) run in ONE action that collects
+the pre-gate per-target summary; the gate, the gated stages and
+`run_pipeline`'s `RunResult` read that collected summary.
 """
 
 from __future__ import annotations
@@ -36,6 +37,7 @@ from pyspark.sql import functions as F
 from miletos_spark.operators.detrend import clip_detrend_loop
 from miletos_spark.operators.filters import mask_time_windows
 from miletos_spark.operators.fold import phase_bins, transit_flag
+from miletos_spark.schema import local_relation
 from miletos_spark.search.bls import bls_multi_signal_grouped, trial_table
 from miletos_spark.search.flare import flare_outlier_search
 from miletos_spark.search.lombscargle import freq_grid, lomb_scargle_grouped
@@ -182,7 +184,11 @@ def _analyses(
 ) -> tuple[DataFrame, dict[str, DataFrame]]:
     """P1/P2/P7 analyses + A9 gate + gated J1/X5/M5 stages, ALL keyed
     by `target_col` — the one stage implementation behind both entry
-    points. Returns (per-target summary DataFrame, stage DataFrames)."""
+    points. ONE action runs every analysis: the pre-gate summary (one
+    row per target, carrying its accepted BLS signals) is collected and
+    re-exposed, with the detections, as local relations, which the gate
+    and the gated stages read — no analysis is planned twice. Returns
+    (summary rows joined to the lazy gated stages, stage DataFrames)."""
     keys = [target_col]
 
     # --- BLS multi-signal (P2), keyed --------------------------------
@@ -194,9 +200,12 @@ def _analyses(
         det, trials, keys, max_signals=cfg.bls_max_signals,
         snr_threshold=cfg.bls_snr_accept,
     )
+    signal_cols = [c for c in detections.columns if c != target_col]
     det_agg = detections.groupBy(target_col).agg(
         F.count("*").alias("n_bls_signals"),
         F.max("snr").alias("best_bls_snr"),
+        # the detections themselves, in signal_idx order
+        F.sort_array(F.collect_list(F.struct(*signal_cols))).alias("signals"),
     )
 
     # --- LS (P1), keyed: per-target time shift to its own origin -----
@@ -237,8 +246,8 @@ def _analyses(
         F.count("*").alias("n_flares")
     )
 
-    # --- gate (A9) + per-target summary ------------------------------
-    out = (
+    # --- gate (A9) + per-target summary: THE analyses action ---------
+    pre = (
         spans.join(F.broadcast(det_agg), target_col, "left")
         .join(F.broadcast(ls_best), target_col, "left")
         .join(F.broadcast(flare_counts), target_col, "left")
@@ -256,10 +265,24 @@ def _analyses(
                 (F.coalesce("best_bls_snr", F.lit(0.0)) > cfg.gate_bls_snr)
                 | (F.coalesce("ls_power", F.lit(0.0)) > cfg.gate_ls_power)
             ).alias("detected"),
+            "signals",
         )
     )
+    rows = pre.collect()
+    summary = local_relation(spark, rows, pre.schema)
+    detections = local_relation(
+        spark,
+        [
+            {target_col: r[target_col], **s.asDict()}
+            for r in rows
+            for s in r["signals"] or ()
+        ],
+        detections.schema,
+    )
+    out = summary.drop("signals")
     stages: dict[str, DataFrame] = {
-        "detections": detections, "spec": spec, "flares": flares,
+        "summary": out, "detections": detections, "spec": spec,
+        "flares": flares,
     }
 
     # --- gated stages: top accepted detection per DETECTED target ----
@@ -270,21 +293,16 @@ def _analyses(
         or cfg.phase_components_on_detection
     )
     if need_top:
-        top = (
-            detections.filter(F.col("signal_idx") == 0)
-            .join(
-                F.broadcast(
-                    out.filter(F.col("detected")).select(target_col)
-                ),
-                target_col,
-            )
-            .select(
-                target_col,
-                F.col("period").alias("_p"),
-                F.col("epoch").alias("_e"),
-                (F.col("dcyc") * F.col("period")).alias("_dura"),
-                F.col("depth").alias("_dep"),
-            )
+        # signals[0] is signal_idx 0; folds into a local relation
+        first = F.col("signals")[0]
+        top = summary.filter(
+            F.col("detected") & (F.size("signals") > 0)
+        ).select(
+            target_col,
+            first["period"].alias("_p"),
+            first["epoch"].alias("_e"),
+            (first["dcyc"] * first["period"]).alias("_dura"),
+            first["depth"].alias("_dep"),
         )
         joined = det.join(F.broadcast(top), target_col)
 
@@ -489,11 +507,12 @@ def run_pipeline(
     grid_span = cfg.grid_span_days if cfg.grid_span_days is not None else span
 
     out, stages = _analyses(spark, det, spans, cfg, "_target", grid_span)
-    row = out.first()
+    # local relations (detections in signal_idx order): no job
+    row = stages["summary"].first()
 
     bls_found = [
         {k: v for k, v in r.asDict().items() if k != "_target"}
-        for r in stages["detections"].orderBy("signal_idx").collect()
+        for r in stages["detections"].collect()
     ]
     best_snr = float(row["best_bls_snr"]) if row is not None else 0.0
     detected = bool(row["detected"]) if row is not None else False
@@ -514,9 +533,10 @@ def run_pipeline(
         p, epoch = float(top["period"]), float(top["epoch"])
         dura = float(top["dcyc"]) * p
         flagged = transit_flag(det, p, epoch, dura)
+        fit = out.first()
         depth_fit = {
-            "depth_hat": row["depth_hat"],
-            "depth_err": row["depth_err"],
+            "depth_hat": fit["depth_hat"],
+            "depth_err": fit["depth_err"],
             "n_in_transit": flagged.filter(F.col("in_transit")).count(),
         }
 
@@ -551,11 +571,15 @@ def run_population(
     value_col: str = "value",
 ) -> DataFrame:
     """The population run — N independent targets through the full
-    guards → clip↔detrend → BLS-multi / LS / flares → gate lifecycle in
-    ONE Spark job chain, `target_col` as the group key of every stage
-    (the reference's real 100 TB fan-out axis: a TOI list driven
-    through `miletos.main.init` per target, examples/examples.py:162-172;
-    SURVEY §7.1.6 — there it is a scheduler loop, here one plan).
+    guards → clip↔detrend → BLS-multi / LS / flares → gate lifecycle,
+    `target_col` as the group key of every stage (the reference's real
+    100 TB fan-out axis: a TOI list driven through `miletos.main.init`
+    per target, examples/examples.py:162-172; SURVEY §7.1.6 — there it
+    is a scheduler loop, here one plan).
+
+    Eager up to the gate (the clip↔detrend actions, then ONE analyses
+    action for BLS, LS and flares); the returned DataFrame joins the
+    collected summary to the lazy gated stages.
 
     Requires `config.grid_span_days` (a frozen search-grid baseline):
     a shared trial/frequency grid is what lets every target ride one

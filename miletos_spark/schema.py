@@ -112,50 +112,30 @@ def epoch_micros_expr(df: DataFrame, ts_name: str = "ts"):
     return F.unix_micros(F.col(ts_name))
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TESTDATA_TABLES}
-
-
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register all driver tables as temp views for spark.sql queries."""
     for name in TESTDATA_TABLES:
         load_table(spark, sf_dir, name).createOrReplaceTempView(name)
 
 
-def events_as_lightcurve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Map the driver ``events`` table onto the long light-curve schema.
-
-    Per FIXTURES.md: user_id -> chunk key, epoch-seconds(ts) in days ->
-    time, value -> flux. This is the stand-in time series that exercises
-    the reference's operators on driver data.
-    """
-    ev = load_table(spark, sf_dir, "events")
-    return ev.select(
-        (epoch_seconds_expr(ev, "ts") / F.lit(86400.0)).alias("time"),
-        F.lit(0).alias("ener"),
-        F.col("value").alias("value"),
-        F.lit(1.0).alias("stdv"),
-        F.lit(KIND_FLUX).alias("kind"),
-        F.col("event_type").alias("inst"),
-        F.col("user_id").cast("int").alias("chunk"),
-    )
-
-
 def local_relation(spark: SparkSession, rows, schema) -> DataFrame:
-    """Collected rows re-exposed as an Arrow-backed LOCAL relation
-    (r15, the connected_components idiom, optimization guide §4):
+    """Collected rows re-exposed as an Arrow-backed LOCAL relation:
     `createDataFrame(list)` builds a Python-RDD-backed frame whose
     every downstream action pays a Python-runner round-trip per parent
-    slice; the pandas/Arrow path crosses the boundary once at creation
-    and plans as LocalTableScan, so broadcasts over it build
-    driver-side with no scheduled job. Values round-trip bit-exactly
-    (float64 through Arrow). Shared by the multi-signal acceptance
-    loop and the per-group clip-stats loop."""
-    if not rows:
-        return spark.createDataFrame([], schema)
-    import pandas as pd
+    slice; an Arrow table crosses the boundary once at creation and
+    plans as LocalTableScan, so broadcasts over it build driver-side
+    with no scheduled job. `rows` are `Row`s or dicts keyed by field
+    name. The table is built straight against the Spark schema's Arrow
+    twin, so NULL stays NULL and NaN stays NaN (a pandas hop conflates
+    the two, and turns an integer column holding a NULL into doubles),
+    nested arrays/structs keep their types, an empty `rows` keeps the
+    schema, and doubles round-trip bit-exactly."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-    pdf = pd.DataFrame(
-        {f.name: [r[f.name] for r in rows] for f in schema.fields}
+    table = pa.Table.from_pylist(
+        [r.asDict(recursive=True) if isinstance(r, T.Row) else r
+         for r in rows],
+        schema=to_arrow_schema(schema),
     )
-    return spark.createDataFrame(pdf, schema=schema)
+    return spark.createDataFrame(table, schema=schema)

@@ -37,6 +37,9 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from miletos_spark.schema import local_relation
 
 
 def period_grid(
@@ -75,14 +78,36 @@ def trial_table(
     n_dcyc: int = 3,
     dcyc_min: float = 0.01,
 ) -> DataFrame:
-    """Materialize the (period, dcyc) trial table — small, broadcast."""
+    """The (period, dcyc, off) trial table as a LOCAL relation: built on
+    the driver, so numbering and broadcasting it schedule no job."""
     rows = [
-        (p, d, off)
+        {"period": p, "dcyc": d, "off": off}
         for p in period_grid(p_min, p_max, span_days, osam)
         for d in duty_cycle_grid(p, n_dcyc, dcyc_min)
         for off in (0.0, 0.5)
     ]
-    return spark.createDataFrame(rows, "period double, dcyc double, off double")
+    schema = T.StructType.fromDDL("period double, dcyc double, off double")
+    return local_relation(spark, rows, schema)
+
+
+def _numbered_trials(trials: DataFrame) -> DataFrame:
+    """`trials` + integer id `tid` = 1…n in (period, dcyc, off) order,
+    numbered on the driver as a local relation (collecting a local
+    `trial_table` schedules no job). The box aggregation hashes two int
+    keys instead of three normalize-wrapped doubles (~20% on the agg
+    stage); the trial attributes rejoin afterwards, so no output depends
+    on the numbering (tid ↔ trial row is a bijection)."""
+    rows = sorted(
+        trials.collect(), key=lambda r: (r["period"], r["dcyc"], r["off"])
+    )
+    return local_relation(
+        trials.sparkSession,
+        [{**r.asDict(), "tid": i} for i, r in enumerate(rows, 1)],
+        T.StructType(
+            trials.schema.fields
+            + [T.StructField("tid", T.IntegerType(), False)]
+        ),
+    )
 
 
 def _spread(df: DataFrame) -> DataFrame:
@@ -115,8 +140,6 @@ def bls_search(
     the reference's amplitude/noise split happens on the per-period
     spectrum afterwards).
     """
-    import math as _math
-
     # decimal moments + decimal box means (same discipline as
     # `bls_search_multires` and `stream_bls`): order-independent, so
     # the fan-out below can be REPARTITIONED for parallelism without
@@ -131,7 +154,7 @@ def bls_search(
          / F.count(value_col)).alias("m2"),
     ).first()
     mu = float(g["mu"])
-    sd = _math.sqrt(max(float(g["m2"]) - mu * mu, 0.0))
+    sd = math.sqrt(max(float(g["m2"]) - mu * mu, 0.0))
 
     p = F.col("period")
     t = F.col(time_col) - F.lit(float(t_ref))
@@ -142,15 +165,7 @@ def bls_search(
     wrapped = ((shifted % 1.0) + 1.0) % 1.0
     bucket = F.floor(wrapped / F.col("dcyc")).cast("int")
 
-    # integer trial id: the box aggregation hashes two int keys instead
-    # of three normalize-wrapped doubles (~20% on the agg stage); the
-    # trial attributes rejoin over the same broadcast table afterwards,
-    # so the output rows — and the SQL oracle grouped on the float
-    # triple — are unchanged (tid ↔ (period,dcyc,off) is a bijection)
-    from pyspark.sql import Window
-
-    tid_w = Window.orderBy("period", "dcyc", "off")
-    trials_id = trials.withColumn("tid", F.row_number().over(tid_w))
+    trials_id = _numbered_trials(trials)
     boxes = (
         # cast to decimal ONCE per sample, BEFORE the |trials|× fan-out
         # — double→decimal is BigDecimal string formatting, and casting
@@ -312,10 +327,7 @@ def bls_search_grouped(
     wrapped = ((shifted % 1.0) + 1.0) % 1.0
     bucket = F.floor(wrapped / F.col("dcyc")).cast("int")
 
-    from pyspark.sql import Window
-
-    tid_w = Window.orderBy("period", "dcyc", "off")
-    trials_id = trials.withColumn("tid", F.row_number().over(tid_w))
+    trials_id = _numbered_trials(trials)
     # No _spread here, unlike the flat path: grouped inputs arrive from
     # upstream keyed shuffles (detrend/clip stages), already at session
     # parallelism — an unconditional repartition re-shuffles the whole
@@ -462,18 +474,22 @@ def bls_multi_signal_grouped(
     t_ref: float = 0.0,
     kernel_size: int = 51,
 ) -> DataFrame:
-    """P2 multi-signal loop over a whole POPULATION in one job chain:
-    each iteration is one keyed search over every still-active target
-    (search → per-target spectrum SNR → accept where snr ≥ threshold →
-    subtract the accepted box per target via a broadcast join). The
-    driver loop count is `max_signals`, never the number of targets.
+    """P2 multi-signal loop over a whole POPULATION: each iteration is
+    one keyed search over every still-active target (search →
+    per-target spectrum SNR → accept where snr ≥ threshold → subtract
+    the accepted box per target via a broadcast join). The driver loop
+    count is `max_signals`, never the number of targets.
+
+    Only iterations that feed a subtraction collect (≤ 1 row per
+    target, re-exposed as a local relation: the broadcast builds with
+    no job); the LAST stays lazy, for the caller's action to plan next
+    to its other analyses. Nothing is cached: the subtracted series is
+    a projection of `df` joined to local tables, so a re-read is a scan.
 
     Returns one row per accepted detection:
     group_cols + (signal_idx, period, dcyc, epoch, depth, snr)."""
     keys = list(group_cols)
-    spark = df.sparkSession
     work = df.select(*keys, time_col, value_col)
-    cached: list[DataFrame] = []
     out: DataFrame | None = None
     for i in range(max_signals):
         spec = bls_search_grouped(
@@ -494,28 +510,16 @@ def bls_multi_signal_grouped(
                 "snr",
             )
         )
-        # ONE scheduled pass per iteration (r15, VERDICT r14 Next #7):
-        # the acceptance table is at most one row per target and the
-        # subtraction join already implied a driver-sized broadcast of
-        # it — so collect it outright and re-expose it as an
-        # Arrow-backed LOCAL relation (the connected_components idiom).
-        # The r14 form cached it and paid an isEmpty probe job PLUS a
-        # broadcast-build job per earlier iteration; now the empty-gate
-        # reads len(rows), the broadcast builds driver-side from the
-        # LocalTableScan, and the final union materializes nothing new.
-        # Values are the collected doubles verbatim (bit-exact through
-        # Arrow), pinned by test_bls_multi.
-        from miletos_spark.schema import local_relation
-
+        if i == max_signals - 1:
+            return accepted if out is None else out.unionByName(accepted)
         rows = accepted.collect()
-        loc = local_relation(spark, rows, accepted.schema)
+        loc = local_relation(df.sparkSession, rows, accepted.schema)
         out = loc if out is None else out.unionByName(loc)
-        if i == max_signals - 1 or not rows:
-            # last iteration, or nothing accepted: no next search runs
-            # (a target that failed acceptance is done — its series is
-            # unchanged, so re-searching would reproduce the same
-            # sub-threshold best)
-            break
+        if not rows:
+            # nothing accepted: a target that failed acceptance is done
+            # (its series is unchanged, so re-searching would reproduce
+            # the same sub-threshold best)
+            return out
         # subtract each accepted box and keep ONLY still-active targets
         j = loc.select(
             *keys,
@@ -526,18 +530,11 @@ def bls_multi_signal_grouped(
         tt = F.col(time_col) - F.col("_e")
         ph = ((tt % F.col("_p")) + F.col("_p")) % F.col("_p") / F.col("_p")
         in_box = (ph < F.col("_d") / 2.0) | (ph >= 1.0 - F.col("_d") / 2.0)
-        work = (
-            nxt.withColumn(
-                value_col,
-                F.when(in_box, F.col(value_col) + F.col("_dep"))
-                .otherwise(F.col(value_col)),
-            )
-            .drop("_p", "_d", "_e", "_dep")
-            .cache()
-        )
-        cached.append(work)
-    for c in cached:
-        c.unpersist()
+        work = nxt.withColumn(
+            value_col,
+            F.when(in_box, F.col(value_col) + F.col("_dep"))
+            .otherwise(F.col(value_col)),
+        ).drop("_p", "_d", "_e", "_dep")
     return out
 
 
@@ -561,8 +558,6 @@ def bls_search_multires(
     Requires `trials` with columns (period, dcyc, off). Output schema
     matches `bls_search`.
     """
-    import math as _math
-
     # decimal-sum moments: order-independent, so mu, sd (and depth =
     # mu − mean_in, snr = depth/(sd/√n)) are reproducible bit-for-bit
     # across engines and runs. sd from double `stddev_pop` was the one
@@ -581,7 +576,7 @@ def bls_search_multires(
         F.min(time_col).alias("t0"),
     ).first()
     mu, m2, t0 = float(g["mu"]), float(g["m2"]), float(g["t0"])
-    sd = _math.sqrt(max(m2 - mu * mu, 0.0))
+    sd = math.sqrt(max(m2 - mu * mu, 0.0))
 
     # Quantize (dcyc·period) box widths into log2 RESOLUTION GROUPS —
     # one rebin + crossJoin pipeline per group, not per distinct dcyc
@@ -595,7 +590,7 @@ def bls_search_multires(
     wmin = min(p * d for p, d, _ in t_rows)
     groups: dict[int, list] = {}
     for p_, d_, o_ in t_rows:
-        lvl = int(_math.floor(_math.log2((p_ * d_) / wmin)))
+        lvl = int(math.floor(math.log2((p_ * d_) / wmin)))
         groups.setdefault(lvl, []).append((p_, d_, o_))
 
     spark = df.sparkSession
@@ -662,12 +657,10 @@ def bls_multires_sql(
 ) -> str:
     """DuckDB-oracle twin of `bls_search_multires` (same log2
     resolution-group quantization)."""
-    import math as _math
-
     wmin = min(p * d for p, d, _ in trials)
     groups: dict[int, list] = {}
     for p, d, o in trials:
-        lvl = int(_math.floor(_math.log2((p * d) / wmin)))
+        lvl = int(math.floor(math.log2((p * d) / wmin)))
         groups.setdefault(lvl, []).append((p, d, o))
     level_sqls = []
     for lvl, rows in sorted(groups.items()):

@@ -22,32 +22,21 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from miletos_spark.schema import local_relation
 
 TWO_PI = 2.0 * math.pi
 
 
-def grid_params(
-    t_min: float, t_max: float, n: int, osam_factor: float = 3.0, nyq_factor: float = 0.5
-) -> tuple[float, float, int]:
-    """Frequency grid following the reference's recipe
-    (miletos/main.py:4939-4959): f_min = 1/baseline, spacing
-    f_min/osam_factor, up to nyq_factor × (n / (2·baseline)).
-
-    Returns (f_min, df, n_freq) so Spark and the oracle generate bit-
-    identical grids from the same three scalars.
-    """
-    span = t_max - t_min
-    f_min = 1.0 / span
-    df = f_min / osam_factor
-    f_max = nyq_factor * n / (2.0 * span)
-    n_freq = max(int((f_max - f_min) / df) + 1, 1)
-    return f_min, df, n_freq
-
-
 def freq_grid(spark: SparkSession, f_min: float, df: float, n_freq: int) -> DataFrame:
-    """Materialize the grid as a tiny DataFrame: freq_k = f_min + k·df."""
-    return spark.range(n_freq).select(
-        (F.lit(f_min) + F.col("id") * F.lit(df)).alias("freq")
+    """The grid freq_k = f_min + k·df as a LOCAL relation (one `freq`
+    column): computed on the driver with the same IEEE operations the
+    SQL oracles use, so broadcasting it schedules no job."""
+    return local_relation(
+        spark,
+        [{"freq": f_min + float(k) * df} for k in range(n_freq)],
+        T.StructType([T.StructField("freq", T.DoubleType(), False)]),
     )
 
 

@@ -27,7 +27,6 @@ rescaling, compressed HDUs) raise rather than silently misread.
 from __future__ import annotations
 
 import io
-from collections.abc import Sequence
 
 import numpy as np
 
@@ -315,7 +314,3 @@ def read_tess_fits(
         out = median_normalize(out, group_cols=("inst", "chunk"))
     return out
 
-
-def chunk_files(paths: Sequence[str]) -> list[str]:
-    """Tiny helper for tests: stable ordering of fixture paths."""
-    return sorted(paths)

@@ -73,14 +73,17 @@ def test_pipeline_gate_closed_on_noise(spark, cfg):
     assert res.phase_bundle is None
 
 
-def test_population_run_per_target(spark, cfg):
-    """Population orchestration (§7.1.6 fan-out): K targets with
-    distinct injected ephemerides through ONE job chain, target as the
-    group key of every stage — per-target recovery, the noise target
-    stays below the gate, and the per-target summary agrees with the
-    single-series `run_pipeline` on the same series."""
-    from miletos_spark.plans.orchestrator import run_population
+POP_CFG = RunConfig(
+    detrend_half_width=25, detrend_max_iter=1,
+    bls_p_min=2.0, bls_p_max=8.0, bls_osam=4.0,
+    bls_n_dcyc=2, bls_dcyc_min=0.02, bls_max_signals=1,
+    grid_span_days=SPAN,
+)
 
+
+def _population(spark):
+    """Three targets: tA/tB with distinct on-grid injected transits,
+    tC noise only."""
     p2 = 1.0 / (1.0 / 8.0 + 8.0 / (OSAM * SPAN))  # ≈ 5.02 d, on-grid
     a = transit_injected(
         spark, cadence_sec=600.0, span_days=SPAN, t0=0.0, period=P,
@@ -98,23 +101,49 @@ def test_population_run_per_target(spark, cfg):
                 (F.col("id") * 600.0 / 86400.0).alias("time"))
         .withColumn("value", F.lit(1.0) + F.randn(5) * 0.004)
     )
-    pop_cfg = RunConfig(
-        detrend_half_width=25, detrend_max_iter=1,
-        bls_p_min=2.0, bls_p_max=8.0, bls_osam=4.0,
-        bls_n_dcyc=2, bls_dcyc_min=0.02, bls_max_signals=1,
-        grid_span_days=SPAN,
-    )
+    return a.unionByName(b).unionByName(c)
+
+
+def test_population_run_per_target(spark):
+    """Population orchestration (§7.1.6 fan-out): K targets with
+    distinct injected ephemerides through ONE analyses action, target
+    as the group key of every stage — per-target recovery, the noise
+    target stays below the gate, and the per-target summary agrees with
+    the single-series `run_pipeline` on the same series."""
+    from miletos_spark.plans.orchestrator import run_population
+
+    pop = _population(spark)
     out = {
         r["target"]: r.asDict()
-        for r in run_population(
-            spark, a.unionByName(b).unionByName(c), pop_cfg
-        ).collect()
+        for r in run_population(spark, pop, POP_CFG).collect()
     }
     assert out["tA"]["detected"] and out["tA"]["n_bls_signals"] == 1
     assert out["tB"]["detected"] and out["tB"]["n_bls_signals"] == 1
     assert not out["tC"]["detected"] and out["tC"]["n_bls_signals"] == 0
     # per-target summary == the single-series pipeline on that series
-    solo_res = run_pipeline(spark, a.select("time", "value"), pop_cfg)
+    solo_res = run_pipeline(
+        spark, pop.filter(F.col("target") == "tA").select("time", "value"),
+        POP_CFG,
+    )
+    # the accepted detection, value for value, equals the flat search
+    # (`bls_multi_signal`, one collect per iteration) over the same
+    # detrended series
+    from miletos_spark.search.bls import bls_multi_signal, trial_table
+
+    flat = bls_multi_signal(
+        solo_res.detrended.select(
+            "time", F.col("value_detrended").alias("value")
+        ),
+        trial_table(spark, 2.0, 8.0, span_days=SPAN, osam=OSAM, n_dcyc=2,
+                    dcyc_min=0.02),
+        max_signals=1, snr_threshold=POP_CFG.bls_snr_accept,
+    )
+    assert len(flat) == 1
+    assert solo_res.bls_detections == [
+        {"signal_idx": i, **{k: f[k] for k in
+                             ("period", "dcyc", "epoch", "depth", "snr")}}
+        for i, f in enumerate(flat)
+    ]
     solo = solo_res.summary
     assert out["tA"]["n_samples"] == solo["n_samples"]
     assert out["tA"]["best_bls_snr"] == pytest.approx(
@@ -130,6 +159,33 @@ def test_population_run_per_target(spark, cfg):
     )
     assert out["tB"]["depth_hat"] == pytest.approx(0.012, rel=0.35)
     assert out["tC"]["depth_hat"] is None
+
+
+def test_population_job_budget(spark):
+    """Job budget of a warm `run_population` pass over the three-target
+    population: at most 30 Spark jobs — the per-target clip (2), ONE
+    analyses action that runs BLS, LS and flares together (20) and the
+    gated phase-bin + depth-fit tail (8). The first pass fills the
+    detrend caches, so the counted pass is the steady state. Counted
+    through a job tag."""
+    import uuid
+
+    from miletos_spark.plans.orchestrator import run_population
+
+    pop = _population(spark)
+    run_population(spark, pop, POP_CFG).collect()
+    sc = spark.sparkContext
+    tag = "population-budget-" + uuid.uuid4().hex[:8]
+    sc.addJobTag(tag)
+    try:
+        rows = run_population(spark, pop, POP_CFG).collect()
+    finally:
+        sc.removeJobTag(tag)
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty(60_000)
+    jobs = len(jsc.statusTracker().getJobIdsForTag(tag))
+    assert sorted(r["target"] for r in rows) == ["tA", "tB", "tC"]
+    assert jobs <= 30, f"{jobs} jobs for one warm population pass"
 
 
 def test_population_requires_frozen_grid(spark):
