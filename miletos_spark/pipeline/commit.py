@@ -1,13 +1,22 @@
-"""Unified local-fs manifest-commit seam (VERDICT r10 Missing #4).
+"""Unified local-fs commit seam (VERDICT r10 Missing #4).
 
-Three landing seams had grown the same inline convention with the same
-"manifest/Delta at cluster scale" docstring stance: the pack-shards
-batch marker (`streaming.ingest.stream_pack_shards`), the
-cluster-index touched-bucket rewrite + drained-bucket delete
-(`landing.update_cluster_index`), and the dynamic-partition index
-overwrites. This module is the single tested code path for all of
-them:
+Four landing seams share one convention: build the new state where no
+reader looks, then publish it with one atomic rename. This module is
+the single tested code path for all of them:
 
+- `land_once` / `publish_dir`: the memoized landing (the reference's
+  pickle-memo short-circuit, miletos/main.py:8706-8714, S11). A memo
+  directory lives under `tempfile.gettempdir()`, keyed by
+  md5(tag | source path | source identity); identity is
+  (mtime_ns, size) for a file and the sorted (relpath, mtime_ns, size)
+  of every file under a directory, so an in-place rewrite inside a
+  directory source changes the key. A directory that exists is
+  complete: `build(tmp)` runs on a private `<root>.<uuid4>.tmp`
+  sibling, and one `os.rename` publishes it. A build killed or failed
+  mid-write therefore leaves no root, and the next call rebuilds; of
+  two concurrent builders the first rename wins and the second
+  discards its copy. `overwrite` renames the old root aside, the new
+  one in, then deletes the old one (the `upsert_results` swap).
 - `write_marker` / `read_marker`: an atomic JSON marker — tmp file +
   `os.replace` (POSIX rename is atomic on one filesystem), so readers
   never observe a torn or partial marker. The pack-shards marker's
@@ -29,21 +38,25 @@ them:
   reusable.
 
 Cluster-scale mapping (the documented deployment shape, not emulated
-here): the marker is a Delta/Iceberg commit (manifest list + atomic
-metadata pointer swap); the versioned publish is a new table version
-plus the version pointer in the transaction log; the partition
-overwrite is `REPLACE WHERE` / `INSERT OVERWRITE PARTITION ...` under
-the same snapshot-isolation contract. The local forms have identical
-crash semantics on a single node, which is what the crash-replay tests
-assert.
+here): the memo publish is a write to a staging prefix plus one
+committed table version; the marker is a Delta/Iceberg commit
+(manifest list + atomic metadata pointer swap); the versioned publish
+is a new table version plus the version pointer in the transaction
+log; the partition overwrite is `REPLACE WHERE` / `INSERT OVERWRITE
+PARTITION ...` under the same snapshot-isolation contract. The local
+forms have identical crash semantics on a single node, which is what
+the crash-replay tests assert.
 """
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import re
 import shutil
+import tempfile
+import uuid
 from collections.abc import Callable, Iterable
 
 # partition values Spark lands verbatim (no escapePathName rewriting):
@@ -88,6 +101,78 @@ def write_marker(path: str, payload: object = None) -> str:
         json.dump(payload, f)
     os.replace(tmp, path)
     return path
+
+
+def _identity(src: str) -> object:
+    """What a memo key records of its source: (mtime_ns, size) for a
+    file, the sorted (relpath, mtime_ns, size) of every file under a
+    directory, None when the source is missing."""
+    if os.path.isdir(src):
+        files = []
+        for d, _, names in os.walk(src):
+            for n in names:
+                st = os.stat(os.path.join(d, n))
+                rel = os.path.relpath(os.path.join(d, n), src)
+                files.append((rel, st.st_mtime_ns, st.st_size))
+        return sorted(files)
+    try:
+        st = os.stat(src)
+    except OSError:
+        return None
+    return (st.st_mtime_ns, st.st_size)
+
+
+def publish_dir(
+    root: str, build: "Callable[[str], None]", overwrite: bool = False
+) -> str:
+    """Build-once publish of the directory `root`: return it at once if
+    it exists (a directory that exists is complete) unless `overwrite`;
+    otherwise `build(tmp)` writes a private `<root>.<uuid4>.tmp`
+    sibling, which one `os.rename` moves into place. A build that
+    raises leaves `root` as it was and its tmp removed. If another
+    builder published first, this one's copy is discarded and the
+    winner's returned. Returns `root`."""
+    if os.path.exists(root) and not overwrite:
+        return root
+    tmp = f"{root}.{uuid.uuid4().hex}.tmp"
+    old = None
+    try:
+        build(tmp)
+        if overwrite and os.path.exists(root):
+            old = f"{root}.{uuid.uuid4().hex}.old"
+            try:
+                os.rename(root, old)
+            except FileNotFoundError:  # a concurrent overwrite moved it
+                old = None
+        try:
+            os.rename(tmp, root)
+        except OSError:
+            if not os.path.isdir(root):
+                raise
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+    if old is not None:
+        shutil.rmtree(old, ignore_errors=True)
+    return root
+
+
+def land_once(
+    tag: str,
+    build: "Callable[[str], None]",
+    src: str | None = None,
+    overwrite: bool = False,
+) -> str:
+    """The memoized landing: `publish_dir` on a directory under
+    `tempfile.gettempdir()` keyed by md5(tag | abspath(src) |
+    identity(src)). `tag` names the recipe (bump it when the build
+    changes); `src` is the input whose change must invalidate the
+    landing (None for a synthetic, recipe-only landing)."""
+    sig = tag
+    if src is not None:
+        sig = f"{tag}|{os.path.abspath(src)}|{_identity(src)}"
+    key = hashlib.md5(sig.encode()).hexdigest()[:16]
+    root = os.path.join(tempfile.gettempdir(), f"miletos_index_{key}")
+    return publish_dir(root, build, overwrite)
 
 
 def read_marker(path: str) -> object | None:

@@ -32,7 +32,7 @@ from miletos_spark.search.bls import bls_sql, bls_search
 from miletos_spark.search.lombscargle import freq_grid, lomb_scargle, lomb_scargle_sql
 from miletos_spark.search.outlier_period import outlier_period_search, outlier_period_sql
 from miletos_spark.functions.scalars import quantize, quantize_sql
-from miletos_spark.pipeline.landing import _commit_marker
+from miletos_spark.pipeline.commit import land_once
 from miletos_spark.schema import epoch_micros_expr, load_table
 
 # --- shared constants (identical in both engines) ---------------------------
@@ -1028,10 +1028,6 @@ def q_dsir_landed_select_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     atomic pointer — count folds are not replay-idempotent, and the
     old overwrite-then-marker ordering had a crash window that would
     silently double the batch contribution on rerun."""
-    import hashlib
-    import os as _os
-    import tempfile
-
     from miletos_spark.pipeline.commit import current_version, publish_version
     from miletos_spark.pipeline.landing import (
         dsir_bucket_counts,
@@ -1042,19 +1038,9 @@ def q_dsir_landed_select_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     is_batch = F.pmod(F.xxhash64("doc_id"), F.lit(7)) == 0
-    src = _os.path.join(sf_dir, "documents.parquet")
-    try:
-        st = _os.stat(src)
-        sig = f"{_os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}|dsiri2"
-    except OSError:
-        sig = _os.path.abspath(src) + "|dsiri2"
-    root = _os.path.join(
-        tempfile.gettempdir(),
-        "miletos_dsiridx_" + hashlib.md5(sig.encode()).hexdigest()[:12],
-    )
-    _os.makedirs(root, exist_ok=True)
-    ptr = _os.path.join(root, "MODEL_CURRENT")
-    if current_version(ptr) is None:
+
+    def build(root: str) -> None:
+        ptr = os.path.join(root, "MODEL_CURRENT")
         publish_version(
             ptr,
             "model_v0",
@@ -1063,8 +1049,7 @@ def q_dsir_landed_select_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
             .write.mode("overwrite")
             .parquet(d),
         )
-    v0 = current_version(ptr)
-    if _os.path.basename(v0) == "model_v0":
+        v0 = current_version(ptr)
         publish_version(
             ptr,
             "model_v1",
@@ -1072,7 +1057,10 @@ def q_dsir_landed_select_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
                 spark, v0, docs.filter(is_batch), m_buckets=64, out_path=d
             ),
         )
-    mpath = current_version(ptr)
+
+    src = os.path.join(sf_dir, "documents.parquet")
+    root = land_once("dsiri2", build, src)
+    mpath = current_version(os.path.join(root, "MODEL_CURRENT"))
     model = dsir_logratios_from_landed(spark, mpath, 64)
     raw = docs.filter(F.col("lang") != "en")
     picked = dsir_select(raw, None, k=40, m_buckets=64, model=model)
@@ -1921,25 +1909,9 @@ def _land_docs_tokens_parity_feed(spark: SparkSession, sf_dir: str) -> str:
     composition is a pure function of CONTENT (not of file-listing
     order), which is what lets the streaming packer's oracle replay
     batch-local packing exactly (batch ≡ parity class)."""
-    import hashlib
-    import tempfile
-
     from miletos_spark.pipeline.text import token_count
 
-    src = os.path.join(sf_dir, "documents.parquet")
-    try:
-        st = os.stat(src)
-        sig = f"{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}|par"
-    except OSError:
-        sig = os.path.abspath(sf_dir) + "|par"
-    key = hashlib.md5(sig.encode()).hexdigest()[:12]
-    root = os.path.join(tempfile.gettempdir(), f"miletos_docpar_{key}")
-    land = os.path.join(root, "data")
-    done = os.path.join(root, "_SUCCESS_FEED")
-    # gate on a done MARKER, not dir existence: the feed is TWO write
-    # jobs, and a crash between them would otherwise permanently cache
-    # a half feed (the _land_media_phash_index convention)
-    if not os.path.exists(done):
+    def build(land: str) -> None:
         docs = load_table(spark, sf_dir, "documents")
         base = docs.select(
             "lang",
@@ -1952,8 +1924,10 @@ def _land_docs_tokens_parity_feed(spark: SparkSession, sf_dir: str) -> str:
         base.filter(F.col("doc_id") % 2 == 1).coalesce(1).write.mode(
             "append"
         ).parquet(land)
-        _commit_marker(done, "ok")
-    return land
+
+    # the feed is TWO write jobs: the rename publish means a crash
+    # between them never leaves a half feed behind
+    return land_once("par", build, os.path.join(sf_dir, "documents.parquet"))
 
 
 def q_stream_pack_bins_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3717,22 +3691,14 @@ FROM p GROUP BY 1, 2, 3
 def _land_docs_jsonl(spark: SparkSession, sf_dir: str) -> str:
     """Memoized landing of the documents table as JSONL (the wire
     format real crawl corpora arrive in) — S11 memo keying on the
-    parquet source's path+mtime+size."""
-    import hashlib
-    import os
-    import tempfile
-
-    src = os.path.join(sf_dir, "documents.parquet")
-    try:
-        st = os.stat(src)
-        sig = f"{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}|jsonl"
-    except OSError:
-        sig = os.path.abspath(sf_dir) + "|jsonl"
-    key = hashlib.md5(sig.encode()).hexdigest()[:12]
-    land = os.path.join(tempfile.gettempdir(), f"miletos_land_{key}", "data")
-    if not os.path.exists(land):
-        load_table(spark, sf_dir, "documents").repartition(4).write.json(land)
-    return land
+    parquet source's identity (`land_once`)."""
+    return land_once(
+        "jsonl",
+        lambda land: load_table(spark, sf_dir, "documents")
+        .repartition(4)
+        .write.json(land),
+        os.path.join(sf_dir, "documents.parquet"),
+    )
 
 
 def q_jsonl_ingest_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4731,10 +4697,6 @@ def q_near_dup_clusters_incremental(
     Jaccard (SQL_NEAR_DUP_CLUSTERS verbatim), so append==rebuild is
     precisely what the hash gate proves, on top of the bit-equality
     unit tests."""
-    import hashlib
-    import os as _os
-    import tempfile
-
     from miletos_spark.pipeline.dedup import (
         lsh_pairs_from_bands,
         ngram_jaccard_pairs,
@@ -4757,21 +4719,14 @@ def q_near_dup_clusters_incremental(
     scored = ngram_jaccard_pairs(docs_c, cands, k=9).cache()
     pairs = scored.filter(F.col("jaccard") >= 0.5)
     is_init = F.pmod(F.xxhash64("id_a", "id_b"), F.lit(2)) == 0
-    src = _os.path.join(sf_dir, "documents.parquet")
-    try:
-        st = _os.stat(src)
-        sig = f"{_os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}|cci"
-    except OSError:
-        sig = _os.path.abspath(src) + "|cci"
-    root = _os.path.join(
-        tempfile.gettempdir(),
-        "miletos_clusteridx_" + hashlib.md5(sig.encode()).hexdigest()[:12],
+    root = land_once(
+        "cci",
+        lambda r: land_cluster_index(
+            spark, pairs.filter(is_init), os.path.join(r, "clusters")
+        ),
+        os.path.join(sf_dir, "documents.parquet"),
     )
-    cpath = _os.path.join(root, "clusters")
-    done = _os.path.join(root, "_SUCCESS_INDEX")
-    if not _os.path.exists(done):
-        land_cluster_index(spark, pairs.filter(is_init), cpath)
-        _commit_marker(done, "ok")
+    cpath = os.path.join(root, "clusters")
     # the appended batch — idempotent under replay (re-runs no-op)
     update_cluster_index(spark, cpath, pairs.filter(~is_init))
     comp = spark.read.parquet(cpath)
@@ -4837,11 +4792,8 @@ def _land_doc_clusters(spark: SparkSession, sf_dir: str) -> str:
     """Memoized landed (node, component) cluster table over the
     documents corpus — the full LSH-candidate → exact-Jaccard →
     connected-components chain of `q_near_dup_clusters`, landed once
-    per corpus (done-marker gated) so the STREAMING split row joins a
+    per corpus (`land_once`) so the STREAMING split row joins a
     static table exactly the way a production ingest would."""
-    import hashlib
-    import tempfile
-
     from miletos_spark.pipeline.dedup import (
         connected_components,
         lsh_pairs_from_bands,
@@ -4849,17 +4801,7 @@ def _land_doc_clusters(spark: SparkSession, sf_dir: str) -> str:
     )
     from miletos_spark.pipeline.landing import land_dedup_index
 
-    src = os.path.join(sf_dir, "documents.parquet")
-    try:
-        st = os.stat(src)
-        sig = f"{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}|dcl"
-    except OSError:
-        sig = os.path.abspath(sf_dir) + "|dcl"
-    key = hashlib.md5(sig.encode()).hexdigest()[:12]
-    root = os.path.join(tempfile.gettempdir(), f"miletos_docclust_{key}")
-    land = os.path.join(root, "clusters")
-    done = os.path.join(root, "_SUCCESS_FEED")
-    if not os.path.exists(done):
+    def build(land: str) -> None:
         paths = land_dedup_index(spark, sf_dir, k=9, num_hashes=32, bands=8)
         cands = lsh_pairs_from_bands(spark.read.parquet(paths["bands"]))
         docs = load_table(spark, sf_dir, "documents")
@@ -4872,8 +4814,8 @@ def _land_doc_clusters(spark: SparkSession, sf_dir: str) -> str:
         scored = ngram_jaccard_pairs(docs_c, cands, k=9).cache()
         pairs = scored.filter(F.col("jaccard") >= 0.5)
         connected_components(pairs).write.mode("overwrite").parquet(land)
-        _commit_marker(done, "ok")
-    return land
+
+    return land_once("dcl", build, os.path.join(sf_dir, "documents.parquet"))
 
 
 def q_stream_split_assign_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6301,28 +6243,15 @@ def land_stream_events(
 ) -> str:
     """Memoized streaming landing (S11 pattern): one micros-timestamp
     parquet copy of the events source per container — the copy is
-    immutable, keyed on source path+mtime+size so regenerated testdata
-    invalidates it. On a cluster this is the ingest job that feeds the
-    stream; `bench.py` times it under an `ingest:` label so the
-    streaming query numbers measure the stream, not a parquet rewrite.
-    `overwrite=True` drops the memo first (bench uses it to time the
+    immutable, keyed on the source's identity (`land_once`) so
+    regenerated testdata invalidates it. On a cluster this is the
+    ingest job that feeds the stream; `bench.py` times it under an
+    `ingest:` label so the streaming query numbers measure the stream,
+    not a parquet rewrite.
+    `overwrite=True` rebuilds the memo (bench uses it to time the
     cold build deterministically)."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
 
-    src = os.path.join(sf_dir, "events.parquet")
-    try:
-        st = os.stat(src)
-        sig = f"{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}"
-    except OSError:
-        sig = os.path.abspath(sf_dir)
-    key = hashlib.md5(sig.encode()).hexdigest()[:12]
-    land = os.path.join(tempfile.gettempdir(), f"miletos_land_{key}", "data")
-    if overwrite and os.path.exists(land):
-        shutil.rmtree(os.path.dirname(land), ignore_errors=True)
-    if not os.path.exists(land):
+    def build(land: str) -> None:
         ev = load_table(spark, sf_dir, "events")
         # integer epoch-micros (type-robust: nanos-bigint, NTZ, or
         # TIMESTAMP reads all land on the same integer) re-encoded as
@@ -6341,7 +6270,10 @@ def land_stream_events(
         ).withColumn(
             "ts", F.timestamp_micros(epoch_micros_expr(ev, "ts"))
         ).write.parquet(land)
-    return land
+
+    return land_once(
+        "events", build, os.path.join(sf_dir, "events.parquet"), overwrite
+    )
 
 
 # Frozen matched-filter stream config: the 4-sample mean-subtracted
@@ -6364,19 +6296,8 @@ def land_stream_flare_events(spark: SparkSession, sf_dir: str) -> str:
     series ranked ONCE at write time (event_type, cadence idx, value) —
     a stream cannot rank, the ingest job can; the scatter-gather
     correlation then needs no ordering at all (S11 memo pattern)."""
-    import hashlib
-    import os
-    import tempfile
 
-    src = os.path.join(sf_dir, "events.parquet")
-    try:
-        st = os.stat(src)
-        sig = f"{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}|flare"
-    except OSError:
-        sig = os.path.abspath(sf_dir) + "|flare"
-    key = hashlib.md5(sig.encode()).hexdigest()[:12]
-    land = os.path.join(tempfile.gettempdir(), f"miletos_land_{key}", "data")
-    if not os.path.exists(land):
+    def build(land: str) -> None:
         ev = load_table(spark, sf_dir, "events")
         w = Window.partitionBy("event_type").orderBy(
             epoch_micros_expr(ev, "ts"), "event_id"
@@ -6386,7 +6307,8 @@ def land_stream_flare_events(spark: SparkSession, sf_dir: str) -> str:
             (F.row_number().over(w) - 1).cast("long").alias("idx"),
             "value",
         ).write.parquet(land)
-    return land
+
+    return land_once("flare", build, os.path.join(sf_dir, "events.parquet"))
 
 
 def q_stream_flare_keyed_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6448,19 +6370,8 @@ def _land_docs_curation_feed(spark: SparkSession, sf_dir: str) -> str:
     injected (the training_shards feed), written as 4 parquet files so
     maxFilesPerTrigger=1 forces the dedup state to work ACROSS
     micro-batches."""
-    import hashlib
-    import os
-    import tempfile
 
-    src = os.path.join(sf_dir, "documents.parquet")
-    try:
-        st = os.stat(src)
-        sig = f"{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}|cur"
-    except OSError:
-        sig = os.path.abspath(sf_dir) + "|cur"
-    key = hashlib.md5(sig.encode()).hexdigest()[:12]
-    land = os.path.join(tempfile.gettempdir(), f"miletos_land_{key}", "data")
-    if not os.path.exists(land):
+    def build(land: str) -> None:
         base = load_table(spark, sf_dir, "documents")
         docs = base.unionByName(
             base.filter(F.col("doc_id") % 10 == 0).withColumn(
@@ -6470,7 +6381,8 @@ def _land_docs_curation_feed(spark: SparkSession, sf_dir: str) -> str:
         docs.select(
             "doc_id", "lang", _pii_injected_text().alias("text")
         ).repartition(4).write.parquet(land)
-    return land
+
+    return land_once("cur", build, os.path.join(sf_dir, "documents.parquet"))
 
 
 CURATION_STREAM_SCHEMA = "doc_id long, lang string, text string"
@@ -6848,22 +6760,9 @@ def _land_docs_pack_feed(spark: SparkSession, sf_dir: str) -> str:
     cannot rank, ingest can — and the packing layout's determinism
     contract (stream drain ≡ batch `pack_chunks`) rests on it."""
     import glob as _glob
-    import hashlib
-    import os
     import shutil
-    import tempfile
 
-    src = os.path.join(sf_dir, "documents.parquet")
-    try:
-        st = os.stat(src)
-        sig = f"{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}|pack"
-    except OSError:
-        sig = os.path.abspath(sf_dir) + "|pack"
-    key = hashlib.md5(sig.encode()).hexdigest()[:12]
-    land = os.path.join(
-        tempfile.gettempdir(), f"miletos_packland_{key}", "data"
-    )
-    if not os.path.exists(land):
+    def build(land: str) -> None:
         base = load_table(spark, sf_dir, "documents")
         docs = base.unionByName(
             base.filter(F.col("doc_id") % 10 == 0).withColumn(
@@ -6872,11 +6771,10 @@ def _land_docs_pack_feed(spark: SparkSession, sf_dir: str) -> str:
         ).select("doc_id", "lang", _pii_injected_text().alias("text"))
         n = base.agg(F.max("doc_id")).first()[0] + 1
         bounds = [0, n // 3, 2 * (n // 3), 5000000, 1 << 62]
-        tmp = land + ".tmp"
-        os.makedirs(tmp, exist_ok=True)
+        os.makedirs(land)
         t0 = os.stat(sf_dir).st_mtime
         for k in range(4):
-            part_dir = os.path.join(tmp, f"_w{k}")
+            part_dir = os.path.join(land, f"_w{k}")
             (
                 docs.filter(
                     (F.col("doc_id") >= bounds[k])
@@ -6886,12 +6784,12 @@ def _land_docs_pack_feed(spark: SparkSession, sf_dir: str) -> str:
                 .write.parquet(part_dir)
             )
             [pf] = _glob.glob(os.path.join(part_dir, "part-*.parquet"))
-            dst = os.path.join(tmp, f"{k:03d}.parquet")
+            dst = os.path.join(land, f"{k:03d}.parquet")
             shutil.move(pf, dst)
             shutil.rmtree(part_dir)
             os.utime(dst, (t0 + k, t0 + k))  # file k strictly older than k+1
-        os.rename(tmp, land)
-    return land
+
+    return land_once("pack", build, os.path.join(sf_dir, "documents.parquet"))
 
 
 def q_stream_pack_shards_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7443,24 +7341,9 @@ def _land_docs_dedup_feed(
     doc re-keyed above 1e6 with identical text — the duplicate
     pressure a crawler's stream actually carries), hashed and split
     into 8 files so the availableNow drain crosses micro-batches.
-    S11 memo keying as `land_stream_events` (path+mtime+size)."""
-    import hashlib
-    import os
-    import tempfile
+    S11 memo keying as `land_stream_events` (`land_once`)."""
 
-    src = os.path.join(sf_dir, "documents.parquet")
-    try:
-        st = os.stat(src)
-        sig = f"{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}|dedupfeed"
-    except OSError:
-        sig = os.path.abspath(sf_dir) + "|dedupfeed"
-    key = hashlib.md5(sig.encode()).hexdigest()[:12]
-    land = os.path.join(tempfile.gettempdir(), f"miletos_land_{key}", "data")
-    if overwrite and os.path.exists(land):
-        import shutil
-
-        shutil.rmtree(os.path.dirname(land), ignore_errors=True)
-    if not os.path.exists(land):
+    def build(land: str) -> None:
         docs = load_table(spark, sf_dir, "documents")
         dup = docs.filter(F.col("doc_id") % 7 == 0).withColumn(
             "doc_id", F.col("doc_id") + 1000000
@@ -7470,7 +7353,9 @@ def _land_docs_dedup_feed(
             .select("doc_id", F.md5("text").alias("text_hash"))
         )
         feed.repartition(8).write.parquet(land)
-    return land
+
+    src = os.path.join(sf_dir, "documents.parquet")
+    return land_once("dedupfeed", build, src, overwrite)
 
 
 def q_stream_dedup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7508,23 +7393,8 @@ def _land_docs_neardup_feed(
     text — must all match their source) plus 25 novel synthetic docs
     (keyed at +3e6 — realistic non-duplicate traffic), split into 6
     files so the availableNow drain crosses micro-batches."""
-    import hashlib
-    import os
-    import tempfile
 
-    src = os.path.join(sf_dir, "documents.parquet")
-    try:
-        st = os.stat(src)
-        sig = f"{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}|ndfeed"
-    except OSError:
-        sig = os.path.abspath(sf_dir) + "|ndfeed"
-    key = hashlib.md5(sig.encode()).hexdigest()[:12]
-    land = os.path.join(tempfile.gettempdir(), f"miletos_land_{key}", "data")
-    if overwrite and os.path.exists(land):
-        import shutil
-
-        shutil.rmtree(os.path.dirname(land), ignore_errors=True)
-    if not os.path.exists(land):
+    def build(land: str) -> None:
         docs = load_table(spark, sf_dir, "documents")
         reps = docs.filter(F.col("doc_id") % 5 == 0).select(
             (F.col("doc_id") + 2000000).alias("doc_id"), "text"
@@ -7538,7 +7408,9 @@ def _land_docs_neardup_feed(
             ).alias("text"),
         )
         reps.unionByName(novel).repartition(6).write.parquet(land)
-    return land
+
+    src = os.path.join(sf_dir, "documents.parquet")
+    return land_once("ndfeed", build, src, overwrite)
 
 
 def _stream_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -8035,13 +7907,8 @@ def _land_media_phash_index(spark: SparkSession) -> str:
     set's source, ADVICE r11) land alongside so the streaming verdict
     composition never re-runs an O(index) distinct or groupBy per
     micro-batch."""
-    import os
-    import tempfile
 
-    root = os.path.join(tempfile.gettempdir(), "miletos_mediaidx_v4")
-    land = os.path.join(root, "bands")
-    done = os.path.join(root, "_SUCCESS_INDEX")
-    if not os.path.exists(done):
+    def build(root: str) -> None:
         from miletos_spark.pipeline.landing import (
             band_bucket_stats,
             write_index_stats,
@@ -8052,6 +7919,7 @@ def _land_media_phash_index(spark: SparkSession) -> str:
             synth_media,
         )
 
+        land = os.path.join(root, "bands")
         fps = phash_frames(
             decode_media(synth_media(spark, n=64, frame_px=8))
         )
@@ -8092,29 +7960,23 @@ def _land_media_phash_index(spark: SparkSession) -> str:
             root,
             band_bucket_stats(landed, ["band", "chunk"], fp_col="phash_hex"),
         )
-        _commit_marker(done, "ok")
-    return land
+
+    return os.path.join(land_once("mediaidx_v4", build), "bands")
 
 
 def _land_media_arrivals(spark: SparkSession) -> str:
     """The planted re-upload copies as a 2-file streaming feed (the
     q_media_near_dup payload-level planting, shared via
     `_media_reuploads`), so the probe spans micro-batches."""
-    import os
-    import tempfile
-
     from miletos_spark.pipeline.multimodal import synth_media
 
-    root = os.path.join(tempfile.gettempdir(), "miletos_mediaarr_v1")
-    land = os.path.join(root, "data")
-    done = os.path.join(root, "_SUCCESS_INDEX")
-    if not os.path.exists(done):
+    def build(land: str) -> None:
         media = synth_media(spark, n=64, frame_px=8)
         _media_reuploads(media).repartition(2).write.mode(
             "overwrite"
         ).parquet(land)
-        _commit_marker(done, "ok")
-    return land
+
+    return land_once("mediaarr_v1", build)
 
 
 def q_stream_media_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -9001,24 +8863,8 @@ def _land_emb_arrivals(spark: SparkSession, sf_dir: str) -> str:
     planted recovery contract) interleaved with an equal count of
     FRESH xxhash-synthesized vectors (ids +2·OFFSET) that must match
     nothing; 2 files so the probe spans micro-batches."""
-    import hashlib
-    import os
-    import tempfile
 
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    try:
-        st = os.stat(src)
-        sig = f"{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}|arr"
-    except OSError:
-        sig = os.path.abspath(sf_dir) + "|arr"
-    key = hashlib.md5(sig.encode()).hexdigest()[:12]
-    root = os.path.join(tempfile.gettempdir(), f"miletos_embarr_{key}")
-    land = os.path.join(root, "data")
-    done = os.path.join(root, "_SUCCESS_FEED")
-    # done-marker gate, not dir existence (the ADVICE r12 decon-feed
-    # fix applied to its older sibling): a crash mid-write must not
-    # permanently cache a partial feed
-    if not os.path.exists(done):
+    def build(land: str) -> None:
         emb = load_table(spark, sf_dir, "embeddings")
         v = F.transform(F.col("embedding"), lambda x: x.cast("double"))
         base = emb.filter(F.col("vec_id") < EMB_DUP_PLANT_N)
@@ -9041,8 +8887,8 @@ def _land_emb_arrivals(spark: SparkSession, sf_dir: str) -> str:
         copies.unionByName(fresh).repartition(2).write.mode(
             "overwrite"
         ).parquet(land)
-        _commit_marker(done, "ok")
-    return land
+
+    return land_once("arr", build, os.path.join(sf_dir, "embeddings.parquet"))
 
 
 def q_stream_semantic_dedup_embeddings(
@@ -9192,23 +9038,8 @@ def _land_decon_arrivals(spark: SparkSession, sf_dir: str) -> str:
     embedding concentrate near 0 — ~7σ below the 0.9 cut — so the
     SQL-side replay can omit them exactly); 2 files so the probe spans
     micro-batches."""
-    import hashlib
-    import tempfile
 
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    try:
-        st = os.stat(src)
-        sig = f"{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}|dec"
-    except OSError:
-        sig = os.path.abspath(sf_dir) + "|dec"
-    key = hashlib.md5(sig.encode()).hexdigest()[:12]
-    root = os.path.join(tempfile.gettempdir(), f"miletos_deconarr_{key}")
-    land = os.path.join(root, "data")
-    done = os.path.join(root, "_SUCCESS_FEED")
-    # gate on a done MARKER, not dir existence (ADVICE r12): a crash
-    # mid-write would otherwise permanently cache a partial feed (the
-    # _land_docs_tokens_parity_feed convention)
-    if not os.path.exists(done):
+    def build(land: str) -> None:
         emb = load_table(spark, sf_dir, "embeddings")
         base = emb.filter(F.col("vec_id") < EMB_DECON_EVAL_N)
         copies = base.select(
@@ -9232,8 +9063,8 @@ def _land_decon_arrivals(spark: SparkSession, sf_dir: str) -> str:
         copies.unionByName(fresh).repartition(2).write.mode(
             "overwrite"
         ).parquet(land)
-        _commit_marker(done, "ok")
-    return land
+
+    return land_once("dec", build, os.path.join(sf_dir, "embeddings.parquet"))
 
 
 def q_stream_semantic_decontaminate_docs(
@@ -9302,27 +9133,17 @@ def _land_decon_eval_corpus(spark: SparkSession, sf_dir: str) -> str:
     `embeddings.parquet` table of the first EMB_DECON_EVAL_N vectors),
     so `land_ivf2_index` can quantize the EVAL side — the
     too-big-to-broadcast deployment the indexed decontamination form
-    exists for. Done-marker gated (the _land_decon_arrivals fix)."""
-    import hashlib
-    import tempfile
+    exists for."""
 
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    try:
-        st = os.stat(src)
-        sig = f"{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}|evc"
-    except OSError:
-        sig = os.path.abspath(sf_dir) + "|evc"
-    key = hashlib.md5(sig.encode()).hexdigest()[:12]
-    root = os.path.join(tempfile.gettempdir(), f"miletos_deconeval_{key}")
-    land = os.path.join(root, "embeddings.parquet")
-    done = os.path.join(root, "_SUCCESS_FEED")
-    if not os.path.exists(done):
+    def build(root: str) -> None:
         emb = load_table(spark, sf_dir, "embeddings")
         emb.filter(F.col("vec_id") < EMB_DECON_EVAL_N).coalesce(
             1
-        ).write.mode("overwrite").parquet(land)
-        _commit_marker(done, "ok")
-    return root
+        ).write.mode("overwrite").parquet(
+            os.path.join(root, "embeddings.parquet")
+        )
+
+    return land_once("evc", build, os.path.join(sf_dir, "embeddings.parquet"))
 
 
 def q_semantic_decontaminate_indexed_docs(
@@ -9788,8 +9609,8 @@ def q_ivfpq_recall_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     no-false-negative assertion-oracle pattern) and SCALE.md records
     the measured number per sf. The exact baseline is LANDED beside
     the index (r14, VERDICT r13 Missing #3 / Wrong #2:
-    `land_exact_topk` — deterministic per corpus, done-marker
-    memoized), so the timed measurement is probe + semi-join against a
+    `land_exact_topk` — deterministic per corpus, memoized through
+    `land_once`), so the timed measurement is probe + semi-join against a
     tiny parquet read; the |Q|·n brute-force pass runs only inside the
     landing build, never per invocation."""
     from miletos_spark.pipeline.landing import (
@@ -10516,27 +10337,15 @@ def q_fits_ingest_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     per file is oracle-checked against the same mask/normalize/summary
     computed relationally from the events table. Quality flags are
     synthesized as value > 4 → 8 (QUALITY != 0 rows must vanish)."""
-    import hashlib
-    import os
-    import tempfile
-
     import numpy as np
     import pandas as pd
 
     from miletos_spark.sources.fits import read_tess_fits, write_fits_table
 
     ev = _ev_days(spark, sf_dir)
-    src = os.path.join(sf_dir, "events.parquet")
-    try:
-        st = os.stat(src)
-        sig = f"fits|{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}"
-    except OSError:
-        sig = "fits|" + os.path.abspath(sf_dir)
-    key = hashlib.md5(sig.encode()).hexdigest()[:12]
-    land = os.path.join(tempfile.gettempdir(), f"miletos_fitsland_{key}")
-    if not os.path.exists(land):
-        tmp = land + ".tmp"
-        os.makedirs(tmp, exist_ok=True)
+
+    def build(tmp: str) -> None:
+        os.makedirs(tmp)
 
         def write_one(keyt: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
             et = keyt[0]
@@ -10558,7 +10367,8 @@ def q_fits_ingest_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.groupBy("event_type").applyInPandas(
             write_one, "event_type string, n long"
         ).collect()  # O(|types|) landing action
-        os.rename(tmp, land)
+
+    land = land_once("fits", build, os.path.join(sf_dir, "events.parquet"))
 
     out = read_tess_fits(spark, land + "/*.fits")
     s1 = F.sum(F.col("value").cast("decimal(38,18)")).cast("double")
@@ -10599,28 +10409,6 @@ FROM n GROUP BY event_type
 """
 
 
-def _memo_land(spark, sf_dir: str, tag: str, build) -> str:
-    """Source-fixture landing memo: derive an immutable landing dir
-    from the events file identity; `build(path)` writes it once."""
-    import hashlib
-    import os
-    import tempfile
-
-    src = os.path.join(sf_dir, "events.parquet")
-    try:
-        st = os.stat(src)
-        sig = f"{tag}|{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}"
-    except OSError:
-        sig = f"{tag}|" + os.path.abspath(sf_dir)
-    key = hashlib.md5(sig.encode()).hexdigest()[:12]
-    land = os.path.join(tempfile.gettempdir(), f"miletos_{tag}land_{key}")
-    if not os.path.exists(land):
-        tmp = land + ".tmp"
-        build(tmp)
-        os.rename(tmp, land)
-    return land
-
-
 def q_qlp_ingest_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S3 end-to-end in the driver contract: the events series lands as
     a QLP-style magnitude table (mag derived from value, QFLAG
@@ -10641,7 +10429,7 @@ def q_qlp_ingest_events(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("qflag"),
         ).write.parquet(tmp)
 
-    land = _memo_land(spark, sf_dir, "qlp", build)
+    land = land_once("qlp", build, os.path.join(sf_dir, "events.parquet"))
     out = read_magnitude_series(spark, land)
     s1 = F.sum(F.col("value").cast("decimal(38,18)")).cast("double")
     return out.agg(
@@ -10692,7 +10480,7 @@ def q_csv_ingest_events(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("stdv"),
         ).repartition(4).write.option("header", True).csv(tmp)
 
-    land = _memo_land(spark, sf_dir, "csv", build)
+    land = land_once("csv", build, os.path.join(sf_dir, "events.parquet"))
     out = read_series_csv(spark, land + "/*.csv")
     s1 = F.sum(F.col("value").cast("decimal(38,18)")).cast("double")
     sstd = F.sum(F.col("stdv").cast("decimal(38,18)")).cast("double")
@@ -10730,25 +10518,9 @@ def land_trigger_events(
     (so every real cluster provably closes under availableNow
     micro-batching). Same S11 memo keying as `land_stream_events`;
     timed by bench under an `ingest:` label."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
     gap_us = int(round(SESSION_GAP_SEC * 1_000_000))
-    src = os.path.join(sf_dir, "events.parquet")
-    try:
-        st = os.stat(src)
-        sig = f"trig|{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}"
-    except OSError:
-        sig = "trig|" + os.path.abspath(sf_dir)
-    key = hashlib.md5(sig.encode()).hexdigest()[:12]
-    land = os.path.join(
-        tempfile.gettempdir(), f"miletos_trigland_{key}", "data"
-    )
-    if overwrite and os.path.exists(land):
-        shutil.rmtree(os.path.dirname(land), ignore_errors=True)
-    if not os.path.exists(land):
+
+    def build(land: str) -> None:
         ev = load_table(spark, sf_dir, "events")
         evm = ev.withColumn(
             "ts", F.timestamp_micros(epoch_micros_expr(ev, "ts"))
@@ -10770,7 +10542,9 @@ def land_trigger_events(
         evm.select(
             "event_id", "ts", "user_id", "event_type", "value", "props"
         ).unionByName(sent).write.parquet(land)
-    return land
+
+    src = os.path.join(sf_dir, "events.parquet")
+    return land_once("trig", build, src, overwrite)
 
 
 def q_stream_trigger_clusters_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -10857,7 +10631,7 @@ def q_ztf_ingest_events(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("catflags"),
         ).write.parquet(tmp)
 
-    land = _memo_land(spark, sf_dir, "ztf", build)
+    land = land_once("ztf", build, os.path.join(sf_dir, "events.parquet"))
     out = read_ztf_cone(spark, land, ZTF_RA0, ZTF_DEC0, ZTF_RADIUS)
     s1 = F.sum(F.col("value").cast("decimal(38,18)")).cast("double")
     return out.agg(

@@ -12,6 +12,15 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_driver_memory() -> str:
+    """`spark.driver.memory` when SPARK_DRIVER_MEMORY is unset: a third
+    of the host's physical RAM, at most 48g. A heap larger than the
+    host lets G1 grow instead of collect until the kernel kills the
+    JVM."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(48 << 10, phys // 3 >> 20)}m"
+
+
 def get_spark(
     app_name: str = "miletos_spark",
     master: str | None = None,
@@ -51,7 +60,10 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # cluster twin of the os.environ defaults above (executors do

@@ -7,7 +7,10 @@
   existing rows with the same key, everything else is preserved.
 - `memoize_parquet` — the pickle memo short-circuit
   (miletos/main.py:8706-8714): return the cached table unless
-  overwrite; else build, persist, return.
+  overwrite; else build, persist, return. Persisted through
+  `pipeline.commit.publish_dir` (build in a tmp sibling, rename into
+  place), so a table that exists is complete and a failed build
+  leaves nothing behind to short-circuit on.
 """
 
 from __future__ import annotations
@@ -129,11 +132,12 @@ def memoize_parquet(
 ) -> DataFrame:
     """S11 — result-cache table: if `path` exists and not `overwrite`,
     short-circuit and read it (the reference's pickle memo,
-    miletos/main.py:8706-8714); else build, write, read back."""
-    if os.path.exists(path) and not overwrite:
-        return spark.read.parquet(path)
-    build().write.mode("overwrite").parquet(path)
-    return spark.read.parquet(path)
+    miletos/main.py:8706-8714); else build, publish, read back."""
+    from miletos_spark.pipeline.commit import publish_dir
+
+    return spark.read.parquet(
+        publish_dir(path, lambda d: build().write.parquet(d), overwrite)
+    )
 
 
 def export_fit_bundle(

@@ -322,3 +322,91 @@ def test_overwrite_partitions_rejects_escaped_values(spark, tmp_path):
         (r["v"], r["_pb"]) for r in spark.read.parquet(path).collect()
     }
     assert got == {(1, "a b"), (9, "ok")}
+
+
+def test_land_once_concurrent_builders_publish_one_complete_dir(
+    tmp_path, monkeypatch
+):
+    """Two builders of the same key racing past the existence check:
+    each builds its own tmp sibling, the first rename publishes, the
+    loser discards its copy and returns the winner's directory."""
+    import tempfile
+    import threading
+    import time
+
+    from miletos_spark.pipeline.commit import land_once
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    builds = []
+    lock = threading.Lock()
+    barrier = threading.Barrier(2)
+
+    def build(d):
+        with lock:
+            builds.append(d)
+        os.makedirs(d)
+        with open(os.path.join(d, "a"), "w") as f:
+            f.write("a")
+        time.sleep(0.2)  # both builders are mid-build together
+        with open(os.path.join(d, "b"), "w") as f:
+            f.write("b")
+
+    got = [None, None]
+
+    def call(i):
+        barrier.wait(timeout=60)
+        got[i] = land_once("race", build)
+
+    threads = [threading.Thread(target=call, args=(i,)) for i in range(2)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=60)
+    assert not any(t.is_alive() for t in threads)
+    assert 1 <= len(builds) <= 2
+    assert got[0] == got[1] and got[0] is not None
+    assert sorted(os.listdir(got[0])) == ["a", "b"]
+    assert [n for n in os.listdir(tmp_path) if n.endswith(".tmp")] == []
+    assert land_once("race", build) == got[0] and len(builds) <= 2
+
+
+def test_land_once_failed_build_publishes_nothing_and_overwrite_swaps(
+    tmp_path, monkeypatch
+):
+    """A build that raises leaves neither the root nor its tmp sibling,
+    so the next call rebuilds; `overwrite` replaces a published root
+    whole and leaves no sibling behind."""
+    import tempfile
+
+    from miletos_spark.pipeline.commit import land_once
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    src = tmp_path / "src.txt"
+    src.write_text("v1")
+
+    def failing(d):
+        os.makedirs(os.path.join(d, "_temporary", "0"))
+        raise RuntimeError("killed mid-write")
+
+    def writer(text):
+        def build(d):
+            os.makedirs(d)
+            with open(os.path.join(d, "out"), "w") as f:
+                f.write(text)
+        return build
+
+    with pytest.raises(RuntimeError):
+        land_once("t", failing, str(src))
+    assert os.listdir(tmp_path) == ["src.txt"]
+    root = land_once("t", writer("first"), str(src))
+    assert land_once("t", failing, str(src)) == root  # memo hit
+    assert land_once("t", writer("second"), str(src), overwrite=True) == root
+    with open(os.path.join(root, "out")) as f:
+        assert f.read() == "second"
+    assert sorted(os.listdir(tmp_path)) == sorted(
+        ["src.txt", os.path.basename(root)]
+    )
+    # a different tag or a changed source is a different landing
+    assert land_once("u", writer("x"), str(src)) != root
+    src.write_text("v2, longer")
+    assert land_once("t", writer("third"), str(src)) != root

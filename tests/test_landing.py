@@ -693,3 +693,117 @@ def test_land_exact_topk_memoizes_ground_truth(spark, sf_dir):
         assert path2 == path and os.path.exists(canary)
     finally:
         shutil.rmtree(os.path.dirname(path), ignore_errors=True)
+
+
+def test_killed_landing_write_is_not_served_as_memo(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """A driver killed mid-write leaves the `_temporary/0/` that Spark's
+    job setup creates in the write target. The next call must rebuild
+    the landing, not read that debris back as a finished (empty) one."""
+    import os
+    import tempfile
+
+    import pytest
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from miletos_spark.plans.driver_queries import q_jsonl_ingest_docs
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+
+    class Killed(Exception):
+        pass
+
+    def killed_json(self, path, *a, **kw):
+        os.makedirs(os.path.join(path, "_temporary", "0"))
+        raise Killed(path)
+
+    real_json = DataFrameWriter.json
+    monkeypatch.setattr(DataFrameWriter, "json", killed_json)
+    with pytest.raises(Killed):
+        q_jsonl_ingest_docs(spark, sf_dir)
+    monkeypatch.setattr(DataFrameWriter, "json", real_json)
+    got = q_jsonl_ingest_docs(spark, sf_dir).agg(F.sum("n_docs")).first()[0]
+    assert got == load_table(spark, sf_dir, "documents").count()
+
+
+def test_failed_overwrite_keeps_the_landed_index(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """An overwrite rebuild whose write job fails must leave the
+    previously landed index readable for the next plain call."""
+    import tempfile
+
+    import pytest
+
+    from miletos_spark.pipeline import dedup
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    paths = land_dedup_index(spark, sf_dir)
+    n_sigs = spark.read.parquet(paths["sigs"]).count()
+
+    @F.udf("long")
+    def dies(x):
+        raise RuntimeError("write job dies")
+
+    real = dedup.minhash_signatures
+    monkeypatch.setattr(
+        dedup,
+        "minhash_signatures",
+        lambda docs, **kw: real(docs, **kw).withColumn("doc_id", dies("doc_id")),
+    )
+    with pytest.raises(Exception):
+        land_dedup_index(spark, sf_dir, overwrite=True)
+    monkeypatch.setattr(dedup, "minhash_signatures", real)
+    again = land_dedup_index(spark, sf_dir)
+    assert spark.read.parquet(again["sigs"]).count() == n_sigs
+
+
+def test_directory_source_rewritten_in_place_rebuilds_landing(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """A source stored as a directory (the 10x volume dirs'
+    `documents.parquet`) keys on the files inside it: rewriting one
+    part file in place leaves the directory's own mtime and size as
+    they were, and the landing must still rebuild."""
+    import os
+    import shutil
+    import tempfile
+
+    import pyarrow.parquet as papq
+
+    from miletos_spark.pipeline.landing import (
+        dsir_bucket_counts,
+        land_dsir_model,
+    )
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    corpus = tmp_path / "sf"
+    docs_dir = corpus / "documents.parquet"
+    docs_dir.mkdir(parents=True)
+    part = str(docs_dir / "part-00000.parquet")
+    shutil.copy(os.path.join(sf_dir, "documents.parquet"), part)
+
+    def n_grams(path):
+        return (
+            spark.read.parquet(path)
+            .agg(F.sum(F.col("ct") + F.col("cr")))
+            .first()[0]
+        )
+
+    before = n_grams(land_dsir_model(spark, str(corpus), m_buckets=16))
+    st = os.stat(docs_dir)
+    tbl = papq.read_table(part)
+    papq.write_table(tbl.slice(0, tbl.num_rows // 2), part)
+    os.utime(docs_dir, ns=(st.st_atime_ns, st.st_mtime_ns))
+    after_st = os.stat(docs_dir)
+    assert (after_st.st_mtime_ns, after_st.st_size) == (
+        st.st_mtime_ns, st.st_size
+    )
+    after = n_grams(land_dsir_model(spark, str(corpus), m_buckets=16))
+    fresh = (
+        dsir_bucket_counts(spark.read.parquet(str(docs_dir)), 16)
+        .agg(F.sum(F.col("ct") + F.col("cr")))
+        .first()[0]
+    )
+    assert after == fresh < before

@@ -257,6 +257,25 @@ def test_memoize_parquet(spark, tmp_path):
     assert a.count() == b.count() == 3
     assert len(calls) == 1
 
+    # a build whose write job fails leaves nothing to short-circuit on:
+    # the next call builds again and reads a complete table
+    @F.udf("long")
+    def dies(x):
+        raise RuntimeError("write job dies")
+
+    flaky_calls = []
+
+    def flaky():
+        flaky_calls.append(1)
+        df = spark.range(3).select(F.col("id"))
+        return df.select(dies("id").alias("id")) if len(flaky_calls) == 1 else df
+
+    path2 = str(tmp_path / "memo_retry")
+    with pytest.raises(Exception):
+        memoize_parquet(spark, path2, flaky)
+    assert memoize_parquet(spark, path2, flaky).count() == 3
+    assert len(flaky_calls) == 2
+
 
 @pytest.fixture(scope="module")
 def events_dir(spark, sf_dir, tmp_path_factory):

@@ -20,14 +20,13 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 import sys
-import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as e
+from miletos_spark.pipeline.commit import land_once
 from miletos_spark.session import get_spark
 
 BASE = "/root/testdata/sf0.1"
@@ -140,20 +139,6 @@ CORPUS_QUERIES = [
 ]
 
 
-def _base_sig() -> str:
-    import hashlib
-
-    parts = []
-    for t in ("events", "documents", "embeddings"):
-        p = os.path.join(BASE, f"{t}.parquet")
-        try:
-            st = os.stat(p)
-            parts.append(f"{t}|{st.st_mtime_ns}|{st.st_size}")
-        except OSError:
-            parts.append(t)
-    return hashlib.md5("::".join(parts).encode()).hexdigest()[:10]
-
-
 def _replicate_corpus(spark, k: int, out: str) -> None:
     """Replicate documents + embeddings k-fold into `out` (fresh
     content per copy — see the near-dup notes inline). Shared by the
@@ -228,55 +213,49 @@ def synth_scaled(spark, k: int) -> str:
 
     from miletos_spark.schema import epoch_micros_expr, load_table
 
-    # memo keyed on the BASE identity too: a regenerated testdata dir
-    # must invalidate the replicas, or factors silently compare t1 on
-    # new data against tk on replicas of the old
-    out = os.path.join(
-        tempfile.gettempdir(), f"miletos_scale_{k}x_{_base_sig()}"
-    )
-    if os.path.exists(os.path.join(out, "_SUCCESS_SCALE")):
-        return out
-    shutil.rmtree(out, ignore_errors=True)
-    os.makedirs(out, exist_ok=True)
+    def build(out: str) -> None:
+        os.makedirs(out)
 
-    def replicate(df, mapper, name):
-        copies = [mapper(df, i) for i in range(k)]
-        allc = copies[0]
-        for c in copies[1:]:
-            allc = allc.unionByName(c)
-        allc.write.mode("overwrite").parquet(os.path.join(out, name))
+        def replicate(df, mapper, name):
+            copies = [mapper(df, i) for i in range(k)]
+            allc = copies[0]
+            for c in copies[1:]:
+                allc = allc.unionByName(c)
+            allc.write.mode("overwrite").parquet(os.path.join(out, name))
 
-    ev = load_table(spark, BASE, "events")
-    n = ev.count()
-    us = epoch_micros_expr(ev, "ts")
-    # shift ids into a fresh range; jitter time by i microseconds so
-    # copies don't collide on the ordering tiebreak; perturb value
-    # deterministically so per-copy rows aren't bit-identical
-    replicate(
-        ev,
-        lambda df, i: df.select(
-            (F.col("event_id") + F.lit(i * 10 * n)).alias("event_id"),
-            F.timestamp_micros(us + F.lit(i)).alias("ts"),
-            (F.col("user_id") + F.lit(i * 1000)).alias("user_id"),
-            "event_type",
-            F.round(F.col("value") + F.lit(i * 0.001), 3).alias("value"),
-            "props",
-        ),
-        "events.parquet",
-    )
+        ev = load_table(spark, BASE, "events")
+        n = ev.count()
+        us = epoch_micros_expr(ev, "ts")
+        # shift ids into a fresh range; jitter time by i microseconds so
+        # copies don't collide on the ordering tiebreak; perturb value
+        # deterministically so per-copy rows aren't bit-identical
+        replicate(
+            ev,
+            lambda df, i: df.select(
+                (F.col("event_id") + F.lit(i * 10 * n)).alias("event_id"),
+                F.timestamp_micros(us + F.lit(i)).alias("ts"),
+                (F.col("user_id") + F.lit(i * 1000)).alias("user_id"),
+                "event_type",
+                F.round(F.col("value") + F.lit(i * 0.001), 3).alias("value"),
+                "props",
+            ),
+            "events.parquet",
+        )
 
-    _replicate_corpus(spark, k, out)
+        _replicate_corpus(spark, k, out)
 
-    # remaining tables: symlink to the base so load_table works
-    for t in ("region", "nation", "customer", "supplier", "part", "orders",
-              "lineitem"):
-        src = os.path.join(BASE, f"{t}.parquet")
-        dst = os.path.join(out, f"{t}.parquet")
-        if os.path.exists(src) and not os.path.exists(dst):
-            os.symlink(src, dst)
-    with open(os.path.join(out, "_SUCCESS_SCALE"), "w") as f:
-        f.write("ok")
-    return out
+        # remaining tables: symlink to the base so load_table works
+        for t in ("region", "nation", "customer", "supplier", "part", "orders",
+                  "lineitem"):
+            src = os.path.join(BASE, f"{t}.parquet")
+            dst = os.path.join(out, f"{t}.parquet")
+            if os.path.exists(src) and not os.path.exists(dst):
+                os.symlink(src, dst)
+
+    # memo keyed on the BASE dir's identity: a regenerated testdata
+    # dir must invalidate the replicas, or factors silently compare t1
+    # on new data against tk on replicas of the old
+    return land_once(f"scale{k}x", build, BASE)
 
 
 def synth_volume(spark, k: int) -> str:
@@ -293,68 +272,63 @@ def synth_volume(spark, k: int) -> str:
 
     from miletos_spark.schema import epoch_micros_expr, load_table
 
-    out = os.path.join(
-        tempfile.gettempdir(), f"miletos_volume_{k}x_{_base_sig()}"
-    )
-    if os.path.exists(os.path.join(out, "_SUCCESS_SCALE")):
-        return out
-    shutil.rmtree(out, ignore_errors=True)
-    os.makedirs(out, exist_ok=True)
 
-    def replicate(df, mapper, name):
-        copies = [mapper(df, i) for i in range(k)]
-        allc = copies[0]
-        for c in copies[1:]:
-            allc = allc.unionByName(c)
-        allc.write.mode("overwrite").parquet(os.path.join(out, name))
+    def build(out: str) -> None:
+        os.makedirs(out)
 
-    ev = load_table(spark, BASE, "events")
-    n = ev.count()
-    us = epoch_micros_expr(ev, "ts")
-    span_row = ev.select(
-        (F.max(us) - F.min(us) + F.lit(1)).alias("span_us")
-    ).first()
-    span_us = int(span_row["span_us"])
-    replicate(
-        ev,
-        lambda df, i: df.select(
-            (F.col("event_id") + F.lit(i * 10 * n)).alias("event_id"),
-            F.timestamp_micros(us + F.lit(i * span_us)).alias("ts"),
-            "user_id",
-            "event_type",
-            F.round(F.col("value") + F.lit(i * 0.001), 3).alias("value"),
-            "props",
-        ),
-        "events.parquet",
-    )
+        def replicate(df, mapper, name):
+            copies = [mapper(df, i) for i in range(k)]
+            allc = copies[0]
+            for c in copies[1:]:
+                allc = allc.unionByName(c)
+            allc.write.mode("overwrite").parquet(os.path.join(out, name))
 
-    li = load_table(spark, BASE, "lineitem")
-    key_shift = int(li.agg(F.max("l_orderkey")).first()[0]) + 1
-    replicate(
-        li,
-        lambda df, i: df.withColumn(
-            "l_orderkey", F.col("l_orderkey") + F.lit(i * key_shift)
-        ),
-        "lineitem.parquet",
-    )
-    od = load_table(spark, BASE, "orders")
-    replicate(
-        od,
-        lambda df, i: df.withColumn(
-            "o_orderkey", F.col("o_orderkey") + F.lit(i * key_shift)
-        ),
-        "orders.parquet",
-    )
+        ev = load_table(spark, BASE, "events")
+        n = ev.count()
+        us = epoch_micros_expr(ev, "ts")
+        span_row = ev.select(
+            (F.max(us) - F.min(us) + F.lit(1)).alias("span_us")
+        ).first()
+        span_us = int(span_row["span_us"])
+        replicate(
+            ev,
+            lambda df, i: df.select(
+                (F.col("event_id") + F.lit(i * 10 * n)).alias("event_id"),
+                F.timestamp_micros(us + F.lit(i * span_us)).alias("ts"),
+                "user_id",
+                "event_type",
+                F.round(F.col("value") + F.lit(i * 0.001), 3).alias("value"),
+                "props",
+            ),
+            "events.parquet",
+        )
 
-    _replicate_corpus(spark, k, out)
-    for t in ("region", "nation", "customer", "supplier", "part"):
-        src = os.path.join(BASE, f"{t}.parquet")
-        dst = os.path.join(out, f"{t}.parquet")
-        if os.path.exists(src) and not os.path.exists(dst):
-            os.symlink(src, dst)
-    with open(os.path.join(out, "_SUCCESS_SCALE"), "w") as f:
-        f.write("ok")
-    return out
+        li = load_table(spark, BASE, "lineitem")
+        key_shift = int(li.agg(F.max("l_orderkey")).first()[0]) + 1
+        replicate(
+            li,
+            lambda df, i: df.withColumn(
+                "l_orderkey", F.col("l_orderkey") + F.lit(i * key_shift)
+            ),
+            "lineitem.parquet",
+        )
+        od = load_table(spark, BASE, "orders")
+        replicate(
+            od,
+            lambda df, i: df.withColumn(
+                "o_orderkey", F.col("o_orderkey") + F.lit(i * key_shift)
+            ),
+            "orders.parquet",
+        )
+
+        _replicate_corpus(spark, k, out)
+        for t in ("region", "nation", "customer", "supplier", "part"):
+            src = os.path.join(BASE, f"{t}.parquet")
+            dst = os.path.join(out, f"{t}.parquet")
+            if os.path.exists(src) and not os.path.exists(dst):
+                os.symlink(src, dst)
+
+    return land_once(f"volume{k}x", build, BASE)
 
 
 SKEW_QUERIES = [
@@ -382,44 +356,39 @@ def synth_skew(spark, mult: int) -> str:
 
     from miletos_spark.schema import load_table
 
-    out = os.path.join(
-        tempfile.gettempdir(), f"miletos_skew_{mult}x_{_base_sig()}"
-    )
-    if os.path.exists(os.path.join(out, "_SUCCESS_SCALE")):
-        return out
-    shutil.rmtree(out, ignore_errors=True)
-    os.makedirs(out, exist_ok=True)
 
-    docs = load_table(spark, BASE, "documents")
-    nd = docs.count()
+    def build(out: str) -> None:
+        os.makedirs(out)
 
-    def doc_map(df, i):
-        jitter = F.regexp_replace(
-            F.col("text"), r"((\S+\s+){5})\S+", r"$1cp" + str(i)
+        docs = load_table(spark, BASE, "documents")
+        nd = docs.count()
+
+        def doc_map(df, i):
+            jitter = F.regexp_replace(
+                F.col("text"), r"((\S+\s+){5})\S+", r"$1cp" + str(i)
+            )
+            body = jitter if i else F.col("text")
+            return df.select(
+                (F.col("doc_id") + F.lit(i * 10 * nd)).alias("doc_id"),
+                F.concat(F.lit(SKEW_HOT_LINE + "\n"), body).alias("text"),
+                *[c for c in df.columns if c not in ("doc_id", "text")],
+            )
+
+        copies = [doc_map(docs, i) for i in range(mult)]
+        allc = copies[0]
+        for c in copies[1:]:
+            allc = allc.unionByName(c)
+        allc.write.mode("overwrite").parquet(
+            os.path.join(out, "documents.parquet")
         )
-        body = jitter if i else F.col("text")
-        return df.select(
-            (F.col("doc_id") + F.lit(i * 10 * nd)).alias("doc_id"),
-            F.concat(F.lit(SKEW_HOT_LINE + "\n"), body).alias("text"),
-            *[c for c in df.columns if c not in ("doc_id", "text")],
-        )
+        for t in ("region", "nation", "customer", "supplier", "part",
+                  "orders", "lineitem", "events", "embeddings"):
+            src = os.path.join(BASE, f"{t}.parquet")
+            dst = os.path.join(out, f"{t}.parquet")
+            if os.path.exists(src) and not os.path.exists(dst):
+                os.symlink(src, dst)
 
-    copies = [doc_map(docs, i) for i in range(mult)]
-    allc = copies[0]
-    for c in copies[1:]:
-        allc = allc.unionByName(c)
-    allc.write.mode("overwrite").parquet(
-        os.path.join(out, "documents.parquet")
-    )
-    for t in ("region", "nation", "customer", "supplier", "part",
-              "orders", "lineitem", "events", "embeddings"):
-        src = os.path.join(BASE, f"{t}.parquet")
-        dst = os.path.join(out, f"{t}.parquet")
-        if os.path.exists(src) and not os.path.exists(dst):
-            os.symlink(src, dst)
-    with open(os.path.join(out, "_SUCCESS_SCALE"), "w") as f:
-        f.write("ok")
-    return out
+    return land_once(f"skew{mult}x", build, BASE)
 
 
 def _media_corpus(spark, n: int, hub: bool):
@@ -507,12 +476,7 @@ def media_probe(spark, k: int) -> dict:
         ).count()
 
     def _land_probe_media(n):
-        root = os.path.join(
-            tempfile.gettempdir(), f"miletos_mediaprobe_{n}_{_base_sig()}"
-        )
-        bands = os.path.join(root, "bands")
-        arr = os.path.join(root, "arrivals")
-        if not os.path.exists(os.path.join(root, "_OK")):
+        def build(root: str) -> None:
             m, re = _media_corpus(spark, n, hub=False)
             fps = phash_frames(decode_media(m))
             banded = fps.select(
@@ -529,11 +493,15 @@ def media_probe(spark, k: int) -> dict:
                     ])
                 ).alias("bb"),
             ).select("media_id", "frame", "phash_hex", "bb.band", "bb.chunk")
-            banded.write.mode("overwrite").partitionBy("band").parquet(bands)
-            re.repartition(2).write.mode("overwrite").parquet(arr)
-            with open(os.path.join(root, "_OK"), "w") as f:
-                f.write("ok")
-        return bands, arr
+            banded.write.mode("overwrite").partitionBy("band").parquet(
+                os.path.join(root, "bands")
+            )
+            re.repartition(2).write.mode("overwrite").parquet(
+                os.path.join(root, "arrivals")
+            )
+
+        root = land_once(f"mediaprobe{n}", build, BASE)
+        return os.path.join(root, "bands"), os.path.join(root, "arrivals")
 
     def stream_n(n):
         bands, arr = _land_probe_media(n)

@@ -21,13 +21,13 @@ from __future__ import annotations
 import json
 import os
 import sys
-import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from miletos_spark.pipeline.commit import land_once  # noqa: E402
 from miletos_spark.session import get_spark  # noqa: E402
 
 BASE = "/root/testdata/sf0.1"
@@ -38,29 +38,28 @@ def land_feed(spark, k: int, files_per_copy: int, tag: str) -> str:
     may repeat) written as k*files_per_copy equal-size parquet files."""
     from miletos_spark.schema import load_table
 
-    out = os.path.join(
-        tempfile.gettempdir(), f"miletos_sprobe_{tag}_{k}x{files_per_copy}"
-    )
-    if os.path.exists(os.path.join(out, "_SUCCESS")):
-        return out
-    base = load_table(spark, BASE, "documents").select(
-        "doc_id", "lang", "text"
-    )
-    nd = base.count()
-    copies = [
-        base.withColumn("doc_id", F.col("doc_id") + F.lit(i * 10 * nd))
-        for i in range(k)
-    ]
-    allc = copies[0]
-    for c in copies[1:]:
-        allc = allc.unionByName(c)
-    # bucket on id ranges so every file has the same row count and the
-    # file count is exactly k*files_per_copy
-    allc.withColumn(
-        "_f", F.floor(F.col("doc_id") % (10 * nd) / (nd / files_per_copy))
-        + (F.col("doc_id") / (10 * nd)).cast("int") * files_per_copy
-    ).repartition("_f").write.mode("overwrite").partitionBy("_f").parquet(out)
-    return out
+    def build(out: str) -> None:
+        base = load_table(spark, BASE, "documents").select(
+            "doc_id", "lang", "text"
+        )
+        nd = base.count()
+        copies = [
+            base.withColumn("doc_id", F.col("doc_id") + F.lit(i * 10 * nd))
+            for i in range(k)
+        ]
+        allc = copies[0]
+        for c in copies[1:]:
+            allc = allc.unionByName(c)
+        # bucket on id ranges so every file has the same row count and the
+        # file count is exactly k*files_per_copy
+        allc.withColumn(
+            "_f", F.floor(F.col("doc_id") % (10 * nd) / (nd / files_per_copy))
+            + (F.col("doc_id") / (10 * nd)).cast("int") * files_per_copy
+        ).repartition("_f").write.mode("overwrite").partitionBy("_f").parquet(
+            out
+        )
+
+    return land_once(f"sprobe_{tag}_{k}x{files_per_copy}", build, BASE)
 
 
 def drain(spark, land: str) -> float:
