@@ -11,15 +11,17 @@ the single tested code path for all of them:
   (mtime_ns, size) for a file and the sorted (relpath, mtime_ns, size)
   of every file under a directory, so an in-place rewrite inside a
   directory source changes the key. A directory that exists is
-  complete: `build(tmp)` runs on a private `<root>.<uuid4>.tmp`
+  complete: `build(tmp)` runs on a private `<root>.<pid>.<uuid4>.tmp`
   sibling, and one `os.rename` publishes it. A build killed or failed
-  mid-write therefore leaves no root, and the next call rebuilds; of
-  two concurrent builders the first rename wins and the second
-  discards its copy. `overwrite` renames the old root aside, the new
-  one in, then deletes the old one (the `upsert_results` swap).
-- `write_marker` / `read_marker`: an atomic JSON marker — tmp file +
-  `os.replace` (POSIX rename is atomic on one filesystem), so readers
-  never observe a torn or partial marker. The pack-shards marker's
+  mid-write therefore leaves no root, and the next call rebuilds (and
+  removes the tmp of any builder whose pid is dead); of two concurrent
+  builders the first rename wins and the second discards its copy.
+  `overwrite` renames the old root aside, the new one in, then deletes
+  the old one (the `upsert_results` swap).
+- `write_marker` / `read_marker`: an atomic JSON marker — a private
+  `<path>.<uuid4>.tmp` file + `os.replace` (POSIX rename is atomic on
+  one filesystem), so readers never observe a torn or partial marker,
+  and concurrent writers never share a tmp. The pack-shards marker's
   payload is `{"files": <the batch's input-file manifest>, "offsets":
   {lang: running token total after the batch}}`: one marker commits
   both the replay check and the cross-batch packing carry.
@@ -92,11 +94,12 @@ def _check_part_safe(fn_name: str, touched: "Iterable[int | str]") -> list:
 
 
 def write_marker(path: str, payload: object = None) -> str:
-    """Atomically publish a JSON marker: write to `<path>.tmp` then
-    `os.replace` — readers see the old marker, no marker, or the
-    complete new one, never a torn file. Returns `path`."""
+    """Atomically publish a JSON marker: write to a private
+    `<path>.<uuid4>.tmp` then `os.replace` — readers see the old marker,
+    no marker, or the complete new one, never a torn file, and two
+    writers of one path never share a tmp. Returns `path`."""
     os.makedirs(os.path.dirname(path), exist_ok=True)
-    tmp = path + ".tmp"
+    tmp = f"{path}.{uuid.uuid4().hex}.tmp"
     with open(tmp, "w") as f:
         json.dump(payload, f)
     os.replace(tmp, path)
@@ -122,19 +125,43 @@ def _identity(src: str) -> object:
     return (st.st_mtime_ns, st.st_size)
 
 
+def _sweep_dead_tmps(root: str) -> None:
+    """Remove the `<root>.<pid>.<uuid4>.tmp` siblings of builders whose
+    pid no longer exists (a SIGKILLed build never reaches its
+    cleanup)."""
+    parent, base = os.path.split(root)
+    pat = re.compile(re.escape(base) + r"\.(\d+)\.[0-9a-f]{32}\.tmp")
+    try:
+        names = os.listdir(parent or ".")
+    except FileNotFoundError:
+        return
+    for name in names:
+        m = pat.fullmatch(name)
+        if m is None:
+            continue
+        try:
+            os.kill(int(m.group(1)), 0)
+        except ProcessLookupError:
+            shutil.rmtree(os.path.join(parent, name), ignore_errors=True)
+        except PermissionError:
+            pass  # alive, owned by another user
+
+
 def publish_dir(
     root: str, build: "Callable[[str], None]", overwrite: bool = False
 ) -> str:
     """Build-once publish of the directory `root`: return it at once if
     it exists (a directory that exists is complete) unless `overwrite`;
-    otherwise `build(tmp)` writes a private `<root>.<uuid4>.tmp`
+    otherwise `build(tmp)` writes a private `<root>.<pid>.<uuid4>.tmp`
     sibling, which one `os.rename` moves into place. A build that
-    raises leaves `root` as it was and its tmp removed. If another
-    builder published first, this one's copy is discarded and the
-    winner's returned. Returns `root`."""
+    raises leaves `root` as it was and its tmp removed; the tmp of a
+    killed builder is removed by the next build, once its pid is dead.
+    If another builder published first, this one's copy is discarded
+    and the winner's returned. Returns `root`."""
     if os.path.exists(root) and not overwrite:
         return root
-    tmp = f"{root}.{uuid.uuid4().hex}.tmp"
+    _sweep_dead_tmps(root)
+    tmp = f"{root}.{os.getpid()}.{uuid.uuid4().hex}.tmp"
     old = None
     try:
         build(tmp)

@@ -2,7 +2,8 @@
 
 Local testing runs on local[N]; the same config block is what we'd ship
 to a 1000-executor cluster minus the master/memory lines (AQE, Arrow,
-UTC session TZ, shuffle-partition sizing are cluster-relevant too).
+UTC session TZ, shuffle-partition sizing and the codegen cache are
+cluster-relevant too).
 """
 
 from __future__ import annotations
@@ -36,6 +37,19 @@ def get_spark(
       in columnar batches.
     - UTC session timezone: parity with the DuckDB oracle on
       timestamp->double conversions.
+    - Codegen cache of 2048 compiled sources
+      (`spark.sql.codegen.cache.maxEntries`, default 100): a warm pass
+      cycles through ~185 (population) or ~141 (text) distinct generated
+      sources, so at 100 each is evicted before the next pass needs it
+      and every pass recompiles it.
+    - No stage id in generated class names
+      (`spark.sql.codegen.useIdInClassName=false`): AQE numbers
+      whole-stage-codegen stages in planning order, so the same stage
+      came back as a new `GeneratedIteratorForCodegenStage<N>`, new
+      source text and a cache miss. With both settings a warm population
+      pass compiles 0 classes (before: ~157-187) and a warm text pass 0,
+      or a few when AQE plans a micro-batch's join differently (before:
+      ~142).
     """
     # One BLAS thread per Python worker: numpy inside applyInPandas
     # otherwise spawns a full OpenBLAS thread pool PER concurrently
@@ -66,6 +80,15 @@ def get_spark(
         )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # Generated classes stay cached across passes (see docstring).
+        # maxEntries is a static conf, read only when the session is
+        # built. 2048: one run of either benchmark workload compiles at
+        # most ~200 distinct sources, so both fit ten times over. The
+        # largest session here, Tier-1's one test JVM, generates 3986
+        # distinct sources; at 2048 it compiles 4169 (at 100: 8812), so
+        # a bound that keeps the classes' metaspace finite costs it 5%.
+        .config("spark.sql.codegen.cache.maxEntries", "2048")
+        .config("spark.sql.codegen.useIdInClassName", "false")
         # cluster twin of the os.environ defaults above (executors do
         # not inherit the driver env on a real deployment)
         .config("spark.executorEnv.OMP_NUM_THREADS", "1")

@@ -30,7 +30,39 @@ def test_marker_roundtrip_and_atomicity(tmp_path):
     # no tmp residue; re-publish replaces atomically
     write_marker(p, ["c.parquet"])
     assert read_marker(p) == ["c.parquet"]
-    assert not os.path.exists(p + ".tmp")
+    assert os.listdir(tmp_path / "commits") == ["7"]
+
+
+def test_marker_concurrent_writers_never_share_a_tmp(tmp_path):
+    """Two writers of one marker path: with a shared `<path>.tmp` one
+    writer's `os.replace` moved the other's tmp away (FileNotFoundError)
+    or published a file both were writing into. Each write now has its
+    own tmp, so every call succeeds and the marker is always one
+    complete payload."""
+    import threading
+
+    p = str(tmp_path / "commits" / "0")
+    payloads = [{"files": [f"{w}-{i}" for i in range(2000)]} for w in "ab"]
+    barrier = threading.Barrier(2)
+    errors = []
+
+    def writer(payload):
+        barrier.wait(timeout=60)
+        try:
+            for _ in range(200):
+                write_marker(p, payload)
+        except Exception as exc:
+            errors.append(exc)
+
+    threads = [threading.Thread(target=writer, args=(x,)) for x in payloads]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=120)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    assert read_marker(p) in payloads
+    assert os.listdir(tmp_path / "commits") == ["0"]
 
 
 def test_publish_version_flip_and_noop(tmp_path):
@@ -410,3 +442,47 @@ def test_land_once_failed_build_publishes_nothing_and_overwrite_swaps(
     assert land_once("u", writer("x"), str(src)) != root
     src.write_text("v2, longer")
     assert land_once("t", writer("third"), str(src)) != root
+
+
+def test_land_once_sweeps_the_tmp_of_a_killed_builder(tmp_path, monkeypatch):
+    """A builder SIGKILLed mid-build never reaches its cleanup, so its
+    `<root>.<pid>.<uuid4>.tmp` stays behind. The next build removes the
+    tmp of every builder whose pid is dead, then publishes the root."""
+    import signal
+    import subprocess
+    import sys
+    import tempfile
+    import time
+
+    from miletos_spark.pipeline.commit import land_once
+
+    ready = tmp_path / "ready"
+    child = subprocess.Popen(
+        [sys.executable, "-c", (
+            "import os, time\n"
+            "from miletos_spark.pipeline.commit import land_once\n"
+            "def build(d):\n"
+            "    os.makedirs(d)\n"
+            f"    open({str(ready)!r}, 'w').close()\n"
+            "    time.sleep(600)\n"
+            "land_once('killed', build)\n"
+        )],
+        env={**os.environ, "TMPDIR": str(tmp_path)},
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    )
+    try:
+        deadline = time.monotonic() + 120
+        while not ready.exists():
+            assert child.poll() is None, "builder exited before building"
+            assert time.monotonic() < deadline, "builder never started"
+            time.sleep(0.05)
+    finally:
+        child.send_signal(signal.SIGKILL)
+        child.wait(timeout=60)
+    orphans = [n for n in os.listdir(tmp_path) if n.endswith(".tmp")]
+    assert len(orphans) == 1 and f".{child.pid}." in orphans[0]
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    root = land_once("killed", os.makedirs)
+    assert os.path.isdir(root)
+    assert [n for n in os.listdir(tmp_path) if n.endswith(".tmp")] == []
