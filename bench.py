@@ -13,244 +13,34 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from miletos_spark.plans.driver_queries import (  # noqa: E402
+    BENCH_ROLES,
+    QUERIES,
+)
+from miletos_spark.schema import load_table  # noqa: E402
 from miletos_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-# ROUND-OVER-ROUND COMPARABILITY (r7→r8 attribution, VERDICT r7 Wrong
-# #3): the r6→r7 "regressions" on unchanged plans (bls_spectrum 3.35 →
-# 4.50 s, pipeline_summary 8.67 → 11.89 s) decomposed as (a) a +4%
-# median drift across all 58 shared ≥0.5 s entries — host-state noise
-# between driver runs — and (b) a fat tail confined to STAGE-LATENCY-
-# BOUND queries: isolated fresh-JVM best-of-2 measured bls_spectrum at
-# 3.1 effective cores (13.5 CPU-s / 4.1 s wall) and pipeline_summary
-# at 7.7 of 32 — wall time for such queries swings ±15% with JVM/host
-# state (three fresh-JVM runs: 3.80/4.15/4.31 s) while compute-bound
-# entries stay flat. Root cause of the LOW parallelism itself: the
-# sf0.1 series is one small parquet file → a 1-partition scan whose
-# single map task serialized the whole trial-grid fan-out — fixed in
-# r8 (bls.py `_spread` + order-independent decimal aggregation), which
-# both speeds the family up and moves it toward the stable
-# compute-bound regime.
-# pipeline_population_events r7 8.8 → r8 ~12.6 s is the ONE deliberate
-# trade kept from this work: the grouped BLS box aggregation moved
-# from float avg to decimal moment sums (order-independent — the r05
-# partial-agg-wobble flake class cannot return), and decimal summing
-# of the |targets|×|rows|×|trials| fan-out costs ~30-40% on this entry
-# even with the cast hoisted above the crossJoin. Correctness
-# discipline over a 4-second bench line.
-# headline set: one per operator family (agg, join, window, sessionize,
-# fold, periodogram, BLS, flare, model, detrend, dedup, text, similarity,
-# streaming)
-HEADLINE = [
-    "pricing_summary",
-    "region_revenue",
-    "rebin_events",
-    "median_normalize_events",
-    "sessionize_events",
-    "fold_phase_bins",
-    "rolling_median_events",
-    "lomb_scargle_events",
-    "bls_spectrum_events",
-    "bls_multires_events",
-    "matched_filter_events",
-    "flare_band_events",
-    "model_loglik_events",
-    "depth_fit_events",
-    "clip_detrend_events",
-    "interp_grid_events",
-    "phase_curve_events",
-    "dedup_exact_docs",
-    "text_stats_docs",
-    "similarity_topk",
-    "lsh_similarity_topk",
-    "minhash_lsh_pairs",
-    "stream_sessions_events",
-    "stream_trigger_clusters_events",
-    "brightness_temp_events",
-    "visibility_events",
-    "crossmatch_catalog",
-    "photometry_events",
-    "phase_components_events",
-    # round-4 additions: iterative-loop + detrend-backend recovery rows
-    "bls_multi_recovery_events",
-    "spline_recovery_events",
-    "gp_recovery_events",
-    "tls_recovery_events",
-    # round-4 second wave: the newly driver-checked paths
-    "transit_fit_recovery_events",
-    "gp_pair_loglik_events",
-    "gp_loglik_events",
-    "ivf_recovery_topk",
-    "media_features",
-    "simhash_pairs",
-    "doc_quality_docs",
-    "pipeline_summary_events",
-    "stream_bls_events",
-    "stream_ls_events",
-    "vocab_topk_docs",
-    "ivf_landed_topk",
-    "mcmc_recovery_events",
-    # round-5: population orchestration (N targets in one job),
-    # dedup clustering, keyed streaming spectra
-    "pipeline_population_events",
-    "near_dup_clusters",
-    "stream_bls_keyed_events",
-    "stream_ls_keyed_events",
-    "stream_dedup_docs",
-    "sketch_stats_events",
-    "repetition_stats_docs",
-    "pq_recovery_topk",
-    "pq_landed_topk",
-    "bloom_dedup_docs",
-    "mixture_sample_docs",
-    "pack_sequences_docs",
-    "decontaminate_docs",
-    "ivfpq_recovery_topk",
-    "ivfpq_landed_topk",
-    # round-6: batched ANN probe + exact rerank, measured against the
-    # brute-force baseline in one plan
-    "ivfpq_recall_topk",
-    # round-6 second wave: curation additions + grouped-NM population fit
-    "pii_scrub_docs",
-    "dedup_lines_docs",
-    "split_assign_docs",
-    "quality_filter_docs",
-    "population_nm_recovery_events",
-    "stream_near_dup_docs",
-    "training_shards_docs",
-    "jsonl_ingest_docs",
-    "lm_score_docs",
-    "chunk_docs",
-    "rp_project_embeddings",
-    "tfidf_topk_docs",
-    "vocab_coverage_docs",
-    "doc_embed_docs",
-    "substring_dedup_docs",
-    # round-7: substring removal, bigram/trigram LM, frozen-table BPE
-    # (tokenize/encode/coverage/packing), keyed streaming matched
-    # filter, streaming curation
-    "substring_removal_docs",
-    "lm_bigram_score_docs",
-    "lm_trigram_score_docs",
-    "bpe_tokenize_docs",
-    "bpe_encode_docs",
-    "vocab_coverage_bpe_docs",
-    "pack_sequences_bpe_docs",
-    "stream_flare_keyed_events",
-    "stream_curation_docs",
-    # round-8: incremental curation+packing endgame (stream drain ==
-    # batch pack layout, cross-batch offsets in landed state)
-    "stream_pack_shards_docs",
-    # round-8: production rank-encoder + one-pass trained linear probe
-    # + streamed probe scoring + cluster-bounded semantic dedup
-    "bpe_encode_production_docs",
-    "linear_probe_docs",
-    "stream_probe_score_docs",
-    "semantic_dedup_embeddings",
-    # round-9: UTF-8 lossless roundtrip, trainer→encoder lifecycle,
-    # media pHash near-dup, IRLS logistic probe eval, streaming
-    # semantic dedup (two-level quantizer)
-    "bpe_roundtrip_docs",
-    "bpe_train_encode_docs",
-    "media_near_dup",
-    "stream_media_near_dup",
-    "probe_irls_eval_docs",
-    "stream_semantic_dedup_embeddings",
-    # round-10: hub-safe media decisions + incremental cluster
-    # maintenance, batch-inference seam, DSIR importance resampling,
-    # quality funnel, corpus drift monitor
-    "media_dedup_decisions",
-    "near_dup_clusters_incremental",
-    "doc_embed_infer_docs",
-    "dsir_select_docs",
-    "quality_funnel_docs",
-    "corpus_drift_docs",
-    "stream_dsir_score_docs",
-    "dsir_landed_select_docs",
-    "stream_funnel_docs",
-    "stream_decontaminate_docs",
-    "quality_funnel_by_lang_docs",
-    # round-11: deterministic serving order (uniform + mixture-weighted)
-    # + streaming media verdicts
-    "training_order_docs",
-    "training_order_weighted_docs",
-    "training_order_multipass_docs",
-    "stream_media_decisions",
-    # round-12: semantic (embedding-space) decontamination
-    "semantic_decontaminate_docs",
-    "stream_semantic_decontaminate_docs",
-    # round-12: serving materialization + mixture report + run order
-    "serving_shards_docs",
-    "serving_mixture_docs",
-    "training_run_order_docs",
-    # round-12: document-preserving (no-split) packing + report,
-    # data-card budget solver
-    "pack_bins_nosplit_docs",
-    "pack_bins_report_docs",
-    "mixture_budget_plan_docs",
-    "pack_bins_ffd_docs",
-    "stream_pack_bins_docs",
-    # round-13: leakage-safe cluster-aware splits + landed-eval-index
-    # semantic decontamination
-    "split_assign_clustered_docs",
-    "semantic_decontaminate_indexed_docs",
-    "training_order_curriculum_docs",
-    "training_run_order_annealed_docs",
-    "stream_split_assign_docs",
-    # round-14: quality-canonical dedup survivors + stratified
-    # curriculum staging
-    "dedup_keep_best_docs",
-    "training_order_curriculum_strat_docs",
-    "decon_report_docs",
-    "training_curriculum_run_docs",
-]
+# The benched rows and their legs come from the registry's bench roles
+# (miletos_spark.plans.driver_queries.REGISTRY):
+#   - "shared" rows run best-of-2 in this process's shared session;
+#   - "warm" rows probe a write-time landed index (built by the ingest
+#     JVM), so they get one untimed touch first and the recorded number
+#     is the steady-state warm probe; the cold build is timed separately
+#     under the ingest: labels;
+#   - "isolated" rows (the composed-pipeline anchors) run in their own
+#     fresh JVM, min of tools/bench_isolated.py N_RUNS with every run in
+#     BENCH_DETAIL.json's `isolated_runs`: in the shared session their
+#     wall times swung with accumulated JVM state more than any real
+#     code delta.
+HEADLINE = list(BENCH_ROLES)
+LANDED_INDEX_PROBES = {n for n, r in BENCH_ROLES.items() if r == "warm"}
+ISOLATED_QUERIES = [n for n, r in BENCH_ROLES.items() if r == "isolated"]
 
-# Queries that probe a WRITE-TIME LANDED index (built by the ingest
-# JVM). VERDICT r6 Wrong #3: once ingest moved to its own JVM, these
-# read cold in the query session where r05 read them warm — headline
-# numbers silently mixed warm and cold round-over-round. They now get
-# ONE untimed warm touch before the timed best-of-2, so the recorded
-# number is the steady-state warm probe (the shape the memoized index
-# gives a long-lived deployment); the cold build itself is still
-# timed, separately and deterministically, under the ingest: labels.
-LANDED_INDEX_PROBES = {
-    "lsh_similarity_topk",
-    "ivf_recovery_topk",
-    "ivf_landed_topk",
-    "pq_recovery_topk",
-    "pq_landed_topk",
-    "ivfpq_recovery_topk",
-    "ivfpq_landed_topk",
-    "ivfpq_recall_topk",
-    "stream_near_dup_docs",
-    "semantic_dedup_embeddings",
-    "stream_semantic_dedup_embeddings",
-    "stream_media_near_dup",
-    "semantic_decontaminate_indexed_docs",
-    "stream_split_assign_docs",
-    "dedup_keep_best_docs",
-}
-
-# The two composed-pipeline anchors run in their OWN fresh JVM,
-# min-of-N_RUNS with the full spread recorded (VERDICT r11 Wrong #1): in
-# the shared session their 10 s+ wall times swung with accumulated
-# JVM state more than any real code delta (A/B/A on identical code:
-# 15.8–25.3 s), so regressions on the suite's most expensive rows were
-# undiagnosable. The stdout line still carries one number (the best);
-# BENCH_DETAIL.json carries `isolated_runs` with every run.
-# (run count lives in tools/bench_isolated.py N_RUNS — currently 4;
-# fresh JVMs converge slowly, see BASELINE.md r12 note.)
-ISOLATED_QUERIES = [
-    "pipeline_summary_events",
-    "pipeline_population_events",
-]
-
-# PINNED stdout-line membership (r15, VERDICT r14 Wrong #1 / Next #1):
-# exactly the names the r14 driver line carried, plus rows added since
-# (appended, never removed/renamed), so PERF's round-over-round
-# comparison sees a stable set instead of drop-cheapest churn. Every
-# other HEADLINE row still runs and lands in BENCH_DETAIL.json.
+# PINNED stdout-line membership, grow-only: names are appended, never
+# removed or renamed, so round-over-round comparison sees a stable set.
+# Every other HEADLINE row still runs and lands in BENCH_DETAIL.json.
 BENCH_LINE = [
     "ingest:land_dedup_index", "ingest:land_embedding_index",
     "ingest:land_ivf_index", "ingest:land_semdedup_index",
@@ -290,10 +80,40 @@ BENCH_LINE = [
 ]
 
 
+def warm_session(spark, sf_dir: str) -> None:
+    """Warm the JVM and the parquet footers once, so per-query numbers
+    measure the plans, not session startup."""
+    for tbl in ("lineitem", "events", "documents", "embeddings"):
+        load_table(spark, sf_dir, tbl).count()
+
+
+def time_shared(spark, sf_dir: str, name: str) -> tuple[list[float], int]:
+    """The shared-leg timing of one row: best-of-2 (the caller takes the
+    min), after one untimed touch for a "warm" row. Returns (both run
+    times, row count).
+
+    Before each run the SQL cache is cleared: a query carrying an
+    internal .cache() (the optimizer-barrier idiom) would otherwise
+    resolve run 2 against run 1's cached intermediates, and best-of-2
+    would time a memoized read. OS page cache, JVM warmth and memoized
+    landings still carry, which is the intended steady state. The
+    untimed gc keeps each number from paying the allocation debt of the
+    query before it in the shared JVM."""
+    fn = QUERIES[name]
+    if name in LANDED_INDEX_PROBES:
+        fn(spark, sf_dir).count()
+    runs, n = [], 0
+    for _ in range(2):
+        spark.catalog.clearCache()
+        spark._jvm.System.gc()
+        t0 = time.perf_counter()
+        n = fn(spark, sf_dir).count()
+        runs.append(time.perf_counter() - t0)
+    return runs, n
+
+
 def main() -> None:
     import subprocess
-
-    from miletos_spark.plans.driver_queries import QUERIES
 
     # write-time index landing runs in ITS OWN Spark JVM
     # (tools/bench_ingest.py): on a cluster ingest is its own job and
@@ -335,51 +155,14 @@ def main() -> None:
         timings[name] = rec["best"]
 
     spark = get_spark(app_name="miletos_spark_bench")
-    # warm the JVM + parquet footers once so per-query numbers measure
-    # the plans, not session startup
-    from miletos_spark.schema import load_table
-
-    for tbl in ("lineitem", "events", "documents", "embeddings"):
-        load_table(spark, SF_DIR, tbl).count()
+    warm_session(spark, SF_DIR)
     shared_runs: dict[str, list[float]] = {}
     for name in HEADLINE:
         if name in ISOLATED_QUERIES:
             continue  # timed in their own JVM above
-        fn = QUERIES[name]
-        # JMH-style hygiene: collect BETWEEN queries (untimed) so each
-        # number measures the query's own plan, not the allocation debt
-        # of whichever query happened to run before it in this shared
-        # local JVM. On a cluster, concurrent queries don't share one
-        # heap like local[32] does. Best-of-2 per query: a single
-        # measurement carries first-touch page-cache/codegen noise that
-        # has repeatedly read as a round-over-round "regression"; the
-        # min of two runs is the plan's actual cost.
-        if name in LANDED_INDEX_PROBES:
-            fn(spark, SF_DIR).count()   # untimed warm touch (see above)
-        runs, n = [], 0
-        for _ in range(2):
-            # PLAN-CACHE HYGIENE (r10): queries carrying an internal
-            # .cache() (the optimizer-barrier idiom) would otherwise
-            # have run 2 resolve its rebuilt DataFrame against run 1's
-            # cached intermediates via canonicalized-plan matching —
-            # best-of-2 then times a memoized read, not the query
-            # (caught on simhash_pairs: 2.0 s "plan" that was really
-            # an 11 s single-task compute behind a cache hit). Clear
-            # the SQL cache so both runs execute the plan; OS page
-            # cache and JVM warmth still carry, which is the intended
-            # steady-state. Memoized tempdir landings (parquet) are
-            # unaffected — those are deliberately warm via the
-            # LANDED_INDEX_PROBES touch above.
-            spark.catalog.clearCache()
-            spark._jvm.System.gc()
-            t0 = time.perf_counter()
-            df = fn(spark, SF_DIR)
-            n = df.count()
-            runs.append(time.perf_counter() - t0)
-        # BOTH timings persist (VERDICT r12 Wrong #2): the second
-        # measurement was already paid — recording it makes per-row
-        # host/JVM drift visible without an A/B/A worktree experiment.
-        # The headline number stays the min (the plan's actual cost).
+        runs, n = time_shared(spark, SF_DIR, name)
+        # both timings persist, so per-row host/JVM drift is visible;
+        # the headline number is the min (the plan's actual cost)
         shared_runs[name] = [round(x, 4) for x in runs]
         timings[name] = round(min(runs), 4)
         print(f"# {name}: {timings[name]:.3f}s ({n} rows)", file=sys.stderr)
@@ -393,15 +176,8 @@ def main() -> None:
         # report the path instead of crashing after a full suite run
         sf_val = SF_DIR
     # full-precision detail goes to a committed side file; the stdout
-    # JSON line must fit the driver's 2000-char tail-capture buffer
-    # (BENCH_r05 recorded `parsed: null` because the 4-decimal,
-    # spaced-separator line overflowed it). The LINE membership is
-    # PINNED (r15, VERDICT r14 Wrong #1): the old drop-cheapest-until-
-    # fits loop changed the measured set whenever the registry grew —
-    # 7 rows spuriously read as "dropped_from_bench" in PERF_r14 — so
-    # the line now carries exactly BENCH_LINE (grow-only: never remove
-    # or rename; new rows append). BENCH_DETAIL.json always has every
-    # row at full precision.
+    # JSON line must fit a 2000-character tail-capture buffer, so it
+    # carries exactly BENCH_LINE (a missing pinned row raises here)
     with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
                            "BENCH_DETAIL.json"), "w") as fh:
         json.dump(
@@ -413,9 +189,7 @@ def main() -> None:
         fh.write("\n")
 
     def _line(ndig: int, trim: bool = False) -> str:
-        line_q = {
-            k: round(timings[k], ndig) for k in BENCH_LINE if k in timings
-        }
+        line_q = {k: round(timings[k], ndig) for k in BENCH_LINE}
         if trim:  # 12.0 -> 12
             line_q = {
                 k: int(v) if float(v).is_integer() else v

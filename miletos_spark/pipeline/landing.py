@@ -460,8 +460,8 @@ def _sample_vectors(
 ):
     """Deterministic hash-threshold training sample of ≤~``cap``
     vectors, collected to the driver as float64 — THE bounded-sample
-    recipe every quantizer trainer in this module uses (land_pq /
-    land_ivf2 inline the same predicate). Returns (pts, n_vec)."""
+    recipe every quantizer trainer in this module uses (land_pq splits
+    its subspaces from it). Returns (pts, n_vec)."""
     import numpy as np
 
     n_vec = emb.count()
@@ -488,23 +488,16 @@ def _sample_vectors(
     return np.asarray([r["_v"] for r in sample], dtype=np.float64), n_vec
 
 
-def _lloyd_fast(pts, k: int, seed: int, iters: int = 25):
-    """Seeded Lloyd's with GEMM distances — the same uniform
-    `rng.choice` init and assignment/update recipe as `_lloyd`, with
-    the distance matrix computed as |a|² − 2a·b + |b|² (one matmul)
-    instead of the (n, k, d) broadcast subtraction, which allocates
-    n·k·d doubles per iteration and dominates wall time once k is in
-    the hundreds. (A k-means++ D²-sampling init was tried first and
-    REVERTED: on the small-sf fixtures its more spread-out centers
-    split the query's top-10 neighborhood across more cells, dropping
-    pruned-probe recall below the pinned unit-test floor — 4/10 vs the
-    uniform init's 8/10 at sf0.001, n_probe=2 of 8.) Kept SEPARATE
-    from `_lloyd`: GEMM float rounding differs in low bits, and
-    `_lloyd` feeds the landed two-level semantic quantizer whose
-    memoized indexes (and oracle-checked recovery fixtures) must not
-    shift under an optimization round. Used by the IVF coarse trainers,
-    whose probe rows are rows-only / floor-assertion checks by design
-    (trained quantizers are engine-specific)."""
+def _lloyd(pts, k: int, seed: int, iters: int = 25):
+    """Seeded Lloyd's k-means on a bounded in-memory point set (numpy,
+    driver-side) — the one k-means every quantizer trainer here uses.
+    Uniform `rng.choice` init; distances as |a|² − 2a·b + |b|² (one
+    matmul per iteration, not the (n, k, d) broadcast subtraction).
+    A k-means++ D²-sampling init was tried and reverted: on the small-sf
+    fixtures its more spread-out centers split the query's top-10
+    neighborhood across more cells, dropping pruned-probe recall below
+    the pinned unit-test floor (4/10 vs 8/10 at sf0.001, n_probe=2 of
+    8). Returns a (k', dim) center array with k' = min(k, len(pts))."""
     import numpy as np
 
     rng = np.random.RandomState(seed)
@@ -645,7 +638,7 @@ def land_ivf_index(
         paths = paths_at(root)
         emb = load_table(spark, sf_dir, "embeddings")
         pts, _ = _sample_vectors(emb)
-        cents = _lloyd_fast(pts, n_clusters, seed)
+        cents = _lloyd(pts, n_clusters, seed)
         centers = [
             (int(i), [float(x) for x in c]) for i, c in enumerate(cents)
         ]
@@ -673,28 +666,9 @@ def land_ivf_index(
     return paths_at(root)
 
 
-def _lloyd(pts, k: int, seed: int, iters: int = 25):
-    """Seeded Lloyd's on a bounded in-memory point set (numpy,
-    driver-side) — the same recipe as `_train_codebooks` but for one
-    flat codebook. Returns a (k', dim) center array with
-    k' = min(k, len(pts))."""
-    import numpy as np
-
-    rng = np.random.RandomState(seed)
-    k = min(k, len(pts))
-    cents = pts[rng.choice(len(pts), size=k, replace=False)]
-    for _ in range(iters):
-        d2 = ((pts[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
-        assign = d2.argmin(axis=1)
-        new_c = np.array([
-            pts[assign == c].mean(axis=0)
-            if np.any(assign == c) else cents[c]
-            for c in range(k)
-        ])
-        if np.allclose(new_c, cents):
-            break
-        cents = new_c
-    return cents
+# Largest k whose per-super fine fits `land_ivf2_index` runs in its
+# driver loop; past it they run distributed (`fit_fine_distributed`).
+IVF2_DRIVER_FIT_MAX_K = 4096
 
 
 def land_ivf2_index(
@@ -718,8 +692,7 @@ def land_ivf2_index(
     share, so coarse imbalance cannot inflate fine-cell occupancy —
     are fit on that super's sample members. Per-super fine fits are
     mutually independent; the driver loop is the small-k form, bounded
-    to sample-size trainable cells — past the
-    `SPARK_GRAFT_IVF2_DRIVER_FIT_MAX_K` gate (default 4096; r15) the
+    to sample-size trainable cells — past `IVF2_DRIVER_FIT_MAX_K` the
     landing cuts over to `fit_fine_distributed` (one applyInPandas
     over supers, per-super samples, true-count budgets),
     recovery-equivalent by test, so a corpus-sized k never runs the
@@ -736,29 +709,18 @@ def land_ivf2_index(
     {"cells", "coarse", "fine"}."""
     import math
 
-    import numpy as np
-
     from miletos_spark.pipeline.similarity import assign_cells_2l
 
-    # v2: share-proportional fine budgets (the tag versions the
-    # TRAINING ALGORITHM — a recipe change must invalidate memoized
-    # landings, or probes silently read stale quantizers).
-    # r15 (VERDICT r14 Wrong #4 / Next #4): the per-super fine fits run
-    # DISTRIBUTED (`fit_fine_distributed`, true-count budgets) once k
-    # exceeds SPARK_GRAFT_IVF2_DRIVER_FIT_MAX_K (default 4096) — the
-    # driver loop is bounded by its 65k sample and k grows with the
-    # corpus (k = n/16 for the semdedup auto landing), so at 100 TB the
-    # driver loop is a scale-killer that the gate now never reaches.
-    # The gate keys on k alone (known BEFORE the memo check, so warm
-    # reads stay metadata-only), and the two paths land under DISTINCT
-    # tags: the fine tables differ (sample-share vs true-count budgets),
-    # so a gate flip must invalidate memoized landings, same stance as
-    # the v2 tag itself. Local SFs stay far under the default gate —
-    # bench/oracle behavior is byte-identical.
-    fit_k_max = int(
-        os.environ.get("SPARK_GRAFT_IVF2_DRIVER_FIT_MAX_K", "4096")
-    )
-    use_dist = int(n_clusters) > fit_k_max
+    # The tag versions the training recipe: a recipe change must
+    # invalidate memoized landings, or probes silently read stale
+    # quantizers (v3: the one GEMM-form `_lloyd`). Past
+    # IVF2_DRIVER_FIT_MAX_K the per-super fine fits run distributed
+    # (`fit_fine_distributed`, true-count budgets): the driver loop is
+    # bounded by its 65k sample while k grows with the corpus (k = n/16
+    # for the auto landing). The gate keys on k alone (known before the
+    # memo check, so warm reads stay metadata-only), and the two paths
+    # land under distinct tags because their fine tables differ.
+    use_dist = int(n_clusters) > IVF2_DRIVER_FIT_MAX_K
     src = os.path.join(sf_dir, "embeddings.parquet")
 
     def paths_at(root: str) -> dict[str, str]:
@@ -769,24 +731,7 @@ def land_ivf2_index(
     def build(root: str) -> None:
         paths = paths_at(root)
         emb = load_table(spark, sf_dir, "embeddings")
-        cap = 65536
-        n_vec = emb.count()
-        mod = 1 << 20
-        # max(1, ...): at n_vec > mod*cap the integer ratio truncates to 0
-        # and the sample would silently be empty
-        thresh = mod if n_vec <= cap else max(1, int(mod * cap / n_vec))
-        v = F.col("embedding").cast("array<double>")
-        sample = (
-            emb.filter(F.pmod(F.xxhash64("vec_id"), F.lit(mod)) < thresh)
-            .select(v.alias("_v"))
-            .collect()
-        )
-        if not sample:
-            raise ValueError(
-                "land_ivf2_index: empty training sample — embeddings table "
-                "is empty or the hash-threshold sample selected no rows"
-            )
-        pts = np.asarray([r["_v"] for r in sample], dtype=np.float64)
+        pts, _ = _sample_vectors(emb)
         k_c = max(1, math.isqrt(max(0, n_clusters - 1)) + 1)  # ceil(sqrt)
         coarse_c = _lloyd(pts, k_c, seed)
         coarse_rows = [
@@ -850,7 +795,7 @@ def land_ivf2_index(
             .parquet(paths["cells"])
         )
 
-    tag = f"ivf2v2{'d' if use_dist else ''}_{n_clusters}s{seed}"
+    tag = f"ivf2v3{'d' if use_dist else ''}_{n_clusters}s{seed}"
     return paths_at(land_once(tag, build, src, overwrite))
 
 
@@ -885,7 +830,7 @@ def land_ivf2_index_auto(
             {"n_vec": n_vec, "k": k, "paths": paths},
         )
 
-    root = land_once(f"ivf2auto_d{divisor}s{seed}", build, src, overwrite)
+    root = land_once(f"ivf2auto2_d{divisor}s{seed}", build, src, overwrite)
     return read_marker(os.path.join(root, "_META.json"))["paths"]
 
 
@@ -1181,17 +1126,9 @@ def update_cluster_index(
 
 
 def _train_codebooks(sample, m: int, n_centroids: int, seed: int) -> list:
-    """Seeded Lloyd's per subspace over a bounded driver-side sample
+    """Seeded `_lloyd` per subspace over a bounded driver-side sample
     of (sub, sv) rows (the standard PQ recipe — Jegou et al. 2011
-    train codebooks on a subset). Returns (sub, cid, cent) tuples.
-
-    r14: distances via |a|² − 2a·b + |b|² (one GEMM per iteration) —
-    the (n, k, d) broadcast subtraction allocated n·k·d doubles per
-    iteration, which at the 256-centroid codebook is ~32 MB × 25
-    iterations × m subspaces of pure allocator traffic. Same
-    init/assignment/update recipe; codebook floats shift in low bits
-    (trained-quantizer consumers are rows-only / floor-assertion rows
-    by design — the landing tags version the recipe)."""
+    train codebooks on a subset). Returns (sub, cid, cent) tuples."""
     import numpy as np
 
     by_sub: dict[int, list] = {}
@@ -1206,27 +1143,10 @@ def _train_codebooks(sample, m: int, n_centroids: int, seed: int) -> list:
                 "threshold sample selected no rows"
             )
         pts = np.asarray(by_sub[sub_i], dtype=np.float64)
-        k = min(n_centroids, len(pts))
-        rng = np.random.RandomState(seed + sub_i)
-        cents = pts[rng.choice(len(pts), size=k, replace=False)]
-        pts_sq = (pts * pts).sum(axis=1)
-        for _ in range(25):
-            d2 = (
-                pts_sq[:, None]
-                - 2.0 * (pts @ cents.T)
-                + (cents * cents).sum(axis=1)[None, :]
-            )
-            assign = d2.argmin(axis=1)
-            new_c = np.array([
-                pts[assign == c].mean(axis=0)
-                if np.any(assign == c) else cents[c]
-                for c in range(k)
-            ])
-            if np.allclose(new_c, cents):
-                break
-            cents = new_c
+        cents = _lloyd(pts, n_centroids, seed + sub_i)
         books += [
-            (sub_i, int(c), [float(x) for x in cents[c]]) for c in range(k)
+            (sub_i, int(c), [float(x) for x in cent])
+            for c, cent in enumerate(cents)
         ]
     return books
 
@@ -1282,7 +1202,7 @@ def land_ivfpq_index(
         paths = paths_at(root)
         emb = load_table(spark, sf_dir, "embeddings")
         pts, _ = _sample_vectors(emb)
-        coarse = _lloyd_fast(pts, n_clusters, seed)
+        coarse = _lloyd(pts, n_clusters, seed)
         centers = [
             (int(i), [float(x) for x in c]) for i, c in enumerate(coarse)
         ]

@@ -116,12 +116,12 @@ def ivf_topk(
     probes remain engine-specific rows-only checks."""
     from miletos_spark.pipeline.landing import (
         _argmin_cell_expr,
-        _lloyd_fast,
+        _lloyd,
         _sample_vectors,
     )
 
     pts, _ = _sample_vectors(df, id_col=id_col, vec_col=vec_col)
-    centers = _lloyd_fast(pts, n_clusters, seed)
+    centers = _lloyd(pts, n_clusters, seed)
 
     q_np = np.asarray(query, dtype=float)
     d2 = ((centers - q_np) ** 2).sum(axis=1)

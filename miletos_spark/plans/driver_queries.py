@@ -11727,738 +11727,225 @@ ORDER BY sp.target
 
 # --- registry ---------------------------------------------------------------
 
-# Registry ORDER is load-bearing: the driver's correctness gate checks
-# exactly the FIRST 50 entries. Layout contract (VERDICT r2 ask #1):
-#   1. every oracle-backed query we want a hard driver signal for sits
-#      in positions 0-49;
-#   2. all rows-only (no-oracle) entries sit at the END;
-#   3. oracle-backed overflow beyond 50 (judge-verified in its full
-#      sweep, but without a driver row) sits between the two blocks —
-#      variants whose machinery is already covered by a checked query
-#      (GROUPING SETS/JSON, the W1 peak-cut twin inside
-#      bls_snr_spectrum, the 0-row anti-join, small semi-join/argmax
-#      twins) — each window slot goes to a distinct operator family.
+# One row per query: (plan function, DuckDB oracle SQL or None for a
+# rows-only query, bench role). A query's name is its function's name
+# without the `q_` prefix. Row order is the driver contract:
+#   - positions 0-49 are the driver window. The driver's correctness
+#     gate checks exactly these, so every one carries an oracle, and
+#     tests/test_registry.py pins the window;
+#   - oracle-backed overflow comes next (checked by the full oracle
+#     sweep, tools/check_oracles.py);
+#   - rows-only entries sit last.
+# Bench role (bench.py): None = not benched; "shared" = best-of-2 in
+# the shared bench session; "warm" = reads a landed index, so it gets
+# one untimed touch before timing; "isolated" = runs in its own JVM
+# (tools/bench_isolated.py).
+REGISTRY: list[
+    tuple[Callable[[SparkSession, str], DataFrame], str | None, str | None]
+] = [
+    (q_semantic_decontaminate_docs, _sql_semantic_decontaminate(), "shared"),
+    (q_stream_semantic_decontaminate_docs, _sql_stream_semantic_decontaminate(), "shared"),
+    (q_serving_shards_docs, _sql_serving_shards(), "shared"),
+    (q_decon_report_docs, SQL_DECON_REPORT_DOCS, "shared"),
+    (q_training_run_order_docs, _sql_training_run_order(), "shared"),
+    (q_pack_bins_nosplit_docs, SQL_PACK_BINS_NOSPLIT, "shared"),
+    (q_pack_bins_report_docs, SQL_PACK_BINS_REPORT, "shared"),
+    (q_mixture_budget_plan_docs, _sql_mixture_budget_plan(), "shared"),
+    (q_pack_bins_ffd_docs, SQL_PACK_BINS_FFD, "shared"),
+    (q_stream_pack_bins_docs, SQL_STREAM_PACK_BINS, "shared"),
+    (q_ivfpq_recall_topk, SQL_IVFPQ_RECALL_TOPK, "warm"),
+    (q_stream_semantic_dedup_embeddings, SQL_STREAM_SEMANTIC_DEDUP, "warm"),
+    # indexed == exact is the recovery contract
+    (q_semantic_decontaminate_indexed_docs, _sql_semantic_decontaminate(), "warm"),
+    (q_bls_spectrum_events, _sql_bls_spectrum(), "shared"),
+    (q_gp_recovery_events, SQL_GP_RECOVERY_EVENTS, "shared"),
+    (q_mcmc_recovery_events, _sql_mcmc_recovery(), "shared"),
+    (q_pipeline_summary_events, _sql_pipeline_summary(), "isolated"),
+    (q_pipeline_population_events, _sql_pipeline_population(), "isolated"),
+    (q_stream_bls_events, _sql_stream_bls(), "shared"),
+    (q_substring_removal_docs, SQL_SUBSTRING_REMOVAL_DOCS, "shared"),
+    (q_stream_flare_keyed_events, _sql_stream_flare_keyed(), "shared"),
+    (q_lm_trigram_score_docs, SQL_LM_TRIGRAM_SCORE_DOCS, "shared"),
+    (q_stream_pack_shards_docs, _sql_stream_pack_shards(), "shared"),
+    (q_bpe_encode_production_docs, _sql_bpe_encode_production(), "shared"),
+    (q_media_dedup_decisions, SQL_MEDIA_DEDUP_DECISIONS, "shared"),
+    # append == rebuild: the incremental row's oracle is the rebuild
+    (q_near_dup_clusters_incremental, SQL_NEAR_DUP_CLUSTERS, "shared"),
+    (q_split_assign_clustered_docs, _sql_split_assign_clustered(), "shared"),
+    # stream == batch per arrival set: replays the batch closure
+    (q_stream_split_assign_docs, _sql_split_assign_clustered(), "warm"),
+    (q_dedup_keep_best_docs, _sql_dedup_keep_best(), "warm"),
+    (q_stream_dsir_score_docs, _sql_stream_dsir_score(), "shared"),
+    (q_corpus_drift_docs, _sql_corpus_drift(), "shared"),
+    # the inference seam must be invisible downstream: same oracle
+    (q_doc_embed_infer_docs, _sql_doc_embed(), "shared"),
+    # the landed full-corpus model selects as the batch one does
+    (q_dsir_landed_select_docs, _sql_dsir_select(), "shared"),
+    (q_stream_funnel_docs, _sql_stream_funnel(), "shared"),
+    (q_stream_decontaminate_docs, _sql_stream_decontaminate(), "shared"),
+    (q_bpe_train_encode_docs, _sql_bpe_train_encode(), "shared"),
+    (q_training_order_curriculum_docs, _sql_training_order_curriculum(), "shared"),
+    (q_training_order_curriculum_strat_docs, _sql_training_order_curriculum_strat(), "shared"),
+    (q_training_curriculum_run_docs, _sql_training_curriculum_run(), "shared"),
+    (q_training_run_order_annealed_docs, _sql_training_run_order_annealed(), "shared"),
+    (q_stream_media_decisions, SQL_STREAM_MEDIA_DECISIONS, "shared"),
+    (q_probe_irls_eval_docs, _sql_probe_irls_eval(), "shared"),
+    (q_brightness_temp_events, _sql_brightness_temp(), "shared"),
+    (q_visibility_events, _sql_visibility(), "shared"),
+    (q_stream_trigger_clusters_events, SQL_STREAM_TRIGGER_CLUSTERS_EVENTS, "shared"),
+    (q_stream_rebin_events, SQL_STREAM_REBIN_EVENTS, None),
+    (q_json_props_events, SQL_JSON_PROPS_EVENTS, None),
+    (q_fits_ingest_events, SQL_FITS_INGEST_EVENTS, None),
+    (q_qlp_ingest_events, SQL_QLP_INGEST_EVENTS, None),
+    (q_csv_ingest_events, SQL_CSV_INGEST_EVENTS, None),
+    # -- oracle-backed overflow --
+    (q_training_order_weighted_docs, _sql_training_order_weighted(), "shared"),
+    (q_quality_funnel_by_lang_docs, _sql_quality_funnel_by_lang(), "shared"),
+    (q_serving_mixture_docs, _sql_serving_mixture(), "shared"),
+    (q_stream_probe_score_docs, _sql_stream_probe_score(), "shared"),
+    (q_sketch_stats_events, SQL_SKETCH_STATS_EVENTS, "shared"),
+    (q_repetition_stats_docs, SQL_REPETITION_STATS_DOCS, "shared"),
+    (q_spline_recovery_events, SQL_SPLINE_RECOVERY_EVENTS, "shared"),
+    (q_transit_fit_recovery_events, SQL_TRANSIT_FIT_RECOVERY_EVENTS, "shared"),
+    (q_bls_multi_recovery_events, _sql_bls_multi_recovery(), "shared"),
+    (q_outlier_period_events, _sql_outlier_period(), None),
+    # n_probe == n_clusters is exact brute-force top-k
+    (q_ivf_recovery_topk, SQL_SIMILARITY_TOPK, "warm"),
+    (q_lsh_similarity_topk, _sql_lsh_similarity_topk(), "warm"),
+    (q_embedding_near_dup, SQL_EMBEDDING_NEAR_DUP, None),
+    (q_corpus_cleanup, _sql_corpus_cleanup(), None),
+    (q_bloom_dedup_docs, SQL_BLOOM_DEDUP_DOCS, "shared"),
+    (q_pq_recovery_topk, SQL_PQ_RECOVERY_TOPK, "warm"),
+    (q_simhash_pairs, _sql_simhash_pairs(), "shared"),
+    (q_media_features, SQL_MEDIA_FEATURES, "shared"),
+    (q_near_dup_clusters, SQL_NEAR_DUP_CLUSTERS, "shared"),
+    (q_decontaminate_docs, SQL_DECONTAMINATE_DOCS, "shared"),
+    (q_albedo_recirc_events, _sql_albedo_recirc(), None),
+    (q_tfidf_topk_docs, SQL_TFIDF_TOPK_DOCS, "shared"),
+    (q_training_shards_docs, _sql_training_shards(), "shared"),
+    (q_stream_media_near_dup, SQL_STREAM_MEDIA_NEAR_DUP, "warm"),
+    (q_training_order_docs, _sql_training_order(), "shared"),
+    (q_training_order_multipass_docs, _sql_training_order_multipass(), "shared"),
+    (q_bpe_roundtrip_docs, _sql_bpe_roundtrip(), "shared"),
+    (q_population_nm_recovery_events, SQL_POPULATION_NM_RECOVERY_EVENTS, "shared"),
+    (q_pack_sequences_bpe_docs, _sql_pack_sequences_bpe(), "shared"),
+    (q_linear_probe_weights_docs, _sql_linear_probe_weights(), None),
+    (q_bls_multires_events, _sql_bls_multires(), "shared"),
+    (q_dedup_lines_docs, SQL_DEDUP_LINES_DOCS, "shared"),
+    (q_simhash_docs, _sql_simhash_docs(), None),
+    (q_dsir_select_docs, _sql_dsir_select(), "shared"),
+    (q_quality_funnel_docs, SQL_QUALITY_FUNNEL_DOCS, "shared"),
+    (q_mixture_sample_docs, SQL_MIXTURE_SAMPLE_DOCS, "shared"),
+    (q_vocab_coverage_bpe_docs, _sql_vocab_coverage_bpe(), "shared"),
+    (q_media_near_dup, SQL_MEDIA_NEAR_DUP, "shared"),
+    (q_stream_curation_docs, _sql_stream_curation(), "shared"),
+    (q_probe_eval_docs, _sql_probe_eval(), None),
+    (q_semantic_dedup_embeddings, SQL_SEMANTIC_DEDUP_EMBEDDINGS, "warm"),
+    (q_stream_ls_keyed_events, _sql_stream_ls_keyed(), "shared"),
+    (q_doc_embed_docs, _sql_doc_embed(), "shared"),
+    (q_substring_dedup_docs, SQL_SUBSTRING_DEDUP_DOCS, "shared"),
+    (q_ivfpq_recovery_topk, SQL_IVFPQ_RECOVERY_TOPK, "warm"),
+    (q_bpe_tokenize_docs, _sql_bpe_tokenize(), "shared"),
+    (q_doc_quality_docs, _sql_doc_quality(), "shared"),
+    (q_vocab_topk_docs, SQL_VOCAB_TOPK_DOCS, "shared"),
+    (q_derived_features_events, _sql_derived_features(), None),
+    (q_detection_stats_events, _sql_detection_stats(), None),
+    (q_stream_ls_events, _sql_stream_ls(), "shared"),
+    (q_matched_filter_events, _sql_matched_filter(), "shared"),
+    (q_phase_curve_events, _sql_phase_curve(), "shared"),
+    (q_clip_detrend_events, SQL_CLIP_DETREND_EVENTS, "shared"),
+    (q_tls_recovery_events, SQL_TLS_RECOVERY_EVENTS, "shared"),
+    (q_derived_outputs_events, _sql_derived_outputs(), None),
+    (q_stream_bls_keyed_events, _sql_stream_bls_keyed(), "shared"),
+    (q_stream_dedup_docs, SQL_STREAM_DEDUP_DOCS, "shared"),
+    (q_ener_spectrum_events, SQL_ENER_SPECTRUM_EVENTS, None),
+    (q_rebin_events, SQL_REBIN_EVENTS, "shared"),
+    (q_median_normalize_events, SQL_MEDIAN_NORMALIZE_EVENTS, "shared"),
+    (q_sessionize_events, SQL_SESSIONIZE_EVENTS, "shared"),
+    (q_fold_phase_bins, SQL_FOLD_PHASE_BINS, "shared"),
+    (q_largest_gap_events, SQL_LARGEST_GAP_EVENTS, None),
+    (q_lomb_scargle_events, SQL_LOMB_SCARGLE_EVENTS, "shared"),
+    (q_dedup_exact_docs, SQL_DEDUP_EXACT_DOCS, "shared"),
+    (q_transit_windows_events, SQL_TRANSIT_WINDOWS_EVENTS, None),
+    (q_model_loglik_events, SQL_MODEL_LOGLIK_EVENTS, "shared"),
+    (q_rv_flare_model_events, _sql_rv_flare_model(), None),
+    (q_mask_windows_events, SQL_MASK_WINDOWS_EVENTS, None),
+    (q_rolling_std_events, SQL_ROLLING_STD_EVENTS, None),
+    (q_topk_outliers_events, SQL_TOPK_OUTLIERS_EVENTS, None),
+    (q_language_id_docs, _sql_language_id(), None),
+    (q_stream_sessions_events, SQL_STREAM_SESSIONS_EVENTS, "shared"),
+    (q_datetime_strings_events, SQL_DATETIME_STRINGS_EVENTS, None),
+    (q_gp_pair_loglik_events, _sql_gp_pair_loglik(), "shared"),
+    (q_ztf_ingest_events, _sql_ztf_ingest(), None),
+    (q_interp_grid_events, SQL_INTERP_GRID_EVENTS, "shared"),
+    (q_fingerprint_docs, SQL_FINGERPRINT_DOCS, None),
+    (q_depth_fit_events, SQL_DEPTH_FIT_EVENTS, "shared"),
+    (q_white_light_events, SQL_WHITE_LIGHT_EVENTS, None),
+    (q_sigma_clip_events, SQL_SIGMA_CLIP_EVENTS, None),
+    (q_similarity_topk, SQL_SIMILARITY_TOPK, "shared"),
+    (q_bls_snr_spectrum_events, _sql_bls_snr_spectrum(), None),
+    (q_linear_detrend_events, SQL_LINEAR_DETREND_EVENTS, None),
+    (q_rolling_median_events, SQL_ROLLING_MEDIAN_EVENTS, "shared"),
+    (q_customers_without_orders, SQL_CUSTOMERS_WITHOUT_ORDERS, None),
+    (q_top_events, SQL_TOP_EVENTS, None),
+    (q_membership_events, SQL_MEMBERSHIP_EVENTS, None),
+    (q_rebin_count_events, SQL_REBIN_COUNT_EVENTS, None),
+    (q_text_stats_docs, SQL_TEXT_STATS_DOCS, "shared"),
+    (q_rp_project_embeddings, _sql_rp_project(), "shared"),
+    (q_lm_score_docs, SQL_LM_SCORE_DOCS, "shared"),
+    (q_chunk_docs, SQL_CHUNK_DOCS, "shared"),
+    (q_vocab_coverage_docs, SQL_VOCAB_COVERAGE_DOCS, "shared"),
+    (q_pack_sequences_docs, SQL_PACK_SEQUENCES_DOCS, "shared"),
+    (q_jsonl_ingest_docs, SQL_JSONL_INGEST_DOCS, "shared"),
+    (q_transit_epochs_events, SQL_TRANSIT_EPOCHS_EVENTS, None),
+    (q_rolling_std_peakcut_events, SQL_ROLLING_STD_PEAKCUT_EVENTS, None),
+    (q_binned_rms_events, SQL_BINNED_RMS_EVENTS, None),
+    (q_near_dup_pairs, SQL_NEAR_DUP_PAIRS, None),
+    (q_stream_near_dup_recovery_docs, SQL_STREAM_NEAR_DUP_RECOVERY_DOCS, None),
+    (q_asof_join_events, SQL_ASOF_JOIN_EVENTS, None),
+    (q_rollup_pricing, SQL_ROLLUP_PRICING, None),
+    (q_quality_filter_docs, SQL_QUALITY_FILTER_DOCS, "shared"),
+    (q_pii_scrub_docs, _sql_pii(), "shared"),
+    (q_time_rollup_events, SQL_TIME_ROLLUP_EVENTS, None),
+    (q_split_assign_docs, SQL_SPLIT_ASSIGN_DOCS, "shared"),
+    (q_pricing_summary, SQL_PRICING_SUMMARY, "shared"),
+    (q_region_revenue, SQL_REGION_REVENUE, "shared"),
+    (q_crossmatch_catalog, _sql_crossmatch_catalog(), "shared"),
+    (q_photometry_events, SQL_PHOTOMETRY_EVENTS, "shared"),
+    (q_flare_band_events, SQL_FLARE_BAND_EVENTS, "shared"),
+    (q_trigger_clusters_events, SQL_TRIGGER_CLUSTERS_EVENTS, None),
+    (q_phase_components_events, _sql_phase_components(), "shared"),
+    (q_bpe_encode_docs, _sql_bpe_encode(), "shared"),
+    (q_linear_probe_docs, _sql_linear_probe(), "shared"),
+    (q_lm_bigram_score_docs, SQL_LM_BIGRAM_SCORE_DOCS, "shared"),
+    # -- rows-only --
+    (q_pq_landed_topk, None, "warm"),
+    (q_stream_near_dup_docs, None, "warm"),
+    (q_minhash_lsh_pairs, None, "shared"),  # engine-specific xxhash64
+    (q_transit_fit_events, None, None),  # iterative optimizer
+    (q_spline_detrend_events, None, None),  # iterative LSQ fit
+    (q_bls_multi_events, None, None),  # iterative driver loop
+    (q_gp_detrend_events, None, None),  # dense GP solve
+    (q_gp_loglik_events, None, "shared"),
+    (q_ivf_similarity_topk, None, None),
+    (q_ivf_landed_topk, None, "warm"),
+    (q_mcmc_transit_events, None, None),
+    (q_mcmc_albedo_events, None, None),
+    (q_bls_alt_backend_events, None, None),
+    (q_ivfpq_landed_topk, None, "warm"),
+]
+
+
+def _name(fn: Callable) -> str:
+    return fn.__name__.removeprefix("q_")
+
+
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    # -- driver-checked window (positions 0-49, all oracle-backed) --
-    # r07 rotation (VERDICT r6 ask #1): promoted ALL 22 oracle-backed
-    # entries that had never had a driver row (the round-6 curation
-    # tier: lm_score, chunk, rp_project, tfidf, vocab_coverage,
-    # doc_embed, substring_dedup, training_shards, jsonl_ingest,
-    # mixture_sample, pack_sequences, decontaminate; plus
-    # ivfpq_recovery, brightness_temp/albedo_recirc/visibility, the
-    # stream_trigger_clusters/stream_rebin twins, json_props and the
-    # fits/qlp/csv ingest rows) + the 5 NEW round-7 capabilities
-    # (substring removal, bigram LM, BPE tokenize + BPE packing, keyed
-    # streaming matched filter). Kept: the 17 rows first-green in r06
-    # (one driver round is not yet a signal) and 6 continuity anchors
-    # for the deepest composites (batch+stream BLS, GP, MCMC, both
-    # pipeline lifecycles). Evicted to the judge-sweep overflow: 27
-    # rows green in BOTH r05 and r06.
-    # r08 rotation (VERDICT r7 ask #4): promoted the LAST 4 oracle-
-    # backed entries that had never had a driver row
-    # (lm_trigram_score_docs, bpe_encode_docs, stream_curation_docs,
-    # vocab_coverage_bpe_docs) — driver-signal debt is now permanently
-    # cleared: every oracle-backed registry entry has had >=1 driver
-    # row in its history. Evicted 4 rows green in BOTH r06 and r07
-    # whose machinery stays covered in-window: quality_filter_docs +
-    # pii_scrub_docs (both composed inside stream_curation_docs),
-    # time_rollup_events (rebin machinery in stream_rebin_events +
-    # binned_rms_events), split_assign_docs (hash-split family in
-    # mixture_sample_docs).
-    # kept: first green in r06
-    # evicted late-r08 to give every NEW r08 capability a driver row
-    # THIS round (no debt carried into r09) — all six evictees green
-    # in BOTH r06 and r07 with operators untouched in r08, machinery
-    # still covered: asof_join_events (unit-tested, test_operators),
-    # transit_epochs_events (fold/range-join family, unit-tested),
-    # rolling_std_peakcut_events + binned_rms_events (window/agg
-    # families pervasive in the pipeline anchors), near_dup_pairs
-    # (the MinHash-LSH pair machinery IS near_dup_clusters' input,
-    # still in-window), stream_near_dup_recovery_docs (its embedding
-    # twin stream_semantic_dedup_embeddings replaces it in-window;
-    # batch+stream text LSH stays unit- and sweep-covered)
-    # r12 rotation (VERDICT r11 Next #1/#2/#3): promoted the round's
-    # FIVE new capabilities — semantic_decontaminate_docs +
-    # stream_semantic_decontaminate_docs (embedding-space train/eval
-    # decontamination, the paraphrase class n-gram matching misses;
-    # full cross-join replay oracles), serving_shards_docs +
-    # serving_mixture_docs (the r11 serving-materialization functions
-    # get their driver-hash evidence — the "every new op gets a row the
-    # round it is born" invariant restored), and training_run_order_docs
-    # (cross-epoch schedule, global_step = epoch·N + rank). Evicted
-    # five rows green in BOTH r10 and r11 whose machinery stays covered
-    # in-window:
-    # - population_nm_recovery_events: the SAME population-grouped NM
-    #   stage runs inside pipeline_population_events' checked chain;
-    #   M5's ensemble sampler stays via mcmc_recovery_events.
-    # - dsir_select_docs: its hashed-gram → logratio-fold → Gumbel-top-k
-    #   chain is checked from the landed model by dsir_landed_select_docs
-    #   and on the firehose by stream_dsir_score_docs (both in-window).
-    # - quality_funnel_docs: quality_funnel_by_lang_docs runs the same
-    #   rule cascade strictly finer (per-lang), stream_funnel_docs the
-    #   same attribution streamed — both in-window.
-    # - mixture_sample_docs: the md5-dyadic-uniform thinning idiom is
-    #   replayed nibble-for-nibble by training_order_docs' oracle, and
-    #   mixture DELIVERY is now directly checked by serving_mixture_docs;
-    #   the Gumbel weighted form stays via dsir_landed_select_docs.
-    # - vocab_coverage_bpe_docs: the frozen BPE encode chain (the hard
-    #   part) stays hash-gated inside bpe_encode_production_docs and
-    #   bpe_train_encode_docs; the coverage share aggregation is a
-    #   one-groupBy tail, sweep-covered.
-    "semantic_decontaminate_docs": q_semantic_decontaminate_docs,
-    "stream_semantic_decontaminate_docs": q_stream_semantic_decontaminate_docs,
-    "serving_shards_docs": q_serving_shards_docs,
-    # r14 third promotion (VERDICT r13 Missing #5 / Next #6):
-    # decon_report_docs — per-eval-suite contamination report (hit
-    # counts, hit rate vs suite size, matched train docs, removed
-    # token mass; zero-hit suites report zeros), born this round; the
-    # oracle replays grams, match pairs, suite sizes, and every
-    # aggregate. Evicted serving_mixture_docs (green in BOTH r12 and
-    # r13): it is one groupBy over the weighted order — the order
-    # itself stays checked in-window (training_run_order_docs replays
-    # the A-Res key chain; serving_shards_docs pins the rank-band
-    # materialization), and the report-over-checked-artifact shape is
-    # exercised by pack_bins_report_docs AND the new decon report row
-    # (both in-window).
-    "decon_report_docs": q_decon_report_docs,
-    "training_run_order_docs": q_training_run_order_docs,
-    # r12 second promotion: pack_bins_nosplit_docs +
-    # pack_bins_report_docs — document-preserving (no-split) greedy
-    # packing, born this round (block-local next-fit as one JVM array
-    # fold; the oracle replays every greedy decision with a recursive
-    # CTE) and its waste/overfull accounting. Evicted two more
-    # r10+r11-doubly-green rows with machinery covered in-window:
-    # - linear_probe_weights_docs: the one-pass LS normal equations
-    #   run INSIDE probe_irls_eval_docs' chain (IRLS is iterated
-    #   weighted LS — each round solves the same moment system), and
-    #   the scoring half stays via stream_probe_score_docs.
-    # - bls_multires_events: the coarse→fine refinement applies the
-    #   SAME box kernel checked by bls_spectrum_events (in-window) on
-    #   a derived trial grid; grid construction is integer arithmetic,
-    #   sweep-covered, and the streaming twin stream_bls_events stays.
-    "pack_bins_nosplit_docs": q_pack_bins_nosplit_docs,
-    "pack_bins_report_docs": q_pack_bins_report_docs,
-    # r12 third promotion: mixture_budget_plan_docs — the data-card
-    # budget solver that derives multi_pass_order's repeats table from
-    # (weights, token budget), born this round. Evicted
-    # dedup_lines_docs (r10+r11 doubly green): the line/span winner
-    # family's de-skewed min-agg machinery stays driver-checked via
-    # substring_removal_docs (the verdict's own coverage table lists
-    # them as one family row), and the line-level chain remains
-    # sweep-covered.
-    "mixture_budget_plan_docs": q_mixture_budget_plan_docs,
-    # r12 fourth promotion: pack_bins_ffd_docs (first-fit-decreasing
-    # no-split packing, born this round — the ~11/9-OPT quality form
-    # of the next-fit row, oracle replays every placement via a
-    # recursive CTE carrying the fill list). Evicted simhash_docs
-    # (r10+r11 doubly green): the hub-safe banded-Hamming chain —
-    # banded_fp_pairs_distinct, class_member_pairs, landed bucket
-    # stats — is exercised in-window by media_dedup_decisions and
-    # stream_media_decisions over the SAME dedup.py functions; the
-    # SimHash fingerprint HOF itself stays sweep-covered and
-    # unit-tested (halo/hub tests in test_dedup_strategies).
-    "pack_bins_ffd_docs": q_pack_bins_ffd_docs,
-    # r12 fifth promotion: stream_pack_bins_docs — the SFT-shaped
-    # streaming packer (bins never span batches: batch = outermost
-    # block, ZERO cross-batch state, marker-free replay-idempotent
-    # per-batch dirs; parity feed makes batch composition content-
-    # determined so the oracle replays it). Evicted
-    # pack_sequences_bpe_docs (r10+r11 doubly green): its BPE encode
-    # half is hash-gated inside bpe_encode_production_docs and
-    # bpe_train_encode_docs (in-window), and its pack_chunks half is
-    # REPLAYED VERBATIM inside the training_order/serving rows'
-    # oracles (their seqs CTE is concat-and-chunk) plus
-    # stream_pack_shards_docs' layout gate.
-    "stream_pack_bins_docs": q_stream_pack_bins_docs,
-    "ivfpq_recall_topk": q_ivfpq_recall_topk,
-    # promoted late-r08: the round's new capability wave
-    # (stream_probe_score_docs evicted r14 — see the
-    # training_curriculum_run_docs promotion comment)
-    "stream_semantic_dedup_embeddings": q_stream_semantic_dedup_embeddings,
-    # r13 second promotion (VERDICT r12 Missing #2):
-    # semantic_decontaminate_indexed_docs — the landed-eval-index
-    # decontamination path (the one r12-born op without driver-hash
-    # evidence; its oracle is the full cross-join replay, which the
-    # subset-only indexed form can match iff the any-quantizer recovery
-    # contract holds). Evicted stream_media_near_dup (green in BOTH r11
-    # and r12): the banded-Hamming pair join runs in-window inside
-    # media_dedup_decisions over the same dedup.py band functions, and
-    # the STREAMING arrivals-vs-landed-pHash-index shape stays checked
-    # by stream_media_decisions; the pHash HOF itself is unit-pinned
-    # (halo/hub tests) and sweep-covered.
-    "semantic_decontaminate_indexed_docs": q_semantic_decontaminate_indexed_docs,
-    # kept: continuity anchors (deepest composite plans)
-    "bls_spectrum_events": q_bls_spectrum_events,
-    "gp_recovery_events": q_gp_recovery_events,
-    "mcmc_recovery_events": q_mcmc_recovery_events,
-    "pipeline_summary_events": q_pipeline_summary_events,
-    "pipeline_population_events": q_pipeline_population_events,
-    "stream_bls_events": q_stream_bls_events,
-    # promoted: NEW round-7 capabilities (first-round driver signal)
-    "substring_removal_docs": q_substring_removal_docs,
-    "stream_flare_keyed_events": q_stream_flare_keyed_events,
-    # promoted r08: the last never-driver-checked oracle entries
-    "lm_trigram_score_docs": q_lm_trigram_score_docs,
-    # NEW r08 capability: incremental curation+packing endgame
-    "stream_pack_shards_docs": q_stream_pack_shards_docs,
-    # NEW r08 capability: production rank-encoder ≡ frozen replace
-    # chain, proven inside the hash gate (the oracle replays the chain)
-    "bpe_encode_production_docs": q_bpe_encode_production_docs,
-    # r09 rotation (VERDICT r8 asks #2/#3/#5 + stretch #8): promoted
-    # the two entries that had never had a driver row
-    # (bpe_roundtrip_docs — now UTF-8 byte fallback — and
-    # probe_eval_docs) plus the three NEW r9 capabilities
-    # (bpe_train_encode_docs trainer→encoder lifecycle, media_near_dup
-    # pHash banded Hamming, probe_irls_eval_docs logistic IRLS).
-    # Evicted five rows green in BOTH r07 and r08 whose machinery
-    # stays covered in-window: lm_score_docs (unigram chain is the
-    # base case of the checked bigram/trigram rows), chunk_docs
-    # (chunking runs inside doc_embed_docs), vocab_coverage_docs
-    # (whitespace twin of vocab_coverage_bpe_docs),
-    # pack_sequences_docs (whitespace twin of pack_sequences_bpe_docs
-    # + the packing machinery inside stream_pack_shards_docs),
-    # jsonl_ingest_docs (JSON-path machinery in json_props_events).
-    # (second r9 promotion: stream_media_near_dup — the sixth new
-    # capability — replaces rp_project_embeddings, green r07+r08 and
-    # untouched in r9; its seeded hash-fold projection family stays
-    # covered by doc_embed_docs' hash_embed in-window)
-    # r10 rotation (VERDICT r9 asks #1/#2/#3): promoted simhash_docs —
-    # the LAST oracle-backed entry whose only driver appearances
-    # (r01/r02) predate its oracle; driver-signal debt back to zero —
-    # plus the two NEW r10 capabilities (media_dedup_decisions:
-    # per-media verdicts over the hub-safe collapsed band join;
-    # near_dup_clusters_incremental: O(batch+touched) cluster
-    # maintenance whose oracle IS the full rebuild). Evicted three
-    # rows green in BOTH r08 and r09 with machinery covered in-window:
-    # bpe_encode_docs (the frozen replace chain is replayed inside
-    # bpe_encode_production_docs' and bpe_train_encode_docs' hash
-    # gates), linear_probe_docs (same per-doc scores aggregate into
-    # probe_eval_docs' exact confusion matrix; weights row and stream
-    # scoring stay), lm_bigram_score_docs (the checked trigram row's
-    # stupid-backoff chain contains the bigram level as its own
-    # fallback).
-    "media_dedup_decisions": q_media_dedup_decisions,
-    "near_dup_clusters_incremental": q_near_dup_clusters_incremental,
-    # r13 rotation (VERDICT r12 Next #1): promoted
-    # split_assign_clustered_docs — leakage-safe train/val/test
-    # assignment by the md5 hash of the near-dup cluster REPRESENTATIVE
-    # (born this round; the oracle replays the all-pairs transitive
-    # closure + the integer md5 split rule). Evicted
-    # training_shards_docs (green in BOTH r11 and r12): its pack_chunks
-    # layout is replayed VERBATIM inside the training_order*/serving
-    # rows' oracles (their seqs CTE is concat-and-chunk, all in-window),
-    # and the partitioned-materialization machinery is exercised
-    # strictly harder by serving_shards_docs (rank-contiguity proven by
-    # integer replay) plus stream_pack_shards_docs' layout gate.
-    "split_assign_clustered_docs": q_split_assign_clustered_docs,
-    # r13 fifth promotion (beyond-ask, the ingest deployment of Next
-    # #1): stream_split_assign_docs — leakage-safe splits assigned AT
-    # INGEST against the landed cluster table (stream-static join, zero
-    # state; planted cluster members span micro-batches), born this
-    # round. Evicted bpe_roundtrip_docs (green in BOTH r11 and r12):
-    # the frozen encode chain (the hard half) stays hash-gated inside
-    # bpe_encode_production_docs and bpe_train_encode_docs (both
-    # in-window, their oracles replay the chain), and the UTF-8
-    # byte-fallback decode half is pure per-row string code pinned by
-    # unit tests (test_bpe_train) and the sweep.
-    "stream_split_assign_docs": q_stream_split_assign_docs,
-    # r14 rotation (VERDICT r13 Next #1): promoted dedup_keep_best_docs
-    # — quality-canonical dedup survivors (cluster representative =
-    # argmax quantized quality-logit with min-id tie-break, singletons
-    # keep themselves; the oracle replays the ALL-PAIRS Jaccard
-    # transitive closure + the logit + the per-component argmax on the
-    # per-doc rows), born this round. Evicted
-    # training_order_weighted_docs (green in BOTH r12 and r13): the
-    # A-Res weighted serve key is checked in-window TWICE — the
-    # annealed row's oracle replays the identical ln(u)/w quantized key
-    # per epoch (and test_sampling_packing pins annealed ≡ per-epoch
-    # weighted_epoch_order bit-for-bit), and training_run_order_docs
-    # checks the same md5-uniform + prefix-sum ranking machinery flat
-    # in E; the weights-table guard rails stay unit-pinned.
-    "dedup_keep_best_docs": q_dedup_keep_best_docs,
-    # r10 second rotation: promoted the round's FIVE new capabilities
-    # (dsir_select importance resampling, its streamed deployment,
-    # quality_funnel attrition, corpus_drift KL monitor, and the
-    # batch-inference seam row). Evicted five rows green in BOTH r08
-    # and r09 whose machinery stays covered in-window:
-    # doc_embed_docs (doc_embed_infer_docs runs the SAME chunk→embed→
-    # pool chain against the SAME oracle, with the JVM hash_embed
-    # pinned bit-equal to the seam stub in tests/test_inference.py),
-    # substring_dedup_docs (the span-detection chain lives inside the
-    # checked substring_removal_docs), bpe_tokenize_docs (the frozen
-    # replace chain is replayed inside bpe_encode_production_docs' and
-    # bpe_train_encode_docs' hash gates — the bpe_encode_docs eviction
-    # argument), ivfpq_recovery_topk (ivfpq_recall_topk runs the full
-    # IVF-PQ probe chain AGAINST the brute-force baseline in one plan —
-    # strictly stronger), tfidf_topk_docs (quantize-then-rank is now
-    # in-window via dsir_select_docs; the distributed top-K head via
-    # vocab_coverage_bpe_docs).
-    "stream_dsir_score_docs": q_stream_dsir_score_docs,
-    "corpus_drift_docs": q_corpus_drift_docs,
-    "doc_embed_infer_docs": q_doc_embed_infer_docs,
-    # r10 third rotation — zero driver-signal debt into r11: the three
-    # late-round capabilities get their driver row THIS round (the
-    # late-r08 precedent). Evicted, all r08+r09 doubly green with their
-    # chains CONTAINED in an in-window row's oracle: decontaminate_docs
-    # (stream_decontaminate_docs replays the identical gram chain +
-    # eval join over the stricter injected feed), near_dup_clusters
-    # (near_dup_clusters_incremental's oracle IS the full-rebuild
-    # closure over the same LSH+jaccard+clustering chain),
-    # albedo_recirc_events (the M10 secondary-sampler module stays
-    # driver-checked via brightness_temp_events + visibility_events;
-    # albedo's closed-form inversion is unit-pinned in test_model).
-    "dsir_landed_select_docs": q_dsir_landed_select_docs,
-    "stream_funnel_docs": q_stream_funnel_docs,
-    "stream_decontaminate_docs": q_stream_decontaminate_docs,
-    "bpe_train_encode_docs": q_bpe_train_encode_docs,
-    # r11 rotation (VERDICT r10 Next #1/#2/#3): promoted
-    # training_order_docs (NEW — seeded epoch-keyed serving order over
-    # the packed sequences, two-pass prefix-sum rank, the stage between
-    # training_shards and an actual run), stream_media_decisions (NEW —
-    # per-arrival containment verdicts vs the landed pHash index), and
-    # quality_funnel_by_lang_docs (the one oracle-backed entry with
-    # zero driver history — driver-signal debt back to zero). Evicted
-    # three rows green in BOTH r09 and r10 with machinery covered
-    # in-window: media_near_dup (its decode→pHash→hub-safe banded
-    # Hamming chain is contained in media_dedup_decisions' evidence
-    # composition over the same planted corpus, and the band join stays
-    # exercised by stream_media_near_dup), stream_curation_docs (its
-    # quality→scrub→exact-dedup firehose stages run inside
-    # stream_pack_shards_docs' composed chain against a stricter
-    # bit-identical-layout oracle), probe_eval_docs (the scoring→
-    # threshold→exact-confusion-matrix machinery is probe_irls_eval's
-    # same final stage; LS training stays checked via
-    # linear_probe_weights_docs, streamed scoring via
-    # stream_probe_score_docs).
-    # (second r11 promotion: training_order_weighted_docs — the
-    # mixture-weighted A-Res serving order, born this round so it gets
-    # its driver slot now — replaces semantic_dedup_embeddings,
-    # r09+r10 doubly green, whose landed two-level quantizer chain
-    # (packed coarse probe, fine assignment, landed index build) runs
-    # inside the in-window stream_semantic_dedup_embeddings row
-    # against the SAME landed index; the batch within-cell pair join
-    # stays pinned by unit tests and the ivfpq_recall chain.)
-    # (third r11 promotion: training_order_multipass_docs — the
-    # epochs-per-source plan, born this round — replaces
-    # stream_ls_keyed_events, r09+r10 doubly green: the keyed
-    # streaming-aggregation machinery stays in-window via
-    # stream_flare_keyed_events and stream_bls_events, and the LS
-    # trig-moment expressions are IDENTICAL between the batch and
-    # keyed-stream forms, batch form sweep-checked via
-    # lomb_scargle_events + stream_ls_events driver history.)
-    # r13 third promotion (VERDICT r12 Missing #4):
-    # training_order_curriculum_docs — quality-quantile staged serving
-    # (the data-card anneal/staging discipline), born this round.
-    # Evicted training_order_docs (green in BOTH r11 and r12): the
-    # uniform md5 permutation + two-pass prefix-sum rank machinery is
-    # the curriculum row's WITHIN-STAGE order (same key spelling, same
-    # bucketed≡sorted proof in its oracle), the identical epoch_order
-    # chain also runs inside training_run_order_docs (in-window, epochs
-    # 0..E-1), and the (shard, offset) resume arithmetic stays checked
-    # by serving_shards_docs.
-    "training_order_curriculum_docs": q_training_order_curriculum_docs,
-    # r14 second promotion (VERDICT r13 Missing #2 / Next #3):
-    # training_order_curriculum_strat_docs — STRATIFIED curriculum
-    # staging (stage = each lang's OWN score-quantile slice via
-    # partition_cols; per-lang populations exact to ±1; global
-    # stage-major serve permutation unchanged), born this round; the
-    # oracle replays the per-lang ranking + stage arithmetic + serve
-    # permutation. Evicted quality_funnel_by_lang_docs (green in BOTH
-    # r12 and r13): the funnel cascade (funnel_stats features +
-    # first-failing-rule attribution) is replayed rule-for-rule inside
-    # stream_funnel_docs' oracle (in-window) over the same
-    # default_funnel_rules, and corpus_drift_docs (in-window) checks
-    # the same per-group single-scan aggregate shape; the per-lang
-    # grouping is a groupBy key, not separate machinery.
-    "training_order_curriculum_strat_docs":
-        q_training_order_curriculum_strat_docs,
-    # r14 fourth promotion (VERDICT r13 stretch #7):
-    # training_curriculum_run_docs — the staged curriculum as a flat-E
-    # resumable run schedule (stage computed once, per-epoch
-    # within-stage reshuffle, global_step arithmetic), born this
-    # round; oracle = stage replay + PARTITION BY epoch serve ranking.
-    # Evicted stream_probe_score_docs (green in BOTH r12 and r13): the
-    # stream-static broadcast-scoring shape (landed model table joined
-    # to arrivals, zero state) is checked in-window by
-    # stream_dsir_score_docs (landed DSIR model) and stream_funnel_docs;
-    # the IRLS weights + scoring→threshold→confusion chain stay via
-    # probe_irls_eval_docs (in-window), and the batch≡seam weight
-    # bit-identity is unit-pinned (test_classifier).
-    "training_curriculum_run_docs": q_training_curriculum_run_docs,
-    # (training_order_weighted_docs evicted r14 — see the
-    # dedup_keep_best_docs promotion comment; entry now in overflow)
-    # r13 fourth promotion (beyond-ask, the epoch-dependent half of
-    # VERDICT r12 Missing #4): training_run_order_annealed_docs — the
-    # annealed (per-epoch mixture) run schedule, born this round, flat
-    # in E. Evicted training_order_multipass_docs (green in BOTH r11
-    # and r12): its explode-copies-into-the-key + one-ranking idiom is
-    # exactly what training_run_order_docs (in-window) checks with
-    # epochs in place of pass copies, the A-Res weighted key stays via
-    # training_order_weighted_docs AND the new annealed row (both
-    # in-window), and the budget→repeats composition keeps its own row
-    # (mixture_budget_plan_docs, whose test pins that the plan feeds
-    # multi_pass_order with each group appearing exactly repeats times).
-    "training_run_order_annealed_docs": q_training_run_order_annealed_docs,
-    "stream_media_decisions": q_stream_media_decisions,
-    # (quality_funnel_by_lang_docs evicted r14 — see the
-    # training_order_curriculum_strat_docs promotion comment)
-    "probe_irls_eval_docs": q_probe_irls_eval_docs,
-    "brightness_temp_events": q_brightness_temp_events,
-    "visibility_events": q_visibility_events,
-    "stream_trigger_clusters_events": q_stream_trigger_clusters_events,
-    "stream_rebin_events": q_stream_rebin_events,
-    "json_props_events": q_json_props_events,
-    "fits_ingest_events": q_fits_ingest_events,
-    "qlp_ingest_events": q_qlp_ingest_events,
-    "csv_ingest_events": q_csv_ingest_events,
-    # -- oracle-backed overflow (judge full sweep only, no driver row) --
-    # r14 evictions (green r12+r13; A-Res key machinery in-window via
-    # the annealed + run-order rows; funnel cascade replayed inside
-    # stream_funnel_docs' oracle; mixture report = one groupBy over
-    # the in-window-checked weighted order)
-    "training_order_weighted_docs": q_training_order_weighted_docs,
-    "quality_funnel_by_lang_docs": q_quality_funnel_by_lang_docs,
-    "serving_mixture_docs": q_serving_mixture_docs,
-    "stream_probe_score_docs": q_stream_probe_score_docs,
-    # r07 evictions: green in both r05 and r06
-    "sketch_stats_events": q_sketch_stats_events,
-    "repetition_stats_docs": q_repetition_stats_docs,
-    "spline_recovery_events": q_spline_recovery_events,
-    "transit_fit_recovery_events": q_transit_fit_recovery_events,
-    "bls_multi_recovery_events": q_bls_multi_recovery_events,
-    "outlier_period_events": q_outlier_period_events,
-    "ivf_recovery_topk": q_ivf_recovery_topk,
-    "lsh_similarity_topk": q_lsh_similarity_topk,
-    "embedding_near_dup": q_embedding_near_dup,
-    "corpus_cleanup": q_corpus_cleanup,
-    "bloom_dedup_docs": q_bloom_dedup_docs,
-    "pq_recovery_topk": q_pq_recovery_topk,
-    "simhash_pairs": q_simhash_pairs,
-    "media_features": q_media_features,
-    # r10 second/third-rotation evictions: green in both r08 and r09,
-    # machinery covered in-window (see the window comments)
-    "near_dup_clusters": q_near_dup_clusters,
-    "decontaminate_docs": q_decontaminate_docs,
-    "albedo_recirc_events": q_albedo_recirc_events,
-    "tfidf_topk_docs": q_tfidf_topk_docs,
-    # r13 evictions: green in both r11 and r12, machinery covered
-    # in-window (see the r13 rotation comments at the window head)
-    "training_shards_docs": q_training_shards_docs,
-    "stream_media_near_dup": q_stream_media_near_dup,
-    "training_order_docs": q_training_order_docs,
-    "training_order_multipass_docs": q_training_order_multipass_docs,
-    "bpe_roundtrip_docs": q_bpe_roundtrip_docs,
-    # r12 evictions: green in both r10 and r11, machinery covered
-    # in-window (see the r12 rotation comments at the window head)
-    "population_nm_recovery_events": q_population_nm_recovery_events,
-    "pack_sequences_bpe_docs": q_pack_sequences_bpe_docs,
-    "linear_probe_weights_docs": q_linear_probe_weights_docs,
-    "bls_multires_events": q_bls_multires_events,
-    "dedup_lines_docs": q_dedup_lines_docs,
-    "simhash_docs": q_simhash_docs,
-    "dsir_select_docs": q_dsir_select_docs,
-    "quality_funnel_docs": q_quality_funnel_docs,
-    "mixture_sample_docs": q_mixture_sample_docs,
-    "vocab_coverage_bpe_docs": q_vocab_coverage_bpe_docs,
-    # r11 evictions: green in both r09 and r10, machinery covered
-    # in-window (see the r11 rotation comments)
-    "media_near_dup": q_media_near_dup,
-    "stream_curation_docs": q_stream_curation_docs,
-    "probe_eval_docs": q_probe_eval_docs,
-    "semantic_dedup_embeddings": q_semantic_dedup_embeddings,
-    "stream_ls_keyed_events": q_stream_ls_keyed_events,
-    "doc_embed_docs": q_doc_embed_docs,
-    "substring_dedup_docs": q_substring_dedup_docs,
-    "ivfpq_recovery_topk": q_ivfpq_recovery_topk,
-    "bpe_tokenize_docs": q_bpe_tokenize_docs,
-    "doc_quality_docs": q_doc_quality_docs,
-    "vocab_topk_docs": q_vocab_topk_docs,
-    "derived_features_events": q_derived_features_events,
-    "detection_stats_events": q_detection_stats_events,
-    "stream_ls_events": q_stream_ls_events,
-    "matched_filter_events": q_matched_filter_events,
-    "phase_curve_events": q_phase_curve_events,
-    "clip_detrend_events": q_clip_detrend_events,
-    "tls_recovery_events": q_tls_recovery_events,
-    "derived_outputs_events": q_derived_outputs_events,
-    "stream_bls_keyed_events": q_stream_bls_keyed_events,
-    "stream_dedup_docs": q_stream_dedup_docs,
-    "ener_spectrum_events": q_ener_spectrum_events,
-    # earlier-round overflow
-    "rebin_events": q_rebin_events,
-    "median_normalize_events": q_median_normalize_events,
-    "sessionize_events": q_sessionize_events,
-    "fold_phase_bins": q_fold_phase_bins,
-    "largest_gap_events": q_largest_gap_events,
-    "lomb_scargle_events": q_lomb_scargle_events,
-    "dedup_exact_docs": q_dedup_exact_docs,
-    "transit_windows_events": q_transit_windows_events,
-    "model_loglik_events": q_model_loglik_events,
-    "rv_flare_model_events": q_rv_flare_model_events,
-    "mask_windows_events": q_mask_windows_events,
-    "rolling_std_events": q_rolling_std_events,
-    "topk_outliers_events": q_topk_outliers_events,
-    "pq_landed_topk": q_pq_landed_topk,
-    "language_id_docs": q_language_id_docs,
-    "stream_sessions_events": q_stream_sessions_events,
-    "datetime_strings_events": q_datetime_strings_events,
-    "gp_pair_loglik_events": q_gp_pair_loglik_events,
-    "ztf_ingest_events": q_ztf_ingest_events,
-    "interp_grid_events": q_interp_grid_events,
-    "fingerprint_docs": q_fingerprint_docs,
-    "depth_fit_events": q_depth_fit_events,
-    "white_light_events": q_white_light_events,
-    "sigma_clip_events": q_sigma_clip_events,
-    "similarity_topk": q_similarity_topk,
-    "bls_snr_spectrum_events": q_bls_snr_spectrum_events,
-    "linear_detrend_events": q_linear_detrend_events,
-    "rolling_median_events": q_rolling_median_events,
-    "customers_without_orders": q_customers_without_orders,
-    "top_events": q_top_events,
-    "membership_events": q_membership_events,
-    "rebin_count_events": q_rebin_count_events,
-    "text_stats_docs": q_text_stats_docs,
-    "stream_near_dup_docs": q_stream_near_dup_docs,
-    # r09 evictions: green in both r07 and r08, machinery covered
-    # in-window (see the rotation comment above)
-    "rp_project_embeddings": q_rp_project_embeddings,
-    "lm_score_docs": q_lm_score_docs,
-    "chunk_docs": q_chunk_docs,
-    "vocab_coverage_docs": q_vocab_coverage_docs,
-    "pack_sequences_docs": q_pack_sequences_docs,
-    "jsonl_ingest_docs": q_jsonl_ingest_docs,
-    # r08 evictions: green in both r06 and r07
-    "transit_epochs_events": q_transit_epochs_events,
-    "rolling_std_peakcut_events": q_rolling_std_peakcut_events,
-    "binned_rms_events": q_binned_rms_events,
-    "near_dup_pairs": q_near_dup_pairs,
-    "stream_near_dup_recovery_docs": q_stream_near_dup_recovery_docs,
-    "asof_join_events": q_asof_join_events,
-    "rollup_pricing": q_rollup_pricing,
-    "quality_filter_docs": q_quality_filter_docs,
-    "pii_scrub_docs": q_pii_scrub_docs,
-    "time_rollup_events": q_time_rollup_events,
-    "split_assign_docs": q_split_assign_docs,
-    # r06 second-wave evictions (green since r04, still judge-swept)
-    "pricing_summary": q_pricing_summary,
-    "region_revenue": q_region_revenue,
-    "crossmatch_catalog": q_crossmatch_catalog,
-    "photometry_events": q_photometry_events,
-    "flare_band_events": q_flare_band_events,
-    "trigger_clusters_events": q_trigger_clusters_events,
-    "phase_components_events": q_phase_components_events,
-    # r10 evictions: green in both r08 and r09, machinery covered
-    # in-window (see the rotation comment above)
-    "bpe_encode_docs": q_bpe_encode_docs,
-    "linear_probe_docs": q_linear_probe_docs,
-    "lm_bigram_score_docs": q_lm_bigram_score_docs,
-    # -- rows-only (no SQL oracle by design: iterative/engine-hash) --
-    "minhash_lsh_pairs": q_minhash_lsh_pairs,
-    "transit_fit_events": q_transit_fit_events,
-    "spline_detrend_events": q_spline_detrend_events,
-    "bls_multi_events": q_bls_multi_events,
-    "gp_detrend_events": q_gp_detrend_events,
-    "gp_loglik_events": q_gp_loglik_events,
-    "ivf_similarity_topk": q_ivf_similarity_topk,
-    "ivf_landed_topk": q_ivf_landed_topk,
-    "mcmc_transit_events": q_mcmc_transit_events,
-    "mcmc_albedo_events": q_mcmc_albedo_events,
-    "bls_alt_backend_events": q_bls_alt_backend_events,
-    "ivfpq_landed_topk": q_ivfpq_landed_topk,
+    _name(fn): fn for fn, _, _ in REGISTRY
 }
-
-
-def _oracles() -> dict[str, str]:
-    return {
-        "pricing_summary": SQL_PRICING_SUMMARY,
-        "region_revenue": SQL_REGION_REVENUE,
-        "customers_without_orders": SQL_CUSTOMERS_WITHOUT_ORDERS,
-        "top_events": SQL_TOP_EVENTS,
-        "rebin_events": SQL_REBIN_EVENTS,
-        "median_normalize_events": SQL_MEDIAN_NORMALIZE_EVENTS,
-        "sessionize_events": SQL_SESSIONIZE_EVENTS,
-        "fold_phase_bins": SQL_FOLD_PHASE_BINS,
-        "mask_windows_events": SQL_MASK_WINDOWS_EVENTS,
-        "rolling_std_events": SQL_ROLLING_STD_EVENTS,
-        "rolling_median_events": SQL_ROLLING_MEDIAN_EVENTS,
-        "sigma_clip_events": SQL_SIGMA_CLIP_EVENTS,
-        "largest_gap_events": SQL_LARGEST_GAP_EVENTS,
-        "lomb_scargle_events": SQL_LOMB_SCARGLE_EVENTS,
-        "bls_spectrum_events": _sql_bls_spectrum(),
-        "bls_snr_spectrum_events": _sql_bls_snr_spectrum(),
-        "outlier_period_events": _sql_outlier_period(),
-        "dedup_exact_docs": SQL_DEDUP_EXACT_DOCS,
-        "text_stats_docs": SQL_TEXT_STATS_DOCS,
-        "mixture_sample_docs": SQL_MIXTURE_SAMPLE_DOCS,
-        "pack_sequences_docs": SQL_PACK_SEQUENCES_DOCS,
-        "decontaminate_docs": SQL_DECONTAMINATE_DOCS,
-        "population_nm_recovery_events": SQL_POPULATION_NM_RECOVERY_EVENTS,
-        "quality_filter_docs": SQL_QUALITY_FILTER_DOCS,
-        "stream_near_dup_recovery_docs": SQL_STREAM_NEAR_DUP_RECOVERY_DOCS,
-        "training_shards_docs": _sql_training_shards(),
-        # the oracles rank with a plain global window — proving the
-        # distributed bucketed ranks equal a full sort's
-        "training_order_docs": _sql_training_order(),
-        "training_order_weighted_docs": _sql_training_order_weighted(),
-        "training_order_multipass_docs": _sql_training_order_multipass(),
-        "jsonl_ingest_docs": SQL_JSONL_INGEST_DOCS,
-        "lm_score_docs": SQL_LM_SCORE_DOCS,
-        "lm_bigram_score_docs": SQL_LM_BIGRAM_SCORE_DOCS,
-        "lm_trigram_score_docs": SQL_LM_TRIGRAM_SCORE_DOCS,
-        "chunk_docs": SQL_CHUNK_DOCS,
-        "rp_project_embeddings": _sql_rp_project(),
-        "tfidf_topk_docs": SQL_TFIDF_TOPK_DOCS,
-        "vocab_coverage_docs": SQL_VOCAB_COVERAGE_DOCS,
-        "doc_embed_docs": _sql_doc_embed(),
-        # Same oracle by design: the inference seam must be invisible
-        # to downstream consumers (bit-equal stub, pinned in tests).
-        "doc_embed_infer_docs": _sql_doc_embed(),
-        "dsir_select_docs": _sql_dsir_select(),
-        "quality_funnel_docs": SQL_QUALITY_FUNNEL_DOCS,
-        "corpus_drift_docs": _sql_corpus_drift(),
-        "stream_dsir_score_docs": _sql_stream_dsir_score(),
-        # the full-corpus model's selection: append==rebuild IS the gate
-        "dsir_landed_select_docs": _sql_dsir_select(),
-        "stream_funnel_docs": _sql_stream_funnel(),
-        "stream_decontaminate_docs": _sql_stream_decontaminate(),
-        "quality_funnel_by_lang_docs": _sql_quality_funnel_by_lang(),
-        "substring_dedup_docs": SQL_SUBSTRING_DEDUP_DOCS,
-        "substring_removal_docs": SQL_SUBSTRING_REMOVAL_DOCS,
-        "bpe_tokenize_docs": _sql_bpe_tokenize(),
-        "stream_flare_keyed_events": _sql_stream_flare_keyed(),
-        "stream_curation_docs": _sql_stream_curation(),
-        "stream_pack_shards_docs": _sql_stream_pack_shards(),
-        "pack_sequences_bpe_docs": _sql_pack_sequences_bpe(),
-        "vocab_coverage_bpe_docs": _sql_vocab_coverage_bpe(),
-        "bpe_encode_docs": _sql_bpe_encode(),
-        "bpe_encode_production_docs": _sql_bpe_encode_production(),
-        "linear_probe_docs": _sql_linear_probe(),
-        "linear_probe_weights_docs": _sql_linear_probe_weights(),
-        "stream_probe_score_docs": _sql_stream_probe_score(),
-        "semantic_dedup_embeddings": SQL_SEMANTIC_DEDUP_EMBEDDINGS,
-        "stream_semantic_dedup_embeddings": SQL_STREAM_SEMANTIC_DEDUP,
-        "semantic_decontaminate_docs": _sql_semantic_decontaminate(),
-        "stream_semantic_decontaminate_docs":
-            _sql_stream_semantic_decontaminate(),
-        "serving_shards_docs": _sql_serving_shards(),
-        "serving_mixture_docs": _sql_serving_mixture(),
-        "training_run_order_docs": _sql_training_run_order(),
-        "pack_bins_nosplit_docs": SQL_PACK_BINS_NOSPLIT,
-        "pack_bins_report_docs": SQL_PACK_BINS_REPORT,
-        "mixture_budget_plan_docs": _sql_mixture_budget_plan(),
-        "pack_bins_ffd_docs": SQL_PACK_BINS_FFD,
-        "stream_pack_bins_docs": SQL_STREAM_PACK_BINS,
-        "bpe_roundtrip_docs": _sql_bpe_roundtrip(),
-        "probe_eval_docs": _sql_probe_eval(),
-        "bpe_train_encode_docs": _sql_bpe_train_encode(),
-        "media_near_dup": SQL_MEDIA_NEAR_DUP,
-        "stream_media_near_dup": SQL_STREAM_MEDIA_NEAR_DUP,
-        "stream_media_decisions": SQL_STREAM_MEDIA_DECISIONS,
-        "media_dedup_decisions": SQL_MEDIA_DEDUP_DECISIONS,
-        "probe_irls_eval_docs": _sql_probe_irls_eval(),
-        "pii_scrub_docs": _sql_pii(),
-        "dedup_lines_docs": SQL_DEDUP_LINES_DOCS,
-        "split_assign_docs": SQL_SPLIT_ASSIGN_DOCS,
-        "ivfpq_recovery_topk": SQL_IVFPQ_RECOVERY_TOPK,
-        "ivfpq_recall_topk": SQL_IVFPQ_RECALL_TOPK,
-        "similarity_topk": SQL_SIMILARITY_TOPK,
-        "near_dup_pairs": SQL_NEAR_DUP_PAIRS,
-        "near_dup_clusters": SQL_NEAR_DUP_CLUSTERS,
-        # append==rebuild: the incremental row's oracle IS the rebuild
-        "near_dup_clusters_incremental": SQL_NEAR_DUP_CLUSTERS,
-        "split_assign_clustered_docs": _sql_split_assign_clustered(),
-        # survivor = per-component argmax (quantized logit, min-id
-        # tie-break) over the independently replayed closure
-        "dedup_keep_best_docs": _sql_dedup_keep_best(),
-        "training_order_curriculum_strat_docs":
-            _sql_training_order_curriculum_strat(),
-        "decon_report_docs": SQL_DECON_REPORT_DOCS,
-        "training_curriculum_run_docs": _sql_training_curriculum_run(),
-        # stream == batch per arrival set (stateless stream-static
-        # join), so the streaming row replays the SAME closure
-        "stream_split_assign_docs": _sql_split_assign_clustered(),
-        # indexed == exact IS the recovery contract (subset-only form
-        # against the full cross-join replay)
-        "semantic_decontaminate_indexed_docs": _sql_semantic_decontaminate(),
-        "training_order_curriculum_docs": _sql_training_order_curriculum(),
-        "training_run_order_annealed_docs": _sql_training_run_order_annealed(),
-        "white_light_events": SQL_WHITE_LIGHT_EVENTS,
-        "transit_windows_events": SQL_TRANSIT_WINDOWS_EVENTS,
-        "flare_band_events": SQL_FLARE_BAND_EVENTS,
-        "trigger_clusters_events": SQL_TRIGGER_CLUSTERS_EVENTS,
-        "topk_outliers_events": SQL_TOPK_OUTLIERS_EVENTS,
-        "binned_rms_events": SQL_BINNED_RMS_EVENTS,
-        "rebin_count_events": SQL_REBIN_COUNT_EVENTS,
-        "linear_detrend_events": SQL_LINEAR_DETREND_EVENTS,
-        "fingerprint_docs": SQL_FINGERPRINT_DOCS,
-        "language_id_docs": _sql_language_id(),
-        "lsh_similarity_topk": _sql_lsh_similarity_topk(),
-        "model_loglik_events": SQL_MODEL_LOGLIK_EVENTS,
-        "depth_fit_events": SQL_DEPTH_FIT_EVENTS,
-        "derived_features_events": _sql_derived_features(),
-        "stream_sessions_events": SQL_STREAM_SESSIONS_EVENTS,
-        "matched_filter_events": _sql_matched_filter(),
-        "phase_curve_events": _sql_phase_curve(),
-        "clip_detrend_events": SQL_CLIP_DETREND_EVENTS,
-        "interp_grid_events": SQL_INTERP_GRID_EVENTS,
-        "transit_epochs_events": SQL_TRANSIT_EPOCHS_EVENTS,
-        "rolling_std_peakcut_events": SQL_ROLLING_STD_PEAKCUT_EVENTS,
-        "membership_events": SQL_MEMBERSHIP_EVENTS,
-        "datetime_strings_events": SQL_DATETIME_STRINGS_EVENTS,
-        "embedding_near_dup": SQL_EMBEDDING_NEAR_DUP,
-        "detection_stats_events": _sql_detection_stats(),
-        "rv_flare_model_events": _sql_rv_flare_model(),
-        "asof_join_events": SQL_ASOF_JOIN_EVENTS,
-        "simhash_pairs": _sql_simhash_pairs(),
-        "simhash_docs": _sql_simhash_docs(),
-        "ener_spectrum_events": SQL_ENER_SPECTRUM_EVENTS,
-        "brightness_temp_events": _sql_brightness_temp(),
-        "albedo_recirc_events": _sql_albedo_recirc(),
-        "visibility_events": _sql_visibility(),
-        "derived_outputs_events": _sql_derived_outputs(),
-        "stream_trigger_clusters_events": SQL_STREAM_TRIGGER_CLUSTERS_EVENTS,
-        "stream_rebin_events": SQL_STREAM_REBIN_EVENTS,
-        "stream_bls_events": _sql_stream_bls(),
-        "stream_bls_keyed_events": _sql_stream_bls_keyed(),
-        "stream_dedup_docs": SQL_STREAM_DEDUP_DOCS,
-        "stream_ls_keyed_events": _sql_stream_ls_keyed(),
-        "sketch_stats_events": SQL_SKETCH_STATS_EVENTS,
-        "repetition_stats_docs": SQL_REPETITION_STATS_DOCS,
-        "bloom_dedup_docs": SQL_BLOOM_DEDUP_DOCS,
-        "pq_recovery_topk": SQL_PQ_RECOVERY_TOPK,
-        "stream_ls_events": _sql_stream_ls(),
-        "fits_ingest_events": SQL_FITS_INGEST_EVENTS,
-        "qlp_ingest_events": SQL_QLP_INGEST_EVENTS,
-        "csv_ingest_events": SQL_CSV_INGEST_EVENTS,
-        "rollup_pricing": SQL_ROLLUP_PRICING,
-        "time_rollup_events": SQL_TIME_ROLLUP_EVENTS,
-        "json_props_events": SQL_JSON_PROPS_EVENTS,
-        "bls_multires_events": _sql_bls_multires(),
-        "corpus_cleanup": _sql_corpus_cleanup(),
-        "phase_components_events": _sql_phase_components(),
-        "ztf_ingest_events": _sql_ztf_ingest(),
-        "crossmatch_catalog": _sql_crossmatch_catalog(),
-        "photometry_events": SQL_PHOTOMETRY_EVENTS,
-        "bls_multi_recovery_events": _sql_bls_multi_recovery(),
-        "spline_recovery_events": SQL_SPLINE_RECOVERY_EVENTS,
-        "tls_recovery_events": SQL_TLS_RECOVERY_EVENTS,
-        "gp_recovery_events": SQL_GP_RECOVERY_EVENTS,
-        "transit_fit_recovery_events": SQL_TRANSIT_FIT_RECOVERY_EVENTS,
-        "gp_pair_loglik_events": _sql_gp_pair_loglik(),
-        "ivf_recovery_topk": SQL_SIMILARITY_TOPK,
-        "media_features": SQL_MEDIA_FEATURES,
-        "doc_quality_docs": _sql_doc_quality(),
-        "vocab_topk_docs": SQL_VOCAB_TOPK_DOCS,
-        "pipeline_summary_events": _sql_pipeline_summary(),
-        "pipeline_population_events": _sql_pipeline_population(),
-        "mcmc_recovery_events": _sql_mcmc_recovery(),
-        # spline_detrend_events: no oracle (iterative LSQ fit)
-        # bls_multi_events: no oracle (iterative driver loop)
-        # gp_detrend_events: no oracle (dense GP solve)
-        # transit_fit_events: intentionally no oracle (iterative optimizer)
-        # minhash_lsh_pairs: intentionally no oracle (engine-specific
-        # xxhash64)
-    }
-
-
-ORACLES: dict[str, str] = _oracles()
+ORACLES: dict[str, str] = {
+    _name(fn): sql for fn, sql, _ in REGISTRY if sql is not None
+}
+BENCH_ROLES: dict[str, str] = {
+    _name(fn): role for fn, _, role in REGISTRY if role is not None
+}

@@ -313,7 +313,7 @@ def test_fit_fine_distributed_recovers_planted(spark, sf_dir):
 
 
 def test_land_ivf2_distributed_cutover_gate(spark, sf_dir, monkeypatch):
-    """r15 (VERDICT r14 Wrong #4): past SPARK_GRAFT_IVF2_DRIVER_FIT_MAX_K
+    """r15 (VERDICT r14 Wrong #4): past IVF2_DRIVER_FIT_MAX_K
     the landing must train the fine level via fit_fine_distributed, land
     under a DISTINCT tag (the two recipes produce different fine tables,
     so a gate flip may never read a memoized driver-trained index), and
@@ -328,7 +328,8 @@ def test_land_ivf2_distributed_cutover_gate(spark, sf_dir, monkeypatch):
     )
     from miletos_spark.schema import load_table
 
-    monkeypatch.setenv("SPARK_GRAFT_IVF2_DRIVER_FIT_MAX_K", "4")
+    default_k_max = L.IVF2_DRIVER_FIT_MAX_K
+    monkeypatch.setattr(L, "IVF2_DRIVER_FIT_MAX_K", 4)
     calls = {"n": 0}
     orig = L.fit_fine_distributed
 
@@ -361,11 +362,11 @@ def test_land_ivf2_distributed_cutover_gate(spark, sf_dir, monkeypatch):
     )
     got = {(r["dropped_id"], r["kept_id"]) for r in drops.collect()}
     assert got == {(i + 1000, i) for i in range(10)}
-    # the default gate keeps the driver recipe AND the r14 tag (a
+    # the default gate keeps the driver recipe AND its own tag (a
     # DIFFERENT memo root than the dist recipe — the tag is hashed into
     # the path, so a gate flip can never read the other recipe's index);
     # memoized bench/oracle landings stay byte-valid
-    monkeypatch.delenv("SPARK_GRAFT_IVF2_DRIVER_FIT_MAX_K")
+    monkeypatch.setattr(L, "IVF2_DRIVER_FIT_MAX_K", default_k_max)
     paths2 = L.land_ivf2_index(spark, sf_dir, n_clusters=8)
     assert paths2["fine"] != paths["fine"], "recipes share a memo root"
     assert calls["n"] == 1, "default gate must keep the driver loop"

@@ -35,206 +35,6 @@ def test_window_rotation_is_deliberate():
     from miletos_spark.plans.driver_queries import QUERIES
 
     window = list(QUERIES)[:DRIVER_WINDOW]
-    # r08: promoted the last 4 never-driver-checked oracle entries
-    # (lm_trigram, bpe_encode, stream_curation, vocab_coverage_bpe —
-    # VERDICT r7 ask #4); evicted 4 rows green in BOTH r06 and r07
-    # whose machinery stays covered in-window (quality_filter +
-    # pii_scrub live inside stream_curation; time_rollup's rebin
-    # machinery in stream_rebin + binned_rms; split_assign's
-    # hash-split family in mixture_sample).
-    # plus the new r08 capability stream_pack_shards_docs (evicting
-    # rollup_pricing, also r06+r07 green — GROUPING SETS machinery is
-    # a one-liner twin of the checked pricing aggregations), and
-    # bpe_encode_production_docs — the chain≡encoder equivalence row —
-    # evicting asof_join_events (r06+r07 green, operator untouched in
-    # r08, unit-covered in test_operators).
-    # late-r08 second rotation: ALL five new r08 capabilities got a
-    # driver row this round (linear probe train/weights, streamed probe
-    # scoring, batch+stream semantic dedup) — no driver-signal debt is
-    # carried into r09. Evicted six r06+r07-doubly-green rows with
-    # operators untouched in r08 (see the registry comment for the
-    # machinery-coverage argument per evictee).
-    # r09 rotation: promoted the two never-driver-checked entries
-    # (bpe_roundtrip_docs — now UTF-8 —, probe_eval_docs) and the
-    # three NEW r9 capabilities (bpe_train_encode_docs lifecycle,
-    # media_near_dup pHash banded Hamming, probe_irls_eval_docs IRLS
-    # logistic). Evicted five r07+r08-doubly-green rows whose
-    # machinery stays covered in-window: lm_score (base case of the
-    # checked bigram/trigram LMs), chunk (inside doc_embed),
-    # vocab_coverage + pack_sequences (whitespace twins of the
-    # checked BPE variants; packing also inside stream_pack_shards),
-    # jsonl_ingest (JSON-path machinery in json_props_events).
-    # r10 rotation: promoted simhash_docs (the last oracle-backed
-    # entry with no post-oracle driver row — r01/r02 predate its
-    # oracle) plus the two NEW r10 capabilities
-    # (media_dedup_decisions, near_dup_clusters_incremental). Evicted
-    # three r08+r09-doubly-green rows whose machinery stays covered
-    # in-window: bpe_encode (frozen chain replayed inside
-    # bpe_encode_production/bpe_train_encode hash gates),
-    # linear_probe (weights + eval confusion matrix + stream scoring
-    # stay), lm_bigram (the trigram backoff chain contains it).
-    # r10 third rotation: the three late-round capabilities
-    # (dsir_landed_select, stream_funnel, stream_decontaminate) get
-    # their driver row THIS round — zero driver-signal debt into r11
-    # (the late-r08 precedent). Evicted three r08+r09-doubly-green rows
-    # whose chains are CONTAINED in an in-window row's oracle:
-    # decontaminate (stream_decontaminate replays the same gram chain),
-    # near_dup_clusters (the incremental row's oracle IS the full
-    # rebuild), albedo_recirc (M10 stays via brightness_temp +
-    # visibility; inversion unit-pinned).
-    # r10 second rotation: promoted the round's FIVE new capabilities
-    # (dsir_select + its streamed deployment, quality_funnel,
-    # corpus_drift, and the batch-inference seam row). Evicted five
-    # r08+r09-doubly-green rows, machinery covered in-window:
-    # doc_embed (doc_embed_infer runs the same chain vs the SAME
-    # oracle; JVM hash_embed pinned bit-equal to the seam stub),
-    # substring_dedup (span chain inside substring_removal),
-    # bpe_tokenize (chain replayed in the production/lifecycle hash
-    # gates), ivfpq_recovery (ivfpq_recall runs the full chain vs the
-    # brute baseline), tfidf (quantize-then-rank via dsir_select,
-    # top-K head via vocab_coverage_bpe).
-    # r11 rotation (VERDICT r10 Next #1/#2/#3): promoted
-    # training_order_docs (NEW — seeded epoch-keyed serving order,
-    # two-pass prefix-sum rank), stream_media_decisions (NEW —
-    # per-arrival containment verdicts vs the landed pHash index), and
-    # quality_funnel_by_lang_docs (the one oracle-backed entry with no
-    # driver history — debt back to zero). Evicted three
-    # r09+r10-doubly-green rows, machinery covered in-window:
-    # media_near_dup (decode→pHash→hub-safe banded chain contained in
-    # media_dedup_decisions; band join in stream_media_near_dup),
-    # stream_curation_docs (its firehose stages run inside
-    # stream_pack_shards_docs' stricter composed chain),
-    # probe_eval_docs (scoring→threshold→confusion machinery is
-    # probe_irls_eval's final stage; LS weights + stream scoring stay).
-    # Second r11 promotion: training_order_weighted_docs (A-Res
-    # mixture-weighted serving order, born this round) replaces
-    # semantic_dedup_embeddings (r09+r10 green; its landed two-level
-    # quantizer chain runs inside the in-window streaming twin against
-    # the SAME landed index; batch pair join unit-pinned + ivfpq chain).
-    # Third r11 promotion: training_order_multipass_docs (epochs-per-
-    # source plan, born this round) replaces stream_ls_keyed_events
-    # (r09+r10 green; keyed streaming-agg machinery in-window via
-    # stream_flare_keyed + stream_bls, LS moments identical batch vs
-    # stream, batch form sweep-checked).
-    # r12 rotation (VERDICT r11 Next #1/#2/#3): promoted the round's
-    # FIVE new capabilities — semantic_decontaminate_docs +
-    # stream_semantic_decontaminate_docs (embedding-space
-    # decontamination, full cross-join replay oracles),
-    # serving_shards_docs + serving_mixture_docs (driver-hash evidence
-    # for the r11 serving materialization — invariant restored),
-    # training_run_order_docs (cross-epoch schedule). Evicted five
-    # r10+r11-doubly-green rows, machinery covered in-window:
-    # population_nm_recovery (same population-grouped NM stage inside
-    # pipeline_population_events; ensemble sampler via mcmc_recovery),
-    # dsir_select (chain checked from the landed model by
-    # dsir_landed_select + streamed by stream_dsir_score),
-    # quality_funnel (per-lang row is strictly finer; stream twin
-    # stays), mixture_sample (md5-uniform thinning replayed by
-    # training_order_docs' oracle; mixture delivery now directly
-    # checked by serving_mixture_docs), vocab_coverage_bpe (encode
-    # chain hash-gated in the production/lifecycle rows; coverage tail
-    # is one groupBy, sweep-covered).
-    # r12 second promotion: pack_bins_nosplit_docs +
-    # pack_bins_report_docs (document-preserving no-split packing +
-    # its waste accounting, born this round; recursive-CTE oracle
-    # replays every greedy decision). Evicted two more r10+r11-doubly-
-    # green rows: linear_probe_weights (one-pass LS normal equations
-    # run inside probe_irls_eval's IRLS chain — iterated weighted LS;
-    # scoring stays via stream_probe_score), bls_multires (same box
-    # kernel as the in-window bls_spectrum on a derived integer grid;
-    # stream_bls stays).
-    # r12 third promotion: mixture_budget_plan_docs (data-card budget
-    # solver feeding multi_pass_order's repeats table, born this
-    # round) replaces dedup_lines_docs (r10+r11 green; the line/span
-    # winner family's de-skewed min-agg machinery stays via
-    # substring_removal_docs — the verdict's coverage table lists them
-    # as one family row).
-    # r12 fourth promotion: pack_bins_ffd_docs (first-fit-decreasing
-    # packing, born this round) replaces simhash_docs (r10+r11 green;
-    # the hub-safe banded-Hamming chain runs in-window via
-    # media_dedup_decisions + stream_media_decisions over the same
-    # dedup.py functions; the SimHash HOF stays sweep- and unit-
-    # covered).
-    # r12 fifth promotion: stream_pack_bins_docs (streaming no-split
-    # packer, batch = outermost block, zero cross-batch state, born
-    # this round) replaces pack_sequences_bpe_docs (r10+r11 green; BPE
-    # encode half hash-gated in the production/lifecycle rows,
-    # pack_chunks half replayed verbatim inside the training_order/
-    # serving oracles' seqs CTE + stream_pack_shards' layout gate).
-    # r13 rotation (VERDICT r12 Next #1): promoted
-    # split_assign_clustered_docs — leakage-safe splits keyed on the
-    # near-dup cluster representative, born this round. Evicted
-    # training_shards_docs (green in BOTH r11 and r12): its
-    # pack_chunks layout is replayed verbatim inside the
-    # training_order*/serving oracles' seqs CTE (in-window) and the
-    # partitioned materialization is checked strictly harder by
-    # serving_shards_docs + stream_pack_shards_docs (both in-window).
-    # r13 second promotion (VERDICT r12 Missing #2):
-    # semantic_decontaminate_indexed_docs — the landed-eval-index
-    # decontamination path gets driver-hash evidence (oracle = the full
-    # cross-join replay; matching it proves the any-quantizer recovery
-    # contract on the subset-only indexed form). Evicted
-    # stream_media_near_dup (green in BOTH r11 and r12): band joins
-    # in-window via media_dedup_decisions, streaming-vs-landed-index
-    # shape via stream_media_decisions, pHash HOF unit-pinned.
-    # r13 third promotion (VERDICT r12 Missing #4):
-    # training_order_curriculum_docs — quality-quantile staged serving,
-    # born this round. Evicted training_order_docs (green in BOTH r11
-    # and r12): the uniform permutation + prefix-sum rank machinery is
-    # the curriculum row's within-stage order AND runs inside
-    # training_run_order_docs (in-window); (shard, offset) resume
-    # arithmetic stays via serving_shards_docs.
-    # r13 fourth promotion (beyond-ask, the anneal half of VERDICT r12
-    # Missing #4): training_run_order_annealed_docs — per-epoch-mixture
-    # run schedule, flat in E, born this round. Evicted
-    # training_order_multipass_docs (green in BOTH r11 and r12): the
-    # explode-into-the-key + one-ranking idiom is checked by
-    # training_run_order_docs, the A-Res key by
-    # training_order_weighted_docs + the annealed row, the
-    # budget→repeats composition by mixture_budget_plan_docs.
-    # r13 fifth promotion (beyond-ask): stream_split_assign_docs —
-    # leakage-safe splits at ingest (stream-static join vs the landed
-    # cluster table, zero state), born this round. Evicted
-    # bpe_roundtrip_docs (green in BOTH r11 and r12): encode chain
-    # hash-gated in bpe_encode_production/bpe_train_encode (in-window);
-    # UTF-8 decode half unit-pinned + sweep-covered.
-    # r14 rotation (VERDICT r13 Next #1): promoted dedup_keep_best_docs
-    # — quality-canonical survivors (argmax quantized-logit cluster
-    # representative, min-id tie-break), born this round; oracle =
-    # all-pairs closure + logit + per-component argmax. Evicted
-    # training_order_weighted_docs (green in BOTH r12 and r13): the
-    # A-Res ln(u)/w quantized key is replayed per epoch inside
-    # training_run_order_annealed_docs' oracle (in-window; bit-identity
-    # annealed ≡ per-epoch weighted pinned in test_sampling_packing),
-    # and the md5-uniform + prefix-sum ranking machinery runs in
-    # training_run_order_docs (in-window).
-    # r14 second promotion (VERDICT r13 Missing #2):
-    # training_order_curriculum_strat_docs — stratified (per-lang)
-    # curriculum staging via partition_cols, born this round; oracle =
-    # PARTITION BY lang ranking + per-lang stage arithmetic + global
-    # serve permutation. Evicted quality_funnel_by_lang_docs (green in
-    # BOTH r12 and r13): the funnel cascade is replayed rule-for-rule
-    # in stream_funnel_docs' oracle (in-window) and the per-group
-    # single-scan aggregate shape in corpus_drift_docs (in-window);
-    # per-lang grouping is a groupBy key, not separate machinery.
-    # r14 third promotion (VERDICT r13 Missing #5): decon_report_docs
-    # — per-eval-suite contamination report, born this round; oracle
-    # replays grams, pairs, suite sizes, every aggregate. Evicted
-    # serving_mixture_docs (green in BOTH r12 and r13): one groupBy
-    # over the weighted order, whose chain stays checked in-window
-    # (training_run_order_docs replays the A-Res key;
-    # serving_shards_docs pins the rank-band materialization); the
-    # report-over-artifact shape stays via pack_bins_report_docs and
-    # the new decon report row (both in-window).
-    # r14 fourth promotion (VERDICT r13 stretch #7):
-    # training_curriculum_run_docs — staged curriculum as a flat-E
-    # resumable schedule, born this round; oracle = stage replay +
-    # per-epoch serve ranking + global-step arithmetic. Evicted
-    # stream_probe_score_docs (green in BOTH r12 and r13): the
-    # stream-static broadcast-scoring shape stays in-window via
-    # stream_dsir_score_docs + stream_funnel_docs; the IRLS weights
-    # and scoring→confusion chain stay via probe_irls_eval_docs
-    # (in-window); batch≡seam weight bit-identity unit-pinned.
     assert window == [
         "semantic_decontaminate_docs", "stream_semantic_decontaminate_docs",
         "serving_shards_docs", "decon_report_docs",
@@ -271,3 +71,31 @@ def test_window_rotation_is_deliberate():
         "stream_trigger_clusters_events", "stream_rebin_events", "json_props_events",
         "fits_ingest_events", "qlp_ingest_events", "csv_ingest_events",
     ]
+
+
+def test_rows_only_entries_sit_last():
+    """Rows-only (oracle-less) entries form one block at the end of the
+    registry, after every oracle-backed entry."""
+    from miletos_spark.plans.driver_queries import ORACLES, QUERIES
+
+    names = list(QUERIES)
+    first = next(i for i, n in enumerate(names) if n not in ORACLES)
+    misplaced = [n for n in names[first:] if n in ORACLES]
+    assert not misplaced, (
+        f"oracle-backed entries after the first rows-only one "
+        f"({names[first]}): {misplaced}"
+    )
+
+
+def test_every_bench_line_row_has_a_bench_role():
+    """Every query on bench.py's pinned stdout line must be benched, or
+    the line would miss a pinned row (ingest: rows are landings, timed
+    by tools/bench_ingest.py, not registry queries)."""
+    from bench import BENCH_LINE
+    from miletos_spark.plans.driver_queries import BENCH_ROLES
+
+    missing = [
+        n for n in BENCH_LINE
+        if not n.startswith("ingest:") and n not in BENCH_ROLES
+    ]
+    assert not missing

@@ -38,15 +38,12 @@ def main() -> None:
     sf_dir = sys.argv[1]
     names = sys.argv[2:]
 
+    from bench import warm_session
     from miletos_spark.plans.driver_queries import QUERIES
-    from miletos_spark.schema import load_table
     from miletos_spark.session import get_spark
 
     spark = get_spark(app_name="miletos_spark_bench_isolated")
-    # same warmup discipline as the main loop: JVM + parquet footers
-    # are steady-state, the timed number is the plan
-    for tbl in ("lineitem", "events", "documents", "embeddings"):
-        load_table(spark, sf_dir, tbl).count()
+    warm_session(spark, sf_dir)
 
     out: dict[str, dict] = {}
     for name in names:

@@ -1,6 +1,6 @@
-"""Time a subset of headline rows with the EXACT shared-leg discipline
-of bench.py (warm touch for landed probes, clearCache + gc, best-of-2)
-— for targeted same-host A/Bs during optimization rounds.
+"""Time a subset of headline rows with the exact shared-leg discipline
+of bench.py (`bench.time_shared`: warm touch for landed probes,
+clearCache + gc, best-of-2) — for targeted same-host A/Bs.
 
 Usage: python tools/bench_subset.py SF_DIR name [name ...]
 Prints one JSON line {name: best_sec}.
@@ -11,7 +11,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -19,26 +18,14 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def main() -> None:
     sf_dir = sys.argv[1]
     names = sys.argv[2:]
-    from bench import LANDED_INDEX_PROBES
-    from miletos_spark.plans.driver_queries import QUERIES
-    from miletos_spark.schema import load_table
+    from bench import time_shared, warm_session
     from miletos_spark.session import get_spark
 
     spark = get_spark(app_name="bench_subset")
-    for tbl in ("lineitem", "events", "documents", "embeddings"):
-        load_table(spark, sf_dir, tbl).count()
+    warm_session(spark, sf_dir)
     out: dict[str, float] = {}
     for name in names:
-        fn = QUERIES[name]
-        if name in LANDED_INDEX_PROBES:
-            fn(spark, sf_dir).count()
-        runs = []
-        for _ in range(2):
-            spark.catalog.clearCache()
-            spark._jvm.System.gc()
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).count()
-            runs.append(time.perf_counter() - t0)
+        runs, _ = time_shared(spark, sf_dir, name)
         out[name] = round(min(runs), 4)
         print(f"# {name}: {out[name]:.3f}s  runs={[round(r,3) for r in runs]}",
               file=sys.stderr)

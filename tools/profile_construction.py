@@ -26,15 +26,12 @@ _EXECUTING_PREFIXES = ("stream_",)
 
 
 def main() -> None:
-    from bench import HEADLINE
+    from bench import HEADLINE, warm_session
     from miletos_spark.plans.driver_queries import QUERIES
     from miletos_spark.session import get_spark
 
     spark = get_spark(app_name="construction_profile")
-    from miletos_spark.schema import load_table
-
-    for tbl in ("lineitem", "events", "documents", "embeddings"):
-        load_table(spark, SF_DIR, tbl).count()
+    warm_session(spark, SF_DIR)
 
     rows = []
     for name in HEADLINE:

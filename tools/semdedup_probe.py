@@ -49,19 +49,12 @@ def synth_vectors(spark, n: int):
     )
 
 
-def _lloyd_centers(pts, k, seed=42):
-    from miletos_spark.pipeline.landing import _lloyd
-
-    return _lloyd(pts, k, seed)
-
-
 def main() -> None:
     ns = [int(a) for a in sys.argv[1:]] or [20000, 60000, 180000]
     spark = get_spark(app_name="semdedup_probe")
     spark.sparkContext.setLogLevel("ERROR")
 
-    import numpy as np
-
+    from miletos_spark.pipeline.landing import _lloyd, _sample_vectors
     from miletos_spark.pipeline.similarity import (
         _l2sq,
         assign_cells_2l,
@@ -75,16 +68,8 @@ def main() -> None:
         vec = synth_vectors(spark, n)
         # bounded sample -> driver-side two-level training (the
         # land_ivf2_index recipe without the landing I/O)
-        cap = 65536
-        mod = 1 << 20
-        thresh = mod if n <= cap else max(1, int(mod * cap / n))
-        sample = (
-            vec.filter(F.pmod(F.xxhash64("vec_id"), F.lit(mod)) < thresh)
-            .select("embedding")
-            .collect()
-        )
-        pts = np.asarray([r["embedding"] for r in sample])
-        coarse_c = _lloyd_centers(pts, k_c)
+        pts, _ = _sample_vectors(vec)
+        coarse_c = _lloyd(pts, k_c, 42)
         d2 = ((pts[:, None, :] - coarse_c[None, :, :]) ** 2).sum(axis=2)
         a = d2.argmin(axis=1)
         fine_rows = []
@@ -95,7 +80,7 @@ def main() -> None:
                 continue
             # share-proportional fine budget (land_ivf2_index recipe)
             k_f_s = max(1, round(k * len(members) / len(pts)))
-            fc = _lloyd_centers(members, k_f_s, seed=43 + s)
+            fc = _lloyd(members, k_f_s, 43 + s)
             fine_rows += [
                 (s, int(j), [float(x) for x in c]) for j, c in enumerate(fc)
             ]
