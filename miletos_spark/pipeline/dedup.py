@@ -12,6 +12,11 @@ in three flavors mirroring standard large-corpus practice:
   equality join on 4×16-bit chunks finds ≤k-bit-distance candidates.
 - N-gram Jaccard: exact verification kernel for candidate pairs.
 
+Every bucketed self-join goes through `pairs_by_key` (direct join, or
+block-decomposed when a bucket is hot), and identical members collapse
+before the join (`fp_member_pairs`), so replica hubs cost output-sized
+work.
+
 All hashing uses xxhash64/crc32 (Spark built-ins, JVM-side); no Python
 in the hot path.
 """
@@ -172,20 +177,193 @@ def lsh_bands(
     ).select(id_col, "bb.band", "bb.bhash")
 
 
-def lsh_pairs_from_bands(banded: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Candidate pairs from a (id, band, bhash) table: self-join on the
-    band key, distinct (id_a, id_b) with id_a < id_b. Works identically
-    on the landed band table and a freshly exploded one."""
-    a = banded.alias("a")
-    b = banded.alias("b")
+# Rows per block when a hot bucket's self-join is block-decomposed
+# (`pairs_by_key`).
+PAIR_BLOCK = 128
+# Largest LSH band bucket joined as raw rows (`lsh_pairs_from_bands`);
+# collapsing identical documents first costs four more Spark jobs
+# (+0.5 s on the 40k-row sf0.1 band table, 4 cores).
+HUB_BUCKET = 16
+
+
+def _max_bucket(rows: DataFrame, key_cols: list[str]) -> int:
+    """Row count of the largest `key_cols` bucket (one job)."""
     return (
-        a.join(b, on=["band", "bhash"])
-        .filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
+        rows.groupBy(*key_cols)
+        .agg(F.count("*").alias("_c"))
+        .agg(F.max("_c").alias("m"))
+        .first()["m"]
+    ) or 0
+
+
+def pairs_by_key(
+    rows: DataFrame,
+    key_cols: list[str],
+    payload_cols: list[str],
+    max_bucket: int | None = None,
+) -> DataFrame:
+    """Every unordered pair of rows sharing `key_cols` — the bucketed
+    self-join under every near-duplicate pair generator. Returns the
+    key columns plus `{c}_a` and `{c}_b` per payload column.
+
+    Pair order: the FIRST payload column orders each pair,
+    `{p}_a < {p}_b`, so a pair appears once per shared key and rows
+    that tie on it never pair.
+
+    Cutover: when no bucket holds more than `PAIR_BLOCK` rows the
+    answer is one direct keyed self-join. Otherwise the join is
+    block-decomposed: rows are numbered into blocks of `PAIR_BLOCK`
+    within their bucket in payload order, the left side is repeated
+    for every partner block at or after its own, and the join key
+    becomes (key, partner block), so no task ever holds a hot
+    bucket's whole pair set. Both branches return the same rows.
+
+    `max_bucket` is the largest bucket's row count when it is known
+    (a landed index's write-time stat); construction then runs no
+    job. With None, one probe job runs at construction, and `rows`
+    should be pinned by the caller: the probe and both join sides
+    read it."""
+    from pyspark.sql import Window
+
+    p0 = payload_cols[0]
+
+    def side(df: DataFrame, s: str, *extra: str) -> DataFrame:
+        return df.select(
+            *key_cols, *extra,
+            *[F.col(c).alias(f"{c}_{s}") for c in payload_cols],
         )
+
+    if max_bucket is None:
+        max_bucket = _max_bucket(rows, key_cols)
+    if max_bucket <= PAIR_BLOCK:
+        pairs = side(rows, "a").join(side(rows, "b"), key_cols)
+    else:
+        w = Window.partitionBy(*key_cols).orderBy(p0)
+        blocked = rows.withColumn(
+            "_blk",
+            F.floor((F.row_number().over(w) - 1) / PAIR_BLOCK).cast("int"),
+        )
+        nblk = blocked.groupBy(*key_cols).agg(
+            (F.max("_blk") + 1).alias("_nb")
+        )
+        left = blocked.join(nblk, key_cols).withColumn(
+            "_pb", F.explode(F.sequence(F.col("_blk"), F.col("_nb") - 1))
+        )
+        right = blocked.withColumn("_pb", F.col("_blk"))
+        pairs = (
+            side(left, "a", "_pb")
+            .join(side(right, "b", "_pb"), [*key_cols, "_pb"])
+            .drop("_pb")
+        )
+    return pairs.filter(F.col(f"{p0}_a") < F.col(f"{p0}_b"))
+
+
+def fp_member_pairs(
+    members: DataFrame,
+    near: DataFrame,
+    max_class: int | None = None,
+) -> DataFrame:
+    """Expand a near relation over DISTINCT fingerprints back into
+    member pairs — the collapse → near join → expansion shape that
+    keeps every fingerprint join hub-safe.
+
+    `members` has one row per member: its fingerprint `fp` and its
+    payload columns (all the others). `near` is (fp_a, fp_b, *dist)
+    over distinct fingerprints, each unordered pair once. Returns
+    `{c}_a`, `{c}_b` per payload column plus near's `dist` columns:
+    every pair of members whose fingerprints are identical (dist 0) or
+    near, ordered by the first payload column as in `pairs_by_key`
+    (ties never pair).
+
+    Identical fingerprints pair within their class through
+    `pairs_by_key` (`max_class`, the largest class, is its
+    `max_bucket`); near ones through two keyed member joins. Join work
+    is quadratic only in distinct near fingerprints; every expansion
+    row is an output row."""
+    payload_cols = [c for c in members.columns if c != "fp"]
+    p0 = payload_cols[0]
+    dist = [c for c in near.columns if c not in ("fp_a", "fp_b")]
+    zero = pairs_by_key(members, ["fp"], payload_cols, max_class).select(
+        *[f"{c}_{s}" for s in "ab" for c in payload_cols],
+        *[F.lit(0).cast(near.schema[c].dataType).alias(c) for c in dist],
+    )
+    x = members.select(
+        F.col("fp").alias("fp_a"),
+        *[F.col(c).alias(f"{c}_x") for c in payload_cols],
+    )
+    y = members.select(
+        F.col("fp").alias("fp_b"),
+        *[F.col(c).alias(f"{c}_y") for c in payload_cols],
+    )
+    x_first = F.col(f"{p0}_x") < F.col(f"{p0}_y")
+
+    def pick(c: str, first: str, second: str) -> "F.Column":
+        return F.when(x_first, F.col(f"{c}_{first}")).otherwise(
+            F.col(f"{c}_{second}")
+        )
+
+    cross = (
+        near.join(x, "fp_a")
+        .join(y, "fp_b")
+        .filter(F.col(f"{p0}_x") != F.col(f"{p0}_y"))
+        .select(
+            *[pick(c, "x", "y").alias(f"{c}_a") for c in payload_cols],
+            *[pick(c, "y", "x").alias(f"{c}_b") for c in payload_cols],
+            *dist,
+        )
+    )
+    return zero.unionByName(cross)
+
+
+def lsh_pairs_from_bands(
+    banded: DataFrame,
+    id_col: str = "doc_id",
+    max_bucket: int | None = None,
+) -> DataFrame:
+    """Candidate pairs from an (id, band, bhash) table: every distinct
+    (id_a, id_b), id_a < id_b, sharing at least one (band, bhash)
+    bucket. Works identically on the landed band table and a freshly
+    exploded one.
+
+    Hub-safe: once a bucket exceeds `HUB_BUCKET` rows, documents with
+    identical band-hash vectors form one class, keyed on the vector
+    itself (a hash of the vector could merge two classes that share no
+    band). Only the distinct vectors enter the band join
+    (`pairs_by_key`), and member pairs expand through
+    `fp_member_pairs`. Two classes share a band exactly when all their
+    members do, so the pair set equals the raw-row band join, while k
+    replicas cost k² rows instead of bands·k². Below the cutover the
+    raw rows join directly: at most `HUB_BUCKET` join rows per band
+    row, without the collapse's extra shuffle stages.
+
+    `max_bucket` is the largest (band, bhash) bucket's row count, as
+    `landing.land_dedup_index` records it; it bounds both the class
+    sizes and the distinct-vector buckets. With None it is probed at
+    construction, so an expensive `banded` should be pinned first."""
+    if max_bucket is None:
+        max_bucket = _max_bucket(banded, ["band", "bhash"])
+    rows = banded.select(F.col(id_col).alias("id"), "band", "bhash")
+    if max_bucket <= HUB_BUCKET:
+        return (
+            pairs_by_key(rows, ["band", "bhash"], ["id"], max_bucket)
+            .select("id_a", "id_b")
+            .distinct()
+        )
+    members = rows.groupBy("id").agg(
+        F.array_sort(F.collect_set(F.struct("band", "bhash"))).alias("fp")
+    )
+    class_bands = (
+        members.select("fp")
+        .distinct()
+        .select("fp", F.explode("fp").alias("_bb"))
+        .select("fp", "_bb.band", "_bb.bhash")
+    )
+    near = (
+        pairs_by_key(class_bands, ["band", "bhash"], ["fp"], max_bucket)
+        .select("fp_a", "fp_b")
         .distinct()
     )
+    return fp_member_pairs(members, near, max_bucket)
 
 
 def minhash_lsh_pairs(
@@ -195,12 +373,13 @@ def minhash_lsh_pairs(
 ) -> DataFrame:
     """LSH: split the signature into `bands` rows-per-band chunks; docs
     sharing any band chunk are candidates. Returns distinct (id_a, id_b)
-    with id_a < id_b.
-
-    Shuffle is on (band, band_hash) — bucket sizes are data-dependent
-    but bounded by real duplication; AQE skew-join covers hot buckets.
-    """
-    return lsh_pairs_from_bands(lsh_bands(sigs, id_col=id_col, bands=bands), id_col=id_col)
+    with id_a < id_b (`lsh_pairs_from_bands`: hub-safe on replicas).
+    The band table is pinned: the bucket-size probe and the join both
+    read it, and it carries the signature work."""
+    banded = lsh_bands(sigs, id_col=id_col, bands=bands)
+    return lsh_pairs_from_bands(
+        banded.localCheckpoint(eager=True), id_col=id_col
+    )
 
 
 def simhash_64(
@@ -334,212 +513,54 @@ def simhash_hamming(a: "F.Column", b: "F.Column") -> "F.Column":
     return total
 
 
+def fp_bands(df: DataFrame, fp_col: str = "fp") -> DataFrame:
+    """`df` with each row repeated once per 16-bit band of its
+    16-hex-char fingerprint `fp_col`, adding (band, chunk). By
+    pigeonhole, two fingerprints at Hamming ≤ 3 agree exactly on at
+    least one of the 4 bands, so a band-equality join is a lossless
+    candidate generator at that cut."""
+    bands = F.array(
+        *[
+            F.struct(
+                F.lit(b).alias("band"),
+                F.substring(fp_col, 1 + 4 * b, 4).alias("chunk"),
+            )
+            for b in range(4)
+        ]
+    )
+    return df.select(*df.columns, F.explode(bands).alias("_bb")).select(
+        *df.columns, "_bb.band", "_bb.chunk"
+    )
+
+
 def banded_fp_pairs_distinct(
     fps: DataFrame,
     fp_col: str = "fp",
     max_hamming: int = 3,
-    block: int = 128,
     max_bucket: int | None = None,
 ) -> DataFrame:
-    """Hamming-near pairs among DISTINCT 16-hex-char fingerprints via
-    the 4-band pigeonhole join — the hub-safe core shared by
-    `simhash_band_pairs` and `multimodal.media_phash_pairs` (VERDICT
-    r9 Wrong #1). Two structural guarantees:
+    """Hamming-near pairs among the DISTINCT 16-hex-char fingerprints
+    of `fps`: the `fp_bands` band join through `pairs_by_key`, then the
+    exact 64-bit Hamming verify. Identical fingerprints enter once, so
+    k replicas of one hash make one row, not a k² bucket. Returns
+    (fp_a, fp_b, hamming) with fp_a < fp_b and
+    1 ≤ hamming ≤ max_hamming.
 
-    1. The caller feeds DISTINCT fingerprints, so identical hashes —
-       the norm in real corpora for exactly these tiers (black
-       frames, title slates, boilerplate docs) — never enter the
-       join: k replicas of one hash contribute ONE row, not a
-       (band, chunk) hub bucket with k²/2 candidate pairs.
-    2. Residual NEAR-hash hubs (many distinct fingerprints sharing a
-       16-bit band chunk) are block-decomposed exactly like the
-       semantic tier's within-cell self-join (similarity.py
-       semantic_dedup_pairs_2l): rows get a block id within their
-       (band, chunk) bucket, the left side explodes to partner
-       blocks ≥ its own, and the join key becomes
-       (band, chunk, partner-block) — no task ever owns a whole
-       bucket's pair set.
-
-    By pigeonhole, any pair at Hamming ≤ 3 agrees exactly on at least
-    one of the 4 × 16-bit bands, so candidates are lossless at the
-    ≤ 3 cut. Returns (fp_a, fp_b, hamming) with fp_a < fp_b and
-    1 ≤ hamming ≤ max_hamming (identical pairs cannot occur on
-    distinct input).
-
-    SIDE EFFECT (ADVICE r10): when ``max_bucket`` is None, the
-    bounded-cutover probe below runs EAGERLY at DataFrame-construction
-    time — merely building the plan (explain(), tools/plan_report)
-    executes the distinct + a count job. Landed band indexes persist
-    the max (band, chunk) bucket size over DISTINCT fingerprints at
-    write time (landing.band_bucket_stats); pass it as ``max_bucket``
-    and construction is FULLY lazy — no probe job, no eager pin (the
-    self-join's identical distinct subtrees collapse to a
-    ReusedExchange, so a landed columnar read recomputes nothing
-    expensive) — the stance that killed the semantic tier's per-query
-    emb.count()."""
-    from pyspark.sql import Window
-
+    `max_bucket` is `pairs_by_key`'s, counted over distinct
+    fingerprints (`landing.band_bucket_stats`' `max_bucket_distinct`).
+    With None the distinct table is pinned, since the probe and both
+    join sides read it."""
     d = fps.select(F.col(fp_col).alias("fp")).distinct()
     if max_bucket is None:
-        # pinned: the distinct table feeds the size probe AND both
-        # sides of the band self-join — unpinned, the distinct shuffle
-        # would run two to three times (the probe is a separate job,
-        # outside ReusedExchange's reach)
         d = d.localCheckpoint(eager=True)
-    banded = d.select(
-        "fp",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.substring("fp", 1 + 4 * b, 4).alias("chunk"),
-                    )
-                    for b in range(4)
-                ]
-            )
-        ).alias("bb"),
-    ).select("fp", "bb.band", "bb.chunk")
-    # BOUNDED CUTOVER (the connected-components stance, r10 perf):
-    # one cheap bucket-size probe decides whether the block
-    # decomposition is needed at all. On hub-free inputs every
-    # (band, chunk) bucket sits far below `block`, every block id
-    # would be 0, and the window + partner-explode machinery is four
-    # wasted shuffles — measured 9.6 s -> ~3 s on the sf0.1 simhash
-    # row. The blocked path is the fallback the moment any bucket
-    # crosses `block`, so hub safety is never probed away. Landed
-    # inputs pass the write-time stat instead (no job runs here).
-    if max_bucket is not None:
-        mx = max_bucket
-    else:
-        mx = (
-            banded.groupBy("band", "chunk")
-            .agg(F.count("*").alias("_c"))
-            .agg(F.max("_c").alias("m"))
-            .first()["m"]
-        ) or 0
-    if mx <= block:
-        left = banded.select(
-            "band", "chunk", F.col("fp").alias("fp_a")
-        )
-        right = banded.select(
-            "band", "chunk", F.col("fp").alias("fp_b")
-        )
-        cands = (
-            left.join(right, ["band", "chunk"])
-            .filter(F.col("fp_a") < F.col("fp_b"))
-            .select("fp_a", "fp_b")
-            .dropDuplicates(["fp_a", "fp_b"])
-        )
-    else:
-        w = Window.partitionBy("band", "chunk").orderBy("fp")
-        blocked = banded.withColumn(
-            "_blk", F.floor((F.row_number().over(w) - 1) / block).cast("int")
-        )
-        nblk = blocked.groupBy("band", "chunk").agg(
-            (F.max("_blk") + 1).alias("_nb")
-        )
-        left = (
-            blocked.join(nblk, ["band", "chunk"])
-            .withColumn(
-                "_pb", F.explode(F.sequence(F.col("_blk"), F.col("_nb") - 1))
-            )
-            .select("band", "chunk", "_pb", F.col("fp").alias("fp_a"))
-        )
-        right = blocked.select(
-            "band", "chunk", F.col("_blk").alias("_pb"),
-            F.col("fp").alias("fp_b"),
-        )
-        cands = (
-            left.join(right, ["band", "chunk", "_pb"])
-            .filter(F.col("fp_a") < F.col("fp_b"))
-            .select("fp_a", "fp_b")
-            .dropDuplicates(["fp_a", "fp_b"])
-        )
+    cands = (
+        pairs_by_key(fp_bands(d), ["band", "chunk"], ["fp"], max_bucket)
+        .select("fp_a", "fp_b")
+        .dropDuplicates(["fp_a", "fp_b"])
+    )
     return cands.withColumn(
         "hamming", simhash_hamming(F.col("fp_a"), F.col("fp_b"))
     ).filter(F.col("hamming") <= max_hamming)
-
-
-def class_member_pairs(
-    members: DataFrame,
-    class_col: str,
-    payload_cols: list[str],
-    block: int = 128,
-    max_class: int | None = None,
-) -> DataFrame:
-    """All unordered member pairs WITHIN each equivalence class
-    (identical-fingerprint expansion), block-decomposed: a class of k
-    replicas inherently yields k·(k−1)/2 output rows, but no single
-    task ever materializes a whole class's pair set — the same
-    (key, partner-block) scheme as the semantic tier. Output columns
-    are `{c}_a`/`{c}_b` per payload column, ordered so the a-side
-    payload tuple < b-side tuple.
-
-    SIDE EFFECT + PRECONDITION (ADVICE r10): when ``max_class`` is
-    None, the bounded-cutover probe below runs EAGERLY at
-    DataFrame-construction time, and ``members`` SHOULD BE PINNED by
-    the caller (localCheckpoint/cache) — an expensive unpinned plan
-    would execute once for the probe plus once per self-join side.
-    Both in-repo callers feed a projection of an already-pinned frame
-    (media_phash_pairs, simhash_band_pairs); pinning again HERE was
-    measured at +1.3 s on the sf0.1 media row (a second
-    materialization of the same rows), so the contract stays with the
-    caller. Landed indexes persist the max class size at write time
-    (landing.band_bucket_stats); pass it as ``max_class`` and
-    construction is fully lazy — no probe, no precondition."""
-    from pyspark.sql import Window
-
-    sa = F.struct(*[F.col(f"{c}_a") for c in payload_cols])
-    sb = F.struct(*[F.col(f"{c}_b") for c in payload_cols])
-    # BOUNDED CUTOVER (same stance as banded_fp_pairs_distinct): when
-    # no class exceeds `block` members — singleton classes being the
-    # norm on duplicate-light corpora — the direct keyed self-join is
-    # the whole answer and the window/partner-explode stages are
-    # skipped; any larger class flips to the blocked decomposition.
-    if max_class is not None:
-        mx = max_class
-    else:
-        mx = (
-            members.groupBy(class_col)
-            .agg(F.count("*").alias("_c"))
-            .agg(F.max("_c").alias("m"))
-            .first()["m"]
-        ) or 0
-    if mx <= block:
-        left = members.select(
-            class_col,
-            *[F.col(c).alias(f"{c}_a") for c in payload_cols],
-        )
-        right = members.select(
-            class_col,
-            *[F.col(c).alias(f"{c}_b") for c in payload_cols],
-        )
-        return left.join(right, class_col).filter(sa < sb)
-    w = Window.partitionBy(class_col).orderBy(*payload_cols)
-    blocked = members.withColumn(
-        "_blk", F.floor((F.row_number().over(w) - 1) / block).cast("int")
-    )
-    nblk = blocked.groupBy(class_col).agg((F.max("_blk") + 1).alias("_nb"))
-    left = (
-        blocked.join(nblk, class_col)
-        .withColumn(
-            "_pb", F.explode(F.sequence(F.col("_blk"), F.col("_nb") - 1))
-        )
-        .select(
-            class_col, "_pb",
-            *[F.col(c).alias(f"{c}_a") for c in payload_cols],
-        )
-    )
-    right = blocked.select(
-        class_col, F.col("_blk").alias("_pb"),
-        *[F.col(c).alias(f"{c}_b") for c in payload_cols],
-    )
-    return (
-        left.join(right, [class_col, "_pb"])
-        .filter(sa < sb)
-        .drop("_pb")
-    )
 
 
 def simhash_band_pairs(
@@ -550,63 +571,23 @@ def simhash_band_pairs(
 ) -> DataFrame:
     """SimHash near-dup pairs via the banded Hamming join promised at
     the top of this module: fingerprints split into 4 × 16-bit bands
-    (4 hex chars each); by pigeonhole, any pair at Hamming ≤ 3 agrees
-    EXACTLY on at least one band — the band-equality self-join is a
-    lossless candidate generator (no recall lottery), and the exact
-    64-bit Hamming verification filters false candidates.
-
-    HUB-SAFE (r10): identical fingerprints are collapsed to one
-    representative BEFORE banding (boilerplate docs — k identical
-    hashes — previously made one (band, chunk) bucket with k²/2
-    candidate pairs; now they contribute one distinct row), the
-    distinct-fingerprint join is block-decomposed
-    (`banded_fp_pairs_distinct`), and matches expand back through the
-    equivalence classes: identical-hash classes via the blocked
-    within-class expansion (Hamming 0), near classes via two keyed
-    member joins (AQE skew-splits the residual replica fan-out, whose
-    row count equals the output size — inherent to the pairs
-    contract; `media_dedup_decisions` is the form that never expands).
-    Join work is quadratic only in DISTINCT-but-near hashes — which
-    is the thing the band join is for.
-
-    Shuffle is on (band index, 4-hex-char chunk): bucketed like the
-    MinHash-LSH join, never all-pairs. Returns (id_a, id_b, hamming),
-    id_a < id_b — the same pair set as banding raw rows.
-    """
-    # _spread stance (search/bls.py): the fingerprint HOF is the
-    # expensive stage, and a compact corpus (one parquet file -> ONE
-    # scan partition) serializes it on a single core — measured 11 s
-    # vs 1.8 s across 32 tasks at sf0.1. Repartition the raw rows
-    # BEFORE the HOF; the (id, text) shuffle is one corpus pass, paid
-    # where the compute parallelism is bought.
+    (`fp_bands`), the band-equality join over distinct fingerprints is
+    lossless at Hamming ≤ 3 (`banded_fp_pairs_distinct`), and matches
+    expand back to documents through `fp_member_pairs`, so identical
+    boilerplate fingerprints never form a quadratic bucket. Returns
+    (id_a, id_b, hamming), id_a < id_b — the same pair set as banding
+    raw rows."""
+    # Repartition the raw rows BEFORE the fingerprint HOF: a compact
+    # corpus arrives as one scan partition and would hash on one core.
     par = df.sparkSession.sparkContext.defaultParallelism
     fps = simhash_md5(
         df.repartition(par), text_col=text_col, id_col=id_col
     ).localCheckpoint(eager=True)
-    near = banded_fp_pairs_distinct(
-        fps.select(F.col("simhash_hex").alias("fp")), "fp", max_hamming
-    )
     members = fps.select(
-        F.col(id_col).alias("_mid"), F.col("simhash_hex").alias("fp")
+        F.col("simhash_hex").alias("fp"), F.col(id_col).alias("id")
     )
-    ham_t = "int"
-    zero = class_member_pairs(members, "fp", ["_mid"]).select(
-        F.col("_mid_a").alias("id_a"),
-        F.col("_mid_b").alias("id_b"),
-        F.lit(0).cast(ham_t).alias("hamming"),
-    )
-    ma = members.select(F.col("fp").alias("fp_a"), F.col("_mid").alias("_ia"))
-    mb = members.select(F.col("fp").alias("fp_b"), F.col("_mid").alias("_ib"))
-    cross = (
-        near.join(ma, "fp_a")
-        .join(mb, "fp_b")
-        .select(
-            F.least("_ia", "_ib").alias("id_a"),
-            F.greatest("_ia", "_ib").alias("id_b"),
-            F.col("hamming").cast(ham_t).alias("hamming"),
-        )
-    )
-    return zero.unionByName(cross)
+    near = banded_fp_pairs_distinct(members, "fp", max_hamming)
+    return fp_member_pairs(members, near)
 
 
 def near_dup_pairs_bruteforce(

@@ -186,81 +186,37 @@ def media_phash_pairs(
     re-upload (frames shifted by k) matches frame-by-frame at
     Hamming 0; a lightly re-encoded frame matches at small Hamming.
 
-    HUB-SAFE (r10, VERDICT r9 Wrong #1): real media corpora are full
-    of identical low-information frames (black frames, title slates)
-    whose shared pHash previously made one (band, chunk) bucket — and
-    a candidate set — quadratic in the replica count. Identical
-    fingerprints are now collapsed BEFORE banding; only DISTINCT
-    fingerprints enter the block-decomposed band join
-    (`dedup.banded_fp_pairs_distinct`), and matches expand back
-    through the equivalence classes (blocked within-class expansion
-    at Hamming 0; two keyed member joins for near classes). Join work
-    is quadratic only in distinct-but-near hashes; the residual
-    expansion row count equals the output size, which is inherent to
-    the PAIRS contract — `media_dedup_decisions` is the composition
-    that never materializes member pairs.
+    Hub-safe: real media corpora are full of identical
+    low-information frames (black frames, title slates). Only
+    DISTINCT fingerprints enter the band join
+    (`dedup.banded_fp_pairs_distinct`), and matches expand back to
+    frames through `dedup.fp_member_pairs`, so join work is quadratic
+    only in distinct-but-near hashes; the expansion's rows are the
+    output, which is inherent to the PAIRS contract —
+    `media_dedup_decisions` is the composition that never
+    materializes member pairs.
 
-    Shuffle is on (band, 4-hex chunk) — bucketed, never all-pairs.
     Returns (id_a, frame_a, id_b, frame_b, hamming), id_a < id_b
     (cross-media pairs only: within-media frame similarity is a
     different question from dedup)."""
     from miletos_spark.pipeline.dedup import (
         banded_fp_pairs_distinct,
-        class_member_pairs,
+        fp_member_pairs,
     )
 
-    # _spread stance: parallelize the decode+pHash HOF before pinning
-    # (a one-file media table otherwise computes it on a single core)
+    # repartition before the decode+pHash HOF: a one-file media table
+    # would otherwise compute it on a single core
     par = df.sparkSession.sparkContext.defaultParallelism
     fps = phash_frames(
         df.repartition(par), id_col=id_col
     ).localCheckpoint(eager=True)
-    near = banded_fp_pairs_distinct(
-        fps.select(F.col("phash_hex").alias("fp")), "fp", max_hamming
-    )
     members = fps.select(
-        F.col(id_col).alias("_mid"), F.col("frame").alias("_mf"),
-        F.col("phash_hex").alias("fp"),
+        F.col("phash_hex").alias("fp"), F.col(id_col).alias("id"), "frame"
     )
-    zero = (
-        class_member_pairs(members, "fp", ["_mid", "_mf"])
-        .filter(F.col("_mid_a") != F.col("_mid_b"))
-        .select(
-            F.col("_mid_a").alias("id_a"), F.col("_mf_a").alias("frame_a"),
-            F.col("_mid_b").alias("id_b"), F.col("_mf_b").alias("frame_b"),
-            F.lit(0).cast("int").alias("hamming"),
-        )
+    near = banded_fp_pairs_distinct(members, "fp", max_hamming)
+    return fp_member_pairs(members, near).select(
+        "id_a", "frame_a", "id_b", "frame_b", "hamming"
     )
-    ma = members.select(
-        F.col("fp").alias("fp_a"),
-        F.col("_mid").alias("_ia"), F.col("_mf").alias("_fa"),
-    )
-    mb = members.select(
-        F.col("fp").alias("fp_b"),
-        F.col("_mid").alias("_ib"), F.col("_mf").alias("_fb"),
-    )
-    a_first = F.col("_ia") < F.col("_ib")
-    cross = (
-        near.join(ma, "fp_a")
-        .join(mb, "fp_b")
-        .filter(F.col("_ia") != F.col("_ib"))
-        .select(
-            F.when(a_first, F.col("_ia")).otherwise(F.col("_ib")).alias(
-                "id_a"
-            ),
-            F.when(a_first, F.col("_fa")).otherwise(F.col("_fb")).alias(
-                "frame_a"
-            ),
-            F.when(a_first, F.col("_ib")).otherwise(F.col("_ia")).alias(
-                "id_b"
-            ),
-            F.when(a_first, F.col("_fb")).otherwise(F.col("_fa")).alias(
-                "frame_b"
-            ),
-            F.col("hamming").cast("int").alias("hamming"),
-        )
-    )
-    return zero.unionByName(cross)
 
 
 def media_dedup_decisions(
@@ -369,10 +325,10 @@ def media_arrival_decisions(
     landed_fp_df: DataFrame | None = None,
 ) -> DataFrame:
     """DIRECTIONAL media dedup decisions for a batch of ARRIVALS
-    against a landed corpus pHash band index (r11, VERDICT r10 Missing
-    #3) — the evidence composition `stream_media_decisions` runs per
-    micro-batch, and `media_dedup_decisions`' containment rule with
-    the corpus side read from the index instead of recomputed: arrival
+    against a landed corpus pHash band index — the evidence
+    composition `stream_media_decisions` runs per micro-batch, and
+    `media_dedup_decisions`' containment rule with the corpus side
+    read from the index instead of recomputed: arrival
     B is a re-upload of corpus media A when ≥ ``frac_threshold`` of
     B's (discriminative) frames match SOME frame of A at Hamming ≤
     ``max_hamming``.
@@ -409,12 +365,11 @@ def media_arrival_decisions(
     frequency table (fp, df), written at index-build time. With
     ``max_df`` set, the hub set is then a FILTER over this
     distinct-fps-sized table instead of a groupBy over the full
-    presence table — on the streaming path the latter was exactly the
-    per-micro-batch O(index) shuffle the pre-collapsed tables
-    eliminate (ADVICE r11). Hub fps are anti-joined out of the banded
+    presence table, which on the streaming path would be an O(index)
+    shuffle per micro-batch. Hub fps are anti-joined out of the banded
     candidate table too, so hubs never inflate the band join only to
     be dropped at the presence join."""
-    from miletos_spark.pipeline.dedup import simhash_hamming
+    from miletos_spark.pipeline.dedup import fp_bands, simhash_hamming
 
     pres = (
         landed_presence
@@ -450,21 +405,9 @@ def media_arrival_decisions(
             "phash_hex",
             "left_anti",
         )
-    d_arr = arr.select("fp").distinct()
-    banded_arr = d_arr.select(
-        "fp",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.substring("fp", 1 + 4 * b, 4).alias("chunk"),
-                    )
-                    for b in range(4)
-                ]
-            )
-        ).alias("bb"),
-    ).select(F.col("fp").alias("fp_a"), "bb.band", "bb.chunk")
+    banded_arr = fp_bands(
+        arr.select(F.col("fp").alias("fp_a")).distinct(), "fp_a"
+    )
     rel = (
         banded_arr.join(
             landed_d.select(

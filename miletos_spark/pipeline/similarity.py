@@ -208,47 +208,37 @@ def lsh_band_near_dup_pairs(
     random-hyperplane LSH self-join + exact cosine verification.
 
     Each vector hashes to one bucket per band (`band_bits` hyperplane
-    signs); candidate pairs share (band, bucket); exact cosine keeps
-    pairs above `threshold`. The self-join shuffles on (band, bucket) —
-    candidate volume scales with bucket occupancy, not n², so at 100 TB
-    this is the same bucketed design as the MinHash-LSH text path
-    (pipeline/dedup.py). Recall: a pair at cosine s agrees on one band
-    with p = (1 − acos(s)/π)^band_bits and is missed with
-    (1 − p)^n_bands — at the near-dup regime this targets (s ≥ 0.99,
-    default bands) that is ≤ 1e-10 per pair; thresholds down in the
-    random-similarity bulk (s ≈ 0.5) are NOT prunable by any index and
-    belong to the exact crossJoin path (`pairwise_topk`).
+    signs); candidate pairs share (band, bucket) — the
+    `dedup.pairs_by_key` self-join, block-decomposed when buckets are
+    hot; exact cosine keeps pairs above `threshold`. Candidate volume
+    scales with bucket occupancy, not n². Recall: a pair at cosine s
+    agrees on one band with p = (1 − acos(s)/π)^band_bits and is
+    missed with (1 − p)^n_bands — at the near-dup regime this targets
+    (s ≥ 0.99, default bands) that is ≤ 1e-10 per pair; thresholds
+    down in the random-similarity bulk (s ≈ 0.5) are NOT prunable by
+    any index and belong to the exact crossJoin path (`pairwise_topk`).
 
-    PRECONDITION (ADVICE r14): ``id_col`` must be unique in ``df``.
-    Candidate pairs are deduplicated as bare (id_a, id_b) keys and the
-    vectors re-attach by two equi-joins — duplicate ids would fan the
-    re-attach out into duplicated pair rows (the pre-r14
-    payload-carrying dropDuplicates collapsed them instead). Every
-    caller feeds a per-vector-unique id (vec_id / frame key).
+    PRECONDITION: ``id_col`` must be unique in ``df``: candidate pairs
+    are bare (id_a, id_b) keys and the vectors re-attach by two
+    equi-joins, which duplicate ids would fan out into duplicated pair
+    rows.
 
     Returns (id_a, id_b, cos_sim) with id_a < id_b, all pairs above
     threshold.
     """
+    from miletos_spark.pipeline.dedup import pairs_by_key
+
     rng = np.random.default_rng(seed)
     planes = rng.standard_normal((n_bands * band_bits, dim))
 
     v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    # the vector norm is computed ONCE per vector, BEFORE the n_bands
-    # explode and the pair join (the pack_eval_embeddings stance): the
-    # verify below then pays one dot fold per candidate pair instead of
-    # re-folding both norms per pair (r14, measured 2.25x on a
-    # 249k-pair verify; same value bit-for-bit). The hyperplane dots
-    # deliberately STAY in HOF-fold form: an unrolled literal-
-    # coefficient spelling of all 32 planes was measured 10x+ SLOWER
-    # (per-action planning/codegen blows up past ~1k expression nodes).
-    # `base` appears THREE times in the lineage (bucket derivation plus
-    # both re-attach joins) uncached — fine for a parquet scan, but an
-    # EXPENSIVE upstream df recomputes three times; callers with such
-    # inputs should pin df (localCheckpoint) first. An unconditional pin
-    # here was measured a wash at sf0.1 (near_dup_clusters 2.19->2.35,
-    # embedding_near_dup 6.81->6.41 s min-over-3, r15) — the scan is
-    # cheaper than the materialization, so the tradeoff stays the
-    # caller's (ADVICE r14).
+    # The norm is computed once per vector, before the band explode and
+    # the pair join, so the verify pays one dot fold per candidate pair.
+    # The hyperplane dots stay in HOF-fold form: an unrolled
+    # literal-coefficient spelling of all planes makes per-action
+    # planning and codegen blow up past ~1k expression nodes. `base` is
+    # read three times (buckets and both re-attach joins); callers with
+    # an expensive upstream should pin `df` first.
     base = df.select(F.col(id_col).alias("_id"), v.alias("_v")).withColumn(
         "_n", _norm(F.col("_v"))
     )
@@ -269,29 +259,21 @@ def lsh_band_near_dup_pairs(
                 for i in range(n_bands)
             ])
         ).alias("bb"),
-    ).select(
-        "_id",
-        F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"),
-    )
+    ).select("_id", "bb.band", "bb.bucket")
 
-    # Dedup-first is right here (a pair dupes up to n_bands times), but
-    # the dedup must move IDS, not payloads (r14, guide §8): carrying
-    # (va, vb) through the band join and the dropDuplicates exchange
-    # shuffled/aggregated ~1 KB of vector per candidate — measured
-    # 25.4 s vs 2.7 s at sf0.1's 1.1M candidates — so the pair set is
-    # deduplicated as bare (id_a, id_b) keys and the vectors (with
-    # their hoisted norms) re-attach by two equi-joins against the
-    # one-row-per-vector table, which AQE broadcasts while it fits.
-    left = buckets.select(
-        "band", "bucket", F.col("_id").alias("id_a")
-    )
-    right = buckets.select(
-        "band", "bucket", F.col("_id").alias("id_b")
-    )
+    # Pairs move as bare ids and the vectors (with their norms)
+    # re-attach by two equi-joins against the one-row-per-vector table:
+    # carrying the vectors through the pair join and its dedup would
+    # shuffle ~1 KB per candidate. The buckets are pinned: the
+    # bucket-size probe and the join both read the hyperplane dots.
+    # No replica collapse (`dedup.lsh_pairs_from_bands`): with 2^band_bits
+    # buckets per band every bucket is large by design, and collapsing
+    # distinct vectors measured 1.7x slower at sf0.1.
     pair_ids = (
-        left.join(right, on=["band", "bucket"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
+        pairs_by_key(
+            buckets.localCheckpoint(eager=True), ["band", "bucket"], ["_id"]
+        )
+        .select(F.col("_id_a").alias("id_a"), F.col("_id_b").alias("id_b"))
         .dropDuplicates(["id_a", "id_b"])
     )
     cand = pair_ids.join(
@@ -1027,11 +1009,11 @@ def semantic_dedup_pairs_2l(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """SemDeDup near-dup pairs over the TWO-LEVEL quantizer — the
-    100 TB form of `semantic_dedup_pairs`: same within-bucket verify
-    (candidates share a (super, fine) bucket; exact cosine keeps pairs
-    above `threshold`), but assignment is `assign_cells_2l`'s O(n·√k)
-    instead of the single-level n·k ranking.
+    """SemDeDup near-dup pairs over the TWO-LEVEL quantizer (Abbas et
+    al. 2023: k-means the embedding space, compare only within
+    clusters): candidates share a (super, fine) bucket, exact cosine
+    keeps pairs above `threshold`, and assignment is
+    `assign_cells_2l`'s O(n·√k).
 
     The Voronoi-boundary argument survives the hierarchy: two
     near-identical vectors have near-identical distance profiles, so
@@ -1041,48 +1023,25 @@ def semantic_dedup_pairs_2l(
     at least one (super, fine) bucket (unit-tested against adversarial
     random quantizers, any k).
 
-    A pair dupes across at most n_probe² buckets, which keeps the
-    verify-inside-the-join-stage stance from the single-level path
-    (never shuffle candidates still carrying their vectors; dedup only
-    the tiny above-threshold survivor set).
+    The within-bucket self-join is `dedup.pairs_by_key`, so a hub cell
+    (in high-dimensional data every vector's 2nd-choice cells
+    concentrate on 'central' centroids) is block-decomposed instead of
+    owning its whole occ²/2 pair block in one task. Candidates are
+    verified inside the join stage, never shuffled with their
+    vectors; a pair dupes across at most n_probe² buckets, so only the
+    small above-threshold survivor set is deduplicated.
 
-    OCCUPANCY MATH IS BUCKET-COUNT-AWARE: each vector lands in up to
-    n_probe² = 4 buckets (the single-level path probed 2), so the
-    caller must size the quantizer at cells ≈ n/64 — not the
-    single-level n/256 — to keep total candidate work at the same
-    ~512·n pairs (candidates = (n_probe²·n)²/(2·cells); measured ×3.5
-    wall at the old cell count before this was accounted for). The
-    assignment is cached: the self-join would otherwise recompute the
-    two-level ranking once per side.
-
-    The within-bucket self-join is BLOCK-DECOMPOSED: rows get a
-    block id (row_number within bucket / B) and the left side
-    explodes to every partner block ≥ its own, so the join key is
-    (super, fine, partner-block) and no single task ever carries more
-    than ~nblk·B² pairs of one bucket. Without this, a HUB cell (in
-    high-dimensional data every vector's 2nd-choice cells concentrate
-    on 'central' centroids — the quantizer cannot prevent it) owns
-    its whole occ²/2 pair block in one task: measured 4 tail tasks
-    carrying 11M of 15M pairs, 71 s → 39 s at 10× corpus with B=128
-    (→ 5 s after the caller's cell-count retune; SCALE.md table).
-    Blocks are id-ordered, so cross-block pairs already satisfy
-    id_a < id_b; the filter only dedups within-block pairs. Small
-    cells have nblk=1 and pay nothing. Returns
+    OCCUPANCY: each vector lands in up to n_probe² buckets, so the
+    caller sizes the quantizer to keep candidates
+    ≈ (n_probe²·n)²/(2·cells) near-linear in n. Returns
     (id_a, id_b, cos_sim), id_a < id_b."""
-    from pyspark.sql import Window
+    from miletos_spark.pipeline.dedup import pairs_by_key
 
-    B = 128
-    # localCheckpoint, not cache: the self-join reads the assignment
-    # twice, but a .cache() here is never unpersisted (the function
-    # returns a lazy frame — there is no terminal action to hook), so
-    # repeated invocations in one session (bench loops, multiple
-    # driver rows) accumulate executor storage (ADVICE r9). Local
-    # checkpoint blocks are reference-tracked: the ContextCleaner
-    # drops them once this frame is garbage-collected.
-    # The vector norm rides INSIDE the checkpoint — computed once per
-    # assigned row, so the verify below pays one dot per candidate pair
-    # instead of re-folding both norms per pair (r14, the
-    # pack_eval_embeddings stance; same value bit-for-bit).
+    # Pinned: the bucket-size probe and both join sides read the
+    # assignment. A local checkpoint, not a cache, because nothing can
+    # unpersist a cache under the lazy frame returned here; checkpoint
+    # blocks are dropped once the frame is garbage-collected. The norm
+    # rides inside, once per assigned row rather than per pair.
     assigned = (
         assign_cells_2l(
             df, coarse, fine, id_col, vec_col, n_probe, n_probe
@@ -1090,127 +1049,18 @@ def semantic_dedup_pairs_2l(
         .withColumn("_n", _norm(F.col("_v")))
         .localCheckpoint(eager=True)
     )
-    w = Window.partitionBy("super", "fine").orderBy("_id")
-    blocked = assigned.withColumn(
-        "_blk", F.floor((F.row_number().over(w) - 1) / B).cast("int")
-    )
-    nblk = blocked.groupBy("super", "fine").agg(
-        (F.max("_blk") + 1).alias("_nb")
-    )
-    left = (
-        blocked.join(nblk, ["super", "fine"])
-        .withColumn(
-            "_pb", F.explode(F.sequence(F.col("_blk"), F.col("_nb") - 1))
-        )
-        .select(
-            "super", "fine", "_pb",
-            F.col("_id").alias("id_a"), F.col("_v").alias("va"),
-            F.col("_n").alias("_na"),
-        )
-    )
-    right = blocked.select(
-        "super", "fine", F.col("_blk").alias("_pb"),
-        F.col("_id").alias("id_b"), F.col("_v").alias("vb"),
-        F.col("_n").alias("_nb2"),
-    )
-    cand = left.join(right, ["super", "fine", "_pb"]).filter(
-        F.col("id_a") < F.col("id_b")
-    )
+    cand = pairs_by_key(assigned, ["super", "fine"], ["_id", "_v", "_n"])
     return (
         cand.withColumn(
             "cos_sim",
-            _dot(F.col("va"), F.col("vb")) / (F.col("_na") * F.col("_nb2")),
+            _dot(F.col("_v_a"), F.col("_v_b"))
+            / (F.col("_n_a") * F.col("_n_b")),
         )
         .filter(F.col("cos_sim") > threshold)
-        .select("id_a", "id_b", "cos_sim")
-        .dropDuplicates(["id_a", "id_b"])
-    )
-
-
-def semantic_dedup_pairs(
-    df: DataFrame,
-    centers: DataFrame,
-    threshold: float = 0.9,
-    n_probe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """SemDeDup-style cluster-bounded near-dup pairs (Abbas et al.
-    2023: semantic dedup = k-means the embedding space, compare only
-    WITHIN clusters): each vector buckets to its `n_probe` nearest
-    coarse centroids, candidate pairs share a bucket, exact cosine
-    keeps pairs above `threshold`. Work is corpus²/k per cell instead
-    of n² — the same bounded-bucket design as the LSH band path, but
-    with data-adaptive buckets that follow the embedding density
-    (clusters ARE the semantic neighborhoods, so near-dup candidates
-    co-bucket by construction rather than by hash luck).
-
-    n_probe=2 removes the Voronoi-boundary miss class: two
-    near-identical vectors have near-identical distance profiles, so
-    their top-2 cell SETS always intersect even when rank-1 differs
-    across a boundary (a disjoint top-2 would need the pair's distance
-    profiles to disagree about two cells at once — impossible at the
-    near-dup regime the threshold targets).
-
-    `centers` is the broadcast-sized coarse quantizer (cell int,
-    center array<double>) — typically the landed IVF index's, so the
-    clustering is trained once at ingest and reused here. Returns
-    (id_a, id_b, cos_sim), id_a < id_b.
-
-    BOUNDED-k FORM ONLY: ranking all k cells per row is n·k distance
-    work, so with the occupancy-bounded k ∝ n that semantic dedup
-    needs, assignment turns quadratic — use `semantic_dedup_pairs_2l`
-    (O(n·√k) two-level assignment) for the corpus-scale path; this
-    single-level form stays for small fixed-k quantizers.
-    """
-    v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    base = df.select(F.col(id_col).alias("_id"), v.alias("_v"))
-    ranked = base.crossJoin(F.broadcast(centers)).select(
-        "_id",
-        "_v",
-        F.struct(
-            _l2sq(F.col("_v"), F.col("center")).alias("_d2"),
-            F.col("cell").alias("cell"),
-        ).alias("_s"),
-    )
-    # norm once per probed row, not thrice per candidate pair (r14 —
-    # same value bit-for-bit, see semantic_dedup_pairs_2l)
-    probed = (
-        ranked.groupBy("_id")
-        .agg(
-            F.slice(
-                F.sort_array(F.collect_list("_s")), 1, n_probe
-            ).alias("_top"),
-            F.first("_v").alias("_v"),
-        )
-        .withColumn("_n", _norm(F.col("_v")))
         .select(
-            "_id", "_v", "_n", F.explode(F.col("_top.cell")).alias("cell")
-        )
-    )
-    left = probed.select(
-        "cell", F.col("_id").alias("id_a"), F.col("_v").alias("va"),
-        F.col("_n").alias("_na"),
-    )
-    right = probed.select(
-        "cell", F.col("_id").alias("id_b"), F.col("_v").alias("vb"),
-        F.col("_n").alias("_nb"),
-    )
-    # Verify-then-dedup, the opposite order from the LSH band path:
-    # there a pair dupes up to n_bands times so dedup-first saves 8x
-    # cosine work; here it dupes at most n_probe times, and dedup-first
-    # would shuffle every candidate WITH its two 64-double vectors
-    # (measured 3.5x the whole query at 10x corpus). Scoring inside
-    # the join stage keeps candidates un-shuffled; only the tiny
-    # above-threshold survivor set is deduplicated.
-    cand = left.join(right, "cell").filter(F.col("id_a") < F.col("id_b"))
-    return (
-        cand.withColumn(
+            F.col("_id_a").alias("id_a"), F.col("_id_b").alias("id_b"),
             "cos_sim",
-            _dot(F.col("va"), F.col("vb")) / (F.col("_na") * F.col("_nb")),
         )
-        .filter(F.col("cos_sim") > threshold)
-        .select("id_a", "id_b", "cos_sim")
         .dropDuplicates(["id_a", "id_b"])
     )
 

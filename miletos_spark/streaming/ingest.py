@@ -925,32 +925,19 @@ def stream_media_near_dup(
     Stateless end to end until the final pair dedup: decode and
     hashing are per-row, the band join is stream-static. Emits
     (arrival_id, frame_a, matched_id, frame_b, hamming)."""
-    from miletos_spark.pipeline.dedup import simhash_hamming
+    from miletos_spark.pipeline.dedup import fp_bands, simhash_hamming
     from miletos_spark.pipeline.multimodal import decode_media, phash_frames
 
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     src = reader.parquet(input_dir)
-    fps = phash_frames(decode_media(src))
-    banded = fps.select(
+    fps = phash_frames(decode_media(src)).select(
         F.col("media_id").alias("arrival_id"),
         F.col("frame").alias("frame_a"),
         F.col("phash_hex").alias("fp_a"),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.substring("phash_hex", 1 + 4 * b, 4).alias(
-                            "chunk"
-                        ),
-                    )
-                    for b in range(4)
-                ]
-            )
-        ).alias("bb"),
-    ).select("arrival_id", "frame_a", "fp_a", "bb.band", "bb.chunk")
+    )
+    banded = fp_bands(fps, "fp_a")
     landed = spark.read.parquet(landed_bands_path).select(
         F.col("media_id").alias("matched_id"),
         F.col("frame").alias("frame_b"),

@@ -239,20 +239,26 @@ def test_dsir_and_drift_broadcast_the_bucket_model(spark, sf_dir):
 
 
 def test_landed_band_stats_make_pair_construction_lazy(spark, sf_dir):
-    """VERDICT r10 Wrong #2 / Next #6: with the write-time band-bucket
-    stats passed in, `banded_fp_pairs_distinct` / `class_member_pairs`
-    build their plan with NO Spark job — no cutover probe, no eager
-    pin. Job-group tracking catches any eager action fired during
-    construction; the stat-fed result must equal the probed result."""
+    """With the write-time band-bucket stats passed in, the pair
+    functions build their plan with NO Spark job — no cutover probe,
+    no eager pin: `banded_fp_pairs_distinct` / `pairs_by_key` over the
+    landed media pHash index, and `lsh_pairs_from_bands` over the
+    landed MinHash index. Job-group tracking catches any eager action
+    fired during construction; the stat-fed result must equal the
+    probed result."""
     import os
 
     from pyspark.sql import functions as F
 
     from miletos_spark.pipeline.dedup import (
         banded_fp_pairs_distinct,
-        class_member_pairs,
+        lsh_pairs_from_bands,
+        pairs_by_key,
     )
-    from miletos_spark.pipeline.landing import read_index_stats
+    from miletos_spark.pipeline.landing import (
+        land_dedup_index,
+        read_index_stats,
+    )
     from miletos_spark.plans.driver_queries import _land_media_phash_index
 
     land = _land_media_phash_index(spark)
@@ -265,6 +271,10 @@ def test_landed_band_stats_make_pair_construction_lazy(spark, sf_dir):
         F.col("frame").alias("_mf"),
         F.col("phash_hex").alias("fp"),
     )
+    mh_paths = land_dedup_index(spark, sf_dir, k=9, num_hashes=32, bands=8)
+    mh_stats = read_index_stats(os.path.dirname(mh_paths["bands"]))
+    assert mh_stats is not None and mh_stats["max_bucket"] >= 1
+    mh_bands = spark.read.parquet(mh_paths["bands"])
 
     sc = spark.sparkContext
     group = "landed-band-stats-lazy"
@@ -273,8 +283,13 @@ def test_landed_band_stats_make_pair_construction_lazy(spark, sf_dir):
         near = banded_fp_pairs_distinct(
             fps, "fp", 3, max_bucket=stats["max_bucket_distinct"]
         )
-        pairs = class_member_pairs(
-            members, "fp", ["_mid", "_mf"], max_class=stats["max_class"]
+        # frame orders the pairs: every identical-fp class of the
+        # synthetic index lies inside one video (repeated frames)
+        pairs = pairs_by_key(
+            members, ["fp"], ["_mf", "_mid"], max_bucket=stats["max_class"]
+        )
+        mh_pairs = lsh_pairs_from_bands(
+            mh_bands, max_bucket=mh_stats["max_bucket"]
         )
         assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
     finally:
@@ -285,13 +300,17 @@ def test_landed_band_stats_make_pair_construction_lazy(spark, sf_dir):
     assert sorted(map(key_n, near.collect())) == sorted(
         map(key_n, probed_near.collect())
     )
-    probed_pairs = class_member_pairs(members, "fp", ["_mid", "_mf"])
+    probed_pairs = pairs_by_key(members, ["fp"], ["_mf", "_mid"])
     key_p = lambda r: (  # noqa: E731
         r["fp"], r["_mid_a"], r["_mf_a"], r["_mid_b"], r["_mf_b"]
     )
     got = sorted(map(key_p, pairs.collect()))
     assert got == sorted(map(key_p, probed_pairs.collect()))
     assert len(got) > 0
+    key_m = lambda r: (r["id_a"], r["id_b"])  # noqa: E731
+    got_m = sorted(map(key_m, mh_pairs.collect()))
+    assert got_m == sorted(map(key_m, lsh_pairs_from_bands(mh_bands).collect()))
+    assert len(got_m) > 0
 
 
 def test_batch_infer_seam_stays_out_of_jvm_path(spark, sf_dir):

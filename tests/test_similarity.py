@@ -317,46 +317,6 @@ def test_hash_embed_mean_pool_exact(spark):
             assert all(-0.5 <= x < 0.5 for x in v)
 
 
-def test_semantic_dedup_recovers_planted_any_k(spark):
-    """Cluster-bounded semantic dedup must recover every planted
-    near-dup regardless of the quantizer's cell count/outcome (top-2
-    probing covers Voronoi boundaries), and must drop nothing else."""
-    import numpy as np
-
-    from miletos_spark.pipeline.similarity import (
-        semantic_dedup_drops,
-        semantic_dedup_pairs,
-    )
-
-    rng = np.random.default_rng(7)
-    vecs = [(i, [float(x) for x in rng.standard_normal(64)]) for i in range(80)]
-    base = spark.createDataFrame(vecs, "vec_id long, embedding array<double>")
-    planted = base.filter(F.col("vec_id") < 10).select(
-        (F.col("vec_id") + 1000).alias("vec_id"),
-        F.transform("embedding", lambda x: x + F.lit(0.01)).alias("embedding"),
-    )
-    allv = base.unionByName(planted)
-    for k in (2, 8):
-        centers = spark.createDataFrame(
-            [
-                (c, [float(x) for x in rng.standard_normal(64)])
-                for c in range(k)
-            ],
-            "cell int, center array<double>",
-        )
-        pairs = semantic_dedup_pairs(allv, centers, threshold=0.9, n_probe=2)
-        drops = semantic_dedup_drops(pairs)
-        got = {(r["dropped_id"], r["kept_id"]) for r in drops.collect()}
-        assert got == {(i + 1000, i) for i in range(10)}, (k, got)
-        # scale contract: pair candidates come from an equi-join on
-        # cell; the only nested-loops are the bounded (k-row) centers
-        # broadcast, textually once per self-join side (deduplicated
-        # by ReuseExchange at execution)
-        plan = pairs._jdf.queryExecution().executedPlan().toString()
-        assert "CartesianProduct" not in plan
-        assert plan.count("BroadcastNestedLoopJoin") <= 2
-
-
 def test_semantic_dedup_2l_recovers_planted_any_quantizer(spark):
     """The two-level (coarse->fine) path must recover every planted
     near-dup under ADVERSARIAL random quantizers at both levels (the

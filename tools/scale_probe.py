@@ -427,7 +427,10 @@ def media_probe(spark, k: int) -> dict:
 
     from pyspark.sql import functions as F
 
-    from miletos_spark.pipeline.dedup import banded_fp_pairs_distinct
+    from miletos_spark.pipeline.dedup import (
+        banded_fp_pairs_distinct,
+        fp_bands,
+    )
     from miletos_spark.pipeline.multimodal import (
         MEDIA_SCHEMA,
         decode_media,
@@ -479,20 +482,9 @@ def media_probe(spark, k: int) -> dict:
         def build(root: str) -> None:
             m, re = _media_corpus(spark, n, hub=False)
             fps = phash_frames(decode_media(m))
-            banded = fps.select(
-                "media_id", "frame", "phash_hex",
-                F.explode(
-                    F.array(*[
-                        F.struct(
-                            F.lit(b).alias("band"),
-                            F.substring("phash_hex", 1 + 4 * b, 4).alias(
-                                "chunk"
-                            ),
-                        )
-                        for b in range(4)
-                    ])
-                ).alias("bb"),
-            ).select("media_id", "frame", "phash_hex", "bb.band", "bb.chunk")
+            banded = fp_bands(
+                fps.select("media_id", "frame", "phash_hex"), "phash_hex"
+            )
             banded.write.mode("overwrite").partitionBy("band").parquet(
                 os.path.join(root, "bands")
             )

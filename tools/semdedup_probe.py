@@ -104,9 +104,9 @@ def main() -> None:
         ).count()
         t_two = time.perf_counter() - t0
 
-        # the r8 single-level form: crossJoin(broadcast(k centers)) +
-        # per-id top-2 via groupBy collect (similarity.semantic_dedup_pairs
-        # assignment stage, verbatim shape)
+        # the single-level form: crossJoin(broadcast(k centers)) +
+        # per-id top-2 via groupBy collect, the n·k assignment the
+        # two-level quantizer replaces
         v = F.transform(F.col("embedding"), lambda x: x.cast("double"))
         base = vec.select(F.col("vec_id").alias("_id"), v.alias("_v"))
         ranked = base.crossJoin(F.broadcast(flat)).select(
