@@ -21,10 +21,12 @@ the single tested code path for all of them:
 - `write_marker` / `read_marker`: an atomic JSON marker — a private
   `<path>.<uuid4>.tmp` file + `os.replace` (POSIX rename is atomic on
   one filesystem), so readers never observe a torn or partial marker,
-  and concurrent writers never share a tmp. The pack-shards marker's
-  payload is `{"files": <the batch's input-file manifest>, "offsets":
-  {lang: running token total after the batch}}`: one marker commits
-  both the replay check and the cross-batch packing carry.
+  and concurrent writers never share a tmp.
+- `drain_committed` / `read_committed`: exactly-once output per
+  micro-batch for every `foreachBatch` writer — write `out_dir/b=<id>`,
+  then one marker `state_dir/commits/<id>`; a replay is skipped only
+  if its input manifest matches the marker's, and readers see
+  `b ≤ last committed` only.
 - `publish_version` / `current_version`: a versioned dataset publish
   with an atomic pointer flip. The writer builds a NEW directory as a
   pure function of the last committed version plus the increment, then
@@ -42,7 +44,8 @@ the single tested code path for all of them:
 Cluster-scale mapping (the documented deployment shape, not emulated
 here): the memo publish is a write to a staging prefix plus one
 committed table version; the marker is a Delta/Iceberg commit
-(manifest list + atomic metadata pointer swap); the versioned publish
+(manifest list + atomic metadata pointer swap), with the batch id as
+the idempotent writer txn id; the versioned publish
 is a new table version plus the version pointer in the transaction
 log; the partition overwrite is `REPLACE WHERE` / `INSERT OVERWRITE
 PARTITION ...` under the same snapshot-isolation contract. The local
@@ -208,6 +211,112 @@ def read_marker(path: str) -> object | None:
         return None
     with open(path) as f:
         return json.load(f)
+
+
+def last_committed(state_dir: str) -> int:
+    """The highest batch id committed under `state_dir/commits`, or -1.
+    A failed batch is retried under the same id before any higher id
+    runs, so the committed ids are a prefix."""
+    d = os.path.join(state_dir, "commits")
+    if not os.path.isdir(d):
+        return -1
+    return max((int(x) for x in os.listdir(d) if x.isdigit()), default=-1)
+
+
+def committed_payload(state_dir: str, batch_id: int) -> object | None:
+    """Marker `batch_id`'s payload; None when missing or unreadable
+    (a torn pre-atomic marker, a transient fs error)."""
+    try:
+        return read_marker(os.path.join(state_dir, "commits", str(batch_id)))
+    except (OSError, ValueError):
+        return None
+
+
+def _batch_manifest(state_dir: str, batch_id: int) -> list | None:
+    """The sorted input files of `batch_id` from the file source's own
+    batch log, which is written before the batch executes (a
+    foreachBatch frame's `inputFiles()` is empty)."""
+    d = os.path.join(state_dir, "ckpt", "sources", "0")
+    for name in (str(batch_id), f"{batch_id}.compact"):
+        p = os.path.join(d, name)
+        if not os.path.exists(p):
+            continue
+        with open(p) as f:
+            entries = [json.loads(ln) for ln in f if ln.startswith("{")]
+        return sorted(
+            o["path"] for o in entries if o.get("batchId", batch_id) == batch_id
+        )
+    return None
+
+
+def drain_committed(
+    src: DataFrame,
+    out_dir: str,
+    state_dir: str,
+    write: "Callable[[DataFrame, str, int], dict | None]",
+    timeout_sec: int = 300,
+) -> None:
+    """Drain the file stream `src` (availableNow, checkpoint under
+    `state_dir/ckpt`) with one commit per micro-batch. A new batch goes
+    to `write(batch, path, last)`, which overwrites `path` =
+    `out_dir/b=<id>` (a retry rewrites its own orphan) and may read
+    committed state up to batch `last`; once it returns, the marker
+    `state_dir/commits/<id>` = `{"files": manifest, **payload}`
+    commits the batch. A replayed committed id is a no-op only if its
+    manifest equals the marker's (a bare-list marker is the manifest);
+    otherwise — a fresh checkpoint or a changed trigger size
+    renumbered the batches — the drain raises rather than skip
+    uncommitted input."""
+    from miletos_spark.streaming.stateful import await_drain
+
+    def _batch(bdf: DataFrame, batch_id: int) -> None:
+        last = last_committed(state_dir)
+        if batch_id <= last:
+            want = committed_payload(state_dir, batch_id)
+            if isinstance(want, dict):
+                want = want.get("files")
+            got = _batch_manifest(state_dir, batch_id)
+            if want is None or got is None or want != got:
+                raise RuntimeError(
+                    f"batch {batch_id} under {state_dir} is marked "
+                    "committed but its input manifest differs "
+                    f"(committed {want!r} vs replayed {got!r}) — the "
+                    "checkpoint and state_dir are misaligned (fresh "
+                    "checkpoint? changed maxFilesPerTrigger?); refusing "
+                    "to skip uncommitted input"
+                )
+            return
+        payload = write(bdf, os.path.join(out_dir, f"b={batch_id}"), last)
+        write_marker(
+            os.path.join(state_dir, "commits", str(batch_id)),
+            {"files": _batch_manifest(state_dir, batch_id), **(payload or {})},
+        )
+
+    q = (
+        src.writeStream.foreachBatch(_batch)
+        .option("checkpointLocation", os.path.join(state_dir, "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    await_drain(q, out_dir, timeout_sec)
+
+
+def read_committed(
+    spark: SparkSession, out_dir: str, state_dir: str, schema: str
+) -> DataFrame:
+    """The rows `drain_committed` committed under `out_dir` (`b ≤ last
+    committed`), read with the explicit `schema`: no inference job, and
+    no crashed attempt's uncommitted dir."""
+    last = last_committed(state_dir)
+    if last < 0:
+        return spark.createDataFrame([], schema)
+    return (
+        spark.read.option("basePath", out_dir)
+        .schema(f"{schema}, b int")
+        .parquet(out_dir)
+        .filter(F.col("b") <= F.lit(last))
+        .drop("b")
+    )
 
 
 def current_version(pointer_path: str) -> str | None:

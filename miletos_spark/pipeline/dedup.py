@@ -694,9 +694,9 @@ def near_dup_pairs_prefix(
         .distinct()
     )
     scored = ngram_jaccard_pairs(df, cands, text_col=text_col, id_col=id_col, k=k)
-    # cache barrier before thresholding: the filter would otherwise
+    # checkpoint barrier before thresholding: the filter would otherwise
     # migrate into the hash join as a CodegenFallback condition
-    scored = scored.cache()
+    scored = scored.localCheckpoint(eager=True)
     return scored.filter(F.col("jaccard") >= threshold).select(
         "id_a", "id_b", "jaccard"
     )

@@ -211,13 +211,14 @@ def doc_repetition(
     lines = F.filter(F.split(t, r"\n"), lambda l: F.length(F.trim(l)) > 0)
     # _spread stance (search/bls.py): the per-row bigram/line array
     # construction is an interpreted HOF, and a one-file corpus scan
-    # would compute it all on a single core before the cache — the
-    # plan-cache bench hygiene (r10) exposed this as the real 8 s cost
-    # behind a 0.3 s cached figure
+    # would compute it all on a single core. Pinned by a local
+    # checkpoint (both aggregates below read it), which is freed once
+    # the returned frame is unreachable, where a cache would outlive
+    # the call
     par = df.sparkSession.sparkContext.defaultParallelism
     base = df.repartition(par).select(
         F.col(id_col), lines.alias("_lines"), bigrams.alias("_bigrams")
-    ).cache()
+    ).localCheckpoint(eager=True)
 
     ln = (
         base.select(id_col, F.explode("_lines").alias("line"))

@@ -1934,10 +1934,11 @@ def q_stream_pack_bins_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§2.12 NO-SPLIT packing ONLINE (r12): arriving documents pack
     whole into 512-token bins per micro-batch — bins never span
     batches (batch = outermost block), so the stream carries ZERO
-    cross-batch state and needs no commit markers (a batch's layout is
-    a pure function of its own rows; contrast stream_pack_shards,
-    whose concat-and-chunk offsets DO cross batches and are marker-
-    ordered). The 2-file parity feed makes batch composition
+    cross-batch state (contrast stream_pack_shards, whose
+    concat-and-chunk offsets DO cross batches); each batch is still
+    committed by a marker and read back through the committed filter,
+    so a renumbering restart or a partial dir never counts a row
+    twice. The 2-file parity feed makes batch composition
     content-determined, so the oracle replays per-(parity, lang,
     block) next-fit row-by-row with the recursive CTE."""
     import shutil
@@ -1953,17 +1954,18 @@ def q_stream_pack_bins_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     work = os.path.join(
         tempfile.gettempdir(), "miletos_spbins_" + uuid.uuid4().hex[:8]
     )
+    out_dir, state_dir = os.path.join(work, "out"), os.path.join(work, "state")
     stream_pack_bins(
         spark,
         land,
         "lang string, doc_id long, n_tokens long",
-        os.path.join(work, "out"),
-        os.path.join(work, "state"),
+        out_dir,
+        state_dir,
         capacity=512,
         block_width=256,
         max_files_per_trigger=1,
     )
-    out = read_stream_pack_bins(spark, os.path.join(work, "out")).select(
+    out = read_stream_pack_bins(spark, out_dir, state_dir).select(
         "lang", "block", "doc_id", "n_tokens", "bin", "offset", "fill_after"
     )
     pinned = spark.createDataFrame(out.collect(), out.schema)
@@ -4607,10 +4609,13 @@ def _verified_minhash_pairs(docs: DataFrame, sf_dir: str) -> DataFrame:
         .distinct()
     )
     docs_c = docs.join(cand_ids, "doc_id", "left_semi")
-    # cache is an optimizer barrier: filtering jaccard without it
-    # migrates the higher-order-function expression into the hash
-    # join's condition (CodegenFallback, ~20x slower)
-    scored = ngram_jaccard_pairs(docs_c, cands, k=9).cache()
+    # a local checkpoint is an optimizer barrier: filtering jaccard
+    # without it migrates the higher-order-function expression into the
+    # hash join's condition (CodegenFallback, ~20x slower); unlike a
+    # cache, its blocks are freed once the frame is unreachable
+    scored = ngram_jaccard_pairs(docs_c, cands, k=9).localCheckpoint(
+        eager=True
+    )
     return scored.filter(F.col("jaccard") >= 0.5)
 
 
@@ -6144,23 +6149,12 @@ def _drain_memory_stream(
     output_mode: str = "complete",
 ) -> DataFrame:
     """availableNow-drain a streaming DataFrame into a memory sink and
-    return the (bounded) result as a plain local DataFrame.
-
-    - RAISES if the drain does not finish inside the timeout: a silently
-      partial spectrum would otherwise surface as an unexplained hash
-      mismatch downstream, not as the timeout it is.
-    - Materializes and DROPS the uuid-named sink view (on the timeout
-      path too), so repeated invocations in a long-lived session don't
-      accumulate memory-sink tables (all callers return bounded state:
-      spectra/sessions).
-    - Materialization is a JVM-side `localCheckpoint` (r14): the old
-      `collect()` + `createDataFrame(rows)` round-trip built a
-      Python-RDD-backed relation, and EVERY downstream action on one
-      pays a Python-runner round-trip per parent slice (the same trap
-      `pipeline.landing._write_local_table` documents — measured ~4-6 s
-      flat on local[32] for the quantizer side tables). The checkpoint
-      pins the bounded drained rows in the block manager with zero
-      Python hops; values are identical (same rows, same schema)."""
+    return the (bounded) result pinned by a JVM-side `localCheckpoint`
+    (a collect + createDataFrame round-trip would make every downstream
+    action pay a Python-runner hop per slice). Raises if the drain does
+    not finish inside the timeout; the uuid-named sink view is dropped
+    on every path, so a long-lived session accumulates no memory-sink
+    tables."""
     import uuid
 
     from miletos_spark.streaming.stateful import run_available_now
@@ -6168,12 +6162,9 @@ def _drain_memory_stream(
     name = prefix + uuid.uuid4().hex[:8]
     try:
         run_available_now(sdf, name, output_mode=output_mode)
-    except TimeoutError:
+        return spark.table(name).localCheckpoint(eager=True)
+    finally:
         spark.catalog.dropTempView(name)
-        raise
-    out = spark.table(name).localCheckpoint(eager=True)
-    spark.catalog.dropTempView(name)
-    return out
 
 
 def land_stream_events(
@@ -7962,13 +7953,14 @@ def q_stream_media_decisions(spark: SparkSession, sf_dir: str) -> DataFrame:
     work = os.path.join(
         tempfile.gettempdir(), "miletos_smdec_" + uuid.uuid4().hex[:8]
     )
+    out_dir, state_dir = os.path.join(work, "out"), os.path.join(work, "state")
     stream_media_decisions(
         spark,
         land,
         MEDIA_SCHEMA,
         bands,
-        os.path.join(work, "out"),
-        os.path.join(work, "state"),
+        out_dir,
+        state_dir,
         max_hamming=3,
         frac_threshold=0.8,
         max_files_per_trigger=1,
@@ -7977,7 +7969,7 @@ def q_stream_media_decisions(spark: SparkSession, sf_dir: str) -> DataFrame:
         presence_path=os.path.join(root, "presence"),
         fp_df_path=os.path.join(root, "fp_df"),
     )
-    return read_media_decisions(spark, os.path.join(work, "out")).select(
+    return read_media_decisions(spark, out_dir, state_dir).select(
         "arrival_id", "matched_id", "n_frames", "n_matched"
     )
 
@@ -9903,15 +9895,19 @@ def q_corpus_cleanup(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.coalesce(F.col("punct_ratio"), F.lit(0.0)) < 0.2)
             & (F.col("lang_pred") == "en")
         )
-    ).cache()
+    ).localCheckpoint(eager=True)
     keepers = exact_dedup(qual).select(F.col("keep_id").alias("doc_id"))
-    uniq = qual.join(keepers, "doc_id", "left_semi").cache()
+    uniq = qual.join(keepers, "doc_id", "left_semi").localCheckpoint(
+        eager=True
+    )
     sigs = minhash_signatures(uniq, k=9, num_hashes=64)
     cands = minhash_lsh_pairs(sigs, bands=32)
-    # cache barrier before thresholding (see near_dup_pairs_prefix):
+    # checkpoint barrier before thresholding (see near_dup_pairs_prefix):
     # the jaccard filter would otherwise migrate the HOF intersection
     # into the join condition and drop the stage out of codegen
-    scored = ngram_jaccard_pairs(uniq, cands, k=9).cache()
+    scored = ngram_jaccard_pairs(uniq, cands, k=9).localCheckpoint(
+        eager=True
+    )
     dup_b = (
         scored.filter(F.col("jaccard") >= 0.6)
         .select(F.col("id_b").alias("doc_id"))
@@ -10472,12 +10468,13 @@ def q_stream_trigger_clusters_events(spark: SparkSession, sf_dir: str) -> DataFr
     micro-batching; the sentinel's own cluster stays open and is never
     emitted, so the output equals the batch gap-clustering of the real
     data — which is what the DuckDB oracle computes."""
+    from miletos_spark.streaming.ingest import file_stream
     from miletos_spark.streaming.stateful import stream_trigger_clusters
 
     land = land_trigger_events(spark, sf_dir)
-    stream = spark.readStream.schema(STREAM_SCHEMA).parquet(land)
     sdf = stream_trigger_clusters(
-        stream, TRIGGER_THRESHOLD, SESSION_GAP_SEC
+        file_stream(spark, land, STREAM_SCHEMA),
+        TRIGGER_THRESHOLD, SESSION_GAP_SEC,
     )
     out = _drain_memory_stream(spark, sdf, "stream_trig_", output_mode="append")
     return (

@@ -1,7 +1,6 @@
 from miletos_spark.streaming.stateful import stream_trigger_clusters
 from miletos_spark.streaming.ingest import (
     finish_ls_power,
-    incremental_analysis,
     stream_bls,
     stream_ls_moments,
     stream_rebin,
@@ -10,5 +9,5 @@ from miletos_spark.streaming.ingest import (
 
 __all__ = [
     "stream_sessions", "stream_rebin", "stream_bls", "stream_ls_moments",
-    "finish_ls_power", "incremental_analysis", "stream_trigger_clusters",
+    "finish_ls_power", "stream_trigger_clusters",
 ]

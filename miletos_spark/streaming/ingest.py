@@ -5,7 +5,10 @@ miletos/main.py:9966-9999) is already an append unit, so the streaming
 analog is: landing parquet stream partitioned by chunk → stateless
 stages map 1:1 (F1/F2 filters, X1 fold, A1 rebin) → gap sessionization
 becomes `session_window` with a watermark → iterative analyses (BLS,
-detrend fixpoint) run per arriving chunk via `foreachBatch`.
+detrend fixpoint) run per arriving chunk on
+`pipeline.commit.drain_committed`, a `foreachBatch` drain with one
+commit per micro-batch. Every stream reads its input through
+`file_stream`.
 
 Watermark/late-data semantics are our design choice (no reference
 counterpart): event-time watermark = 1 day — later-than-a-day samples
@@ -14,10 +17,30 @@ counterpart): event-time watermark = 1 day — later-than-a-day samples
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from miletos_spark.pipeline.commit import (
+    committed_payload,
+    drain_committed,
+    last_committed,
+    read_committed,
+)
+
+
+def file_stream(
+    spark: SparkSession,
+    input_dir: str,
+    schema: str,
+    max_files_per_trigger: int | None = None,
+) -> DataFrame:
+    """The parquet file stream every operator here reads: an explicit
+    `schema` (a file stream cannot infer one) and at most
+    `max_files_per_trigger` new files per micro-batch (None: all)."""
+    reader = spark.readStream.schema(schema)
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    return reader.parquet(input_dir)
 
 
 def stream_sessions(
@@ -32,7 +55,7 @@ def stream_sessions(
     """W4 sessionization as a streaming `session_window` aggregate:
     one row per (group, session) with count and bounds. Returns the
     streaming DataFrame (caller attaches the sink/trigger)."""
-    src = spark.readStream.schema(schema).parquet(input_dir)
+    src = file_stream(spark, input_dir, schema)
     gap = f"{int(gap_sec)} seconds"
     return (
         src.withWatermark(ts_col, watermark)
@@ -67,7 +90,7 @@ def stream_rebin(
 ) -> DataFrame:
     """A1 rebin as a streaming tumbling-window aggregate (the
     incremental form of `rebn_tser`)."""
-    src = spark.readStream.schema(schema).parquet(input_dir)
+    src = file_stream(spark, input_dir, schema)
     return (
         src.withWatermark(ts_col, watermark)
         .groupBy(F.window(F.col(ts_col), bin_width), F.col(group_col))
@@ -130,7 +153,7 @@ def stream_bls(
     `group_cols` keys the spectrum state by those source columns (the
     population/multi-instrument case): state grows to
     |groups| x |trials| x O(1/dcyc) — still row-count-independent."""
-    src = spark.readStream.schema(schema).parquet(input_dir)
+    src = file_stream(spark, input_dir, schema)
     trials_df = spark.createDataFrame(
         trials, "period double, dcyc double, off double"
     ).withColumn("_k", F.lit(1))
@@ -199,7 +222,7 @@ def stream_ls_moments(
     scores each group's spectrum at read-out."""
     import math
 
-    src = spark.readStream.schema(schema).parquet(input_dir)
+    src = file_stream(spark, input_dir, schema)
     grid = spark.range(n_freq).select(
         (F.lit(float(f_min)) + F.col("id") * F.lit(float(df_step))).alias("freq")
     ).withColumn("_k", F.lit(1))
@@ -259,28 +282,6 @@ def finish_ls_power(
     return moments.select(*group_cols, "freq", power.alias("power"))
 
 
-def incremental_analysis(
-    spark: SparkSession,
-    input_dir: str,
-    schema: str,
-    batch_fn: Callable[[DataFrame, int], None],
-    checkpoint_dir: str,
-):
-    """The reference's per-new-sector re-analysis (BLS / detrend loop —
-    inherently iterative, so batch jobs) triggered per arriving
-    micro-batch via `foreachBatch`. Returns the started
-    StreamingQuery; caller awaits/stops it (use
-    trigger(availableNow=True) semantics — set by this helper — for
-    drain-and-stop processing of the current backlog)."""
-    src = spark.readStream.schema(schema).parquet(input_dir)
-    return (
-        src.writeStream.foreachBatch(batch_fn)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 def stream_dedup(
     spark: SparkSession,
     input_dir: str,
@@ -306,10 +307,7 @@ def stream_dedup(
     which is what the oracle hashes — only per-key arrival attribution
     would depend on file order, so callers must project it away).
     """
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    src = reader.parquet(input_dir)
+    src = file_stream(spark, input_dir, schema, max_files_per_trigger)
     return src.dropDuplicates(key_cols).select(*key_cols)
 
 
@@ -349,10 +347,7 @@ def stream_near_dup(
     `stream_dedup`."""
     from miletos_spark.pipeline.dedup import lsh_bands, minhash_signatures
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    src = reader.parquet(input_dir)
+    src = file_stream(spark, input_dir, schema, max_files_per_trigger)
     sigs = minhash_signatures(
         src, text_col=text_col, id_col=id_col, k=k, num_hashes=num_hashes
     )
@@ -390,10 +385,7 @@ def stream_dedup_within_watermark(
     evicted is re-emitted — at 100 TB that residual duplication is
     handled by the downstream batch dedup (exact_dedup keep-min-id is
     idempotent), the standard lambda-architecture split."""
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    src = reader.parquet(input_dir)
+    src = file_stream(spark, input_dir, schema, max_files_per_trigger)
     return (
         src.withWatermark(event_time_col, delay)
         .dropDuplicatesWithinWatermark(key_cols)
@@ -472,7 +464,7 @@ def stream_matched_filter(
     seen keys. Returns the streaming aggregate; the caller drains and
     scores (threshold + trigger clustering) at read-out, the
     `stream_bls` discipline."""
-    src = spark.readStream.schema(schema).parquet(input_dir)
+    src = file_stream(spark, input_dir, schema)
     return matched_filter_scatter(
         src, template, key_cols=key_cols, idx_col=idx_col,
         value_col=value_col, mu=mu, dec_type=dec_type,
@@ -501,10 +493,7 @@ def stream_probe_score(
         probe_score_expr,
     )
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    src = reader.parquet(input_dir)
+    src = file_stream(spark, input_dir, schema, max_files_per_trigger)
     cols = probe_feature_cols(F.col("text"))
     feats = src.select(
         "doc_id",
@@ -550,10 +539,7 @@ def stream_curation(
     group members by construction of identical scrubbed text)."""
     from miletos_spark.pipeline.text import quality_logit, scrub_pii
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    src = reader.parquet(input_dir)
+    src = file_stream(spark, input_dir, schema, max_files_per_trigger)
     kept = src.filter(quality_logit(F.col("text")) > 0)
     sc = scrub_pii(kept, keep_cols=("lang",))
     return (
@@ -587,59 +573,24 @@ def stream_pack_shards(
     are laid out into fixed-capacity context windows continuing from a
     per-shard running token offset carried across batches.
 
-    Runs as `foreachBatch` (the resumable-job shape, not a monolithic
-    stateful plan), with a CRASH-IDEMPOTENT batch_id-keyed commit
-    protocol — one write and one marker per micro-batch:
+    Runs on `pipeline.commit.drain_committed`: each batch's packed rows
+    land in `out_dir/b=<id>/` and its marker carries, next to the input
+    manifest, `"offsets": {lang: total}` — the running token offset per
+    shard AFTER this batch, which the next batch reads from marker
+    `last` and adds to each row as a literal map lookup. Within a batch
+    the offset comes from `packing.running_offsets(bucket_width=...)`,
+    the two-pass id-bucketed decomposition the batch packer uses. A
+    bare-manifest marker (written before offsets rode the commit)
+    carries no offsets; they are then re-derived once from the
+    committed rows' per-lang `n_tokens` sum. Read the shards back with
+    `read_committed_shards`.
 
-    - the batch's packed rows (with their (lang, h) seen keys) land in
-      ONE write to a batch-named path, `out_dir/b=<id>/`, mode
-      overwrite — so a replayed attempt simply rewrites its own orphan
-      dir;
-    - the batch is COMMITTED by the marker `commits/<id>`, published
-      atomically (`pipeline.commit.write_marker`, one `os.replace`)
-      after that write lands. Its payload is
-      `{"files": <input-file manifest>, "offsets": {lang: total}}` —
-      the running token offset per shard AFTER this batch, so the next
-      batch reads its carry from marker `last` on the driver. Readers
-      consult only committed state (seen keys with b ≤ last committed
-      via the partition column; offsets from the last marker), so a
-      crashed attempt's orphans are invisible;
-    - a replayed already-committed batch_id is a no-op — VERIFIED, not
-      assumed: a skip first checks the replayed batch's input files
-      against the marker's `files`. The stream-local batch_id only
-      aligns with the durable markers while the checkpoint lives
-      exactly as long as state_dir AND the trigger size is unchanged;
-      a restart with a fresh checkpoint or a different
-      maxFilesPerTrigger renumbers batches (e.g. batch 0 suddenly
-      covers the whole feed), and an unverified skip would drop
-      uncommitted input as 'already committed'. A manifest mismatch
-      raises instead. foreachBatch retries a failed batch under the
-      SAME id before any higher id runs, so the committed set is
-      always a prefix and `b ≤ last` is the exact committed filter.
-      (On an object store the marker becomes a manifest/Delta commit;
-      the protocol is unchanged.)
-    - readers of `out_dir` must apply the same committed filter —
-      `read_committed_shards` is that reader.
-
-    State under `state_dir` and `out_dir`:
-
-    - (lang, scrub_md5) keys already packed ride ON the committed
-      packed rows (`out_dir/b=*/` carries `h`). The cross-batch dedup
-      is an anti-join against the committed union (the same
-      stream-vs-landed-index stance as `stream_near_dup`); contract
-      readers project `h` away. A state dir from the older layout (a
-      separate `seen/` store, packed rows without `h`) is refused —
-      its keys would read as NULL and every old doc would re-pack.
-    - `commits/<id>` — the markers above; the last one's `offsets`
-      (|langs| numbers) is the cross-batch carry of the packing prefix
-      sum, added to each row as a literal map lookup. A marker whose
-      payload is a bare manifest list (written before offsets rode the
-      commit) carries no offsets; they are then re-derived once from
-      the committed rows' per-lang `n_tokens` sum, which is what they
-      are by definition. Within a batch the offset comes from
-      `packing.running_offsets(bucket_width=...)` — the SAME two-pass
-      id-bucketed decomposition the batch packer uses, so no single
-      task sorts a hot lang's whole micro-batch.
+    The (lang, scrub_md5) keys already packed ride ON the committed
+    rows (`h`), and the cross-batch dedup is an anti-join against them
+    (the stream-vs-landed-index stance of `stream_near_dup`). A state
+    dir from the older layout (a separate `seen/` store, rows without
+    `h`) is refused: its keys would read as NULL and every old doc
+    would re-pack.
 
     DETERMINISM CONTRACT: the drained layout equals the batch
     `pack_chunks` (ordered by doc_id within lang) IFF docs arrive in
@@ -656,10 +607,8 @@ def stream_pack_shards(
     distinct doc (`h` is the scrub_md5 seen key, projected away by the
     contract reader); bins use the same double-division floor as
     `pack_chunks` (offsets < 2**53, exact)."""
-    import json
     import os
 
-    from miletos_spark.pipeline.commit import read_marker, write_marker
     from miletos_spark.pipeline.packing import running_offsets
     from miletos_spark.pipeline.text import (
         quality_logit,
@@ -667,79 +616,10 @@ def stream_pack_shards(
         token_count,
     )
 
-    commit_dir = os.path.join(state_dir, "commits")
-
-    def _last_committed() -> int:
-        if not os.path.isdir(commit_dir):
-            return -1
-        ids = [int(x) for x in os.listdir(commit_dir) if x.isdigit()]
-        return max(ids, default=-1)
-
-    def _read_commit(batch_id: int) -> object | None:
-        # an unreadable marker (torn-write survivor from a state dir
-        # older than the atomic seam, or a transient fs error) reads as
-        # missing: replay verification then refuses to skip, and the
-        # offsets fall back to the committed rows
-        try:
-            return read_marker(os.path.join(commit_dir, str(batch_id)))
-        except (OSError, ValueError):
-            return None
-
-    def _committed_rows(sp: SparkSession, last: int) -> DataFrame:
-        # explicit schema: an all-empty committed set must read as 0
-        # rows, not fail inference; b ≤ last hides a crashed attempt's
-        # orphans
-        return (
-            sp.read.option("basePath", out_dir)
-            .schema("lang string, h string, n_tokens long, b int")
-            .parquet(out_dir)
-            .filter(F.col("b") <= F.lit(last))
-        )
-
-    def _batch_manifest(batch_id: int) -> list | None:
-        # the file source's own per-batch log (written BEFORE the
-        # batch executes) is the authoritative input manifest —
-        # `bdf.inputFiles()` is empty on a foreachBatch frame
-        d = os.path.join(state_dir, "ckpt", "sources", "0")
-        for name in (str(batch_id), f"{batch_id}.compact"):
-            p = os.path.join(d, name)
-            if not os.path.exists(p):
-                continue
-            paths = []
-            with open(p) as f:
-                for ln in f:
-                    if ln.startswith("{"):
-                        o = json.loads(ln)
-                        if o.get("batchId", batch_id) == batch_id:
-                            paths.append(o["path"])
-            return sorted(paths)
-        return None
-
-    def _pack_batch(bdf: DataFrame, batch_id: int) -> None:
+    def _pack_batch(bdf: DataFrame, path: str, last: int) -> dict:
         # No isEmpty() guard: it costs a scan pass per batch, the file
         # source never fires empty batches for a stateless foreachBatch
         # query, and every stage below is a no-op on zero rows anyway.
-        sp = bdf.sparkSession
-        last = _last_committed()
-        if batch_id <= last:
-            # replay of a committed batch id: verify it IS the same
-            # batch before no-opping — a fresh checkpoint or a changed
-            # trigger size renumbers batches, and skipping unverified
-            # would silently drop the input
-            want = _read_commit(batch_id)
-            if isinstance(want, dict):
-                want = want.get("files")
-            got = _batch_manifest(batch_id)
-            if want is None or got is None or want != got:
-                raise RuntimeError(
-                    f"stream_pack_shards: batch {batch_id} is marked "
-                    "committed but its input manifest differs "
-                    f"(committed {want!r} vs replayed {got!r}) — the "
-                    "checkpoint and state_dir are misaligned (fresh "
-                    "checkpoint? changed maxFilesPerTrigger?); refusing "
-                    "to skip uncommitted input"
-                )
-            return  # verified replay: exactly-once no-op
         # No up-front repartition: a measured A/B at sf0.1 put the
         # micro-batch shuffle's cost above the parallelism it buys on
         # the regex chain (9.8 s vs 6.8 s warm drain) — and at scale
@@ -763,13 +643,15 @@ def stream_pack_shards(
         )
         offsets: dict = {}
         if last >= 0:
+            committed = read_committed(
+                bdf.sparkSession, out_dir, state_dir,
+                "lang string, h string, n_tokens long",
+            )
             # cross-batch dedup vs the COMMITTED seen keys only
             new = new.join(
-                _committed_rows(sp, last).select("lang", "h"),
-                ["lang", "h"],
-                "left_anti",
+                committed.select("lang", "h"), ["lang", "h"], "left_anti"
             )
-            prev = _read_commit(last)
+            prev = committed_payload(state_dir, last)
             if isinstance(prev, dict):
                 offsets = dict(prev["offsets"])
             else:
@@ -778,8 +660,7 @@ def stream_pack_shards(
                 # once, on resuming such a state dir)
                 offsets = {
                     r[0]: r[1]
-                    for r in _committed_rows(sp, last)
-                    .groupBy("lang")
+                    for r in committed.groupBy("lang")
                     .agg(F.sum("n_tokens"))
                     .collect()
                     if r[0] is not None  # never a map key
@@ -821,22 +702,14 @@ def stream_pack_shards(
             .cast("long")
             .alias("n_straddle"),
             "h",
-        ).write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"b={batch_id}")
-        )
-        # COMMIT: the rows are on disk under this batch's own path;
-        # one marker makes them visible atomically and carries the
-        # input manifest (replays are verifiable) and the offsets
+        ).write.mode("overwrite").parquet(path)
         for lang, d in delta:
             offsets[lang] = offsets.get(lang, 0) + d
-        write_marker(
-            os.path.join(commit_dir, str(batch_id)),
-            {"files": _batch_manifest(batch_id), "offsets": offsets},
-        )
+        return {"offsets": offsets}
 
     # the older layout is checked once, before the stream starts (one
     # schema read when resuming)
-    last = _last_committed()
+    last = last_committed(state_dir)
     older = os.path.isdir(os.path.join(state_dir, "seen")) or (
         last >= 0
         and "h" not in spark.read.parquet(
@@ -851,21 +724,10 @@ def stream_pack_shards(
             "committed doc. Delete state_dir and out_dir and drain the "
             "feed again to rebuild them."
         )
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    src = reader.parquet(input_dir)
-    q = (
-        src.writeStream.foreachBatch(_pack_batch)
-        .option("checkpointLocation", os.path.join(state_dir, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
+    drain_committed(
+        file_stream(spark, input_dir, schema, max_files_per_trigger),
+        out_dir, state_dir, _pack_batch, timeout_sec,
     )
-    if not q.awaitTermination(timeout_sec):
-        q.stop()
-        raise TimeoutError(
-            f"stream_pack_shards drain exceeded {timeout_sec} s"
-        )
 
 
 SHARD_ROW_SCHEMA = (
@@ -877,29 +739,10 @@ SHARD_ROW_SCHEMA = (
 def read_committed_shards(
     spark: SparkSession, out_dir: str, state_dir: str
 ) -> DataFrame:
-    """The READER half of `stream_pack_shards`' commit protocol
-    (ADVICE r9): packed rows from COMMITTED batches only — uncommitted
-    `b=*` orphan dirs left by a crashed attempt are invisible. Plain
-    `spark.read.parquet(out_dir)` would see them; every consumer must
-    come through here (or apply the same `b ≤ last` filter)."""
-    import os
-
-    commit_dir = os.path.join(state_dir, "commits")
-    ids = (
-        [int(x) for x in os.listdir(commit_dir) if x.isdigit()]
-        if os.path.isdir(commit_dir)
-        else []
-    )
-    last = max(ids, default=-1)
-    if last < 0:
-        return spark.createDataFrame([], SHARD_ROW_SCHEMA)
-    return (
-        spark.read.option("basePath", out_dir)
-        .schema(SHARD_ROW_SCHEMA + ", b int")
-        .parquet(out_dir)
-        .filter(F.col("b") <= F.lit(last))
-        .drop("b")
-    )
+    """The 5-column shard rows of `stream_pack_shards`' COMMITTED
+    batches (`pipeline.commit.read_committed`); every consumer of
+    `out_dir` must come through here."""
+    return read_committed(spark, out_dir, state_dir, SHARD_ROW_SCHEMA)
 
 
 def stream_media_near_dup(
@@ -928,10 +771,7 @@ def stream_media_near_dup(
     from miletos_spark.pipeline.dedup import fp_bands, simhash_hamming
     from miletos_spark.pipeline.multimodal import decode_media, phash_frames
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    src = reader.parquet(input_dir)
+    src = file_stream(spark, input_dir, schema, max_files_per_trigger)
     fps = phash_frames(decode_media(src)).select(
         F.col("media_id").alias("arrival_id"),
         F.col("frame").alias("frame_a"),
@@ -976,40 +816,26 @@ def stream_media_decisions(
     presence_path: str | None = None,
     fp_df_path: str | None = None,
 ) -> None:
-    """Per-arrival media dedup VERDICTS on the firehose (r11, VERDICT
-    r10 Missing #3): `stream_media_near_dup` emits frame-level
-    matches; this composes them into the media-level containment
-    decision an ingest pipeline actually acts on — arrival B is a
-    re-upload of corpus media A when ≥ ``frac_threshold`` of B's
-    (discriminative, `max_df` stance included) frames match some frame
-    of A at Hamming ≤ ``max_hamming`` against the LANDED pHash band
-    index.
+    """Per-arrival media dedup VERDICTS on the firehose:
+    `stream_media_near_dup`'s frame matches composed into the decision
+    an ingest pipeline acts on — arrival B is a re-upload of corpus
+    media A when ≥ ``frac_threshold`` of B's (discriminative, `max_df`
+    stance included) frames match a frame of A at Hamming ≤
+    ``max_hamming`` against the LANDED pHash band index.
 
-    Runs as `foreachBatch` with ZERO cross-batch state: one arrival is
-    one payload row, so its frames all decode inside its own
-    micro-batch and the decision is complete there — no watermark, no
-    keyed state, nothing grows with arrival volume (the containment
-    aggregate is batch-local; the corpus side is the static landed
-    index). Each batch writes its verdicts to ``out_dir/b=<id>/`` in
-    overwrite mode, so a replayed batch id rewrites its own directory
-    — idempotent without commit markers precisely BECAUSE there is no
-    cross-batch state to misalign (contrast `stream_pack_shards`,
-    whose markers exist to order state the batches share).
+    One arrival is one payload row, so its decision completes inside
+    its micro-batch: no cross-batch state, nothing grows with arrival
+    volume. Each batch's verdicts are committed through
+    `pipeline.commit.drain_committed`; read them back with
+    `read_media_decisions`.
 
-    ``distinct_path`` / ``presence_path``: the PRE-COLLAPSED index
-    tables landed at index-build time (distinct banded fps; fp→media
-    presence). Without them the per-batch evidence composition runs
-    TWO O(index) distinct shuffles per trigger — the per-query
-    emb.count() class of waste at 100 TB; with them the static side is
-    a plain columnar scan of already-collapsed tables every batch.
-    ``fp_df_path`` is the same stance for the ``max_df`` hub set (the
-    landed (fp, df) table — ADVICE r11: without it, every micro-batch
-    re-derived the hub set with a groupBy over the full presence
-    table).
+    ``distinct_path`` / ``presence_path`` / ``fp_df_path``: the
+    PRE-COLLAPSED index tables landed at index-build time (distinct
+    banded fps; fp→media presence; the (fp, df) table behind the
+    ``max_df`` hub set). Without them every batch re-runs O(index)
+    distinct shuffles or a groupBy over the full presence table.
 
     Verdict rows: (arrival_id, matched_id, n_frames, n_matched)."""
-    import os
-
     from miletos_spark.pipeline.multimodal import (
         decode_media,
         media_arrival_decisions,
@@ -1025,7 +851,7 @@ def stream_media_decisions(
     )
     fp_df = spark.read.parquet(fp_df_path) if fp_df_path else None
 
-    def _decide(bdf: DataFrame, batch_id: int) -> None:
+    def _decide(bdf: DataFrame, path: str, last: int) -> None:
         fps = phash_frames(decode_media(bdf))
         arr = fps.select(
             F.col("media_id").alias("arrival_id"),
@@ -1042,38 +868,21 @@ def stream_media_decisions(
             landed_presence=pres,
             landed_fp_df=fp_df,
         )
-        dec.write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"b={batch_id}")
-        )
+        dec.write.mode("overwrite").parquet(path)
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    src = reader.parquet(input_dir)
-    q = (
-        src.writeStream.foreachBatch(_decide)
-        .option("checkpointLocation", os.path.join(state_dir, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
+    drain_committed(
+        file_stream(spark, input_dir, schema, max_files_per_trigger),
+        out_dir, state_dir, _decide, timeout_sec,
     )
-    if not q.awaitTermination(timeout_sec):
-        q.stop()
-        raise TimeoutError(
-            f"stream_media_decisions drain exceeded {timeout_sec} s"
-        )
 
 
-def read_media_decisions(spark: SparkSession, out_dir: str) -> DataFrame:
-    """Reader for `stream_media_decisions` output: the union of the
-    per-batch verdict dirs (batch-id partition column dropped)."""
-    return (
-        spark.read.option("basePath", out_dir)
-        .schema(
-            "arrival_id long, matched_id long, n_frames long, "
-            "n_matched long, b int"
-        )
-        .parquet(out_dir)
-        .drop("b")
+def read_media_decisions(
+    spark: SparkSession, out_dir: str, state_dir: str
+) -> DataFrame:
+    """The verdicts of `stream_media_decisions`' COMMITTED batches."""
+    return read_committed(
+        spark, out_dir, state_dir,
+        "arrival_id long, matched_id long, n_frames long, n_matched long",
     )
 
 
@@ -1130,10 +939,7 @@ def stream_semantic_dedup(
         ).alias("_fs")
     )
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    src = reader.parquet(input_dir)
+    src = file_stream(spark, input_dir, schema, max_files_per_trigger)
     v = F.transform(F.col("embedding"), lambda x: x.cast("double"))
     with_centers = (
         src.select(F.col("vec_id").alias("arrival_id"), v.alias("_v"))
@@ -1231,10 +1037,7 @@ def stream_dsir_score(
     )
 
     packed = dsir_pack_model(model).localCheckpoint(eager=True)
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    src = reader.parquet(input_dir)
+    src = file_stream(spark, input_dir, schema, max_files_per_trigger)
     base = src.select(
         "doc_id",
         "lang",
@@ -1274,10 +1077,7 @@ def stream_quality_funnel(
     (integer-exact, arrival-invariant by commutativity of counts)."""
     from miletos_spark.pipeline.text import funnel_dropped_by, funnel_stats
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    src = reader.parquet(input_dir)
+    src = file_stream(spark, input_dir, schema, max_files_per_trigger)
     stats = funnel_stats(src)
     return (
         stats.select(funnel_dropped_by().alias("dropped_by"))
@@ -1310,18 +1110,10 @@ def stream_decontaminate(
     the batch `decontaminate` counts exactly.
 
     Emits (doc_id, n_hits, n_eval_docs) per contaminated arrival.
-
-    ``max_files_per_trigger`` is exposed like every sibling streaming
-    op (r10 verdict: the hard-coded 1-file trigger was pathological at
-    scale — ~0.35 s/batch overhead priced by the r9 cost model — and
-    uncorrectable by the caller); the registry's test default is kept.
     """
     from miletos_spark.pipeline.dedup import token_ngram_hashes
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    src = reader.parquet(input_dir)
+    src = file_stream(spark, input_dir, schema, max_files_per_trigger)
     grams = token_ngram_hashes(src, n=n)
     joined = grams.join(F.broadcast(eval_grams), "gram")
     return joined.groupBy("doc_id").agg(
@@ -1347,16 +1139,12 @@ def stream_pack_bins(
 ) -> None:
     """NO-SPLIT packing ON the firehose — the SFT-shaped streaming
     packer next to `stream_pack_shards`' concat-and-chunk form:
-    arriving documents pack WHOLE into capacity-bounded bins, and bins
-    NEVER span micro-batches (the block-local argument again: the
-    batch is the outermost block, and `pack_bins_nosplit`/`_ffd`'s
-    id-blocks nest inside it), so there is ZERO cross-batch state —
-    no token offsets to carry, no commit markers to order them
-    (contrast stream_pack_shards, whose markers exist precisely
-    because concat-and-chunk boundaries DO cross batches). Each batch
-    writes its layout to ``out_dir/b=<id>/`` in overwrite mode —
-    replay-idempotent because a batch's layout is a pure function of
-    its own rows.
+    arriving documents pack WHOLE into capacity-bounded bins that
+    never span micro-batches (the batch is the outermost block;
+    `pack_bins_nosplit`/`_ffd`'s id-blocks nest inside it), so no token
+    offsets cross batches. Each batch's layout is committed through
+    `pipeline.commit.drain_committed`; read it back with
+    `read_stream_pack_bins`.
 
     The price is the same bounded waste as any block boundary (at most
     one partial bin per batch per group-block), measurable by
@@ -1365,8 +1153,6 @@ def stream_pack_bins(
 
     Layout rows: group cols, block, id, tokens, bin, offset,
     fill_after (bin keys are unique within (batch, group, block))."""
-    import os
-
     from miletos_spark.pipeline.packing import (
         pack_bins_ffd,
         pack_bins_nosplit,
@@ -1374,60 +1160,42 @@ def stream_pack_bins(
 
     packer = pack_bins_ffd if ffd else pack_bins_nosplit
 
-    def _pack(bdf: DataFrame, batch_id: int) -> None:
-        out = packer(
+    def _pack(bdf: DataFrame, path: str, last: int) -> None:
+        packer(
             bdf,
             capacity=capacity,
             token_col=token_col,
             group_cols=group_cols,
             id_col=id_col,
             block_width=block_width,
-        )
-        out.write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"b={batch_id}")
-        )
+        ).write.mode("overwrite").parquet(path)
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    src = reader.parquet(input_dir)
-    q = (
-        src.writeStream.foreachBatch(_pack)
-        .option("checkpointLocation", os.path.join(state_dir, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
+    drain_committed(
+        file_stream(spark, input_dir, schema, max_files_per_trigger),
+        out_dir, state_dir, _pack, timeout_sec,
     )
-    if not q.awaitTermination(timeout_sec):
-        q.stop()
-        raise TimeoutError(
-            f"stream_pack_bins drain exceeded {timeout_sec} s"
-        )
 
 
 def read_stream_pack_bins(
     spark: SparkSession,
     out_dir: str,
+    state_dir: str,
     group_cols=("lang",),
     id_col: str = "doc_id",
     token_col: str = "n_tokens",
     group_type: str = "string",
 ) -> DataFrame:
-    """Reader for `stream_pack_bins` output: union of the per-batch
-    layout dirs, batch partition column dropped (bin identity within
-    the union is (group, block, bin) per batch — callers that need
-    run-global bin ids keep ``b``). ``id_col``/``token_col``/
-    ``group_type`` MUST match what the writer was called with — an
-    explicit schema against parquet projects missing columns as silent
-    NULLs, so a mismatch here would corrupt the layout quietly."""
+    """The layout rows of `stream_pack_bins`' COMMITTED batches, batch
+    column dropped (bin identity is (group, block, bin) per batch).
+    ``id_col``/``token_col``/``group_type`` MUST match what the writer
+    was called with — an explicit schema against parquet projects
+    missing columns as silent NULLs, so a mismatch here would corrupt
+    the layout quietly."""
     gschema = ", ".join(f"{c} {group_type}" for c in group_cols)
-    return (
-        spark.read.option("basePath", out_dir)
-        .schema(
-            f"{gschema}, block long, {id_col} long, {token_col} long, "
-            "bin int, offset long, fill_after long, b int"
-        )
-        .parquet(out_dir)
-        .drop("b")
+    return read_committed(
+        spark, out_dir, state_dir,
+        f"{gschema}, block long, {id_col} long, {token_col} long, "
+        "bin int, offset long, fill_after long",
     )
 
 
@@ -1467,10 +1235,7 @@ def stream_semantic_decontaminate(
     # micro-batch, and the pin keeps the streaming plan literally
     # aggregate-free
     packed = eval_packed.localCheckpoint(eager=True)
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    src = reader.parquet(input_dir)
+    src = file_stream(spark, input_dir, schema, max_files_per_trigger)
     return semantic_decontaminate(
         src, packed, threshold=threshold,
         id_col=id_col, vec_col=vec_col,
@@ -1486,7 +1251,7 @@ def stream_assign_splits_clustered(
     id_col: str = "doc_id",
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
-    """LEAKAGE-SAFE split assignment ON the firehose (r13): arriving
+    """LEAKAGE-SAFE split assignment ON the firehose: arriving
     documents get their train/val/test split AT INGEST, keyed on the
     near-dup cluster representative from the LANDED cluster table — so
     a near-duplicate of a test document that re-arrives AFTER the
@@ -1494,24 +1259,18 @@ def stream_assign_splits_clustered(
 
     SNAPSHOT-AT-STREAM-START CONTRACT (pinned in
     test_stream_split_snapshot_contract): the static side's parquet
-    file listing is resolved ONCE when `spark.read.parquet` runs at
-    stream construction — clusters appended by
-    `landing.update_cluster_index` DURING the run are NOT picked up;
-    restart the stream to adopt cluster growth. This is the semantics
-    split stability WANTS: within one run, the assignment is a pure
-    function of (id, cluster snapshot at start), so every replayed or
-    late batch derives identical splits and downstream sinks can be
-    idempotent with no markers. The operational discipline is
-    restart-on-cluster-update (and because the snapshot holds the START
-    file listing, avoid IN-PLACE overwrites of the landed table while a
-    stream is running — deleted files can fail in-flight micro-batches;
-    `update_cluster_index`'s versioned-dir publishes are safe, but
-    point each stream restart at the then-current version). A doc whose
-    cluster lands only after stream start keeps its singleton split
-    until restart — the unavoidable cost of not re-reading the table
-    per batch; re-resolving per micro-batch (the foreachBatch re-read
-    pattern `stream_media_decisions` uses) buys currency at the price
-    of mid-run split flips, the worse trade for splits.
+    file listing is resolved ONCE, at stream construction — clusters
+    appended by `landing.update_cluster_index` DURING the run are NOT
+    picked up; restart the stream to adopt cluster growth. Within one
+    run the assignment is a pure function of (id, cluster snapshot at
+    start), so a replayed batch derives identical splits (a sink must
+    still commit per batch to count each row once; see
+    `pipeline.commit.drain_committed`). Avoid IN-PLACE overwrites of
+    the landed table while a stream runs — deleted files can fail
+    in-flight micro-batches; `update_cluster_index`'s versioned-dir
+    publishes are safe. Re-resolving the table per micro-batch would
+    buy currency at the price of mid-run split flips, the worse trade
+    for splits.
 
     ZERO STATE: one stream-static left join against the landed
     clusters (Structured Streaming allows static right sides with no
@@ -1528,10 +1287,7 @@ def stream_assign_splits_clustered(
     clusters = spark.read.parquet(clusters_path).select(
         "node", "component"
     )
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    src = reader.parquet(input_dir)
+    src = file_stream(spark, input_dir, schema, max_files_per_trigger)
     return assign_splits_clustered(
         src, clusters, weights=weights, id_col=id_col
     )

@@ -37,6 +37,7 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     DoubleType,
@@ -156,27 +157,33 @@ STREAM_STATE_PARTITIONS = int(
 )
 
 
+def await_drain(q: StreamingQuery, name: str, timeout_sec: int) -> None:
+    """Wait for the availableNow query `q` to finish; stop it and raise
+    on timeout — a silently partial drain would surface as an
+    unexplained downstream mismatch, not as the timeout it is. A
+    failed batch re-raises here."""
+    if not q.awaitTermination(timeout_sec):
+        q.stop()
+        raise TimeoutError(
+            f"streaming drain '{name}' exceeded {timeout_sec} s"
+        )
+
+
 def run_available_now(
     sdf: DataFrame, name: str, timeout_sec: int = 300,
     output_mode: str = "append",
-    state_partitions: int | None = None,
 ) -> None:
     """Drain a static backlog through a streaming plan into a memory
-    sink (availableNow) and wait for completion. `state_partitions`
-    (default STREAM_STATE_PARTITIONS) is applied to
-    spark.sql.shuffle.partitions for the DURATION of the drain — the
-    first micro-batch pins it into the checkpoint as the state-store
-    partition count (see STREAM_STATE_PARTITIONS above); the session
-    value is restored after termination so batch plans are
-    unaffected."""
+    sink (availableNow) and wait for completion, with
+    spark.sql.shuffle.partitions at STREAM_STATE_PARTITIONS for the
+    DURATION of the drain — the first micro-batch pins it into the
+    checkpoint as the state-store partition count; the session value
+    is restored after termination so batch plans are unaffected."""
     spark = sdf.sparkSession
-    n_parts = (
-        STREAM_STATE_PARTITIONS
-        if state_partitions is None
-        else state_partitions
-    )
     old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n_parts))
+    spark.conf.set(
+        "spark.sql.shuffle.partitions", str(STREAM_STATE_PARTITIONS)
+    )
     try:
         q = (
             sdf.writeStream.format("memory")
@@ -185,12 +192,6 @@ def run_available_now(
             .trigger(availableNow=True)
             .start()
         )
-        # raise on timeout: a silently partial drain would surface as
-        # an unexplained downstream mismatch, not as the timeout it is
-        if not q.awaitTermination(timeout_sec):
-            q.stop()
-            raise TimeoutError(
-                f"streaming drain '{name}' exceeded {timeout_sec} s"
-            )
+        await_drain(q, name, timeout_sec)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old_parts)

@@ -4,8 +4,8 @@ The driver runs every registry query inside ITS OWN SparkSession, whose
 config (shuffle partitions, AQE, arrow, broadcast thresholds) we don't
 control. Any output that depends on partial-aggregation order or plan
 choice is a latent hash failure. This test runs the historically
-knife-edge queries in two subprocess-isolated sessions at opposite
-config extremes and asserts bit-identical canonical output.
+knife-edge queries at opposite config extremes, one pass per config in
+one subprocess session, and asserts bit-identical canonical output.
 """
 
 from __future__ import annotations
@@ -87,31 +87,34 @@ QUERIES = [
 
 # driver-ish defaults vs an adversarial layout: tiny partition count,
 # AQE flipped, arrow flipped, broadcasts disabled entirely
-CONF_A = [
-    "--conf", "spark.sql.shuffle.partitions=200",
-    "--conf", "spark.sql.adaptive.enabled=true",
-    "--conf", "spark.sql.execution.arrow.pyspark.enabled=false",
-]
-CONF_B = [
-    "--conf", "spark.sql.shuffle.partitions=7",
-    "--conf", "spark.sql.adaptive.enabled=false",
-    "--conf", "spark.sql.execution.arrow.pyspark.enabled=true",
-    "--conf", "spark.sql.autoBroadcastJoinThreshold=-1",
-]
-
-
-def _run(conf: list[str]) -> dict:
-    out = subprocess.run(
-        [sys.executable, TOOL, SF, *QUERIES, *conf],
-        capture_output=True, text=True, timeout=600, cwd=REPO,
-    )
-    assert out.returncode == 0, out.stderr[-2000:]
-    return json.loads(out.stdout.strip().splitlines()[-1])
+CONF_A = {
+    "spark.sql.shuffle.partitions": "200",
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.execution.arrow.pyspark.enabled": "false",
+}
+CONF_B = {
+    "spark.sql.shuffle.partitions": "7",
+    "spark.sql.adaptive.enabled": "false",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    "spark.sql.autoBroadcastJoinThreshold": "-1",
+}
 
 
 def test_output_bit_identical_across_session_configs():
-    a = _run(CONF_A)
-    b = _run(CONF_B)
+    # both configs in one subprocess session, each pass with its own
+    # temp dir (tools/determinism_check.py run_passes)
+    script = (
+        f"import json, sys; sys.path.insert(0, {os.path.dirname(TOOL)!r}); "
+        "from determinism_check import run_passes; "
+        f"print(json.dumps(run_passes({SF!r}, {QUERIES!r}, "
+        f"[{CONF_A!r}, {CONF_B!r}])))"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", script],
+        capture_output=True, text=True, timeout=900, cwd=REPO,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    a, b = json.loads(out.stdout.strip().splitlines()[-1])
     for name in QUERIES:
         assert a[name] == b[name], (
             f"{name}: output differs between session configs — "

@@ -236,7 +236,9 @@ def test_stream_media_decisions_equals_batch_composition(spark, tmp_path):
     )
     got = {
         (r["arrival_id"], r["matched_id"], r["n_frames"], r["n_matched"])
-        for r in read_media_decisions(spark, out_dir).collect()
+        for r in read_media_decisions(
+            spark, out_dir, str(tmp_path / "state")
+        ).collect()
     }
 
     arr_fps = phash_frames(decode_media(arrivals)).select(

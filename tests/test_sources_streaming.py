@@ -559,18 +559,29 @@ def test_stream_spectra_keyed_by_series(spark, events_dir):
 
 
 def test_incremental_analysis_foreachbatch(spark, events_dir, tmp_path):
-    from miletos_spark.streaming.ingest import incremental_analysis
+    """Per-arrival re-analysis runs as one callback per micro-batch on
+    the committed drain: every row reaches exactly one callback, and
+    each callback's payload rides its batch's marker."""
+    from miletos_spark.pipeline.commit import drain_committed, read_marker
+    from miletos_spark.streaming.ingest import file_stream
 
     seen = {}
 
-    def per_batch(df, batch_id):
-        seen[batch_id] = df.count()
+    def per_batch(df, path, last):
+        seen[path] = df.count()
+        return {"rows": seen[path]}
 
-    q = incremental_analysis(
-        spark, events_dir, EV_SCHEMA, per_batch, str(tmp_path / "ckpt")
+    state = str(tmp_path / "state")
+    drain_committed(
+        file_stream(spark, events_dir, EV_SCHEMA, 1),
+        str(tmp_path / "out"), state, per_batch,
     )
-    q.awaitTermination(120)
     assert sum(seen.values()) == spark.read.parquet(events_dir).count()
+    commits = os.path.join(state, "commits")
+    assert sorted(
+        read_marker(os.path.join(commits, m))["rows"]
+        for m in os.listdir(commits)
+    ) == sorted(seen.values())
 
 
 def test_mast_canned_landing(spark, tmp_path):
@@ -1476,7 +1487,9 @@ def test_stream_pack_bins_zero_state_equals_batch_per_parity(spark, tmp_path):
     key = lambda r: (r["lang"], r["block"], r["doc_id"],  # noqa: E731
                      r["bin"], r["offset"], r["fill_after"])
     got = sorted(
-        map(key, read_stream_pack_bins(spark, out_dir).collect())
+        map(key, read_stream_pack_bins(
+            spark, out_dir, str(tmp_path / "state")
+        ).collect())
     )
 
     want = []
@@ -1528,7 +1541,9 @@ def test_stream_pack_bins_ffd_branch_equals_batch_per_parity(
     key = lambda r: (r["lang"], r["block"], r["doc_id"],  # noqa: E731
                      r["bin"], r["offset"], r["fill_after"])
     got = sorted(
-        map(key, read_stream_pack_bins(spark, out_dir).collect())
+        map(key, read_stream_pack_bins(
+            spark, out_dir, str(tmp_path / "state")
+        ).collect())
     )
 
     want = []

@@ -519,12 +519,12 @@ def media_probe(spark, k: int) -> dict:
         work = os.path.join(
             tempfile.gettempdir(), "miletos_mdec_" + uuid.uuid4().hex[:8]
         )
+        out, state = os.path.join(work, "out"), os.path.join(work, "state")
         stream_media_decisions(
-            spark, arr, MEDIA_SCHEMA, bands,
-            os.path.join(work, "out"), os.path.join(work, "state"),
+            spark, arr, MEDIA_SCHEMA, bands, out, state,
             max_hamming=3, frac_threshold=0.8, max_files_per_trigger=1,
         )
-        read_media_decisions(spark, os.path.join(work, "out")).count()
+        read_media_decisions(spark, out, state).count()
 
     run("media_near_dup", pairs_n)
     run("media_dedup_decisions_hub", decisions_hub_n)

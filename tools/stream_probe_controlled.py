@@ -70,6 +70,7 @@ def drain(spark, land: str) -> float:
     from miletos_spark.plans.driver_queries import _probe_label
     from miletos_spark.schema import load_table
     from miletos_spark.streaming.ingest import stream_probe_score
+    from miletos_spark.streaming.stateful import run_available_now
 
     docs = load_table(spark, BASE, "documents")
     w = train_linear_probe(
@@ -81,14 +82,7 @@ def drain(spark, land: str) -> float:
         max_files_per_trigger=1,
     )
     name = f"ctl_{int(t0 * 1000) % 100000}"
-    q = (
-        sdf.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(600)
+    run_available_now(sdf, name, timeout_sec=600)
     n = spark.sql(f"SELECT count(*) FROM {name}").first()[0]
     el = time.perf_counter() - t0
     print(f"# drained {n} rows in {el:.2f}s", file=sys.stderr)
