@@ -1,56 +1,48 @@
-"""Unified local-fs commit seam (VERDICT r10 Missing #4).
+"""The local-fs commit seam: every piece of landed or streamed state
+is built where no reader looks and published with one atomic rename.
+Incremental state has exactly two commit shapes, plus the stream drain:
 
-Four landing seams share one convention: build the new state where no
-reader looks, then publish it with one atomic rename. This module is
-the single tested code path for all of them:
-
-- `land_once` / `publish_dir`: the memoized landing (the reference's
-  pickle-memo short-circuit, miletos/main.py:8706-8714, S11). A memo
-  directory lives under `tempfile.gettempdir()`, keyed by
-  md5(tag | source path | source identity); identity is
-  (mtime_ns, size) for a file and the sorted (relpath, mtime_ns, size)
-  of every file under a directory, so an in-place rewrite inside a
-  directory source changes the key. A directory that exists is
-  complete: `build(tmp)` runs on a private `<root>.<pid>.<uuid4>.tmp`
-  sibling, and one `os.rename` publishes it. A build killed or failed
-  mid-write therefore leaves no root, and the next call rebuilds (and
-  removes the tmp of any builder whose pid is dead); of two concurrent
+- `land_once` / `publish_dir`: anything built once per key, including
+  folds done while it is built (the reference's pickle-memo
+  short-circuit, miletos/main.py:8706-8714). A memo directory lives
+  under `tempfile.gettempdir()`, keyed by md5(tag | source path |
+  source identity); identity is (mtime_ns, size) for a file and the
+  sorted (relpath, mtime_ns, size) of every file under a directory, so
+  an in-place rewrite inside a directory source changes the key. A
+  directory that exists is complete and is never written again:
+  `build(tmp)` runs on a private `<root>.<pid>.<uuid4>.tmp` sibling,
+  and one `os.rename` publishes it. A build killed or failed mid-write
+  therefore leaves no root, and the next call rebuilds (and removes
+  the tmp of any builder whose pid is dead); of two concurrent
   builders the first rename wins and the second discards its copy.
   `overwrite` renames the old root aside, the new one in, then deletes
-  the old one (the `upsert_results` swap).
-- `write_marker` / `read_marker`: an atomic JSON marker — a private
-  `<path>.<uuid4>.tmp` file + `os.replace` (POSIX rename is atomic on
-  one filesystem), so readers never observe a torn or partial marker,
-  and concurrent writers never share a tmp.
+  the old one; a crash between the two renames leaves no root (the
+  next call rebuilds) and the old one aside.
+- `fold_partitions_versioned`: the one versioned store for a table
+  that is folded into across calls (the reference's append-with-dedup
+  results table, miletos/main.py:12458-12539). Each fold writes a new
+  version directory, hardlinks the untouched partitions of the
+  committed one, and commits by rewriting one pointer marker that also
+  logs the fold's batch tag, so a replayed tag is a no-op.
 - `drain_committed` / `read_committed`: exactly-once output per
   micro-batch for every `foreachBatch` writer — write `out_dir/b=<id>`,
   then one marker `state_dir/commits/<id>`; a replay is skipped only
   if its input manifest matches the marker's, and readers see
   `b ≤ last committed` only.
-- `publish_version` / `current_version`: a versioned dataset publish
-  with an atomic pointer flip. The writer builds a NEW directory as a
-  pure function of the last committed version plus the increment, then
-  flips one pointer file. A crash at ANY point — mid-build, post-build
-  pre-flip — leaves the pointer on the old version, and the replay
-  rebuilds the same new version from unchanged inputs. This is the fix
-  for non-replay-idempotent folds (ADVICE r10: an in-place count-table
-  overwrite that commits before its done marker double-applies the
-  batch on replay).
-- `overwrite_partitions`: dynamic partition overwrite pruned to the
-  partitions a batch touches, with drained partitions (present before,
-  empty after) deleted — the `update_cluster_index` rewrite made
-  reusable.
+
+All three commit through `write_marker` (a private tmp file and
+`os.replace`) or one `os.rename`, so a crash at any point leaves either
+the old state or the new one, and resuming applies each build, fold or
+batch exactly once (the tests' `crash_sweep` fixture crashes every
+writer at every such call).
 
 Cluster-scale mapping (the documented deployment shape, not emulated
 here): the memo publish is a write to a staging prefix plus one
-committed table version; the marker is a Delta/Iceberg commit
-(manifest list + atomic metadata pointer swap), with the batch id as
-the idempotent writer txn id; the versioned publish
-is a new table version plus the version pointer in the transaction
-log; the partition overwrite is `REPLACE WHERE` / `INSERT OVERWRITE
-PARTITION ...` under the same snapshot-isolation contract. The local
-forms have identical crash semantics on a single node, which is what
-the crash-replay tests assert.
+committed table version; the versioned fold is a Delta/Iceberg commit
+whose snapshot re-references unchanged files, with the batch tag as the
+idempotent writer txn id; the drain marker is the same commit with the
+batch id as the txn id. The local forms have identical crash semantics
+on a single node.
 """
 
 from __future__ import annotations
@@ -64,36 +56,19 @@ import tempfile
 import uuid
 from collections.abc import Callable, Iterable
 
-# partition values Spark lands verbatim (no escapePathName rewriting):
-# the precondition `fold_partitions_versioned` / `overwrite_partitions`
-# enforce. fullmatch, not match-with-$: Python's $ also matches before
-# a trailing newline, and Spark escapes '\n' in partition dirs — so
-# 'a\n' would pass a $-anchored guard and re-open the path-mismatch
-# duplication the guard exists to block (ADVICE r13).
-_PART_SAFE = re.compile(r"[A-Za-z0-9._-]+")
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+# A versioned store keeps its committed version and the one before it
+# (hardlinks make the pruning safe: the new version's files are the same
+# inodes), under one pointer marker.
+KEEP_VERSIONS = 2
+POINTER_NAME = "_current.json"
 
-def _check_part_safe(fn_name: str, touched: "Iterable[int | str]") -> list:
-    """Validate that every touched partition value lands verbatim as a
-    `part_col=value` directory name (plain ints / [A-Za-z0-9._-]+
-    strings). Values Spark would escape (spaces, '/', control chars,
-    newlines, ...) produce a directory name that does NOT equal the raw
-    f-string path the caller later compares or deletes — which silently
-    duplicates rows (versioned fold) or leaves drained partitions live
-    (overwrite delete). Raise instead of reproducing Spark's
-    escapePathName table. Returns the materialized touched list."""
-    touched = [t for t in touched]
-    for t in touched:
-        if not _PART_SAFE.fullmatch(str(t)):
-            raise ValueError(
-                f"{fn_name}: partition value {t!r} needs path escaping "
-                "— part_col values must be plain ints or "
-                "[A-Za-z0-9._-]+ strings"
-            )
-    return touched
+# partition values Spark lands verbatim (no escapePathName rewriting).
+# fullmatch, not match-with-$: Python's $ also matches before a trailing
+# newline, and Spark escapes '\n' in partition dirs.
+_PART_SAFE = re.compile(r"[A-Za-z0-9._-]+")
 
 
 def write_marker(path: str, payload: object = None) -> str:
@@ -319,39 +294,6 @@ def read_committed(
     )
 
 
-def current_version(pointer_path: str) -> str | None:
-    """Absolute path of the currently committed version dir, or None
-    before the first publish."""
-    val = read_marker(pointer_path)
-    if val is None:
-        return None
-    return os.path.join(os.path.dirname(pointer_path), str(val))
-
-
-def publish_version(
-    pointer_path: str,
-    version: str,
-    write_fn: "Callable[[str], None]",
-) -> "tuple[str, bool]":
-    """Publish `version` (a directory name next to the pointer file)
-    via build-then-flip: if the pointer already names `version` the
-    publish is a verified no-op (returns (dir, False)); otherwise
-    `write_fn(target_dir)` builds the full dataset — it MUST derive
-    only from the previous committed version and the increment, never
-    from `target_dir`'s own prior content (`mode("overwrite")` writes
-    satisfy this) — and the pointer flips atomically. Crash-idempotent
-    by construction: an interrupted build leaves the pointer (and the
-    committed dataset) untouched, and the replay rebuilds byte-equal
-    state from unchanged inputs. Returns (target_dir, True)."""
-    root = os.path.dirname(pointer_path)
-    target = os.path.join(root, version)
-    if read_marker(pointer_path) == version:
-        return target, False
-    write_fn(target)
-    write_marker(pointer_path, version)
-    return target, True
-
-
 def _link_tree(src: str, dst: str) -> None:
     """Re-reference `src`'s files under `dst` via hardlinks (copy on
     cross-device) — the local-fs emulation of a table snapshot
@@ -374,36 +316,39 @@ def fold_partitions_versioned(
     part_col: str,
     touched: "Iterable[int | str]",
     batch_tag: str,
-    keep_versions: int = 2,
-    pointer_name: str = "_current.json",
 ) -> "tuple[str, bool]":
-    """CRASH-SAFE, REPLAY-IDEMPOTENT partition fold (ADVICE r11): fold
-    `rows` (the full new content of every `touched` partition) into a
-    VERSIONED partitioned store in O(touched), never O(table).
+    """Fold `rows` (the full new content of every `touched` partition)
+    into the versioned partitioned store under `store_root` in
+    O(touched), never O(table), exactly once per `batch_tag`.
 
-    The new version directory re-references (hardlinks) every
-    untouched partition dir of the committed version and writes only
-    the touched partitions fresh; ONE atomic pointer flip then commits
-    the version AND appends `batch_tag` to the applied-batch log it
-    carries. Crash at any point before the flip leaves the committed
-    version untouched (its files are never modified — `rows` may
-    freely derive from it, no eager pin needed) and the replay
-    rebuilds the same target from unchanged inputs; after the flip,
-    a replayed `batch_tag` is a verified no-op. Drained partitions
-    (touched but absent from `rows`) are simply never linked — delete
-    is free under versioning.
+    The new version directory hardlinks every untouched partition dir
+    of the committed version and writes only the touched partitions
+    fresh; one `write_marker` of the pointer then commits the version
+    and appends `batch_tag` to the applied-batch log it carries. A
+    committed version's files are never modified, so `rows` may derive
+    from it without an eager pin, and a crash before the pointer write
+    leaves it as the committed state: the resume clears the partial
+    build and rebuilds the same version from unchanged inputs. After
+    the pointer write a replayed `batch_tag` is a no-op. Touched
+    partitions absent from `rows` (drained) are simply never linked.
 
-    Versions older than `keep_versions` are pruned after the flip
-    (hardlinks make this safe: the new version's files are the same
-    inodes). The applied-batch log keeps the latest 256 tags — replay
-    windows are of recent batches by construction (a streaming replay
-    is of the last uncommitted batch). Cluster-scale mapping: a
-    Delta/Iceberg commit whose snapshot re-references unchanged files,
-    with `batch_tag` as the idempotent writer txn id.
+    Touched values must land verbatim as `part_col=value` dir names
+    (plain ints or [A-Za-z0-9._-]+ strings): a value Spark escapes would
+    be both hardlinked from the old version and written fresh,
+    duplicating its rows, so it raises instead. Versions more than
+    `KEEP_VERSIONS` behind are pruned after the commit; the log keeps
+    the latest 256 tags, since a replay is of a recent batch.
 
     Returns (committed data dir, applied?) — applied=False when
     `batch_tag` was already in the log."""
-    pointer_path = os.path.join(store_root, pointer_name)
+    touched = [t for t in touched]
+    for t in touched:
+        if not _PART_SAFE.fullmatch(str(t)):
+            raise ValueError(
+                f"partition value {t!r} needs path escaping — {part_col} "
+                "values must be plain ints or [A-Za-z0-9._-]+ strings"
+            )
+    pointer_path = os.path.join(store_root, POINTER_NAME)
     cur = read_marker(pointer_path)
     batches = list(cur["batches"]) if cur else []
     if batch_tag in batches:
@@ -411,15 +356,9 @@ def fold_partitions_versioned(
     n = int(cur["version"][1:]) if cur else -1
     version = f"v{n + 1}"
     target = os.path.join(store_root, version)
-    if os.path.exists(target):  # stale partial build from a crash
+    if os.path.exists(target):  # partial build of a crashed fold
         shutil.rmtree(target)
     os.makedirs(target)
-    # untouched-partition matching compares f"{part_col}={t}" against
-    # raw directory names, but Spark URL-escapes special characters
-    # when it encodes partition dirs — a value needing escaping would
-    # BOTH hardlink from the previous version and be rewritten fresh,
-    # silently duplicating rows (ADVICE r12).
-    touched = _check_part_safe("fold_partitions_versioned", touched)
     touched_names = {f"{part_col}={t}" for t in touched}
     if cur is not None:
         prev = os.path.join(store_root, cur["version"])
@@ -433,59 +372,15 @@ def fold_partitions_versioned(
         pointer_path,
         {"version": version, "batches": (batches + [batch_tag])[-256:]},
     )
-    for i in range(max(0, n + 1 - (keep_versions - 1))):
+    for i in range(max(0, n + 2 - KEEP_VERSIONS)):
         shutil.rmtree(os.path.join(store_root, f"v{i}"), ignore_errors=True)
     return target, True
 
 
-def current_fold_version(store_root: str, pointer_name: str = "_current.json"):
+def current_fold_version(store_root: str) -> str | None:
     """The committed data dir of a `fold_partitions_versioned` store,
     or None before the first fold."""
-    cur = read_marker(os.path.join(store_root, pointer_name))
+    cur = read_marker(os.path.join(store_root, POINTER_NAME))
     if cur is None:
         return None
     return os.path.join(store_root, cur["version"])
-
-
-def overwrite_partitions(
-    spark: SparkSession,
-    rows: DataFrame,
-    path: str,
-    part_col: str,
-    touched: "Iterable[int | str]",
-) -> None:
-    """Rewrite exactly the `touched` partitions of a landed
-    partitioned-parquet dataset with `rows` (which must carry
-    `part_col` and contain the full intended content of every touched
-    partition): dynamic partition overwrite replaces partitions that
-    still have rows; touched partitions absent from `rows` (drained)
-    are deleted. `rows` is pinned eagerly first because it typically
-    reads the very directories the write replaces. Untouched
-    partitions are never read or written. Touched values must be
-    path-safe (same precondition as `fold_partitions_versioned`): the
-    drained-partition delete builds raw f'{part_col}={p}' paths, and a
-    value Spark escapes would produce a non-matching path whose
-    rmtree(ignore_errors=True) silently leaves the stale partition's
-    rows live (ADVICE r13)."""
-    touched = _check_part_safe("overwrite_partitions", touched)
-    prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        pinned = rows.localCheckpoint(eager=True)
-        pinned.repartition(part_col).write.mode("overwrite").partitionBy(
-            part_col
-        ).parquet(path)
-        written = {
-            r[part_col]
-            for r in pinned.select(part_col).distinct().collect()
-        }
-        for p in touched:
-            if p not in written:  # drained: dynamic mode skips it
-                shutil.rmtree(
-                    os.path.join(path, f"{part_col}={p}"),
-                    ignore_errors=True,
-                )
-    finally:
-        spark.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", prev_mode
-        )

@@ -46,17 +46,15 @@ def land_dedup_index(
     overwrite: bool = False,
 ) -> dict[str, str]:
     """Materialize MinHash signatures + LSH band table for the documents
-    corpus. Returns {"sigs": path, "bands": path}."""
+    corpus, with the band table's `max_bucket` in `band_stats.json`.
+    Returns {"sigs": path, "bands": path}."""
     from miletos_spark.pipeline.dedup import lsh_bands, minhash_signatures
-
-    from miletos_spark.pipeline.commit import fold_partitions_versioned
 
     src = os.path.join(sf_dir, "documents.parquet")
 
     def paths_at(root: str) -> dict[str, str]:
         return {"sigs": os.path.join(root, "sigs"),
-                "bands": os.path.join(root, "bands"),
-                "counts": os.path.join(root, "bucket_counts")}
+                "bands": os.path.join(root, "bands")}
 
     def build(root: str) -> None:
         paths = paths_at(root)
@@ -64,109 +62,31 @@ def land_dedup_index(
         sigs = minhash_signatures(docs, k=k, num_hashes=num_hashes)
         sigs.write.mode("overwrite").parquet(paths["sigs"])
         landed_sigs = spark.read.parquet(paths["sigs"])
-        # num_hashes passed explicitly: the landing KNOWS the width, so the
-        # default's `.first()` probe job is pure overhead here (r14).
+        # num_hashes passed explicitly: the landing knows the width, so
+        # the default's `.first()` probe job is not needed
         banded = lsh_bands(landed_sigs, bands=bands, num_hashes=num_hashes)
-        # repartition by band before the partitioned write (r14, guide §6):
-        # without it every sigs-read task writes a file into every band dir
-        # (tasks × bands files — 256 tiny files at sf0.1), and the counts
-        # pass below re-reads all of them. One keyed exchange buys one file
-        # per band dir (AQE-coalesced), which is also the layout a
-        # cluster-scale reader wants.
+        # repartition by band before the partitioned write: without it
+        # every sigs-read task writes a file into every band dir (tasks ×
+        # bands tiny files). One keyed exchange buys one file per band
+        # dir, which is also the layout a cluster-scale reader wants.
         (
             banded.repartition("band")
             .write.mode("overwrite")
             .partitionBy("band")
             .parquet(paths["bands"])
         )
-        # write-time bucket stats (VERDICT r10 Wrong #2): per-bucket count
-        # side table (a VERSIONED store so incremental folds stay
-        # O(touched) yet commit atomically — ADVICE r11) + the O(1)
-        # max-bucket scalar downstream cutovers read instead of probing
-        landed_bands = spark.read.parquet(paths["bands"])
-        counts0 = (
-            landed_bands.groupBy("band", "bhash")
-            .agg(F.count("*").alias("c"))
-            .withColumn(
-                "_bg", F.pmod(F.xxhash64("band", "bhash"), F.lit(BAND_GROUPS))
-            )
-            # pinned once (r15, guide §2.2/§5): the fold's partitioned write
-            # and the max_bucket scalar both consume these rows — unpinned,
-            # the max was a READ-BACK of the 64 just-written partition dirs
-            # (64-dir listing + 64 tiny footers, a per-dir-latency pass that
-            # gets worse on an object store). One aggregation job feeds
-            # both; max(counts0) == max(written data) by construction.
-            # Warm A/B (one JVM, 3 reps each): 2.10-2.28 -> 1.70-1.80 s.
-            .localCheckpoint(eager=True)
+        # the write-time max bucket downstream cutovers read instead of
+        # probing the band table per query
+        write_index_stats(
+            root,
+            band_bucket_stats(
+                spark.read.parquet(paths["bands"]), ["band", "bhash"]
+            ),
         )
-        data, _ = fold_partitions_versioned(
-            counts0, paths["counts"], "_bg", range(BAND_GROUPS), "__init__"
-        )
-        mx = counts0.agg(F.max("c")).first()[0] or 0
-        write_index_stats(root, {"max_bucket": int(mx)})
 
-    # .c2 tag: the counts side table moved to the versioned fold store
-    # (ADVICE r11 crash safety) — stale flat-layout caches rebuild
-    root = land_once(f"mh{num_hashes}b{bands}k{k}.c2", build, src, overwrite)
+    # .c3: the layout is sigs, bands and band_stats.json only
+    root = land_once(f"mh{num_hashes}b{bands}k{k}.c3", build, src, overwrite)
     return paths_at(root)
-
-
-def update_dedup_index(
-    spark: SparkSession,
-    paths: dict[str, str],
-    new_docs: "DataFrame",
-    k: int = 9,
-    num_hashes: int = 32,
-    bands: int = 8,
-    batch_tag: str | None = None,
-) -> dict[str, str]:
-    """Incremental index maintenance — append a new-document batch to a
-    landed MinHash/LSH index WITHOUT rebuilding: at 100 TB the corpus
-    index is built once and each crawl increment pays only O(batch)
-    signature work plus a partition-append into the band dirs (the same
-    layout `stream_near_dup` and the batch LSH joins probe, so readers
-    see the grown index with no migration step).
-
-    MinHash signatures are embarrassingly per-document, so
-    sigs(A) ∪ sigs(B) == sigs(A ∪ B) exactly — the appended index is
-    bit-identical to a full rebuild (asserted in tests). The
-    (k, num_hashes, bands) parameters MUST match the landed index;
-    the signature width is checked against the landed table and a
-    mismatch raises instead of silently corrupting the index.
-
-    Idempotence/exactly-once is the CALLER's contract (feed the batch
-    through `stream_dedup`/bloom first, as the crawl pipeline does);
-    at-least-once appends would duplicate band rows, which the
-    pair-distinct downstream tolerates but pays for."""
-    from pyspark.sql import functions as F_
-
-    from miletos_spark.pipeline.dedup import lsh_bands, minhash_signatures
-
-    landed_width = (
-        spark.read.parquet(paths["sigs"])
-        .select(F_.size("sig"))
-        .first()[0]
-    )
-    if landed_width != num_hashes:
-        raise ValueError(
-            f"update_dedup_index: landed signature width {landed_width} "
-            f"!= num_hashes {num_hashes} — wrong index or wrong params"
-        )
-    sigs = minhash_signatures(new_docs, k=k, num_hashes=num_hashes)
-    sigs.write.mode("append").parquet(paths["sigs"])
-    banded = lsh_bands(sigs, bands=bands, num_hashes=num_hashes)
-    banded.write.mode("append").partitionBy("band").parquet(paths["bands"])
-    if "counts" in paths and bucket_counts_dir(paths) is not None:
-        # O(batch + touched groups) stats fold; indexes landed before
-        # the stats side table existed simply stay stat-less.
-        # batch_tag (optional) makes a replayed batch's fold a no-op —
-        # note the band-row appends above keep the documented
-        # at-least-once caller contract either way.
-        update_bucket_counts(
-            spark, paths, banded.select("band", "bhash"), ["band", "bhash"],
-            batch_tag=batch_tag,
-        )
-    return paths
 
 
 # --- write-time band-bucket statistics --------------------------------------
@@ -176,12 +96,10 @@ def update_dedup_index(
 # `fp_member_pairs`) needs ONE scalar — the max bucket / class size —
 # to pick its plan, and probing it per invocation is an extra pass over
 # the banded relation every query plus an eager job at plan-construction
-# time. So the stats are computed once at landing time, kept current
-# with an O(batch + touched buckets) fold at append time, and read back
-# in O(1) before any plan is built.
+# time. So the stats are computed once at landing time and read back in
+# O(1) before any plan is built.
 
 STATS_NAME = "band_stats.json"
-BAND_GROUPS = 64  # bucket-count side table partition dirs
 
 
 def band_bucket_stats(
@@ -250,111 +168,6 @@ def read_index_stats(root: str, name: str = STATS_NAME) -> dict | None:
     from miletos_spark.pipeline.commit import read_marker
 
     return read_marker(os.path.join(root, name))
-
-
-def bucket_counts_dir(paths: dict[str, str]) -> str | None:
-    """The committed data dir of the versioned bucket-count store
-    (None before the first fold / for pre-versioning indexes)."""
-    from miletos_spark.pipeline.commit import current_fold_version
-
-    return current_fold_version(paths["counts"])
-
-
-def update_bucket_counts(
-    spark: SparkSession,
-    paths: dict[str, str],
-    batch_banded: DataFrame,
-    bucket_cols: "list[str]",
-    n_groups: int = BAND_GROUPS,
-    batch_tag: str | None = None,
-) -> None:
-    """Fold a band-table increment into the landed per-bucket count
-    side table in O(batch + touched groups), then refresh the
-    ``max_bucket`` scalar in the stats file. The side table is
-    partitioned by ``_bg = pmod(xxhash64(bucket key), n_groups)`` so
-    the fold prunes to exactly the groups the batch touches; the
-    scalar max can only grow under appends, so max(old, touched-group
-    max) is exact.
-
-    CRASH-SAFE (ADVICE r11): the fold goes through
-    `commit.fold_partitions_versioned` — untouched groups are
-    re-referenced, touched groups written fresh, and one atomic
-    pointer flip commits the fold, so a crash at any point leaves the
-    committed counts exactly consistent with the batches whose tags
-    the pointer records (counts are never partially folded). Pass a
-    stable ``batch_tag`` (e.g. the streaming batch id) to make a
-    REPLAYED batch a verified no-op; the default unique tag keeps the
-    fold atomic but re-applies on replay — the single-writer
-    own-ordering stance `update_dsir_model`'s in-place default
-    documents. The stats refresh after the flip is self-healing: it
-    derives from the committed table, so a crash between flip and
-    stats write is repaired by any later fold (and an under-stated max
-    only costs hub-safety headroom, never correctness)."""
-    import uuid
-
-    from miletos_spark.pipeline.commit import fold_partitions_versioned
-
-    root = os.path.dirname(paths["counts"])
-    data = bucket_counts_dir(paths)
-    if data is None:
-        raise ValueError(
-            f"update_bucket_counts: no committed counts store under "
-            f"{paths['counts']} — index landed before versioning? "
-            "Rebuild with land_dedup_index(overwrite=True)."
-        )
-    if batch_tag is None:
-        batch_tag = f"unq-{uuid.uuid4().hex}"
-    bg = F.pmod(F.xxhash64(*bucket_cols), F.lit(n_groups))
-    delta = (
-        batch_banded.groupBy(*bucket_cols)
-        .agg(F.count("*").alias("_dc"))
-        .withColumn("_bg", bg)
-        .localCheckpoint(eager=True)  # batch-sized; feeds join + group list
-    )
-    groups = [int(r["_bg"]) for r in delta.select("_bg").distinct().collect()]
-    landed = spark.read.parquet(data).filter(F.col("_bg").isin(groups))
-    merged = (
-        landed.join(delta.drop("_bg"), bucket_cols, "full")
-        .select(
-            *bucket_cols,
-            (
-                F.coalesce(F.col("c"), F.lit(0))
-                + F.coalesce(F.col("_dc"), F.lit(0))
-            ).alias("c"),
-        )
-        .withColumn("_bg", bg)
-        # pinned (r15): the fold's write and the stats refresh both
-        # consume the merged rows — unpinned, the refresh was a
-        # read-back of the just-written touched dirs (per-dir listing
-        # latency, worse on object stores). Correctness note: the old
-        # "no eager pin" stance (the fold writes a NEW version dir, so
-        # reading the committed version races nothing) still holds —
-        # the pin is for single-computation, not safety.
-        .localCheckpoint(eager=True)
-    )
-    committed, applied = fold_partitions_versioned(
-        merged, paths["counts"], "_bg", groups, batch_tag
-    )
-    if applied:
-        # max over merged == max over the committed touched groups: the
-        # fold wrote exactly these rows
-        new_max = merged.agg(F.max("c")).first()[0] or 0
-    else:
-        # replayed batch_tag: merged re-added the delta on top of a
-        # committed version that already contains it, so it must NOT
-        # feed stats — re-derive from the committed table (this is also
-        # the self-healing path for a crash between flip and stats
-        # write)
-        new_max = (
-            spark.read.parquet(committed)
-            .filter(F.col("_bg").isin(groups))
-            .agg(F.max("c"))
-            .first()[0]
-            or 0
-        )
-    stats = read_index_stats(root) or {}
-    stats["max_bucket"] = max(int(stats.get("max_bucket", 0)), int(new_max))
-    write_index_stats(root, stats)
 
 
 BUCKET_GROUP_DIV = 256  # 2^12 buckets / 256 = 16 partition dirs
@@ -926,54 +739,6 @@ def fit_fine_distributed(
     return fitted.unionByName(backfill)
 
 
-def update_ivf2_index(
-    spark: SparkSession,
-    paths: dict[str, str],
-    new_vecs: "DataFrame",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> dict[str, str]:
-    """Incremental maintenance for the two-level quantizer index —
-    the embedding twin of `update_dedup_index`: append a new-vector
-    batch (a crawl increment) WITHOUT rebuilding. The quantizer
-    (coarse/fine tables) is FROZEN at first landing; the batch pays
-    only O(batch) assignment — top-1 at both levels through the
-    PERSISTED tables, i.e. bit-identically to how the original corpus
-    was assigned — plus a partition-append into the `_super` dirs, so
-    every reader (the batch pair join, the streaming arrival probe)
-    sees the grown index with no migration step.
-
-    Occupancy drift is the caller's rebuild trigger: k is frozen
-    while n grows, so cells fatten at rate batch/n — re-land when
-    they overflow the occupancy target (the standard IVF
-    compact-when-skewed deployment stance). Idempotence/exactly-once
-    is the caller's contract (dedup the batch first, as the crawl
-    pipeline does); at-least-once appends would duplicate members,
-    which the pair-distinct downstream tolerates but pays for."""
-    from miletos_spark.pipeline.similarity import assign_cells_2l
-
-    coarse = spark.read.parquet(paths["coarse"])
-    fine = spark.read.parquet(paths["fine"])
-    assigned = assign_cells_2l(
-        new_vecs, coarse, fine,
-        id_col=id_col, vec_col=vec_col,
-        n_probe_coarse=1, n_probe_fine=1,
-    )
-    (
-        assigned.select(
-            F.col("_id").alias("vec_id"),
-            F.col("_v").alias("embedding"),
-            F.col("super").alias("_super"),
-            F.col("fine").alias("_fine"),
-        )
-        .repartition("_super")
-        .write.mode("append")
-        .partitionBy("_super")
-        .parquet(paths["cells"])
-    )
-    return paths
-
-
 CLUSTER_BUCKETS = 64
 
 
@@ -986,38 +751,35 @@ def land_cluster_index(
     n_buckets: int = CLUSTER_BUCKETS,
 ) -> str:
     """Materialize the dedup CLUSTER table — (node, component) from
-    `connected_components` — partitioned by `_cb = pmod(component,
-    n_buckets)` so `update_cluster_index` can merge an appended edge
-    batch by rewriting only the buckets its touched components live
-    in (the `update_dedup_index` / `update_ivf2_index` landing stance
-    applied to cluster ids, VERDICT r9 Missing #3)."""
+    `connected_components` — as version v0 of a versioned store at
+    `path` (`commit.fold_partitions_versioned`), partitioned by
+    `_cb = pmod(component, n_buckets)` so `update_cluster_index` can
+    fold an appended edge batch into only the buckets its touched
+    components live in. Returns the committed data dir."""
+    from miletos_spark.pipeline.commit import fold_partitions_versioned
     from miletos_spark.pipeline.dedup import connected_components
 
     comp = connected_components(pairs, src_col=src_col, dst_col=dst_col)
-    (
-        comp.withColumn("_cb", F.pmod("component", F.lit(n_buckets)))
-        .repartition("_cb")
-        .write.mode("overwrite")
-        .partitionBy("_cb")
-        .parquet(path)
+    data, _ = fold_partitions_versioned(
+        comp.withColumn("_cb", F.pmod("component", F.lit(n_buckets))),
+        path, "_cb", range(n_buckets), "__init__",
     )
-    return path
+    return data
 
 
 def update_cluster_index(
     spark: SparkSession,
     path: str,
     new_edges: DataFrame,
+    batch_tag: str,
     src_col: str = "id_a",
     dst_col: str = "id_b",
     n_buckets: int = CLUSTER_BUCKETS,
 ) -> str:
-    """Incremental cluster maintenance — merge an appended edge batch
-    into the landed cluster table in O(batch + touched components),
-    bit-equal to a full re-cluster (asserted in tests): the missing
-    piece of the incremental story `update_dedup_index` (bands) and
-    `update_ivf2_index` (cells) already tell, closing the
-    'appended edges mean a full re-cluster' gap (VERDICT r9 #3).
+    """Incremental cluster maintenance — fold an appended edge batch
+    into the cluster store `land_cluster_index` landed at `path`, in
+    O(batch + touched components) and bit-equal to a full re-cluster
+    (asserted in tests).
 
     The reduction that makes it O(batch): every batch endpoint maps
     through the landed table to its component id (components are
@@ -1032,17 +794,20 @@ def update_cluster_index(
     keyed join on their old component id; untouched components are
     never read, shuffled, or rewritten.
 
-    Writes go through the shared `pipeline.commit.overwrite_partitions`
-    seam (r11, VERDICT r10 Missing #4): dynamic partition overwrite
-    over exactly the buckets that contain old or new labels of touched
-    rows, drained buckets deleted — the commit module carries the
-    manifest/Delta REPLACE WHERE cluster-scale mapping and the crash
-    tests. Idempotent under replay: a re-applied batch collapses
-    entirely to self-loops and no-ops."""
-    from miletos_spark.pipeline.commit import overwrite_partitions
+    The new content of every bucket holding an old or new label of a
+    touched row goes through `commit.fold_partitions_versioned` under
+    `batch_tag`: a crash at any point leaves the previous version
+    committed, a replayed tag is a no-op, and a drained bucket is
+    simply not linked into the new version. Returns the committed data
+    dir."""
+    from miletos_spark.pipeline.commit import (
+        current_fold_version,
+        fold_partitions_versioned,
+    )
     from miletos_spark.pipeline.dedup import connected_components
 
-    landed = spark.read.parquet(path)
+    data = current_fold_version(path)
+    landed = spark.read.parquet(data)
     e = (
         new_edges.select(
             F.col(src_col).cast("long").alias("u"),
@@ -1076,7 +841,7 @@ def update_cluster_index(
         .localCheckpoint(eager=True)  # batch-sized; pins the reduction
     )
     if mapped.limit(1).count() == 0:
-        return path  # every batch edge was already intra-component
+        return data  # every batch edge was already intra-component
     comp_new = connected_components(
         mapped, src_col="u", dst_col="v"
     ).localCheckpoint(eager=True)
@@ -1114,14 +879,13 @@ def update_cluster_index(
         }
     )
     keep = (
-        spark.read.parquet(path)
-        .filter(F.col("_cb").isin(buckets))
+        landed.filter(F.col("_cb").isin(buckets))
         .join(updated.select("node"), "node", "anti")
         .select("node", "component", "_cb")
     )
     out = keep.unionByName(updated.select("node", "component", "_cb"))
-    overwrite_partitions(spark, out, path, "_cb", buckets)
-    return path
+    data, _ = fold_partitions_versioned(out, path, "_cb", buckets, batch_tag)
+    return data
 
 
 def _train_codebooks(sample, m: int, n_centroids: int, seed: int) -> list:
@@ -1454,8 +1218,8 @@ def update_dsir_model(
     spark: SparkSession,
     path: str,
     new_docs: "DataFrame",
+    out_path: str,
     m_buckets: int = 64,
-    out_path: str | None = None,
 ) -> str:
     """Incremental DSIR model maintenance — fold a crawl increment into
     the landed bucket counts WITHOUT re-scanning the corpus: bucket
@@ -1463,18 +1227,14 @@ def update_dsir_model(
     landed + batch == full rebuild EXACTLY (asserted in tests; the
     log-ratios derived downstream are then bit-identical too, same
     integer inputs through the same ln). O(batch) gram work + an m-row
-    overwrite. The m_buckets must match the landed table — checked,
-    a mismatch raises instead of silently corrupting the model.
+    write. The m_buckets must match the landed table — checked, a
+    mismatch raises instead of silently corrupting the model.
 
-    CRASH SAFETY (ADVICE r10): count folds are NOT replay-idempotent —
-    an in-place overwrite that commits before its done marker would
-    double-apply the batch on replay. Pass ``out_path`` to write the
-    merged model to a NEW directory (the landed model at ``path`` is
-    never touched) and publish it through
-    `pipeline.commit.publish_version`'s atomic pointer flip — a crash
-    at any point replays from the unchanged previous version. The
-    in-place default (out_path=None) remains for single-writer callers
-    that manage their own ordering."""
+    The merged model goes to the NEW directory `out_path`; the model at
+    `path` is only read. A count fold is not replay-idempotent, so the
+    caller commits it as a whole: inside a `land_once` build, whose
+    rename publishes the folded model once or not at all. Returns
+    `out_path`."""
     from pyspark.sql import functions as F
 
     from miletos_spark.pipeline.sampling import hashed_ngram_buckets
@@ -1498,14 +1258,8 @@ def update_dsir_model(
         (F.col("ct") + F.coalesce("d_ct", F.lit(0))).alias("ct"),
         (F.col("cr") + F.coalesce("d_cr", F.lit(0))).alias("cr"),
     )
-    if out_path is not None:
-        merged.coalesce(1).write.mode("overwrite").parquet(out_path)
-        return out_path
-    # in-place: the m-row read must complete before the overwrite starts
-    merged.localCheckpoint(eager=True).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(path)
-    return path
+    merged.coalesce(1).write.mode("overwrite").parquet(out_path)
+    return out_path
 
 
 def dsir_logratios_from_landed(

@@ -1231,8 +1231,8 @@ def land_epoch_order(
       shard dir — asserted in test_plans.
 
     Idempotent: the order is a pure function of (seed, epoch, corpus),
-    so mode-overwrite rewrites are replay-safe (no fold, no state —
-    the `publish_version` machinery is not needed here). Returns
+    so mode-overwrite rewrites are replay-safe (no fold, no state, so
+    no versioned store is needed here). Returns
     ``path``.
 
     Scale note (r12, VERDICT r11 stretch): the per-shard rank bounds

@@ -1011,57 +1011,50 @@ GROUP BY source, c_g
 """
 
 
-def q_dsir_landed_select_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental DSIR model maintenance as a driver-checked contract
-    (the near_dup_clusters_incremental pattern): the corpus is split by
-    a deterministic hash into an initial load and a crawl increment;
-    bucket counts are LANDED from the initial half
-    (landing.dsir_bucket_counts), the increment is folded in with
-    `update_dsir_model` — O(batch) gram work, counts being the
-    additive sufficient statistic — and selection runs over the
-    landed-model log-ratios. The oracle is the FULL-CORPUS model's
-    selection (_sql_dsir_select verbatim), so append==rebuild is
-    exactly what the hash gate proves. Both the initial load and the
-    fold publish through `pipeline.commit.publish_version` (r11,
-    ADVICE r10): each writes a NEW model directory derived only from
-    the previous committed version plus its increment, then flips one
-    atomic pointer — count folds are not replay-idempotent, and the
-    old overwrite-then-marker ordering had a crash window that would
-    silently double the batch contribution on rerun."""
-    from miletos_spark.pipeline.commit import current_version, publish_version
+def _land_dsir_incremental(spark: SparkSession, sf_dir: str) -> str:
+    """The incrementally maintained DSIR count model of the corpus at
+    `sf_dir`: bucket counts landed from the initial load
+    (`landing.dsir_bucket_counts`) with the crawl increment folded in
+    by `update_dsir_model`, both inside one `land_once` build, so the
+    published model holds the increment exactly once. The split is a
+    deterministic hash on doc_id. Returns the model path."""
     from miletos_spark.pipeline.landing import (
         dsir_bucket_counts,
-        dsir_logratios_from_landed,
         update_dsir_model,
     )
-    from miletos_spark.pipeline.sampling import dsir_select
 
     docs = load_table(spark, sf_dir, "documents")
     is_batch = F.pmod(F.xxhash64("doc_id"), F.lit(7)) == 0
 
     def build(root: str) -> None:
-        ptr = os.path.join(root, "MODEL_CURRENT")
-        publish_version(
-            ptr,
-            "model_v0",
-            lambda d: dsir_bucket_counts(docs.filter(~is_batch), 64)
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(d),
-        )
-        v0 = current_version(ptr)
-        publish_version(
-            ptr,
-            "model_v1",
-            lambda d: update_dsir_model(
-                spark, v0, docs.filter(is_batch), m_buckets=64, out_path=d
-            ),
+        v0 = os.path.join(root, "model_v0")
+        dsir_bucket_counts(docs.filter(~is_batch), 64).coalesce(1).write.mode(
+            "overwrite"
+        ).parquet(v0)
+        update_dsir_model(
+            spark, v0, docs.filter(is_batch), os.path.join(root, "model")
         )
 
     src = os.path.join(sf_dir, "documents.parquet")
-    root = land_once("dsiri2", build, src)
-    mpath = current_version(os.path.join(root, "MODEL_CURRENT"))
-    model = dsir_logratios_from_landed(spark, mpath, 64)
+    return os.path.join(land_once("dsiri3", build, src), "model")
+
+
+def q_dsir_landed_select_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Incremental DSIR model maintenance as a driver-checked contract
+    (the near_dup_clusters_incremental pattern): selection runs over
+    the log-ratios of `_land_dsir_incremental`'s model — an initial
+    load plus a crawl increment folded in with `update_dsir_model`,
+    O(batch) gram work, counts being the additive sufficient
+    statistic. The oracle is the FULL-CORPUS model's selection
+    (_sql_dsir_select verbatim), so append==rebuild is exactly what
+    the hash gate proves."""
+    from miletos_spark.pipeline.landing import dsir_logratios_from_landed
+    from miletos_spark.pipeline.sampling import dsir_select
+
+    model = dsir_logratios_from_landed(
+        spark, _land_dsir_incremental(spark, sf_dir), 64
+    )
+    docs = load_table(spark, sf_dir, "documents")
     raw = docs.filter(F.col("lang") != "en")
     picked = dsir_select(raw, None, k=40, m_buckets=64, model=model)
     return picked.select("doc_id", "lang", "source", "logw_q", "key_q")
@@ -1941,36 +1934,33 @@ def q_stream_pack_bins_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     twice. The 2-file parity feed makes batch composition
     content-determined, so the oracle replays per-(parity, lang,
     block) next-fit row-by-row with the recursive CTE."""
-    import shutil
-    import tempfile
-    import uuid
-
     from miletos_spark.streaming.ingest import (
         read_stream_pack_bins,
         stream_pack_bins,
     )
 
     land = _land_docs_tokens_parity_feed(spark, sf_dir)
-    work = os.path.join(
-        tempfile.gettempdir(), "miletos_spbins_" + uuid.uuid4().hex[:8]
-    )
-    out_dir, state_dir = os.path.join(work, "out"), os.path.join(work, "state")
-    stream_pack_bins(
-        spark,
-        land,
-        "lang string, doc_id long, n_tokens long",
-        out_dir,
-        state_dir,
-        capacity=512,
-        block_width=256,
-        max_files_per_trigger=1,
-    )
-    out = read_stream_pack_bins(spark, out_dir, state_dir).select(
-        "lang", "block", "doc_id", "n_tokens", "bin", "offset", "fill_after"
-    )
-    pinned = spark.createDataFrame(out.collect(), out.schema)
-    shutil.rmtree(work, ignore_errors=True)
-    return pinned
+
+    def run(work: str) -> DataFrame:
+        out_dir, state_dir = (
+            os.path.join(work, "out"), os.path.join(work, "state")
+        )
+        stream_pack_bins(
+            spark,
+            land,
+            "lang string, doc_id long, n_tokens long",
+            out_dir,
+            state_dir,
+            capacity=512,
+            block_width=256,
+            max_files_per_trigger=1,
+        )
+        return read_stream_pack_bins(spark, out_dir, state_dir).select(
+            "lang", "block", "doc_id", "n_tokens", "bin", "offset",
+            "fill_after",
+        )
+
+    return _in_work_dir("spbins", run)
 
 
 SQL_STREAM_PACK_BINS = r"""
@@ -2180,9 +2170,6 @@ def q_serving_shards_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     and groups by floor(rank/R) — integer-exact, so the driver hash
     proves the landed layout equals the arithmetic contract
     (max_rank - min_rank + 1 == n_rows ⇔ rank-contiguity)."""
-    import tempfile
-    import uuid
-
     from miletos_spark.pipeline.packing import (
         epoch_order,
         write_serving_shards,
@@ -2192,33 +2179,25 @@ def q_serving_shards_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     order = epoch_order(
         seqs, seed=7, epoch=2, key_cols=("lang", "seq_bin"), bucket_count=64
     )
-    import shutil
 
-    path = os.path.join(
-        tempfile.gettempdir(), "miletos_servshards_" + uuid.uuid4().hex[:8]
-    )
-    write_serving_shards(order, path, rows_per_shard=16)
-    landed = spark.read.parquet(path)
-    out = (
-        landed.groupBy("serve_shard")
-        .agg(
-            F.count("*").alias("n_rows"),
-            F.min("rank").alias("min_rank"),
-            F.max("rank").alias("max_rank"),
-            F.sum("seq_bin").alias("sum_seq_bin"),
+    def run(path: str) -> DataFrame:
+        write_serving_shards(order, path, rows_per_shard=16)
+        return (
+            spark.read.parquet(path)
+            .groupBy("serve_shard")
+            .agg(
+                F.count("*").alias("n_rows"),
+                F.min("rank").alias("min_rank"),
+                F.max("rank").alias("max_rank"),
+                F.sum("seq_bin").alias("sum_seq_bin"),
+            )
+            .select(
+                F.col("serve_shard").cast("long").alias("serve_shard"),
+                "n_rows", "min_rank", "max_rank", "sum_seq_bin",
+            )
         )
-        .select(
-            F.col("serve_shard").cast("long").alias("serve_shard"),
-            "n_rows", "min_rank", "max_rank", "sum_seq_bin",
-        )
-    )
-    # pin the O(|shards|) summary eagerly so the per-invocation uuid
-    # landing can be deleted before the caller collects (repeated
-    # bench/sweep invocations in one container must not accumulate
-    # 10-MB temp layouts)
-    pinned = spark.createDataFrame(out.collect(), out.schema)
-    shutil.rmtree(path, ignore_errors=True)
-    return pinned
+
+    return _in_work_dir("servshards", run)
 
 
 def _sql_serving_shards() -> str:
@@ -4688,33 +4667,32 @@ def q_near_dup_clusters_incremental(
     """Incremental cluster MAINTENANCE as a driver-checked contract:
     the verified near-dup pairs are split by a deterministic hash into
     an initial load and an appended batch; the initial half is clustered and LANDED
-    (`land_cluster_index`), the batch is merged in with
+    (`land_cluster_index`), the batch is folded in with
     `update_cluster_index` — O(batch + touched components), members
     of untouched components never read or rewritten — and the landed
-    table is aggregated exactly like `near_dup_clusters`. The oracle
-    is the FULL-REBUILD transitive closure over all-pairs exact
-    Jaccard (SQL_NEAR_DUP_CLUSTERS verbatim), so append==rebuild is
-    precisely what the hash gate proves, on top of the bit-equality
-    unit tests."""
+    table is aggregated exactly like `near_dup_clusters`. Land and
+    fold run inside one `land_once` build, so a published memo is
+    never rewritten. The oracle is the FULL-REBUILD transitive
+    closure over all-pairs exact Jaccard (SQL_NEAR_DUP_CLUSTERS
+    verbatim), so append==rebuild is precisely what the hash gate
+    proves, on top of the bit-equality unit tests."""
+    from miletos_spark.pipeline.commit import current_fold_version
     from miletos_spark.pipeline.landing import (
         land_cluster_index,
         update_cluster_index,
     )
 
-    docs = load_table(spark, sf_dir, "documents")
-    pairs = _verified_minhash_pairs(docs, sf_dir)
-    is_init = F.pmod(F.xxhash64("id_a", "id_b"), F.lit(2)) == 0
-    root = land_once(
-        "cci",
-        lambda r: land_cluster_index(
-            spark, pairs.filter(is_init), os.path.join(r, "clusters")
-        ),
-        os.path.join(sf_dir, "documents.parquet"),
-    )
-    cpath = os.path.join(root, "clusters")
-    # the appended batch — idempotent under replay (re-runs no-op)
-    update_cluster_index(spark, cpath, pairs.filter(~is_init))
-    return _cluster_rows(spark.read.parquet(cpath))
+    def build(root: str) -> None:
+        docs = load_table(spark, sf_dir, "documents")
+        pairs = _verified_minhash_pairs(docs, sf_dir)
+        is_init = F.pmod(F.xxhash64("id_a", "id_b"), F.lit(2)) == 0
+        store = os.path.join(root, "clusters")
+        land_cluster_index(spark, pairs.filter(is_init), store)
+        update_cluster_index(spark, store, pairs.filter(~is_init), "batch")
+
+    root = land_once("cci2", build, os.path.join(sf_dir, "documents.parquet"))
+    data = current_fold_version(os.path.join(root, "clusters"))
+    return _cluster_rows(spark.read.parquet(data))
 
 
 def q_split_assign_clustered_docs(
@@ -6142,6 +6120,24 @@ STREAM_SCHEMA = (
 )
 
 
+def _in_work_dir(prefix: str, run: "Callable[[str], DataFrame]") -> DataFrame:
+    """`run(work)` on a fresh `miletos_<prefix>_<uuid>` dir under the
+    temp dir; the frame it returns is pinned with a JVM-side
+    `localCheckpoint` and the dir removed on every path, so a call
+    leaves no scratch output, markers or stream checkpoint behind."""
+    import shutil
+    import tempfile
+    import uuid
+
+    work = os.path.join(
+        tempfile.gettempdir(), f"miletos_{prefix}_{uuid.uuid4().hex[:8]}"
+    )
+    try:
+        return run(work).localCheckpoint(eager=True)
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
+
+
 def _drain_memory_stream(
     spark: SparkSession,
     sdf: DataFrame,
@@ -6733,34 +6729,31 @@ def q_stream_pack_shards_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     layout is BIT-IDENTICAL to the batch curation→pack composition —
     which is exactly what the oracle replays. One row per kept
     distinct doc: (lang, doc_id, n_tokens, start_bin, n_straddle)."""
-    import os
-    import tempfile
-    import uuid
-
     from miletos_spark.streaming.ingest import (
         read_committed_shards,
         stream_pack_shards,
     )
 
     land = _land_docs_pack_feed(spark, sf_dir)
-    work = os.path.join(
-        tempfile.gettempdir(), "miletos_spack_" + uuid.uuid4().hex[:8]
-    )
-    out_dir = os.path.join(work, "out")
-    state_dir = os.path.join(work, "state")
-    stream_pack_shards(
-        spark,
-        land,
-        CURATION_STREAM_SCHEMA,
-        out_dir,
-        state_dir,
-        capacity=512,
-        max_files_per_trigger=1,
-    )
-    # committed batches only — the reader half of the commit protocol
-    return read_committed_shards(spark, out_dir, state_dir).select(
-        "lang", "doc_id", "n_tokens", "start_bin", "n_straddle"
-    )
+
+    def run(work: str) -> DataFrame:
+        out_dir = os.path.join(work, "out")
+        state_dir = os.path.join(work, "state")
+        stream_pack_shards(
+            spark,
+            land,
+            CURATION_STREAM_SCHEMA,
+            out_dir,
+            state_dir,
+            capacity=512,
+            max_files_per_trigger=1,
+        )
+        # committed batches only — the reader half of the commit protocol
+        return read_committed_shards(spark, out_dir, state_dir).select(
+            "lang", "doc_id", "n_tokens", "start_bin", "n_straddle"
+        )
+
+    return _in_work_dir("spack", run)
 
 
 def _sql_stream_pack_shards() -> str:
@@ -7937,10 +7930,6 @@ def q_stream_media_decisions(spark: SparkSession, sf_dir: str) -> DataFrame:
     completes inside its micro-batch; the corpus side is the static
     landed index. Oracle: the shared pixel-space replay composed to
     arrival-oriented matched-frame fractions."""
-    import os
-    import tempfile
-    import uuid
-
     from miletos_spark.pipeline.multimodal import MEDIA_SCHEMA
     from miletos_spark.streaming.ingest import (
         read_media_decisions,
@@ -7950,28 +7939,30 @@ def q_stream_media_decisions(spark: SparkSession, sf_dir: str) -> DataFrame:
     bands = _land_media_phash_index(spark)
     root = os.path.dirname(bands)
     land = _land_media_arrivals(spark)
-    work = os.path.join(
-        tempfile.gettempdir(), "miletos_smdec_" + uuid.uuid4().hex[:8]
-    )
-    out_dir, state_dir = os.path.join(work, "out"), os.path.join(work, "state")
-    stream_media_decisions(
-        spark,
-        land,
-        MEDIA_SCHEMA,
-        bands,
-        out_dir,
-        state_dir,
-        max_hamming=3,
-        frac_threshold=0.8,
-        max_files_per_trigger=1,
-        # pre-collapsed index tables: no O(index) distinct per batch
-        distinct_path=os.path.join(root, "bands_distinct"),
-        presence_path=os.path.join(root, "presence"),
-        fp_df_path=os.path.join(root, "fp_df"),
-    )
-    return read_media_decisions(spark, out_dir, state_dir).select(
-        "arrival_id", "matched_id", "n_frames", "n_matched"
-    )
+
+    def run(work: str) -> DataFrame:
+        out_dir = os.path.join(work, "out")
+        state_dir = os.path.join(work, "state")
+        stream_media_decisions(
+            spark,
+            land,
+            MEDIA_SCHEMA,
+            bands,
+            out_dir,
+            state_dir,
+            max_hamming=3,
+            frac_threshold=0.8,
+            max_files_per_trigger=1,
+            # pre-collapsed index tables: no O(index) distinct per batch
+            distinct_path=os.path.join(root, "bands_distinct"),
+            presence_path=os.path.join(root, "presence"),
+            fp_df_path=os.path.join(root, "fp_df"),
+        )
+        return read_media_decisions(spark, out_dir, state_dir).select(
+            "arrival_id", "matched_id", "n_frames", "n_matched"
+        )
+
+    return _in_work_dir("smdec", run)
 
 
 # Directional arrival-vs-corpus composition of the shared pixel-space

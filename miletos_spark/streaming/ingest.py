@@ -1265,12 +1265,14 @@ def stream_assign_splits_clustered(
     run the assignment is a pure function of (id, cluster snapshot at
     start), so a replayed batch derives identical splits (a sink must
     still commit per batch to count each row once; see
-    `pipeline.commit.drain_committed`). Avoid IN-PLACE overwrites of
-    the landed table while a stream runs — deleted files can fail
-    in-flight micro-batches; `update_cluster_index`'s versioned-dir
-    publishes are safe. Re-resolving the table per micro-batch would
-    buy currency at the price of mid-run split flips, the worse trade
-    for splits.
+    `pipeline.commit.drain_committed`). Pass a committed version dir
+    of the cluster store: `update_cluster_index` commits each fold as
+    a new version and never modifies a committed one, but deletes a
+    version once `commit.KEEP_VERSIONS` newer ones exist, and deleted
+    files fail in-flight micro-batches — restart the stream before
+    that many folds land. Re-resolving the table per micro-batch
+    would buy currency at the price of mid-run split flips, the worse
+    trade for splits.
 
     ZERO STATE: one stream-static left join against the landed
     clusters (Structured Streaming allows static right sides with no

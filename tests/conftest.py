@@ -53,3 +53,78 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+
+class Crash(Exception):
+    """The failure `crash_sweep` injects at one crash point."""
+
+
+def _crash_points():
+    """(owner, attribute, index of the path argument) of every call that
+    can leave landed or streamed state half-committed: the marker
+    write, the renames that publish a marker or a directory, the
+    deletes, and Spark's parquet writes."""
+    import shutil
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from miletos_spark.pipeline import commit
+
+    return (
+        (commit, "write_marker", 0),
+        (os, "replace", 0),
+        (os, "rename", 0),
+        (shutil, "rmtree", 0),
+        (DataFrameWriter, "parquet", 1),
+    )
+
+
+@pytest.fixture
+def crash_sweep(tmp_path):
+    """The crash-point harness: `crash_sweep(run, state)`.
+
+    `run(work)` writes all of its state under the directory `work`, and
+    `state(work)` reads it back; an uninterrupted run gives the wanted
+    state. Then, for k = 1, 2, ..., a run in a fresh dir has the k-th
+    crash-point call on a path under that dir raise `Crash`, and the
+    resumed run (same dir, nothing patched) must give the wanted state.
+    The sweep ends at the first k that a run does not reach, and
+    returns the number of crash points swept."""
+
+    def sweep(run, state):
+        ref = str(tmp_path / "ref")
+        run(ref)
+        want = state(ref)
+        k = 0
+        while True:
+            k += 1
+            work = str(tmp_path / f"crash{k}")
+            calls = []
+
+            def arm(real, at):
+                def crashing(*args, **kwargs):
+                    path = str(args[at]) if len(args) > at else ""
+                    if path == work or path.startswith(work + os.sep):
+                        calls.append(path)
+                        if len(calls) == k:
+                            raise Crash(f"crash point {k} at {path}")
+                    return real(*args, **kwargs)
+
+                return crashing
+
+            with pytest.MonkeyPatch.context() as mp:
+                for owner, name, at in _crash_points():
+                    mp.setattr(owner, name, arm(getattr(owner, name), at))
+                try:
+                    run(work)
+                except Exception as exc:
+                    if f"crash point {k} at" not in str(exc):
+                        raise
+            if len(calls) < k:
+                assert state(work) == want
+                return k - 1
+            run(work)
+            assert state(work) == want, f"resumed after {calls[-1]}"
+
+    return sweep

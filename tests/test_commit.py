@@ -1,25 +1,17 @@
-"""The shared manifest-commit seam (pipeline/commit.py, VERDICT r10
-Missing #4): one tested code path for the atomic marker, the versioned
-publish with pointer flip, and the pruned dynamic-partition overwrite.
-The crash-replay assertions live HERE — the three landing seams
-(pack-shards markers, cluster-index bucket rewrite, DSIR model fold)
-inherit them by construction."""
+"""The commit seam (pipeline/commit.py): the atomic marker, the
+build-once `land_once` publish, and the versioned partition fold — the
+two commit shapes of incremental state. `test_crash_sweep_resumes_
+exactly_once` crashes each writer built on them at every commit point
+(the drains' sweep is in test_stream_commit.py)."""
 
 from __future__ import annotations
 
 import os
-import shutil
 
 import pytest
-from pyspark.sql import functions as F
 
-from miletos_spark.pipeline.commit import (
-    current_version,
-    overwrite_partitions,
-    publish_version,
-    read_marker,
-    write_marker,
-)
+from miletos_spark.pipeline import commit
+from miletos_spark.pipeline.commit import read_marker, write_marker
 
 
 def test_marker_roundtrip_and_atomicity(tmp_path):
@@ -65,152 +57,8 @@ def test_marker_concurrent_writers_never_share_a_tmp(tmp_path):
     assert os.listdir(tmp_path / "commits") == ["0"]
 
 
-def test_publish_version_flip_and_noop(tmp_path):
-    ptr = str(tmp_path / "CURRENT")
-    calls = []
-
-    def build(d):
-        calls.append(d)
-        os.makedirs(d)
-        with open(os.path.join(d, "data"), "w") as f:
-            f.write("v0")
-
-    target, wrote = publish_version(ptr, "v0", build)
-    assert wrote and current_version(ptr) == target
-    # committed version: verified no-op, build not re-run
-    _, wrote2 = publish_version(ptr, "v0", build)
-    assert not wrote2 and len(calls) == 1
-
-
-def test_publish_version_crash_before_flip_replays_clean(tmp_path):
-    """The ADVICE r10 crash window: die after the build commits but
-    before the pointer flips → the pointer still names the OLD
-    version, and the replay rebuilds the new one from unchanged
-    inputs — the increment is applied exactly once."""
-    ptr = str(tmp_path / "CURRENT")
-
-    def write_counts(d, value):
-        os.makedirs(d, exist_ok=True)
-        with open(os.path.join(d, "counts"), "w") as f:
-            f.write(str(value))
-
-    publish_version(ptr, "v0", lambda d: write_counts(d, 10))
-
-    def fold(d):
-        with open(os.path.join(current_version(ptr), "counts")) as f:
-            base = int(f.read())
-        write_counts(d, base + 5)  # derived from COMMITTED version only
-
-    class Boom(RuntimeError):
-        pass
-
-    def fold_then_crash(d):
-        fold(d)
-        raise Boom()  # dies after the data is on disk, before the flip
-
-    with pytest.raises(Boom):
-        publish_version(ptr, "v1", fold_then_crash)
-    # pointer untouched; the half-published dir is invisible
-    assert os.path.basename(current_version(ptr)) == "v0"
-    # replay: same fold, lands exactly once
-    publish_version(ptr, "v1", fold)
-    with open(os.path.join(current_version(ptr), "counts")) as f:
-        assert int(f.read()) == 15
-
-
-def test_overwrite_partitions_prunes_and_drains(spark, tmp_path):
-    path = str(tmp_path / "part")
-    base = spark.createDataFrame(
-        [(i, i % 4) for i in range(40)], "v long, _pb int"
-    )
-    base.write.partitionBy("_pb").parquet(path)
-    # rewrite partitions 1 and 2: 1 gets new content, 2 drains to zero
-    rows = spark.createDataFrame([(100, 1), (101, 1)], "v long, _pb int")
-    overwrite_partitions(spark, rows, path, "_pb", [1, 2])
-    got = {
-        (r["v"], r["_pb"])
-        for r in spark.read.parquet(path).collect()
-    }
-    want = {(i, i % 4) for i in range(40) if i % 4 in (0, 3)} | {
-        (100, 1),
-        (101, 1),
-    }
-    assert got == want
-    assert not os.path.exists(os.path.join(path, "_pb=2"))
-    # untouched partition dirs survive byte-for-byte (never rewritten)
-    assert os.path.isdir(os.path.join(path, "_pb=0"))
-    # conf restored
-    assert (
-        spark.conf.get("spark.sql.sources.partitionOverwriteMode").lower()
-        != "dynamic"
-    )
-
-
-def test_dsir_versioned_fold_is_crash_idempotent(spark, tmp_path):
-    """End-to-end replay of the seam that motivated the module: the
-    DSIR count fold through publish_version applies a batch exactly
-    once even when the first attempt dies between the parquet write
-    and the pointer flip (the double-fold bug the old
-    overwrite-then-marker ordering had)."""
-    from miletos_spark.pipeline.landing import (
-        dsir_bucket_counts,
-        update_dsir_model,
-    )
-
-    docs = spark.createDataFrame(
-        [
-            (i, "en" if i % 2 == 0 else "fr", f"alpha beta gamma doc {i}")
-            for i in range(30)
-        ],
-        "doc_id long, lang string, text string",
-    )
-    init = docs.filter(F.col("doc_id") < 20)
-    batch = docs.filter(F.col("doc_id") >= 20)
-
-    root = str(tmp_path / "dsir")
-    os.makedirs(root)
-    ptr = os.path.join(root, "MODEL_CURRENT")
-    publish_version(
-        ptr,
-        "model_v0",
-        lambda d: dsir_bucket_counts(init, 16)
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(d),
-    )
-    v0 = current_version(ptr)
-
-    class Boom(RuntimeError):
-        pass
-
-    def fold_crash(d):
-        update_dsir_model(spark, v0, batch, m_buckets=16, out_path=d)
-        raise Boom()
-
-    with pytest.raises(Boom):
-        publish_version(ptr, "model_v1", fold_crash)
-    assert os.path.basename(current_version(ptr)) == "model_v0"
-    publish_version(
-        ptr,
-        "model_v1",
-        lambda d: update_dsir_model(
-            spark, v0, batch, m_buckets=16, out_path=d
-        ),
-    )
-    got = {
-        (r["bucket"], r["ct"], r["cr"])
-        for r in spark.read.parquet(current_version(ptr)).collect()
-    }
-    want = {
-        (r["bucket"], r["ct"], r["cr"])
-        for r in dsir_bucket_counts(docs, 16).collect()
-    }
-    assert got == want  # folded exactly once == full rebuild
-    shutil.rmtree(root, ignore_errors=True)
-
 def test_fold_partitions_versioned_atomic_and_replay_noop(spark, tmp_path):
-    """ADVICE r11 (update_bucket_counts crash safety), at the seam:
-    the versioned partition fold (a) re-references untouched
+    """The versioned partition fold (a) re-references untouched
     partitions, (b) survives a stale half-built target from a crashed
     attempt, (c) no-ops a replayed batch_tag, and (d) keeps counts
     equal to a rebuild through all of it."""
@@ -259,50 +107,8 @@ def test_fold_partitions_versioned_atomic_and_replay_noop(spark, tmp_path):
     } == want
 
 
-def test_update_bucket_counts_replayed_batch_is_noop(spark, tmp_path):
-    """The landing-level contract over the seam: a replayed
-    update_bucket_counts batch_tag leaves counts and max_bucket stats
-    exactly as the first application did."""
-    from miletos_spark.pipeline.commit import fold_partitions_versioned
-    from miletos_spark.pipeline.landing import (
-        BAND_GROUPS,
-        bucket_counts_dir,
-        read_index_stats,
-        update_bucket_counts,
-        write_index_stats,
-    )
-
-    root = str(tmp_path / "idx")
-    paths = {"counts": os.path.join(root, "bucket_counts")}
-    init = spark.createDataFrame(
-        [(b, f"h{b}", 1) for b in range(8)], "band int, bhash string, c long"
-    ).withColumn("_bg", F.pmod(F.xxhash64("band", "bhash"), F.lit(BAND_GROUPS)))
-    fold_partitions_versioned(
-        init, paths["counts"], "_bg", range(BAND_GROUPS), "__init__"
-    )
-    write_index_stats(root, {"max_bucket": 1})
-
-    batch = spark.createDataFrame(
-        [(0, "h0"), (0, "h0"), (1, "hx")], "band int, bhash string"
-    )
-    update_bucket_counts(spark, paths, batch, ["band", "bhash"], batch_tag="b7")
-    snap = sorted(
-        (r["band"], r["bhash"], r["c"])
-        for r in spark.read.parquet(bucket_counts_dir(paths)).collect()
-    )
-    stats = read_index_stats(root)
-    assert stats["max_bucket"] == 3  # h0: 1 + 2
-
-    update_bucket_counts(spark, paths, batch, ["band", "bhash"], batch_tag="b7")
-    assert sorted(
-        (r["band"], r["bhash"], r["c"])
-        for r in spark.read.parquet(bucket_counts_dir(paths)).collect()
-    ) == snap
-    assert read_index_stats(root)["max_bucket"] == 3
-
-
 def test_fold_partitions_versioned_rejects_escaped_values(spark, tmp_path):
-    """ADVICE r12: untouched-partition matching compares raw dir names,
+    """Untouched-partition matching compares raw dir names,
     so a partition value Spark would URL-escape (space, '%', ':') must
     be rejected up front — it would otherwise be BOTH hardlinked from
     the previous version and rewritten fresh, duplicating rows."""
@@ -321,39 +127,13 @@ def test_fold_partitions_versioned_rejects_escaped_values(spark, tmp_path):
         ok, str(tmp_path / "store2"), "_bg", [3], "b0"
     )
     assert applied and spark.read.parquet(d).count() == 1
-    # ADVICE r13: a TRAILING NEWLINE slipped past the old $-anchored
-    # regex (Python's $ matches before '\n') yet Spark escapes '\n' in
-    # partition dirs — fullmatch closes it
+    # a trailing newline passes a $-anchored regex (Python's $ matches
+    # before '\n'), yet Spark escapes '\n' in partition dirs
     nl = spark.createDataFrame([("a\n", 1)], "_bg string, v int")
     with _pytest.raises(ValueError, match="path escaping"):
         fold_partitions_versioned(
             nl, str(tmp_path / "store3"), "_bg", ["a\n"], "b0"
         )
-
-
-def test_overwrite_partitions_rejects_escaped_values(spark, tmp_path):
-    """ADVICE r13: `overwrite_partitions` builds raw f'{part_col}={p}'
-    paths for drained-partition deletion — a value Spark escapes
-    produces a non-matching path whose rmtree(ignore_errors=True)
-    silently leaves the stale partition's rows live. Same guard as
-    `fold_partitions_versioned` (shared `_check_part_safe` helper)."""
-    import pytest as _pytest
-
-    path = str(tmp_path / "part")
-    base = spark.createDataFrame([(1, "a b"), (2, "ok")], "v int, _pb string")
-    base.write.partitionBy("_pb").parquet(path)
-    rows = spark.createDataFrame([(9, "ok")], "v int, _pb string")
-    with _pytest.raises(ValueError, match="path escaping"):
-        overwrite_partitions(spark, rows, path, "_pb", ["a b", "ok"])
-    with _pytest.raises(ValueError, match="path escaping"):
-        overwrite_partitions(spark, rows, path, "_pb", ["ok\n"])
-    # the guard did not disturb the landed data, and safe values work
-    assert spark.read.parquet(path).count() == 2
-    overwrite_partitions(spark, rows, path, "_pb", ["ok"])
-    got = {
-        (r["v"], r["_pb"]) for r in spark.read.parquet(path).collect()
-    }
-    assert got == {(1, "a b"), (9, "ok")}
 
 
 def test_land_once_concurrent_builders_publish_one_complete_dir(
@@ -486,3 +266,95 @@ def test_land_once_sweeps_the_tmp_of_a_killed_builder(tmp_path, monkeypatch):
     root = land_once("killed", os.makedirs)
     assert os.path.isdir(root)
     assert [n for n in os.listdir(tmp_path) if n.endswith(".tmp")] == []
+
+
+def _land_once_writer(spark):
+    """`land_once` itself: a build of two parquet writes and a marker."""
+    import tempfile
+
+    def run(work):
+        def build(d):
+            spark.range(5).write.parquet(os.path.join(d, "a"))
+            spark.range(5, 9).write.parquet(os.path.join(d, "b"))
+            commit.write_marker(os.path.join(d, "_STATS.json"), {"rows": 9})
+
+        os.makedirs(work, exist_ok=True)
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(tempfile, "tempdir", work)
+            commit.land_once("sweep", build)
+
+    def state(work):
+        [name] = os.listdir(work)  # the root, and no tmp sibling
+        root = os.path.join(work, name)
+        return (
+            name,
+            [sorted(r.id for r in spark.read.parquet(os.path.join(root, p))
+                    .collect()) for p in "ab"],
+            read_marker(os.path.join(root, "_STATS.json")),
+        )
+
+    return run, state
+
+
+def _cluster_fold_writer(spark):
+    """The cluster store: land v0, fold a batch that drains a bucket,
+    then a batch that prunes the oldest version."""
+    from miletos_spark.pipeline.landing import (
+        land_cluster_index,
+        update_cluster_index,
+    )
+
+    def edges(pairs):
+        return spark.createDataFrame(pairs, "id_a long, id_b long")
+
+    def run(work):
+        store = os.path.join(work, "clusters")
+        land_cluster_index(spark, edges([(1, 2), (7, 8)]), store, n_buckets=4)
+        update_cluster_index(spark, store, edges([(2, 8)]), "b1", n_buckets=4)
+        update_cluster_index(
+            spark, store, edges([(20, 21), (8, 20)]), "b2", n_buckets=4
+        )
+
+    def state(work):
+        store = os.path.join(work, "clusters")
+        rows = spark.read.parquet(commit.current_fold_version(store))
+        return (
+            sorted((r.node, r.component) for r in rows.collect()),
+            read_marker(os.path.join(store, commit.POINTER_NAME))["batches"],
+        )
+
+    return run, state
+
+
+def _dsir_build_writer(spark, sf_dir):
+    """The DSIR model's `land_once` build: land v0, fold the increment."""
+    import tempfile
+
+    from miletos_spark.plans.driver_queries import _land_dsir_incremental
+
+    def run(work):
+        os.makedirs(work, exist_ok=True)
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(tempfile, "tempdir", work)
+            _land_dsir_incremental(spark, sf_dir)
+
+    def state(work):
+        [name] = os.listdir(work)
+        model = os.path.join(work, name, "model")
+        return name, sorted(tuple(r) for r in spark.read.parquet(model).collect())
+
+    return run, state
+
+
+@pytest.mark.parametrize("writer", ["land_once", "cluster_fold", "dsir_build"])
+def test_crash_sweep_resumes_exactly_once(spark, sf_dir, crash_sweep, writer):
+    """For every k, the writer's k-th commit point (a parquet write, a
+    marker write, a rename or a delete) fails; resuming on the same
+    state gives exactly the state of an uninterrupted run — no build,
+    fold or row applied twice, none lost."""
+    run, state = {
+        "land_once": lambda: _land_once_writer(spark),
+        "cluster_fold": lambda: _cluster_fold_writer(spark),
+        "dsir_build": lambda: _dsir_build_writer(spark, sf_dir),
+    }[writer]()
+    assert crash_sweep(run, state) >= 4

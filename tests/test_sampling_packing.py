@@ -1649,8 +1649,8 @@ def test_assign_splits_clustered_follows_incremental_clusters(
     def edges(pairs):
         return spark.createDataFrame(pairs, "id_a long, id_b long")
 
-    land_cluster_index(spark, edges([(5, 6), (20, 21)]), path, n_buckets=4)
-    comp0 = spark.read.parquet(path).select("node", "component")
+    v0 = land_cluster_index(spark, edges([(5, 6), (20, 21)]), path, n_buckets=4)
+    comp0 = spark.read.parquet(v0).select("node", "component")
     s0 = {
         r["doc_id"]: r["split"]
         for r in assign_splits_clustered(docs, comp0).collect()
@@ -1658,8 +1658,8 @@ def test_assign_splits_clustered_follows_incremental_clusters(
     assert s0[5] == s0[6] and s0[20] == s0[21]
 
     # append merges {5,6} with {20,21} via a bridging near-dup pair
-    update_cluster_index(spark, path, edges([(6, 20)]), n_buckets=4)
-    comp1 = spark.read.parquet(path).select("node", "component")
+    v1 = update_cluster_index(spark, path, edges([(6, 20)]), "b1", n_buckets=4)
+    comp1 = spark.read.parquet(v1).select("node", "component")
     s1 = {
         r["doc_id"]: r["split"]
         for r in assign_splits_clustered(docs, comp1).collect()

@@ -462,52 +462,6 @@ def test_semantic_dedup_2l_block_join_equals_bruteforce(spark):
     assert got == want and len(got) >= 30
 
 
-def test_update_ivf2_index_appends_consistently(spark, sf_dir):
-    """Incremental append into the landed two-level index: the batch
-    lands in the same partition layout, assigned bit-identically to
-    the frozen persisted quantizer (numpy replay check), and the
-    grown index is what readers see — no rebuild, no migration."""
-    import numpy as np
-
-    from miletos_spark.pipeline.landing import (
-        land_ivf2_index,
-        update_ivf2_index,
-    )
-
-    paths = land_ivf2_index(spark, sf_dir, n_clusters=8, overwrite=True)
-    before = spark.read.parquet(paths["cells"]).count()
-    rng = np.random.default_rng(13)
-    batch = spark.createDataFrame(
-        [
-            (900000 + i, [float(x) for x in rng.standard_normal(64)])
-            for i in range(25)
-        ],
-        "vec_id long, embedding array<double>",
-    )
-    update_ivf2_index(spark, paths, batch)
-    cells = spark.read.parquet(paths["cells"])
-    assert cells.count() == before + 25
-    coarse = spark.read.parquet(paths["coarse"]).collect()
-    fine = spark.read.parquet(paths["fine"]).collect()
-    cs = {r["super"]: np.array(r["center"]) for r in coarse}
-    fs: dict[int, list] = {}
-    for r in fine:
-        fs.setdefault(r["super"], []).append(
-            (r["fine"], np.array(r["center"]))
-        )
-    got = {
-        r["vec_id"]: (r["_super"], r["_fine"])
-        for r in cells.filter(F.col("vec_id") >= 900000).collect()
-    }
-    assert len(got) == 25
-    for r in batch.collect():
-        v = np.array(r["embedding"])
-        ws = min(sorted(cs), key=lambda s: (((v - cs[s]) ** 2).sum(), s))
-        wf = min(
-            sorted(fs[ws]), key=lambda t: (((v - t[1]) ** 2).sum(), t[0])
-        )[0]
-        assert got[r["vec_id"]] == (ws, wf), r["vec_id"]
-
 def test_semantic_decontaminate_exact_flags_planted_only(spark):
     """The broadcast-exact semantic decontamination (VERDICT r11
     Missing #1): every jittered eval copy in the training corpus is

@@ -3,7 +3,7 @@
 which all commit through `pipeline.commit.drain_committed` and read
 back through `pipeline.commit.read_committed`: a restart that renumbers
 batches must refuse rather than double-count, an uncommitted batch dir
-must be invisible, and a crash before any marker must resume to the
+must be invisible, and a crash at any commit point must resume to the
 uninterrupted output."""
 
 from __future__ import annotations
@@ -133,33 +133,43 @@ def test_uncommitted_batch_dir_is_invisible(spark, sf_dir, tmp_path, name):
 
 @pytest.mark.parametrize("name", sorted(DRAINS))
 def test_drain_crash_at_every_marker_resumes_exactly_once(
-    spark, sf_dir, tmp_path, monkeypatch, name
+    spark, sf_dir, crash_sweep, name
 ):
-    """For every k, the k-th marker write fails (the batch's rows are
-    on disk, its commit is not); resuming on the same state must give
-    the committed rows and marker payloads (manifests, and for the
-    shards their carried offsets) of an uninterrupted drain."""
+    """For every k, the k-th crash point of the drain fails — a batch
+    write, a marker write or its rename — and resuming on the same
+    state must give the committed rows and marker payloads (manifests,
+    and for the shards their carried offsets) of an uninterrupted
+    drain."""
     drain = DRAINS[name][0]
-    ref = str(tmp_path / "ref")
-    drain(spark, sf_dir, ref)
-    want = _committed(spark, name, ref)
-    n = len(want[1])
-    assert n >= 2 and want[0]
-    real = commit.write_marker
-    for k in range(1, n + 1):
-        work = str(tmp_path / f"crash{k}")
-        calls = []
+    swept = crash_sweep(
+        lambda work: drain(spark, sf_dir, work),
+        lambda work: _committed(spark, name, work),
+    )
+    assert swept >= 4
 
-        def crash(path, payload=None):
-            calls.append(path)
-            if len(calls) == k:
-                raise OSError(f"killed before commit {k}")
-            return real(path, payload)
 
-        monkeypatch.setattr(commit, "write_marker", crash)
-        with pytest.raises(Exception, match="killed before commit"):
-            drain(spark, sf_dir, work)
-        monkeypatch.setattr(commit, "write_marker", real)
-        assert commit.last_committed(_dirs(work)[1]) == k - 2
-        drain(spark, sf_dir, work)
-        assert _committed(spark, name, work) == want, f"crash at marker {k}"
+def test_stream_registry_rows_leave_no_work_dir(spark, sf_dir):
+    """A registry row that drains a stream pins its rows and removes its
+    work dir: one call of each adds no `miletos_spack_*` or
+    `miletos_smdec_*` entry to the temp dir, and its rows stay readable
+    after the dir is gone."""
+    import tempfile
+
+    from miletos_spark.plans.driver_queries import (
+        q_stream_media_decisions,
+        q_stream_pack_shards_docs,
+    )
+
+    def work_dirs():
+        return {
+            n for n in os.listdir(tempfile.gettempdir())
+            if n.startswith(("miletos_spack_", "miletos_smdec_"))
+        }
+
+    before = work_dirs()
+    rows = [
+        q(spark, sf_dir).count()
+        for q in (q_stream_pack_shards_docs, q_stream_media_decisions)
+    ]
+    assert work_dirs() - before == set()
+    assert min(rows) > 0
