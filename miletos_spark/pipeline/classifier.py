@@ -102,13 +102,9 @@ def probe_features(
     )
 
 
-def _dec_sum(c: Column) -> Column:
-    # Order-independent fixed-point sum (repo box-agg convention).
-    return F.sum(c.cast("decimal(38,18)")).cast("double")
-
-
 def _dec_sum_sql(prod: str) -> str:
-    # SQL-text twin of `_dec_sum` (same cast sequence, parsed not built)
+    # Order-independent fixed-point sum (repo box-agg convention), as
+    # SQL text: one parsed expression instead of a built Column
     return f"CAST(sum(CAST({prod} AS DECIMAL(38,18))) AS DOUBLE)"
 
 

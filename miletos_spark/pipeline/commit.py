@@ -16,8 +16,10 @@ Incremental state has exactly two commit shapes, plus the stream drain:
   the tmp of any builder whose pid is dead); of two concurrent
   builders the first rename wins and the second discards its copy.
   `overwrite` renames the old root aside, the new one in, then deletes
-  the old one; a crash between the two renames leaves no root (the
-  next call rebuilds) and the old one aside.
+  the old one; if the second rename raises, the old root goes back.
+  Only a killed process leaves the old root aside (and no root, if
+  killed between the renames: the next call rebuilds); the next
+  overwrite of that root removes it.
 - `fold_partitions_versioned`: the one versioned store for a table
   that is folded into across calls (the reference's append-with-dedup
   results table, miletos/main.py:12458-12539). Each fold writes a new
@@ -47,6 +49,7 @@ on a single node.
 
 from __future__ import annotations
 
+import contextlib
 import hashlib
 import json
 import os
@@ -75,12 +78,18 @@ def write_marker(path: str, payload: object = None) -> str:
     """Atomically publish a JSON marker: write to a private
     `<path>.<uuid4>.tmp` then `os.replace` — readers see the old marker,
     no marker, or the complete new one, never a torn file, and two
-    writers of one path never share a tmp. Returns `path`."""
+    writers of one path never share a tmp. A write that raises removes
+    its tmp; only a killed process leaves one. Returns `path`."""
     os.makedirs(os.path.dirname(path), exist_ok=True)
     tmp = f"{path}.{uuid.uuid4().hex}.tmp"
-    with open(tmp, "w") as f:
-        json.dump(payload, f)
-    os.replace(tmp, path)
+    try:
+        with open(tmp, "w") as f:
+            json.dump(payload, f)
+        os.replace(tmp, path)
+    except BaseException:
+        with contextlib.suppress(OSError):
+            os.remove(tmp)
+        raise
     return path
 
 
@@ -103,18 +112,24 @@ def _identity(src: str) -> object:
     return (st.st_mtime_ns, st.st_size)
 
 
-def _sweep_dead_tmps(root: str) -> None:
+def _sweep_orphans(root: str) -> None:
     """Remove the `<root>.<pid>.<uuid4>.tmp` siblings of builders whose
-    pid no longer exists (a SIGKILLed build never reaches its
-    cleanup)."""
+    pid no longer exists (a SIGKILLed build never reaches its cleanup)
+    and, while `root` is published, every `<root>.<uuid4>.old` sibling
+    (an overwritten root whose delete never ran)."""
     parent, base = os.path.split(root)
-    pat = re.compile(re.escape(base) + r"\.(\d+)\.[0-9a-f]{32}\.tmp")
+    tmp = re.compile(re.escape(base) + r"\.(\d+)\.[0-9a-f]{32}\.tmp")
+    old = re.compile(re.escape(base) + r"\.[0-9a-f]{32}\.old")
     try:
         names = os.listdir(parent or ".")
     except FileNotFoundError:
         return
+    published = os.path.isdir(root)
     for name in names:
-        m = pat.fullmatch(name)
+        if published and old.fullmatch(name):
+            shutil.rmtree(os.path.join(parent, name), ignore_errors=True)
+            continue
+        m = tmp.fullmatch(name)
         if m is None:
             continue
         try:
@@ -134,11 +149,12 @@ def publish_dir(
     sibling, which one `os.rename` moves into place. A build that
     raises leaves `root` as it was and its tmp removed; the tmp of a
     killed builder is removed by the next build, once its pid is dead.
+    An overwrite whose second rename raises puts the old root back.
     If another builder published first, this one's copy is discarded
     and the winner's returned. Returns `root`."""
     if os.path.exists(root) and not overwrite:
         return root
-    _sweep_dead_tmps(root)
+    _sweep_orphans(root)
     tmp = f"{root}.{os.getpid()}.{uuid.uuid4().hex}.tmp"
     old = None
     try:
@@ -151,8 +167,12 @@ def publish_dir(
                 old = None
         try:
             os.rename(tmp, root)
-        except OSError:
-            if not os.path.isdir(root):
+        except BaseException as exc:
+            # an OSError with a root in place: another builder won
+            if not (isinstance(exc, OSError) and os.path.isdir(root)):
+                if old is not None:  # put the old root back
+                    with contextlib.suppress(OSError):
+                        os.rename(old, root)
                 raise
     finally:
         shutil.rmtree(tmp, ignore_errors=True)

@@ -61,31 +61,6 @@ def cosine_topk(
     )
 
 
-def pairwise_topk(
-    df: DataFrame,
-    k: int = 10,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    threshold: float = 0.0,
-) -> DataFrame:
-    """All-pairs cosine above a threshold, top-k per left id — the
-    embedding-cosine near-dup detector. Brute force O(n²) reserved for
-    small n; use `lsh_bucket_topk` at scale."""
-    v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    a = df.select(F.col(id_col).alias("id_a"), v.alias("va"))
-    b = df.select(F.col(id_col).alias("id_b"), v.alias("vb"))
-    from pyspark.sql import Window
-
-    scored = (
-        a.join(b, F.col("id_a") < F.col("id_b"))
-        .withColumn("cos_sim", cosine_similarity(F.col("va"), F.col("vb")))
-        .filter(F.col("cos_sim") > threshold)
-        .select("id_a", "id_b", "cos_sim")
-    )
-    w = Window.partitionBy("id_a").orderBy(F.col("cos_sim").desc(), "id_b")
-    return scored.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") <= k).drop("rk")
-
-
 def ivf_topk(
     df: DataFrame,
     query: list[float],
@@ -216,7 +191,7 @@ def lsh_band_near_dup_pairs(
     missed with (1 − p)^n_bands — at the near-dup regime this targets
     (s ≥ 0.99, default bands) that is ≤ 1e-10 per pair; thresholds
     down in the random-similarity bulk (s ≈ 0.5) are NOT prunable by
-    any index and belong to the exact crossJoin path (`pairwise_topk`).
+    any index and belong to an exact all-pairs verify.
 
     PRECONDITION: ``id_col`` must be unique in ``df``: candidate pairs
     are bare (id_a, id_b) keys and the vectors re-attach by two
@@ -622,7 +597,7 @@ def ivfpq_topk_landed_batch(
     → build the residual ADC table (|Q|·n_probe·m·n_centroids rows,
     broadcast) → scan ONLY the probed cell directories' codes → ADC
     top-R per query → optional FAISS-style exact rerank of the bounded
-    R survivors (see `rerank_exact_l2`). All per-query selections are
+    R survivors (`rerank` > 0). All per-query selections are
     window row_numbers keyed on qid, so the whole batch is one plan.
 
     `queries` is (qid, qvec array<double>); returns (qid, vec_id, d2)
@@ -731,35 +706,6 @@ def cosine_topk_batch(
         scored.withColumn("_r", F.row_number().over(w))
         .filter(F.col("_r") <= k)
         .drop("_r")
-    )
-
-
-def rerank_exact_l2(
-    candidates: DataFrame,
-    vectors: DataFrame,
-    query: list[float],
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """FAISS-style refine step (IndexRefineFlat): re-score a BOUNDED
-    approximate candidate set exactly and return the top-k by true
-    squared L2. ADC with a small codebook ranks coarsely (measured
-    recall@10 ≈ 0.3 raw at 4-bit PQ on the test corpus); fetching
-    top-R by ADC and reranking the R survivors exactly recovers the
-    brute-force ordering at R/n of the scan cost. Scale shape: the
-    candidate ids broadcast into a semi-join, so only |R| full vectors
-    are ever read — the corpus itself still never leaves the pruned
-    cell directories."""
-    q = F.array(*[F.lit(float(x)) for x in query])
-    v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    cand_vecs = vectors.join(
-        F.broadcast(candidates.select(id_col)), id_col, "left_semi"
-    )
-    return (
-        cand_vecs.select(F.col(id_col), _l2sq(v, q).alias("d2"))
-        .orderBy("d2", id_col)
-        .limit(k)
     )
 
 
@@ -924,10 +870,11 @@ def assign_cells_2l(
 ) -> DataFrame:
     """Two-level (coarse→fine) quantizer assignment, fully STATELESS
     per row — the sub-quadratic replacement for ranking all k fine
-    cells (VERDICT r8 Wrong #1: a single-level crossJoin against k ∝ n
-    centers is n·k = n²/256 distance work and an un-broadcastable
-    centers table at real scale; 10¹⁰ vectors → 4·10⁷ centroids ×
-    64 doubles ≈ 20 GB).
+    cells (a single-level crossJoin against k ∝ n centers is n·k =
+    n²/256 distance work and an un-broadcastable centers table at real
+    scale; 10¹⁰ vectors → 4·10⁷ centroids × 64 doubles ≈ 20 GB). Being
+    per row, it runs unchanged on a streaming micro-batch
+    (`stream_semantic_dedup`).
 
     Level 1: the ~√k coarse super-centers ride inside each row as ONE
     packed array column on a broadcast 1-row frame (√(4·10⁷) ≈ 6.3k
@@ -949,7 +896,7 @@ def assign_cells_2l(
     The per-center distance deliberately stays in HOF-fold form: the
     unrolled `_l2sq_unrolled` spelling inside these lambdas was
     measured SLOWER here (1.43 vs 0.98 s for the full sf0.1
-    assignment, r14) — the unrolled win is real only where it replaces
+    assignment) — the unrolled win is real only where it replaces
     Column-construction overhead or joins (`_argmin_cell_expr`,
     `pq_encode`), not inside an interpreted lambda."""
     v = F.transform(F.col(vec_col), lambda x: x.cast("double"))

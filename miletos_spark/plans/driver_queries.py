@@ -6138,6 +6138,25 @@ def _in_work_dir(prefix: str, run: "Callable[[str], DataFrame]") -> DataFrame:
         shutil.rmtree(work, ignore_errors=True)
 
 
+def _committed_in_work_dir(
+    spark: SparkSession,
+    prefix: str,
+    schema: str,
+    drain: "Callable[[str, str], None]",
+) -> DataFrame:
+    """`drain(out_dir, state_dir)` on `out/` and `state/` of a fresh
+    `_in_work_dir`; returns its committed rows, read with `schema` and
+    pinned before the dir is removed."""
+    from miletos_spark.pipeline.commit import read_committed
+
+    def run(work: str) -> DataFrame:
+        out_dir, state_dir = (os.path.join(work, d) for d in ("out", "state"))
+        drain(out_dir, state_dir)
+        return read_committed(spark, out_dir, state_dir, schema)
+
+    return _in_work_dir(prefix, run)
+
+
 def _drain_memory_stream(
     spark: SparkSession,
     sdf: DataFrame,
@@ -7337,19 +7356,19 @@ def _land_docs_neardup_feed(
 
 def _stream_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from miletos_spark.pipeline.landing import land_dedup_index
-    from miletos_spark.streaming.ingest import stream_near_dup
+    from miletos_spark.streaming.ingest import (
+        NEAR_DUP_PAIR_SCHEMA,
+        stream_near_dup,
+    )
 
     land = _land_docs_neardup_feed(spark, sf_dir)
     bands_path = land_dedup_index(spark, sf_dir)["bands"]
-    sdf = stream_near_dup(
-        spark,
-        land,
-        "doc_id long, text string",
-        bands_path,
-        max_files_per_trigger=2,
-    )
-    return _drain_memory_stream(
-        spark, sdf, "stream_neardup_", output_mode="append"
+    return _committed_in_work_dir(
+        spark, "sneardup", NEAR_DUP_PAIR_SCHEMA,
+        lambda out_dir, state_dir: stream_near_dup(
+            spark, land, "doc_id long, text string", bands_path, out_dir,
+            state_dir, max_files_per_trigger=2,
+        ),
     )
 
 
@@ -7823,12 +7842,11 @@ def _land_media_phash_index(spark: SparkSession) -> str:
     join prunes its scan to the arriving bands' dirs. Band-bucket
     stats (max distinct-fp bucket, max identical-fp class) are
     persisted at write time so the bounded-cutover pair functions on
-    the landed path skip their per-invocation probe job (VERDICT r10
-    Wrong #2), and the PRE-COLLAPSED tables (distinct banded fps;
-    fp→media presence; per-fp document frequency — the max_df hub
-    set's source, ADVICE r11) land alongside so the streaming verdict
-    composition never re-runs an O(index) distinct or groupBy per
-    micro-batch."""
+    the landed path skip their per-invocation probe job, and the
+    PRE-COLLAPSED tables (distinct banded fps; fp→media presence;
+    per-fp document frequency — the max_df hub set's source) land
+    alongside so the streaming verdict composition never re-runs an
+    O(index) distinct or groupBy per micro-batch."""
 
     def build(root: str) -> None:
         from miletos_spark.pipeline.dedup import fp_bands
@@ -7888,33 +7906,29 @@ def _land_media_arrivals(spark: SparkSession) -> str:
 
 
 def q_stream_media_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """§2.12 media near-dup ONLINE (r9): re-upload detection on the
-    ingest firehose — the corpus' frame pHashes are banded and landed
-    once at ingest; each arriving payload is decoded (the mapInPandas
-    codec seam runs per micro-batch), pHashed, and band-joined
-    against the landed index; exact Hamming verify at ≤ 3 where the
-    4-band pigeonhole is lossless. Trimmed video re-uploads match
-    their source frames at Hamming 0, jittered images at small
-    Hamming. Stateless stream-static plan until the final pair dedup.
+    """§2.12 media near-dup ONLINE: re-upload detection on the ingest
+    firehose — the corpus' frame pHashes are banded and landed once at
+    ingest; each arriving payload is decoded (the mapInPandas codec
+    seam runs per micro-batch), pHashed, and band-joined against the
+    landed index; exact Hamming verify at ≤ 3 where the 4-band
+    pigeonhole is lossless. Trimmed video re-uploads match their
+    source frames at Hamming 0, jittered images at small Hamming. Each
+    batch's new matches commit once through `drain_committed`.
     Oracle: the shared pixel-space replay, arrival-oriented."""
     from miletos_spark.pipeline.multimodal import MEDIA_SCHEMA
-    from miletos_spark.streaming.ingest import stream_media_near_dup
+    from miletos_spark.streaming.ingest import (
+        MEDIA_MATCH_SCHEMA,
+        stream_media_near_dup,
+    )
 
     bands = _land_media_phash_index(spark)
     land = _land_media_arrivals(spark)
-    sdf = stream_media_near_dup(
-        spark,
-        land,
-        MEDIA_SCHEMA,
-        bands,
-        max_hamming=3,
-        max_files_per_trigger=1,
-    )
-    out = _drain_memory_stream(
-        spark, sdf, "stream_mediand_", output_mode="append"
-    )
-    return out.select(
-        "arrival_id", "frame_a", "matched_id", "frame_b", "hamming"
+    return _committed_in_work_dir(
+        spark, "smediand", MEDIA_MATCH_SCHEMA,
+        lambda out_dir, state_dir: stream_media_near_dup(
+            spark, land, MEDIA_SCHEMA, bands, out_dir, state_dir,
+            max_hamming=3, max_files_per_trigger=1,
+        ),
     )
 
 
@@ -8655,8 +8669,8 @@ def q_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     100k) — cosine ≈ 0.9999, where one-band recall is ~0.99 and the
     8-band miss probability is ~1e-16 per pair: no recall lottery. A
     threshold inside the random-similarity bulk (the old 0.45) is not
-    prunable by any index and stays on the exact path (`pairwise_topk`,
-    oracle-only)."""
+    prunable by any index and stays on an exact all-pairs verify
+    (oracle-only)."""
     from miletos_spark.pipeline.similarity import lsh_band_near_dup_pairs
 
     allv = _planted_embeddings(spark, sf_dir)
@@ -8793,18 +8807,20 @@ def _land_emb_arrivals(spark: SparkSession, sf_dir: str) -> str:
 def q_stream_semantic_dedup_embeddings(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """§2.12 embedding dedup online (r8; two-level quantizer r9):
-    arriving vectors check only the members of their probed (super,
-    fine) cells of the landed two-level IVF quantizer (sample-trained
-    once at ingest, occupancy-bounded k ∝ n, O(n·√k) assignment) —
-    stream_near_dup's incremental-crawl shape in embedding space.
-    Cell selection is pure per-row array expressions at both levels
-    (no stateful agg before the join), so the whole plan is
-    stream-static + stateless until the final pair dedup.
+    """§2.12 embedding dedup online: arriving vectors check only the
+    members of their probed (super, fine) cells of the landed
+    two-level IVF quantizer (sample-trained once at ingest,
+    occupancy-bounded k ∝ n, O(n·√k) assignment) — stream_near_dup's
+    incremental-crawl shape in embedding space. Each micro-batch runs
+    the batch `assign_cells_2l` and cosine verify, and its new pairs
+    commit once through `drain_committed`.
     Recovery contract: every jittered re-crawl copy must match exactly
     its source; the fresh synthetic arrivals must match nothing."""
     from miletos_spark.pipeline.landing import land_ivf2_index_auto
-    from miletos_spark.streaming.ingest import stream_semantic_dedup
+    from miletos_spark.streaming.ingest import (
+        SEMANTIC_MATCH_SCHEMA,
+        stream_semantic_dedup,
+    )
 
     # n/16: bucket-count-aware occupancy tuned with the batch twin —
     # arrivals probe 4 buckets against top-1-landed members; corpus
@@ -8813,18 +8829,13 @@ def q_stream_semantic_dedup_embeddings(
     coarse = spark.read.parquet(paths["coarse"])
     fine = spark.read.parquet(paths["fine"])
     land = _land_emb_arrivals(spark, sf_dir)
-    sdf = stream_semantic_dedup(
-        spark,
-        land,
-        "vec_id long, embedding array<double>",
-        coarse,
-        fine,
-        paths["cells"],
-        threshold=EMB_DUP_THRESHOLD,
-        max_files_per_trigger=1,
-    )
-    out = _drain_memory_stream(
-        spark, sdf, "stream_semdedup_", output_mode="append"
+    out = _committed_in_work_dir(
+        spark, "ssemdedup", SEMANTIC_MATCH_SCHEMA,
+        lambda out_dir, state_dir: stream_semantic_dedup(
+            spark, land, "vec_id long, embedding array<double>", coarse,
+            fine, paths["cells"], out_dir, state_dir,
+            threshold=EMB_DUP_THRESHOLD, max_files_per_trigger=1,
+        ),
     )
     return out.select(
         "arrival_id", "matched_id", F.round("cos_sim", 6).alias("cos_sim")

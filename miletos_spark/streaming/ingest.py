@@ -316,50 +316,80 @@ def stream_near_dup(
     input_dir: str,
     schema: str,
     bands_path: str,
+    out_dir: str,
+    state_dir: str,
     k: int = 9,
     num_hashes: int = 32,
     bands: int = 8,
     id_col: str = "doc_id",
     text_col: str = "text",
     max_files_per_trigger: int | None = None,
-) -> DataFrame:
+    timeout_sec: int = 300,
+) -> None:
     """Streaming near-duplicate detection against a landed corpus: each
-    incoming document is MinHash-signed and band-hashed IN the stream
-    (the same JVM-side expressions as the batch path, so stream and
-    batch agree bit-for-bit), then stream-static joined against the
-    write-time landed LSH band index — the incremental-crawl shape: the
-    100 TB corpus is indexed once, and each arriving micro-batch only
-    pays for its own signatures plus a join keyed on (band, bhash).
+    micro-batch runs the batch path, `lsh_bands(minhash_signatures(
+    batch))` (so stream and batch agree bit-for-bit), joined on (band,
+    bhash) to the landed LSH band index. The corpus is indexed once;
+    a batch pays for its own signatures and a join of arrivals ×
+    matching index rows (an arrival identical to k corpus docs makes
+    bands·k rows, linear in k). The signature and band stages are
+    per-row, so they are planned once on the stream, not per batch in
+    the callback (that cost ~0.3 s of Python plan construction a batch
+    on the sf0.1 feed, 4 cores).
 
-    Emits distinct (new_id, corpus_id) candidate pairs, each exactly
-    once across micro-batches (`dropDuplicates` keyed state, bounded by
-    the matched-pair count, not the corpus). LSH on identical text is
-    exact — every true re-crawl replica is guaranteed to match its
-    source (the no-false-negative witness the recovery oracle checks);
-    distinct-but-similar docs match per the band collision probability.
-
-    Scale notes: the static side re-reads per micro-batch but is
-    partitioned by `band` on disk, and production points it at a table
-    BUCKETED by (band, bhash) so each micro-batch's sort-merge join
-    co-locates without shuffling the corpus; the stream side per batch
-    is maxFilesPerTrigger-bounded. State eviction for an unbounded
-    pair space would use dropDuplicatesWithinWatermark, exactly as in
-    `stream_dedup`."""
+    Each batch's distinct (new_id, corpus_id) pairs that no earlier
+    batch committed are committed through
+    `pipeline.commit.drain_committed`, so each pair lands once across
+    batches and restarts; read them back with `read_committed` and
+    `NEAR_DUP_PAIR_SCHEMA`. LSH on identical text is exact: every
+    re-crawl replica matches its source."""
     from miletos_spark.pipeline.dedup import lsh_bands, minhash_signatures
 
-    src = file_stream(spark, input_dir, schema, max_files_per_trigger)
     sigs = minhash_signatures(
-        src, text_col=text_col, id_col=id_col, k=k, num_hashes=num_hashes
+        file_stream(spark, input_dir, schema, max_files_per_trigger),
+        text_col=text_col, id_col=id_col, k=k, num_hashes=num_hashes,
     )
-    banded = lsh_bands(
-        sigs, id_col=id_col, bands=bands, num_hashes=num_hashes
-    )
+    banded = lsh_bands(sigs, id_col=id_col, bands=bands, num_hashes=num_hashes)
     corpus = spark.read.parquet(bands_path)
-    joined = banded.alias("n").join(corpus.alias("c"), ["band", "bhash"])
-    return joined.select(
-        F.col(f"n.{id_col}").alias("new_id"),
-        F.col(f"c.{id_col}").alias("corpus_id"),
-    ).dropDuplicates(["new_id", "corpus_id"])
+
+    def _match(bdf: DataFrame, path: str, last: int) -> None:
+        pairs = (
+            bdf.alias("n")
+            .join(corpus.alias("c"), ["band", "bhash"])
+            .select(
+                F.col(f"n.{id_col}").alias("new_id"),
+                F.col(f"c.{id_col}").alias("corpus_id"),
+            )
+            .distinct()
+        )
+        _write_new_pairs(
+            pairs, path, out_dir, state_dir, last, NEAR_DUP_PAIR_SCHEMA,
+            ["new_id", "corpus_id"],
+        )
+
+    drain_committed(banded, out_dir, state_dir, _match, timeout_sec)
+
+
+NEAR_DUP_PAIR_SCHEMA = "new_id long, corpus_id long"
+
+
+def _write_new_pairs(
+    pairs: DataFrame,
+    path: str,
+    out_dir: str,
+    state_dir: str,
+    last: int,
+    schema: str,
+    keys: list[str],
+) -> None:
+    """Write to `path` the rows of `pairs` whose `keys` no batch
+    committed under `out_dir` yet: the cross-batch dedup of a
+    `drain_committed` pair stream, an anti-join instead of keyed
+    state."""
+    if last >= 0:
+        seen = read_committed(pairs.sparkSession, out_dir, state_dir, schema)
+        pairs = pairs.join(seen.select(*keys), keys, "left_anti")
+    pairs.write.mode("overwrite").parquet(path)
 
 
 def stream_dedup_within_watermark(
@@ -750,34 +780,30 @@ def stream_media_near_dup(
     input_dir: str,
     schema: str,
     landed_bands_path: str,
+    out_dir: str,
+    state_dir: str,
     max_hamming: int = 3,
     max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    """Streaming MEDIA near-dup against a landed frame-pHash band
-    index — re-upload detection on the ingest firehose (r9): the
-    corpus' per-frame pHashes are banded and landed once at ingest
-    (partitioned by band, the `land_dedup_index` layout applied to
-    the multimodal tier); each ARRIVING media payload is decoded
-    (the mapInPandas codec seam runs fine inside a micro-batch),
-    pHashed per frame, and its 4 × 16-bit bands equi-join the landed
-    band dirs. Exact 64-bit Hamming verify keeps pairs at ≤
-    `max_hamming` (pigeonhole: the band join is lossless there). A
-    trimmed re-upload matches its source frames at Hamming 0; a
-    lightly re-encoded frame at small Hamming.
+    timeout_sec: int = 300,
+) -> None:
+    """Streaming MEDIA near-dup (re-upload detection) against the
+    landed frame-pHash band index (partitioned by band): each
+    micro-batch's payloads are decoded (the mapInPandas codec seam),
+    pHashed per frame, and their 4 × 16-bit bands (`fp_bands`)
+    equi-join the landed (band, chunk) rows; the exact 64-bit Hamming
+    verify keeps pairs at ≤ `max_hamming`, where the band join is
+    lossless (pigeonhole). A trimmed re-upload matches its source
+    frames at Hamming 0, a lightly re-encoded frame at small Hamming.
+    Decode, pHash and banding are per-row, so, as in `stream_near_dup`,
+    they are planned once on the stream.
 
-    Stateless end to end until the final pair dedup: decode and
-    hashing are per-row, the band join is stream-static. Emits
-    (arrival_id, frame_a, matched_id, frame_b, hamming)."""
+    Each batch's distinct matches whose (arrival_id, frame_a,
+    matched_id, frame_b) no earlier batch committed are committed
+    through `pipeline.commit.drain_committed`; read them back with
+    `read_committed` and `MEDIA_MATCH_SCHEMA`."""
     from miletos_spark.pipeline.dedup import fp_bands, simhash_hamming
     from miletos_spark.pipeline.multimodal import decode_media, phash_frames
 
-    src = file_stream(spark, input_dir, schema, max_files_per_trigger)
-    fps = phash_frames(decode_media(src)).select(
-        F.col("media_id").alias("arrival_id"),
-        F.col("frame").alias("frame_a"),
-        F.col("phash_hex").alias("fp_a"),
-    )
-    banded = fp_bands(fps, "fp_a")
     landed = spark.read.parquet(landed_bands_path).select(
         F.col("media_id").alias("matched_id"),
         F.col("frame").alias("frame_b"),
@@ -785,19 +811,36 @@ def stream_media_near_dup(
         F.col("band").cast("int").alias("band"),
         "chunk",
     )
-    # verify BEFORE the dedup: on a stream the dropDuplicates is keyed
-    # STATE, so it must hold only the (bounded) match set, not every
-    # band candidate — the opposite order from the batch LSH stance,
-    # for a state-size reason rather than a compute one (the Hamming
-    # verify is 4 cheap codegen terms; re-running it ×4 band dups is
-    # noise next to unbounded candidate state)
-    return (
-        banded.join(landed, ["band", "chunk"])
-        .withColumn("hamming", simhash_hamming(F.col("fp_a"), F.col("fp_b")))
-        .filter(F.col("hamming") <= max_hamming)
-        .dropDuplicates(["arrival_id", "frame_a", "matched_id", "frame_b"])
-        .select("arrival_id", "frame_a", "matched_id", "frame_b", "hamming")
+
+    src = file_stream(spark, input_dir, schema, max_files_per_trigger)
+    fps = phash_frames(decode_media(src)).select(
+        F.col("media_id").alias("arrival_id"),
+        F.col("frame").alias("frame_a"),
+        F.col("phash_hex").alias("fp_a"),
     )
+    hamming = simhash_hamming(F.col("fp_a"), F.col("fp_b"))
+
+    def _match(bdf: DataFrame, path: str, last: int) -> None:
+        pairs = (
+            bdf.join(landed, ["band", "chunk"])
+            .select("arrival_id", "frame_a", "matched_id", "frame_b",
+                    hamming.alias("hamming"))
+            .filter(F.col("hamming") <= max_hamming)
+            .distinct()
+        )
+        _write_new_pairs(
+            pairs, path, out_dir, state_dir, last, MEDIA_MATCH_SCHEMA,
+            ["arrival_id", "frame_a", "matched_id", "frame_b"],
+        )
+
+    drain_committed(
+        fp_bands(fps, "fp_a"), out_dir, state_dir, _match, timeout_sec
+    )
+
+
+MEDIA_MATCH_SCHEMA = (
+    "arrival_id long, frame_a int, matched_id long, frame_b int, hamming int"
+)
 
 
 def stream_media_decisions(
@@ -893,101 +936,33 @@ def stream_semantic_dedup(
     coarse: DataFrame,
     fine: DataFrame,
     landed_cells_path: str,
+    out_dir: str,
+    state_dir: str,
     threshold: float = 0.9,
     n_probe: int = 2,
     max_files_per_trigger: int | None = None,
-) -> DataFrame:
+    timeout_sec: int = 300,
+) -> None:
     """Streaming semantic dedup against the landed TWO-LEVEL IVF
-    quantizer (`land_ivf2_index`) — the embedding twin of
-    `stream_near_dup`: the corpus is clustered once at ingest; each
-    ARRIVING vector checks only the members of its probed (super,
-    fine) buckets. The incremental-crawl shape for embedding-space
-    dedup (SemDeDup online), with the r9 sub-quadratic assignment: the
-    single-level form ranked all k ∝ n cells per arrival, which is
-    n·k work and an un-broadcastable centers table at real scale.
+    quantizer (`land_ivf2_index`), the embedding twin of
+    `stream_near_dup`: each micro-batch assigns its vectors with the
+    batch `similarity.assign_cells_2l` (O(√k) distance work per
+    vector) and checks only the members of its `n_probe` × `n_probe`
+    probed (super, fine) buckets — a join against the
+    `_super`-partitioned landed vectors, then an exact-cosine verify.
+    The assignment is per-row, so, as in `stream_near_dup`, it is
+    planned once on the stream.
 
-    Statelessness trick, applied twice: top-k-per-row is an AGGREGATE
-    in batch code, which a stream cannot run before a join — so each
-    bounded center set rides INSIDE the row instead. The ~√k coarse
-    supers sit packed on a broadcast 1-row frame (≈3 MB at 10¹⁰
-    vectors — broadcastable at ANY corpus size); nearest-`n_probe`
-    supers are a pure array_sort+slice expression. The fine level is a
-    stream-static equi-join on `super` against the per-super packed
-    fine centers (broadcast while small; a keyed join once it is
-    not), then the same array expression picks `n_probe` fine cells.
-    Explode the buckets, stream-static join against the
-    `_super`-partitioned landed vectors (each micro-batch reads ONLY
-    its probed supers' partition dirs, filtering `_fine` within),
-    exact-cosine verify, dedup the survivor pairs.
-
-    Emits (arrival_id, matched_id, cos_sim), each pair once across
-    micro-batches (keyed state bounded by the match count)."""
+    Each batch's pairs above `threshold` whose (arrival_id,
+    matched_id) no earlier batch committed are committed through
+    `pipeline.commit.drain_committed`; read them back with
+    `read_committed` and `SEMANTIC_MATCH_SCHEMA`."""
     from miletos_spark.pipeline.similarity import (
         _dot,
-        _l2sq,
         _norm,
+        assign_cells_2l,
     )
 
-    packed_c = coarse.agg(
-        F.collect_list(
-            F.struct(F.col("super").alias("cell"), F.col("center"))
-        ).alias("_cs")
-    ).withColumn("_k", F.lit(1))
-    packed_f = fine.groupBy("super").agg(
-        F.collect_list(
-            F.struct(F.col("fine").alias("cell"), F.col("center"))
-        ).alias("_fs")
-    )
-
-    src = file_stream(spark, input_dir, schema, max_files_per_trigger)
-    v = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    with_centers = (
-        src.select(F.col("vec_id").alias("arrival_id"), v.alias("_v"))
-        # arrival norm computed ONCE per row, before the bucket explode
-        # and the verify join (r14 — the semantic_dedup_pairs_2l norm
-        # hoist; same value bit-for-bit, one dot fold per candidate
-        # pair instead of three)
-        .withColumn("_nv", _norm(F.col("_v")))
-        .withColumn("_k", F.lit(1))
-        .join(F.broadcast(packed_c), "_k")
-    )
-    cdists = F.transform(
-        F.col("_cs"),
-        lambda c: F.struct(
-            _l2sq(F.col("_v"), c["center"]).alias("_d2"),
-            c["cell"].alias("cell"),
-        ),
-    )
-    probed_super = with_centers.select(
-        "arrival_id",
-        "_v",
-        "_nv",
-        F.explode(
-            F.transform(
-                F.slice(F.array_sort(cdists), 1, n_probe),
-                lambda s: s["cell"],
-            )
-        ).alias("super"),
-    )
-    fdists = F.transform(
-        F.col("_fs"),
-        lambda c: F.struct(
-            _l2sq(F.col("_v"), c["center"]).alias("_d2"),
-            c["cell"].alias("cell"),
-        ),
-    )
-    probed = probed_super.join(F.broadcast(packed_f), "super").select(
-        "arrival_id",
-        "_v",
-        "_nv",
-        "super",
-        F.explode(
-            F.transform(
-                F.slice(F.array_sort(fdists), 1, n_probe),
-                lambda s: s["cell"],
-            )
-        ).alias("fine"),
-    )
     w = F.transform(F.col("embedding"), lambda x: x.cast("double"))
     landed = (
         spark.read.parquet(landed_cells_path)
@@ -1000,16 +975,32 @@ def stream_semantic_dedup(
         # landed-member norm once per row in the static projection
         .withColumn("_nw", _norm(F.col("_w")))
     )
-    return (
-        probed.join(landed, ["super", "fine"])
-        .withColumn(
-            "cos_sim",
-            _dot(F.col("_v"), F.col("_w")) / (F.col("_nv") * F.col("_nw")),
-        )
-        .filter(F.col("cos_sim") > threshold)
-        .select("arrival_id", "matched_id", "cos_sim")
-        .dropDuplicates(["arrival_id", "matched_id"])
+    probed = assign_cells_2l(
+        file_stream(spark, input_dir, schema, max_files_per_trigger),
+        coarse, fine, "vec_id", "embedding", n_probe, n_probe,
+    ).select(
+        F.col("_id").alias("arrival_id"), "_v", "super", "fine",
+        # one norm fold per probed bucket, not per candidate pair
+        _norm(F.col("_v")).alias("_nv"),
     )
+    cos_sim = _dot(F.col("_v"), F.col("_w")) / (F.col("_nv") * F.col("_nw"))
+
+    def _match(bdf: DataFrame, path: str, last: int) -> None:
+        pairs = (
+            bdf.join(landed, ["super", "fine"])
+            .select("arrival_id", "matched_id", cos_sim.alias("cos_sim"))
+            .filter(F.col("cos_sim") > threshold)
+            .distinct()
+        )
+        _write_new_pairs(
+            pairs, path, out_dir, state_dir, last, SEMANTIC_MATCH_SCHEMA,
+            ["arrival_id", "matched_id"],
+        )
+
+    drain_committed(probed, out_dir, state_dir, _match, timeout_sec)
+
+
+SEMANTIC_MATCH_SCHEMA = "arrival_id long, matched_id long, cos_sim double"
 
 
 def stream_dsir_score(

@@ -224,6 +224,42 @@ def test_land_once_failed_build_publishes_nothing_and_overwrite_swaps(
     assert land_once("t", writer("third"), str(src)) != root
 
 
+def test_land_once_overwrite_keeps_the_old_root_when_the_swap_fails(
+    tmp_path, monkeypatch
+):
+    """An overwrite moves the old root aside, then renames the new one
+    in. When that second rename raises, the old root goes back: the
+    root still holds the old content, and no `.old` or `.tmp` sibling
+    remains."""
+    import tempfile
+
+    from miletos_spark.pipeline.commit import land_once
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+
+    def writer(text):
+        def build(d):
+            os.makedirs(d)
+            with open(os.path.join(d, "out"), "w") as f:
+                f.write(text)
+        return build
+
+    root = land_once("t", writer("old"))
+    real = os.rename
+
+    def failing(src, dst):
+        if str(src).endswith(".tmp"):
+            raise OSError("rename of the new root failed")
+        return real(src, dst)
+
+    monkeypatch.setattr(os, "rename", failing)
+    with pytest.raises(OSError, match="new root failed"):
+        land_once("t", writer("new"), overwrite=True)
+    with open(os.path.join(root, "out")) as f:
+        assert f.read() == "old"
+    assert os.listdir(tmp_path) == [os.path.basename(root)]
+
+
 def test_land_once_sweeps_the_tmp_of_a_killed_builder(tmp_path, monkeypatch):
     """A builder SIGKILLed mid-build never reaches its cleanup, so its
     `<root>.<pid>.<uuid4>.tmp` stays behind. The next build removes the
@@ -268,8 +304,9 @@ def test_land_once_sweeps_the_tmp_of_a_killed_builder(tmp_path, monkeypatch):
     assert [n for n in os.listdir(tmp_path) if n.endswith(".tmp")] == []
 
 
-def _land_once_writer(spark):
-    """`land_once` itself: a build of two parquet writes and a marker."""
+def _land_once_writer(spark, overwrite=False):
+    """`land_once` itself: a build of two parquet writes and a marker.
+    With `overwrite`, that build replaces a root landed before it."""
     import tempfile
 
     def run(work):
@@ -281,7 +318,14 @@ def _land_once_writer(spark):
         os.makedirs(work, exist_ok=True)
         with pytest.MonkeyPatch.context() as mp:
             mp.setattr(tempfile, "tempdir", work)
-            commit.land_once("sweep", build)
+            if overwrite:
+                commit.land_once(
+                    "sweep",
+                    lambda d: commit.write_marker(
+                        os.path.join(d, "_STATS.json"), {"rows": 0}
+                    ),
+                )
+            commit.land_once("sweep", build, overwrite=overwrite)
 
     def state(work):
         [name] = os.listdir(work)  # the root, and no tmp sibling
@@ -346,7 +390,10 @@ def _dsir_build_writer(spark, sf_dir):
     return run, state
 
 
-@pytest.mark.parametrize("writer", ["land_once", "cluster_fold", "dsir_build"])
+@pytest.mark.parametrize(
+    "writer",
+    ["land_once", "land_once_overwrite", "cluster_fold", "dsir_build"],
+)
 def test_crash_sweep_resumes_exactly_once(spark, sf_dir, crash_sweep, writer):
     """For every k, the writer's k-th commit point (a parquet write, a
     marker write, a rename or a delete) fails; resuming on the same
@@ -354,6 +401,7 @@ def test_crash_sweep_resumes_exactly_once(spark, sf_dir, crash_sweep, writer):
     fold or row applied twice, none lost."""
     run, state = {
         "land_once": lambda: _land_once_writer(spark),
+        "land_once_overwrite": lambda: _land_once_writer(spark, True),
         "cluster_fold": lambda: _cluster_fold_writer(spark),
         "dsir_build": lambda: _dsir_build_writer(spark, sf_dir),
     }[writer]()

@@ -438,8 +438,11 @@ def media_probe(spark, k: int) -> dict:
         media_phash_pairs,
         phash_frames,
     )
-    from miletos_spark.plans.driver_queries import _drain_memory_stream
-    from miletos_spark.streaming.ingest import stream_media_near_dup
+    from miletos_spark.plans.driver_queries import _committed_in_work_dir
+    from miletos_spark.streaming.ingest import (
+        MEDIA_MATCH_SCHEMA,
+        stream_media_near_dup,
+    )
 
     N0 = 512
     out: dict = {}
@@ -497,12 +500,12 @@ def media_probe(spark, k: int) -> dict:
 
     def stream_n(n):
         bands, arr = _land_probe_media(n)
-        sdf = stream_media_near_dup(
-            spark, arr, MEDIA_SCHEMA, bands, max_hamming=3,
-            max_files_per_trigger=1,
-        )
-        _drain_memory_stream(
-            spark, sdf, "media_probe_", output_mode="append"
+        _committed_in_work_dir(
+            spark, "mnd", MEDIA_MATCH_SCHEMA,
+            lambda out_dir, state_dir: stream_media_near_dup(
+                spark, arr, MEDIA_SCHEMA, bands, out_dir, state_dir,
+                max_hamming=3, max_files_per_trigger=1,
+            ),
         ).count()
 
     def decisions_stream_n(n):
