@@ -324,7 +324,6 @@ def stream_near_dup(
     id_col: str = "doc_id",
     text_col: str = "text",
     max_files_per_trigger: int | None = None,
-    timeout_sec: int = 300,
 ) -> None:
     """Streaming near-duplicate detection against a landed corpus: each
     micro-batch runs the batch path, `lsh_bands(minhash_signatures(
@@ -342,7 +341,13 @@ def stream_near_dup(
     `pipeline.commit.drain_committed`, so each pair lands once across
     batches and restarts; read them back with `read_committed` and
     `NEAR_DUP_PAIR_SCHEMA`. LSH on identical text is exact: every
-    re-crawl replica matches its source."""
+    re-crawl replica matches its source.
+
+    Scale notes: the per-batch join to the landed bands co-locates
+    without shuffling the corpus when the index is a table BUCKETED by
+    (band, bhash). The cross-batch anti-join reads every committed
+    pair, so a batch's cost grows linearly with the batches and pairs
+    committed before it (`_write_new_pairs`)."""
     from miletos_spark.pipeline.dedup import lsh_bands, minhash_signatures
 
     sigs = minhash_signatures(
@@ -367,7 +372,7 @@ def stream_near_dup(
             ["new_id", "corpus_id"],
         )
 
-    drain_committed(banded, out_dir, state_dir, _match, timeout_sec)
+    drain_committed(banded, out_dir, state_dir, _match)
 
 
 NEAR_DUP_PAIR_SCHEMA = "new_id long, corpus_id long"
@@ -385,7 +390,8 @@ def _write_new_pairs(
     """Write to `path` the rows of `pairs` whose `keys` no batch
     committed under `out_dir` yet: the cross-batch dedup of a
     `drain_committed` pair stream, an anti-join instead of keyed
-    state."""
+    state. It lists and reads every committed batch, so its cost grows
+    linearly with the batches and pairs committed before this one."""
     if last >= 0:
         seen = read_committed(pairs.sparkSession, out_dir, state_dir, schema)
         pairs = pairs.join(seen.select(*keys), keys, "left_anti")
@@ -784,7 +790,6 @@ def stream_media_near_dup(
     state_dir: str,
     max_hamming: int = 3,
     max_files_per_trigger: int | None = None,
-    timeout_sec: int = 300,
 ) -> None:
     """Streaming MEDIA near-dup (re-upload detection) against the
     landed frame-pHash band index (partitioned by band): each
@@ -800,7 +805,9 @@ def stream_media_near_dup(
     Each batch's distinct matches whose (arrival_id, frame_a,
     matched_id, frame_b) no earlier batch committed are committed
     through `pipeline.commit.drain_committed`; read them back with
-    `read_committed` and `MEDIA_MATCH_SCHEMA`."""
+    `read_committed` and `MEDIA_MATCH_SCHEMA`. As in `stream_near_dup`,
+    a batch's cost grows linearly with the batches and matches
+    committed before it."""
     from miletos_spark.pipeline.dedup import fp_bands, simhash_hamming
     from miletos_spark.pipeline.multimodal import decode_media, phash_frames
 
@@ -833,9 +840,7 @@ def stream_media_near_dup(
             ["arrival_id", "frame_a", "matched_id", "frame_b"],
         )
 
-    drain_committed(
-        fp_bands(fps, "fp_a"), out_dir, state_dir, _match, timeout_sec
-    )
+    drain_committed(fp_bands(fps, "fp_a"), out_dir, state_dir, _match)
 
 
 MEDIA_MATCH_SCHEMA = (
@@ -941,7 +946,6 @@ def stream_semantic_dedup(
     threshold: float = 0.9,
     n_probe: int = 2,
     max_files_per_trigger: int | None = None,
-    timeout_sec: int = 300,
 ) -> None:
     """Streaming semantic dedup against the landed TWO-LEVEL IVF
     quantizer (`land_ivf2_index`), the embedding twin of
@@ -956,7 +960,9 @@ def stream_semantic_dedup(
     Each batch's pairs above `threshold` whose (arrival_id,
     matched_id) no earlier batch committed are committed through
     `pipeline.commit.drain_committed`; read them back with
-    `read_committed` and `SEMANTIC_MATCH_SCHEMA`."""
+    `read_committed` and `SEMANTIC_MATCH_SCHEMA`. As in
+    `stream_near_dup`, a batch's cost grows linearly with the batches
+    and pairs committed before it."""
     from miletos_spark.pipeline.similarity import (
         _dot,
         _norm,
@@ -997,7 +1003,7 @@ def stream_semantic_dedup(
             ["arrival_id", "matched_id"],
         )
 
-    drain_committed(probed, out_dir, state_dir, _match, timeout_sec)
+    drain_committed(probed, out_dir, state_dir, _match)
 
 
 SEMANTIC_MATCH_SCHEMA = "arrival_id long, matched_id long, cos_sim double"

@@ -176,13 +176,20 @@ def test_fresh_checkpoint_replay_verifies_bare_list_markers(
 )
 def test_uncommitted_batch_dir_is_invisible(spark, sf_dir, tmp_path, name):
     """A batch dir whose marker never landed (a killed write, a crash
-    before the commit) is not read back."""
+    before the commit) is not read back. The copied dir is a committed
+    batch that holds rows, so reading it back would change the count."""
     work = str(tmp_path)
     drain, read = DRAINS[name]
     drain(spark, sf_dir, work)
     n = read(spark, *_dirs(work)).count()
     out = _dirs(work)[0]
-    shutil.copytree(os.path.join(out, "b=0"), os.path.join(out, "b=99"))
+    full = [
+        b for b in sorted(os.listdir(out))
+        if b.startswith("b=")
+        and spark.read.parquet(os.path.join(out, b)).count() > 0
+    ]
+    assert full, "no committed batch holds a row"
+    shutil.copytree(os.path.join(out, full[0]), os.path.join(out, "b=99"))
     got = read(spark, *_dirs(work)).count()
     assert got == n, f"{got} rows through the reader, {n} committed"
 
