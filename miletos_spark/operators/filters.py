@@ -80,15 +80,17 @@ def sigma_clip(
     row removed or `max_iter`; miletos/main.py:10931-11087, cap
     `maxmnumbiterbdtr` miletos/main.py:8586).
 
-    Driver-side loop over a cached DataFrame: each pass is one agg + one
-    filter (two narrow jobs). With group_cols the clip bounds are
-    computed per group via an aggregate + broadcast join (group count is
-    small: instruments × chunks), never a per-row window.
+    Driver-side loop: each pass pins its input with a lazy local
+    checkpoint, which the pass's count() materializes, then runs one agg
+    + one filter. The pin dies with the frame, so no cache entry outlives
+    the call. With group_cols the clip bounds are computed per group via
+    an aggregate + broadcast join (group count is small: instruments ×
+    chunks), never a per-row window.
     """
     out = df
     prev = None
     for _ in range(max_iter):
-        out = out.cache()
+        out = out.localCheckpoint(eager=False)
         n = out.count()
         if prev is not None and n == prev:
             break

@@ -244,12 +244,15 @@ def _batch_manifest(state_dir: str, batch_id: int) -> list | None:
     return None
 
 
+# how long a drain may run before `drain_committed` raises
+DRAIN_TIMEOUT_SEC = 300
+
+
 def drain_committed(
     src: DataFrame,
     out_dir: str,
     state_dir: str,
     write: "Callable[[DataFrame, str, int], dict | None]",
-    timeout_sec: int = 300,
 ) -> None:
     """Drain the file stream `src` (availableNow, checkpoint under
     `state_dir/ckpt`) with one commit per micro-batch. A new batch goes
@@ -293,7 +296,7 @@ def drain_committed(
         .trigger(availableNow=True)
         .start()
     )
-    await_drain(q, out_dir, timeout_sec)
+    await_drain(q, out_dir, DRAIN_TIMEOUT_SEC)
 
 
 def read_committed(

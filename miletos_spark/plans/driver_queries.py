@@ -1935,32 +1935,18 @@ def q_stream_pack_bins_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     content-determined, so the oracle replays per-(parity, lang,
     block) next-fit row-by-row with the recursive CTE."""
     from miletos_spark.streaming.ingest import (
-        read_stream_pack_bins,
+        PACK_BIN_SCHEMA,
         stream_pack_bins,
     )
 
     land = _land_docs_tokens_parity_feed(spark, sf_dir)
-
-    def run(work: str) -> DataFrame:
-        out_dir, state_dir = (
-            os.path.join(work, "out"), os.path.join(work, "state")
-        )
-        stream_pack_bins(
-            spark,
-            land,
-            "lang string, doc_id long, n_tokens long",
-            out_dir,
-            state_dir,
-            capacity=512,
-            block_width=256,
-            max_files_per_trigger=1,
-        )
-        return read_stream_pack_bins(spark, out_dir, state_dir).select(
-            "lang", "block", "doc_id", "n_tokens", "bin", "offset",
-            "fill_after",
-        )
-
-    return _in_work_dir("spbins", run)
+    return _committed_in_work_dir(
+        spark, "spbins", PACK_BIN_SCHEMA,
+        lambda out_dir, state_dir: stream_pack_bins(
+            spark, land, "lang string, doc_id long, n_tokens long", out_dir,
+            state_dir, capacity=512, block_width=256, max_files_per_trigger=1,
+        ),
+    )
 
 
 SQL_STREAM_PACK_BINS = r"""
@@ -3690,11 +3676,13 @@ def q_jsonl_ingest_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     the checked equality is a content-exact JSON round-trip witness:
     the per-group doc/char totals AND a 32-bit md5 checksum sum over
     the text bytes must survive land -> escape -> parse -> read."""
+    from miletos_spark.pipeline.sampling import md5_u32
+
     land = _land_docs_jsonl(spark, sf_dir)
     docs = spark.read.schema(
         "doc_id long, text string, lang string, source string, n_chars long"
     ).json(land)
-    h32 = F.conv(F.substring(F.md5("text"), 1, 8), 16, 10).cast("long")
+    h32 = md5_u32(F.col("text"))
     return docs.groupBy("lang", "source").agg(
         F.count("*").alias("n_docs"),
         F.sum("doc_id").alias("sum_ids"),
@@ -7946,37 +7934,24 @@ def q_stream_media_decisions(spark: SparkSession, sf_dir: str) -> DataFrame:
     arrival-oriented matched-frame fractions."""
     from miletos_spark.pipeline.multimodal import MEDIA_SCHEMA
     from miletos_spark.streaming.ingest import (
-        read_media_decisions,
+        MEDIA_DECISION_SCHEMA,
         stream_media_decisions,
     )
 
     bands = _land_media_phash_index(spark)
     root = os.path.dirname(bands)
     land = _land_media_arrivals(spark)
-
-    def run(work: str) -> DataFrame:
-        out_dir = os.path.join(work, "out")
-        state_dir = os.path.join(work, "state")
-        stream_media_decisions(
-            spark,
-            land,
-            MEDIA_SCHEMA,
-            bands,
-            out_dir,
-            state_dir,
-            max_hamming=3,
-            frac_threshold=0.8,
-            max_files_per_trigger=1,
+    return _committed_in_work_dir(
+        spark, "smdec", MEDIA_DECISION_SCHEMA,
+        lambda out_dir, state_dir: stream_media_decisions(
+            spark, land, MEDIA_SCHEMA, bands, out_dir, state_dir,
+            max_hamming=3, frac_threshold=0.8, max_files_per_trigger=1,
             # pre-collapsed index tables: no O(index) distinct per batch
             distinct_path=os.path.join(root, "bands_distinct"),
             presence_path=os.path.join(root, "presence"),
             fp_df_path=os.path.join(root, "fp_df"),
-        )
-        return read_media_decisions(spark, out_dir, state_dir).select(
-            "arrival_id", "matched_id", "n_frames", "n_matched"
-        )
-
-    return _in_work_dir("smdec", run)
+        ),
+    )
 
 
 # Directional arrival-vs-corpus composition of the shared pixel-space

@@ -600,8 +600,6 @@ def stream_pack_shards(
     state_dir: str,
     capacity: int = 512,
     max_files_per_trigger: int | None = 1,
-    timeout_sec: int = 300,
-    bucket_width: int = 4096,
 ) -> None:
     """The training_shards endgame ON the firehose: `stream_curation`'s
     three stages (quality filter → PII scrub → exact dedup) composed
@@ -614,7 +612,7 @@ def stream_pack_shards(
     manifest, `"offsets": {lang: total}` — the running token offset per
     shard AFTER this batch, which the next batch reads from marker
     `last` and adds to each row as a literal map lookup. Within a batch
-    the offset comes from `packing.running_offsets(bucket_width=...)`,
+    the offset comes from `packing.running_offsets(bucket_width=4096)`,
     the two-pass id-bucketed decomposition the batch packer uses. A
     bare-manifest marker (written before offsets rode the commit)
     carries no offsets; they are then re-derived once from the
@@ -713,7 +711,7 @@ def stream_pack_shards(
             token_col="n_tokens",
             group_cols=("lang",),
             id_col="doc_id",
-            bucket_width=bucket_width,
+            bucket_width=4096,
             carry_cols=("h",),
         )
         carry = F.lit(0)
@@ -762,7 +760,7 @@ def stream_pack_shards(
         )
     drain_committed(
         file_stream(spark, input_dir, schema, max_files_per_trigger),
-        out_dir, state_dir, _pack_batch, timeout_sec,
+        out_dir, state_dir, _pack_batch,
     )
 
 
@@ -859,7 +857,6 @@ def stream_media_decisions(
     frac_threshold: float = 0.8,
     max_df: int | None = None,
     max_files_per_trigger: int | None = None,
-    timeout_sec: int = 300,
     distinct_path: str | None = None,
     presence_path: str | None = None,
     fp_df_path: str | None = None,
@@ -875,7 +872,7 @@ def stream_media_decisions(
     its micro-batch: no cross-batch state, nothing grows with arrival
     volume. Each batch's verdicts are committed through
     `pipeline.commit.drain_committed`; read them back with
-    `read_media_decisions`.
+    `read_committed` and `MEDIA_DECISION_SCHEMA`.
 
     ``distinct_path`` / ``presence_path`` / ``fp_df_path``: the
     PRE-COLLAPSED index tables landed at index-build time (distinct
@@ -920,18 +917,13 @@ def stream_media_decisions(
 
     drain_committed(
         file_stream(spark, input_dir, schema, max_files_per_trigger),
-        out_dir, state_dir, _decide, timeout_sec,
+        out_dir, state_dir, _decide,
     )
 
 
-def read_media_decisions(
-    spark: SparkSession, out_dir: str, state_dir: str
-) -> DataFrame:
-    """The verdicts of `stream_media_decisions`' COMMITTED batches."""
-    return read_committed(
-        spark, out_dir, state_dir,
-        "arrival_id long, matched_id long, n_frames long, n_matched long",
-    )
+MEDIA_DECISION_SCHEMA = (
+    "arrival_id long, matched_id long, n_frames long, n_matched long"
+)
 
 
 def stream_semantic_dedup(
@@ -1126,13 +1118,9 @@ def stream_pack_bins(
     out_dir: str,
     state_dir: str,
     capacity: int = 512,
-    group_cols=("lang",),
-    id_col: str = "doc_id",
-    token_col: str = "n_tokens",
     block_width: int = 256,
     ffd: bool = False,
     max_files_per_trigger: int | None = None,
-    timeout_sec: int = 300,
 ) -> None:
     """NO-SPLIT packing ON the firehose — the SFT-shaped streaming
     packer next to `stream_pack_shards`' concat-and-chunk form:
@@ -1141,15 +1129,16 @@ def stream_pack_bins(
     `pack_bins_nosplit`/`_ffd`'s id-blocks nest inside it), so no token
     offsets cross batches. Each batch's layout is committed through
     `pipeline.commit.drain_committed`; read it back with
-    `read_stream_pack_bins`.
+    `read_committed` and `PACK_BIN_SCHEMA`.
 
     The price is the same bounded waste as any block boundary (at most
     one partial bin per batch per group-block), measurable by
     `pack_bins_report` over the drained output. ``ffd=True`` uses
     first-fit-decreasing within blocks instead of next-fit.
 
-    Layout rows: group cols, block, id, tokens, bin, offset,
-    fill_after (bin keys are unique within (batch, group, block))."""
+    Packs (lang, doc_id, n_tokens) rows per lang. Layout rows: lang,
+    block, doc_id, n_tokens, bin, offset, fill_after (bin keys are
+    unique within (batch, lang, block))."""
     from miletos_spark.pipeline.packing import (
         pack_bins_ffd,
         pack_bins_nosplit,
@@ -1159,41 +1148,20 @@ def stream_pack_bins(
 
     def _pack(bdf: DataFrame, path: str, last: int) -> None:
         packer(
-            bdf,
-            capacity=capacity,
-            token_col=token_col,
-            group_cols=group_cols,
-            id_col=id_col,
-            block_width=block_width,
+            bdf, capacity=capacity, block_width=block_width
         ).write.mode("overwrite").parquet(path)
 
     drain_committed(
         file_stream(spark, input_dir, schema, max_files_per_trigger),
-        out_dir, state_dir, _pack, timeout_sec,
+        out_dir, state_dir, _pack,
     )
 
 
-def read_stream_pack_bins(
-    spark: SparkSession,
-    out_dir: str,
-    state_dir: str,
-    group_cols=("lang",),
-    id_col: str = "doc_id",
-    token_col: str = "n_tokens",
-    group_type: str = "string",
-) -> DataFrame:
-    """The layout rows of `stream_pack_bins`' COMMITTED batches, batch
-    column dropped (bin identity is (group, block, bin) per batch).
-    ``id_col``/``token_col``/``group_type`` MUST match what the writer
-    was called with — an explicit schema against parquet projects
-    missing columns as silent NULLs, so a mismatch here would corrupt
-    the layout quietly."""
-    gschema = ", ".join(f"{c} {group_type}" for c in group_cols)
-    return read_committed(
-        spark, out_dir, state_dir,
-        f"{gschema}, block long, {id_col} long, {token_col} long, "
-        "bin int, offset long, fill_after long",
-    )
+# bin identity is (lang, block, bin) within one batch
+PACK_BIN_SCHEMA = (
+    "lang string, block long, doc_id long, n_tokens long, bin int, "
+    "offset long, fill_after long"
+)
 
 
 def stream_semantic_decontaminate(

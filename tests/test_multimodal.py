@@ -192,8 +192,9 @@ def test_stream_media_decisions_equals_batch_composition(spark, tmp_path):
         synth_media,
     )
     from miletos_spark.plans.driver_queries import _media_reuploads
+    from miletos_spark.pipeline.commit import read_committed
     from miletos_spark.streaming.ingest import (
-        read_media_decisions,
+        MEDIA_DECISION_SCHEMA,
         stream_media_decisions,
     )
 
@@ -236,8 +237,8 @@ def test_stream_media_decisions_equals_batch_composition(spark, tmp_path):
     )
     got = {
         (r["arrival_id"], r["matched_id"], r["n_frames"], r["n_matched"])
-        for r in read_media_decisions(
-            spark, out_dir, str(tmp_path / "state")
+        for r in read_committed(
+            spark, out_dir, str(tmp_path / "state"), MEDIA_DECISION_SCHEMA
         ).collect()
     }
 

@@ -104,16 +104,24 @@ def test_every_bench_line_row_has_a_bench_role():
 def test_pinned_registry_rows_leave_no_cached_frame(spark, sf_dir):
     """The rows that pin an intermediate (scored near-dup pairs, the
     cleanup chain's filtered and deduped docs, the repetition base)
-    pin it with a local checkpoint, which dies with the frame: a cache
-    would stay in the session's cache manager after the query, one
-    entry per corpus a long-lived session touches."""
+    and the library loops that pin one per iteration (`sigma_clip`,
+    which the `sigma_clip_events` row spells out by hand) pin it with a
+    local checkpoint, which dies with the frame: a cache would stay in
+    the session's cache manager after the query, one entry per corpus
+    a long-lived session touches."""
+    from miletos_spark.operators.filters import sigma_clip
     from miletos_spark.pipeline.dedup import near_dup_pairs_prefix
     from miletos_spark.plans.driver_queries import QUERIES
     from miletos_spark.schema import load_table
 
     spark.catalog.clearCache()
-    for name in ("minhash_lsh_pairs", "corpus_cleanup", "repetition_stats_docs"):
+    for name in (
+        "minhash_lsh_pairs", "corpus_cleanup", "repetition_stats_docs",
+        "sigma_clip_events",
+    ):
         QUERIES[name](spark, sf_dir).collect()
     docs = load_table(spark, sf_dir, "documents")
     near_dup_pairs_prefix(docs, threshold=0.5, k=9).collect()
+    events = load_table(spark, sf_dir, "events")
+    sigma_clip(events, group_cols=("event_type",), max_iter=3).collect()
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

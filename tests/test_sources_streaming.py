@@ -1461,8 +1461,9 @@ def test_stream_pack_bins_zero_state_equals_batch_per_parity(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from miletos_spark.pipeline.packing import pack_bins_nosplit
+    from miletos_spark.pipeline.commit import read_committed
     from miletos_spark.streaming.ingest import (
-        read_stream_pack_bins,
+        PACK_BIN_SCHEMA,
         stream_pack_bins,
     )
 
@@ -1487,8 +1488,8 @@ def test_stream_pack_bins_zero_state_equals_batch_per_parity(spark, tmp_path):
     key = lambda r: (r["lang"], r["block"], r["doc_id"],  # noqa: E731
                      r["bin"], r["offset"], r["fill_after"])
     got = sorted(
-        map(key, read_stream_pack_bins(
-            spark, out_dir, str(tmp_path / "state")
+        map(key, read_committed(
+            spark, out_dir, str(tmp_path / "state"), PACK_BIN_SCHEMA
         ).collect())
     )
 
@@ -1515,8 +1516,9 @@ def test_stream_pack_bins_ffd_branch_equals_batch_per_parity(
     from pyspark.sql import functions as F
 
     from miletos_spark.pipeline.packing import pack_bins_ffd
+    from miletos_spark.pipeline.commit import read_committed
     from miletos_spark.streaming.ingest import (
-        read_stream_pack_bins,
+        PACK_BIN_SCHEMA,
         stream_pack_bins,
     )
 
@@ -1541,8 +1543,8 @@ def test_stream_pack_bins_ffd_branch_equals_batch_per_parity(
     key = lambda r: (r["lang"], r["block"], r["doc_id"],  # noqa: E731
                      r["bin"], r["offset"], r["fill_after"])
     got = sorted(
-        map(key, read_stream_pack_bins(
-            spark, out_dir, str(tmp_path / "state")
+        map(key, read_committed(
+            spark, out_dir, str(tmp_path / "state"), PACK_BIN_SCHEMA
         ).collect())
     )
 

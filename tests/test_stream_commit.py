@@ -101,8 +101,8 @@ def _reader(schema):
 # drain name -> (drain into work/{out,state}, its committed reader)
 DRAINS = {
     "shards": (_shards, ingest.read_committed_shards),
-    "bins": (_bins, ingest.read_stream_pack_bins),
-    "media": (_media, ingest.read_media_decisions),
+    "bins": (_bins, _reader(ingest.PACK_BIN_SCHEMA)),
+    "media": (_media, _reader(ingest.MEDIA_DECISION_SCHEMA)),
     "near_dup": (_near_dup, _reader(ingest.NEAR_DUP_PAIR_SCHEMA)),
     "media_near_dup": (_media_near_dup, _reader(ingest.MEDIA_MATCH_SCHEMA)),
     "semantic": (_semantic, _reader(ingest.SEMANTIC_MATCH_SCHEMA)),
@@ -137,7 +137,7 @@ def test_stream_pack_bins_fresh_checkpoint_restart_never_double_counts(
     once."""
     work = str(tmp_path)
     _bins(spark, sf_dir, work)
-    n = ingest.read_stream_pack_bins(spark, *_dirs(work)).count()
+    n = DRAINS["bins"][1](spark, *_dirs(work)).count()
     shutil.rmtree(os.path.join(work, "state", "ckpt"))
     try:
         _bins(spark, sf_dir, work, mft=None)
@@ -146,7 +146,7 @@ def test_stream_pack_bins_fresh_checkpoint_restart_never_double_counts(
         err = str(exc)
     ids = [
         r["doc_id"]
-        for r in ingest.read_stream_pack_bins(spark, *_dirs(work)).collect()
+        for r in DRAINS["bins"][1](spark, *_dirs(work)).collect()
     ]
     assert len(ids) == len(set(ids)) == n, f"{len(ids)} rows, {n} docs"
     assert "manifest" in err

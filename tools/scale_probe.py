@@ -513,8 +513,9 @@ def media_probe(spark, k: int) -> dict:
         # out/state per call — the verdict composition is what's timed
         import uuid
 
+        from miletos_spark.pipeline.commit import read_committed
         from miletos_spark.streaming.ingest import (
-            read_media_decisions,
+            MEDIA_DECISION_SCHEMA,
             stream_media_decisions,
         )
 
@@ -527,7 +528,7 @@ def media_probe(spark, k: int) -> dict:
             spark, arr, MEDIA_SCHEMA, bands, out, state,
             max_hamming=3, frac_threshold=0.8, max_files_per_trigger=1,
         )
-        read_media_decisions(spark, out, state).count()
+        read_committed(spark, out, state, MEDIA_DECISION_SCHEMA).count()
 
     run("media_near_dup", pairs_n)
     run("media_dedup_decisions_hub", decisions_hub_n)
